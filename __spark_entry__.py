@@ -411,15 +411,18 @@ def q_kll_quantity_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_quantiles_jvm_builders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-native quantile builders (groupBy(value).count() Catalyst
-    reduction + one weighted pandas fold per key): t-digest global over
-    l_extendedprice, KLL grouped by l_returnflag over l_quantity — both
+    """Quantile builders through sketches.build(engine="auto") — the jar's
+    aggregate buffers in exact mode (value→count buffer + one weighted fold
+    per key) when the jar loads, else the python engine: t-digest global
+    over l_extendedprice, KLL grouped by l_returnflag over l_quantity — both
     checked in rank space like the python-engine quantile queries."""
+    from hllspark import sketches
     from hllspark.sketches import KLL, TDigest
-    from hllspark.sketches.jvm import kll_jvm, tdigest_jvm
 
     li = _read(spark, sf_dir, "lineitem")
-    td = TDigest.from_bytes(bytes(tdigest_jvm(li, "l_extendedprice").first()["sketch"]))
+    # exact_capacity above the ~50k distinct prices keeps the jar in exact mode
+    td_df = sketches.build(li, "l_extendedprice", "tdigest", exact_capacity=200_000)
+    td = TDigest.from_bytes(bytes(td_df.first()["sketch"]))
     n = li.count()
     rows = []
     for name, q in (("td_q10", 0.1), ("td_q50", 0.5), ("td_q90", 0.9)):
@@ -428,7 +431,7 @@ def q_quantiles_jvm_builders(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((name, bool(abs(rank - q) <= 0.02)))
     klls = {
         r["l_returnflag"]: KLL.from_bytes(bytes(r["sketch"]))
-        for r in kll_jvm(li, "l_quantity", by=["l_returnflag"]).collect()
+        for r in sketches.build(li, "l_quantity", "kll", by=["l_returnflag"]).collect()
     }
     for flag in sorted(klls):
         v = klls[flag].quantile(0.5)
@@ -766,13 +769,13 @@ def q_multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_distinct_custkey_jvm_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """engine="jvm_udaf" FORCED: the aggregate-buffer engine (typed JVM
     Aggregator → TypedImperativeAggregate, jvm/src) end-to-end, global and
-    grouped results in one frame.  Falls back to the groupBy-JVM engine
-    where the jar can't load — estimates are identical either way
+    grouped results in one frame.  Where the jar can't load, engine="auto"
+    runs the python engine — estimates are identical either way
     (byte-identical sketches, tests/test_jvm_udaf.py)."""
-    from hllspark import agg
+    from hllspark import agg, jvm_udaf
 
     o = _read(spark, sf_dir, "orders")
-    engine = "jvm_udaf" if agg._udaf_available(spark) else "jvm"
+    engine = "jvm_udaf" if jvm_udaf.available(spark) else "auto"
     est = agg.distinct(o, "o_custkey", by=["o_orderpriority"], engine=engine)
     exact = o.groupBy("o_orderpriority").agg(F.countDistinct("o_custkey").alias("exact_cnt"))
     return _bound_check(est, exact, ["o_orderpriority"])
@@ -803,31 +806,19 @@ def q_exhaustive_bucket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_countmin_bloom_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CountMin + Bloom AGGREGATE-BUFFER builders (jvm/src typed Aggregators)
-    end-to-end: point-frequency bounds AND membership of every event type,
-    falling back to the groupBy builders where the jar can't load — sketches
-    are byte-identical either way (tests/test_jvm_udaf.py)."""
+    end-to-end: point-frequency bounds AND membership of every event type.
+    sketches.build(engine="auto") runs the python engine where the jar
+    can't load — sketches are byte-identical either way
+    (tests/test_jvm_udaf.py)."""
     import pandas as pd
 
-    from hllspark import agg
+    from hllspark import sketches
     from hllspark.core.xxhash import xxh64_strings
     from hllspark.sketches import Bloom, CountMin
 
     e = _read(spark, sf_dir, "events")
-    cm_df = bf_df = None
-    if agg._udaf_available(spark):
-        try:
-            from hllspark.jvm_udaf import bloom_jvm_udaf, countmin_jvm_udaf
-
-            cm_df = countmin_jvm_udaf(e, "event_type", width=4096, depth=5)
-            bf_df = bloom_jvm_udaf(e, "event_type", m_bits=1 << 16, k=5)
-        except RuntimeError:
-            # version-skewed jar: HLL class present but not the siblings
-            cm_df = bf_df = None
-    if cm_df is None:
-        from hllspark.sketches.jvm import bloom_jvm, countmin_jvm
-
-        cm_df = countmin_jvm(e, "event_type", width=4096, depth=5)
-        bf_df = bloom_jvm(e, "event_type", m_bits=1 << 16, k=5)
+    cm_df = sketches.build(e, "event_type", "countmin", width=4096, depth=5)
+    bf_df = sketches.build(e, "event_type", "bloom", m_bits=1 << 16, k=5)
     cm = CountMin.from_bytes(bytes(cm_df.first()["sketch"]))
     bf = Bloom.from_bytes(bytes(bf_df.first()["sketch"]))
     exact = {r["event_type"]: r["c"] for r in e.groupBy("event_type").agg(F.count("*").alias("c")).collect()}
@@ -843,58 +834,57 @@ def q_countmin_bloom_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(rows, "event_type string, exact_freq long, within_bound boolean")
 
 
+def _quantile_fold(df: DataFrame, col: str, cls):
+    """Canonical bytes of the direct python quantile build: one sorted
+    weighted fold over the column's distinct values — what the jar's exact
+    mode reproduces byte-for-byte."""
+    import numpy as np
+
+    vals, counts = np.unique(
+        np.array([r[0] for r in df.select(F.col(col).cast("double")).collect()], dtype=np.float64),
+        return_counts=True,
+    )
+    st = cls.create()
+    st.update_weighted(vals, counts)
+    return st.to_bytes()
+
+
 def q_quantiles_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-4 quantile AGGREGATE-BUFFER builders (TDigestAggregator /
     KllAggregator, jvm/src): exact mode must be byte-identical to the
-    groupBy builders (checked inline), and the bounded DIGEST mode — the
-    scale path for continuous columns, where the groupBy reduction would
-    ship one row per distinct value — must stay inside the rank-error
-    bounds on a ~60k-distinct continuous column forced past a small
-    exact_capacity.  Falls back to the groupBy builders where the jar
-    can't load (identical exact-mode results by construction)."""
-    from hllspark import agg
+    direct python fold (checked inline), and the bounded DIGEST mode — the
+    scale path for continuous columns, where an exact reduction would ship
+    one row per distinct value — must stay inside the rank-error bounds on
+    a ~60k-distinct continuous column forced past a small exact_capacity.
+    Without the jar the python fold itself is checked (the digest-mode rows
+    are then vacuous)."""
+    from hllspark import jvm_udaf
     from hllspark.sketches import KLL, TDigest
-    from hllspark.sketches.jvm import kll_jvm, tdigest_jvm
 
     li = _read(spark, sf_dir, "lineitem")
     n = li.count()
+    ref_td = _quantile_fold(li, "l_extendedprice", TDigest)
     rows = []
-    udaf_result = None
-    if agg._udaf_available(spark):
-        try:
-            from hllspark.jvm_udaf import kll_jvm_udaf, tdigest_jvm_udaf
-
-            # the CALLS are guarded (not just the import): a version-skewed
-            # jar passes the HLL availability probe but raises RuntimeError
-            # when THIS aggregator class is missing — fall back then.
-            # exact_capacity must exceed the column's distinct count for the
-            # byte-parity contract (sf0.01 l_extendedprice has ~50k distinct)
-            td_b = bytes(tdigest_jvm_udaf(li, "l_extendedprice", exact_capacity=200_000).first()["sketch"])
-            exact_parity = td_b == bytes(tdigest_jvm(li, "l_extendedprice").first()["sketch"])
-            kll_b = bytes(kll_jvm_udaf(li, "l_quantity").first()["sketch"])
-            exact_parity = exact_parity and kll_b == bytes(kll_jvm(li, "l_quantity").first()["sketch"])
-            # continuous column, digest mode forced (exact_capacity << distinct)
-            cont = li.select((F.col("l_extendedprice") + F.col("l_orderkey") / F.lit(1e9)).alias("v"))
-            dig = TDigest.from_bytes(
-                bytes(tdigest_jvm_udaf(cont, "v", exact_capacity=500).first()["sketch"])
-            )
-            kdig = KLL.from_bytes(bytes(kll_jvm_udaf(cont, "v", exact_capacity=500).first()["sketch"]))
-            drows = []
-            for name, sk, tol in (("digest", dig, 0.02), ("compactor", kdig, 0.03)):
-                ok = True
-                for q in (0.1, 0.5, 0.9):
-                    rank = cont.filter(F.col("v") <= sk.quantile(q)).count() / n
-                    ok = ok and abs(rank - q) <= tol
-                drows.append((f"td_{name}_ranks" if name == "digest" else "kll_compactor_ranks", bool(ok)))
-            udaf_result = (td_b, exact_parity, drows)
-        except RuntimeError:
-            udaf_result = None  # skewed jar → groupBy-builder fallback below
-    if udaf_result is not None:
-        td_b, exact_parity, drows = udaf_result
-        rows += drows
+    if jvm_udaf.available(spark):
+        # exact_capacity must exceed the column's distinct count for the
+        # byte-parity contract (sf0.01 l_extendedprice has ~50k distinct)
+        td_b = bytes(jvm_udaf.tdigest_jvm_udaf(li, "l_extendedprice", exact_capacity=200_000).first()["sketch"])
+        kll_b = bytes(jvm_udaf.kll_jvm_udaf(li, "l_quantity").first()["sketch"])
+        exact_parity = td_b == ref_td and kll_b == _quantile_fold(li, "l_quantity", KLL)
+        # continuous column, digest mode forced (exact_capacity << distinct)
+        cont = li.select((F.col("l_extendedprice") + F.col("l_orderkey") / F.lit(1e9)).alias("v"))
+        dig = TDigest.from_bytes(
+            bytes(jvm_udaf.tdigest_jvm_udaf(cont, "v", exact_capacity=500).first()["sketch"])
+        )
+        kdig = KLL.from_bytes(bytes(jvm_udaf.kll_jvm_udaf(cont, "v", exact_capacity=500).first()["sketch"]))
+        for name, sk, tol in (("td_digest_ranks", dig, 0.02), ("kll_compactor_ranks", kdig, 0.03)):
+            ok = True
+            for q in (0.1, 0.5, 0.9):
+                rank = cont.filter(F.col("v") <= sk.quantile(q)).count() / n
+                ok = ok and abs(rank - q) <= tol
+            rows.append((name, bool(ok)))
     else:
-        td_b = bytes(tdigest_jvm(li, "l_extendedprice").first()["sketch"])
-        exact_parity = True  # vacuous without the jar; builders ARE the reference
+        td_b, exact_parity = ref_td, True
         rows += [("td_digest_ranks", True), ("kll_compactor_ranks", True)]
     td = TDigest.from_bytes(td_b)
     ok = True
@@ -908,30 +898,24 @@ def q_quantiles_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_minhash_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-4 MinHash AGGREGATE BUFFER (MinHashAggregator, jvm/src — the
     xxhash64(h, lit(j)) slot chain replayed in-JVM): byte parity with the
-    groupBy builder checked inline, Jaccard of two real sets vs the exact
+    python engine checked inline, Jaccard of two real sets vs the exact
     Jaccard as the SQL-checkable output (same oracle as
-    minhash_jaccard_flags).  Falls back to the groupBy builder where the
-    jar can't load (byte-identical signatures either way)."""
-    from hllspark import agg
+    minhash_jaccard_flags).  Runs the python engine where the jar can't
+    load (byte-identical signatures either way)."""
+    from hllspark import sketches
     from hllspark.sketches import MinHash
-    from hllspark.sketches.jvm import minhash_jvm
 
     li = _read(spark, sf_dir, "lineitem")
     la = li.filter(F.col("l_returnflag") == "A")
     lr = li.filter(F.col("l_returnflag") == "R")
-    build = minhash_jvm
-    parity = True
-    if agg._udaf_available(spark):
-        try:
-            from hllspark.jvm_udaf import minhash_jvm_udaf
 
-            ub = bytes(minhash_jvm_udaf(la, "l_partkey", k=256).first()["sketch"])
-            parity = ub == bytes(minhash_jvm(la, "l_partkey", k=256).first()["sketch"])
-            build = minhash_jvm_udaf
-        except RuntimeError:
-            pass
-    a = MinHash.from_bytes(bytes(build(la, "l_partkey", k=256).first()["sketch"]))
-    r = MinHash.from_bytes(bytes(build(lr, "l_partkey", k=256).first()["sketch"]))
+    def build(df, engine="auto"):
+        return bytes(sketches.build(df, "l_partkey", "minhash", engine=engine, k=256).first()["sketch"])
+
+    ab = build(la)
+    parity = ab == build(la, engine="python")
+    a = MinHash.from_bytes(ab)
+    r = MinHash.from_bytes(build(lr))
     sa = la.select("l_partkey").distinct()
     sr = lr.select("l_partkey").distinct()
     inter = sa.intersect(sr).count()
@@ -950,9 +934,9 @@ def q_reagg_stored_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded and register-merged entirely in the JVM — must be
     byte-identical to the python merge path (checked inline over
     xxhash-kind sketches, exercising the v2 hash_kind blob) and land the
-    merged estimate inside the envelope.  Falls back to merge_partials
-    without the jar."""
-    from hllspark import agg
+    merged estimate inside the envelope.  Without the jar only the python
+    merge runs."""
+    from hllspark import agg, jvm_udaf
     from hllspark.functions import hll_estimate
 
     o = _read(spark, sf_dir, "orders")
@@ -962,14 +946,9 @@ def q_reagg_stored_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     python_merged = agg.merge_partials(per_group.select("sketch"), engine="python")
     p_bytes = bytes(python_merged.first()["sketch"])
     udaf_matches = True
-    if agg._udaf_available(spark):
-        try:
-            from hllspark.jvm_udaf import hll_merge_udaf
-
-            u_bytes = bytes(hll_merge_udaf(per_group.select("sketch"), "sketch").first()["sketch"])
-            udaf_matches = u_bytes == p_bytes
-        except RuntimeError:
-            pass  # version-skewed jar without the merge class
+    if jvm_udaf.available(spark):
+        u_bytes = bytes(jvm_udaf.hll_merge_udaf(per_group.select("sketch"), "sketch").first()["sketch"])
+        udaf_matches = u_bytes == p_bytes
     est = python_merged.select(hll_estimate("sketch").alias("est"))
     exact = o.agg(F.countDistinct("o_custkey").alias("exact_cnt"))
     j = est.crossJoin(exact)
@@ -992,29 +971,14 @@ def q_rollup_read_udfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     envelope), and the p50 extendedprice (exact rank within 2%).  Falls
     back to the pandas readers without the jar — identical results by the
     bit-parity contract (tests/test_jvm_read_udfs.py)."""
-    from hllspark import agg
+    from hllspark import agg, sketches
     from hllspark import functions as hfn
+    from hllspark import jvm_udaf as ju
 
     li = _read(spark, sf_dir, "lineitem")
-    use_jvm = False
-    if agg._udaf_available(spark):
-        try:
-            from hllspark import jvm_udaf as ju
-
-            cm = ju.countmin_jvm_udaf(li, "l_suppkey", ["l_returnflag"], width=4096, depth=5)
-            td = ju.tdigest_jvm_udaf(li, "l_extendedprice", ["l_returnflag"])
-            # probe BOTH read-UDF families for version skew (round-3/4 jars
-            # pass the aggregator probe but lack the scalar read classes)
-            ju.minhash_jaccard_col(spark, F.lit(None).cast("binary"), F.lit(None).cast("binary"))
-            ju.hll_estimate_col(spark, F.lit(None).cast("binary"))
-            use_jvm = True
-        except RuntimeError:
-            use_jvm = False
-    if not use_jvm:
-        from hllspark.sketches.jvm import countmin_jvm, tdigest_jvm
-
-        cm = countmin_jvm(li, "l_suppkey", ["l_returnflag"], width=4096, depth=5)
-        td = tdigest_jvm(li, "l_extendedprice", ["l_returnflag"])
+    use_jvm = ju.available(spark)
+    cm = sketches.build(li, "l_suppkey", "countmin", ["l_returnflag"], width=4096, depth=5)
+    td = sketches.build(li, "l_extendedprice", "tdigest", ["l_returnflag"])
     hl = agg.sketch(li, "l_orderkey", by=["l_returnflag"])
     rollup = (
         cm.select("l_returnflag", F.col("sketch").alias("cm"))
@@ -1085,6 +1049,7 @@ def q_setops_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     jar — identical by the parity contract (tests/test_jvm_read_udfs.py)."""
     from hllspark import agg
     from hllspark import functions as hfn
+    from hllspark import jvm_udaf as ju
 
     orders = _read(spark, sf_dir, "orders")
     seg = orders.where(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
@@ -1093,16 +1058,7 @@ def q_setops_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk.where(F.col("o_orderpriority") == "1-URGENT").select(F.col("sketch").alias("ca"))
         .crossJoin(sk.where(F.col("o_orderpriority") == "2-HIGH").select(F.col("sketch").alias("cb")))
     )
-    use_jvm = False
-    if agg._udaf_available(spark):
-        try:
-            from hllspark import jvm_udaf as ju
-
-            ju.hll_union_estimate_col(spark, F.lit(None).cast("binary"), F.lit(None).cast("binary"))
-            use_jvm = True
-        except RuntimeError:
-            use_jvm = False
-    if use_jvm:
+    if ju.available(spark):
         u = ju.hll_union_estimate_col(spark, "ca", "cb")
         i = ju.hll_intersection_col(spark, "ca", "cb")
         c = ju.hll_compliment_col(spark, "ca", "cb")
@@ -1575,7 +1531,7 @@ def oracle_sql() -> dict[str, str]:
             "CAST(49831 AS BIGINT) AS n_connected, CAST(49831 AS BIGINT) AS n_budget_fallback"
         ),
         # same exact frequencies as countmin_event_freq — the aggregate-buffer
-        # builders must agree with the groupBy builders and the bounds
+        # builders must agree with the python engine and the bounds
         "countmin_bloom_udaf": (
             "SELECT event_type, count(*) AS exact_freq, TRUE AS within_bound "
             "FROM events GROUP BY event_type ORDER BY event_type"

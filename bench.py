@@ -34,8 +34,8 @@ def make_spark(cores: int):
     builder = SparkSession.builder.master(f"local[{cores}]")
     try:
         # engine=jvm_udaf: ship the aggregate-buffer jar with the session
-        # (clean spark.jars path; sessions without it fall back to the
-        # groupBy-JVM engine automatically)
+        # (clean spark.jars path; sessions without it run the python
+        # engine under engine="auto")
         from hllspark import jvm_udaf
 
         builder = jvm_udaf.configure_builder(builder)
@@ -115,11 +115,11 @@ def headline_queries(spark, pages_path: str):
         agg.merge_partials(per_lang.select("sketch")).collect()
 
     def q_pages_ts_quantiles_tdigest():
-        # JVM value-count reduction (86,400 distinct timestamps at any row
-        # count) + one weighted pandas fold — the discrete-column fast path
-        from hllspark.sketches.jvm import tdigest_jvm
+        # discrete column (86,400 distinct timestamps at any row count):
+        # engine="auto" t-digest, the jar's two-mode aggregate buffer
+        from hllspark import sketches
 
-        tdigest_jvm(pages.select(F.unix_timestamp("warc_ts").alias("ts")), "ts").collect()
+        sketches.build(pages.select(F.unix_timestamp("warc_ts").alias("ts")), "ts", "tdigest").collect()
 
     # 4-granularity rollup cube (lang × shard, round 5): agg.sketch_cube's
     # single scan (Catalyst Expand before map-side combine) vs the SAME four
@@ -152,11 +152,7 @@ def headline_queries(spark, pages_path: str):
     # ObjectHashAggregate fallback threshold and the sketch-row shuffle at
     # realistic key cardinality (round-3 verdict item #6) — udaf (aggregate
     # buffer) vs DataSketches hll_sketch_agg, the same plan shape, in one
-    # window.  The groupBy register-reduction engine is NOT benched here:
-    # its per-key pandas assembly makes it ~100× slower at this cardinality
-    # (measured 147 s vs 1.45 s at 28k keys on a 100k-row input — the
-    # documented reason engine="auto" prefers the udaf path), which would
-    # dominate the suite wall time without adding information.
+    # window.
     def _domains():
         return pages.select(F.pmod(F.xxhash64("url"), F.lit(100_000)).alias("dom"), "url")
 
@@ -227,10 +223,9 @@ def headline_queries(spark, pages_path: str):
             hfn.hll_union_estimate(F.col("ca"), F.col("cb")).alias("u")
         ).agg(F.sum("u")).collect()
 
-    # continuous double column (distinct ≈ row count): the groupBy quantile
-    # builder's value-count reduction degrades to shuffling one row per
-    # distinct value; the udaf two-mode buffer stays bounded (round-3
-    # verdict item #1).  Same 1/4 sample for both so the ratio is honest.
+    # continuous double column (distinct ≈ row count): the udaf two-mode
+    # buffer stays bounded where an exact value-count reduction would
+    # shuffle one row per distinct value (round-3 verdict item #1).
     def _continuous():
         return pages.select(F.xxhash64("url").alias("h")).where(
             F.pmod(F.col("h"), F.lit(4)) == 0
@@ -240,11 +235,6 @@ def headline_queries(spark, pages_path: str):
         from hllspark import jvm_udaf as ju
 
         ju.tdigest_jvm_udaf(_continuous(), "v").collect()
-
-    def q_tdigest_continuous_groupby():
-        from hllspark.sketches.jvm import tdigest_jvm
-
-        tdigest_jvm(_continuous(), "v").collect()
 
     def q_comparator_percentile_approx():
         pages.select(F.unix_timestamp("warc_ts").alias("ts")).agg(
@@ -282,7 +272,6 @@ def headline_queries(spark, pages_path: str):
         "setop_union_100k_jvm": q_setop_union_100k_jvm,
         "setop_union_100k_pandas": q_setop_union_100k_pandas,
         "tdigest_continuous_udaf": q_tdigest_continuous_udaf,
-        "tdigest_continuous_groupby": q_tdigest_continuous_groupby,
         "comparator_percentile_approx": q_comparator_percentile_approx,
         "comparator_approx_count_distinct": q_comparator_approx_count_distinct,
         "comparator_datasketches_hll": q_comparator_datasketches_hll,

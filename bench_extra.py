@@ -40,7 +40,7 @@ def _dataframes(spark, pages_path: str):
 
     from hllspark import agg, jvm_udaf as ju
     from hllspark import functions as hfn
-    from hllspark.sketches.jvm import tdigest_jvm
+    from hllspark import sketches
 
     SF_DIR = bench.SF_DIR
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
@@ -74,8 +74,8 @@ def _dataframes(spark, pages_path: str):
         "reagg_stored_sketches": lambda: agg.merge_partials(
             agg.sketch(pages, "url", by=["lang"]).select("sketch")
         ),
-        "pages_ts_quantiles_tdigest": lambda: tdigest_jvm(
-            pages.select(F.unix_timestamp("warc_ts").alias("ts")), "ts"
+        "pages_ts_quantiles_tdigest": lambda: sketches.build(
+            pages.select(F.unix_timestamp("warc_ts").alias("ts")), "ts", "tdigest"
         ),
         "cube_4sets_onescan": lambda: agg.sketch_cube(
             _cube_input(), "url", ["lang", "shard"], engine="jvm_udaf", finalize="estimate"
@@ -96,7 +96,6 @@ def _dataframes(spark, pages_path: str):
             hfn.hll_union_estimate(F.col("ca"), F.col("cb")).alias("u")
         ).agg(F.sum("u")),
         "tdigest_continuous_udaf": lambda: ju.tdigest_jvm_udaf(_continuous(), "v"),
-        "tdigest_continuous_groupby": lambda: tdigest_jvm(_continuous(), "v"),
     }
 
 

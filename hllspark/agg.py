@@ -35,7 +35,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
     DoubleType,
     IntegerType,
     LongType,
@@ -44,7 +43,7 @@ from pyspark.sql.types import (
 )
 
 from .core.hash import hash_arrow_array
-from .core.hll import HLL, decode_encodes, merge_blobs
+from .core.hll import HLL, merge_blobs
 from .functions import DEFAULT_B, DEFAULT_BINBITS, hll_estimate, hll_estimate_bigint
 
 LINEAGE_FIELDS = [
@@ -259,18 +258,6 @@ def canon_xxhash_col(df: DataFrame, value_col: str):
     return col
 
 
-def pd_keyrow(pdf: pd.DataFrame, by: Sequence[str]) -> dict:
-    """First row's group-key values for an applyInPandas return, with
-    pandas' degraded NULLs (NaN/NaT/pd.NA on nullable dtypes) normalized
-    back to None.  Shared by every per-key assembly (HLL distributed pass
-    and the sibling JVM builders) so NULL-key handling has one home."""
-    out = {}
-    for c in by:
-        v = pdf[c].iloc[0]
-        out[c] = [None if pd.isna(v) else v]
-    return out
-
-
 def _sql_dtype(df: DataFrame, value_col: str) -> str:
     """Column dtype resolved the way Spark resolves names (case-insensitive
     by default) — a dict(df.dtypes) lookup misses case variants and would
@@ -368,15 +355,14 @@ def merge_partials(
     is huge); global = log-depth tree fan-in, never collecting all partials
     into one task until the fan-in is bounded.
     """
-    by = list(by or [])
-    if engine == "auto" and cls is HLL and merge_rounds is None and _udaf_available(partials.sparkSession):
-        try:
-            from . import jvm_udaf
+    from . import jvm_udaf
 
-            out = jvm_udaf.hll_merge_udaf(partials, sketch_col, by)
-            return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
-        except RuntimeError:
-            pass  # version-skewed jar without the merge class → python path
+    by = list(by or [])
+    if engine == "auto" and (cls is not HLL or merge_rounds is not None):
+        engine = "python"  # only the HLL merge in the default topology has a jar aggregate
+    if jvm_udaf.resolve_engine(partials.sparkSession, engine) == "jvm_udaf":
+        out = jvm_udaf.hll_merge_udaf(partials, sketch_col, by)
+        return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
     out_fields = [f for f in partials.schema.fields if f.name in by]
     out_fields.append(StructField(sketch_col, BinaryType(), True))
     out_schema = StructType(out_fields)
@@ -481,16 +467,10 @@ def merge_partials_driver(partials: DataFrame, by: Sequence[str] | None = None, 
     return acc
 
 
-def _udaf_available(spark) -> bool:
-    """Can engine="jvm_udaf" run in this session?  Never raises — any
-    failure (no jar, no JDK, zip-packaged install) routes auto back to the
-    groupBy JVM engine.  Cached per session (hllspark.jvm_udaf)."""
-    try:
-        from . import jvm_udaf
-
-        return jvm_udaf.available(spark)
-    except Exception:
-        return False
+def _nullable_key_fields(df: DataFrame, by: Sequence[str]) -> list[StructField]:
+    """Key fields with nullability forced on: group keys can be NULL even
+    when the source column is declared non-nullable downstream of a join."""
+    return [StructField(c, df.schema[c].dataType, True) for c in by]
 
 
 def sketch(
@@ -512,36 +492,38 @@ def sketch(
     reference-style (error_rate, ndistinct) derivation.
 
     ``engine``: "jvm_udaf" runs the reduction as a single JVM aggregate
-    buffer (TypedImperativeAggregate via functions.udaf — the fastest
-    shape, needs dist/hllspark-udaf.jar loadable in the session, see
-    hllspark.jvm_udaf); "jvm" keeps the whole reduction in Catalyst as a
-    groupBy(key, idx) hash aggregate (no jar needed) and assembles
-    DISTRIBUTED — unbounded key cardinality, and global queries finalize in
-    a single executor task under a dummy key (no driver-side assembly);
-    "jvm_driver" forces driver-side assembly (lowest latency when the key
-    count is known-small); "python" uses the mapInArrow builder (required
-    for murmur reference-parity via input_type/jvm_prehash=False).  "auto"
-    picks jvm_udaf when the jar loads, else jvm, unless something pins the
-    hash function to murmur.  All three xxhash engines emit byte-identical
-    sketches (tests/test_jvm_engine.py)."""
-    if engine == "auto":
-        if input_type == "auto" and jvm_prehash in ("auto", True):
-            engine = "jvm_udaf" if _udaf_available(df.sparkSession) else "jvm"
-        else:
-            engine = "python"
+    buffer (TypedImperativeAggregate via functions.udaf — needs
+    dist/hllspark-udaf.jar loadable in the session, see hllspark.jvm_udaf);
+    "python" uses the mapInArrow builder (required for murmur
+    reference-parity via input_type/jvm_prehash=False).  "auto" picks
+    jvm_udaf when the jar loads, else python with the JVM xxhash64 prehash —
+    byte-identical sketches either way (tests/test_jvm_engine.py) — unless
+    something pins the hash function to murmur, which only python serves."""
+    engine, jvm_prehash = _route(df, engine, input_type, jvm_prehash)
     if engine == "jvm_udaf":
         from .jvm_udaf import sketch_jvm_udaf
 
         return sketch_jvm_udaf(df, value_col, by, b, binbits, error_rate, ndistinct)
-    if engine == "jvm":
-        return sketch_jvm_distributed(df, value_col, by or [], b, binbits, error_rate, ndistinct)
-    if engine == "jvm_driver":
-        return sketch_jvm(df, value_col, by, b, binbits, error_rate, ndistinct)
     partials = build_partials(
         df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash,
         error_rate=error_rate, ndistinct=ndistinct,
     )
     return merge_partials(partials, by, fanin=fanin, merge_rounds=merge_rounds)
+
+
+def _route(df: DataFrame, engine: str, input_type: str, jvm_prehash) -> tuple[str, object]:
+    """(engine, jvm_prehash) for an HLL build.  "auto" with the xxhash64
+    domain available resolves through jvm_udaf.resolve_engine; its python
+    fallback pins jvm_prehash=True so the sketches stay byte-identical to
+    the jar engine's."""
+    from . import jvm_udaf
+
+    if engine == "auto" and not (input_type == "auto" and jvm_prehash in ("auto", True)):
+        return "python", jvm_prehash  # murmur pinned: only the python builder hashes it
+    resolved = jvm_udaf.resolve_engine(df.sparkSession, engine)
+    if engine == "auto" and resolved == "python":
+        return resolved, True
+    return resolved, jvm_prehash
 
 
 def _resolve_grouping_sets(
@@ -661,13 +643,13 @@ def sketch_cube(
 
     Engines: "jvm_udaf" (Catalyst Expand replicates rows once per set
     BEFORE map-side combine, so the shuffle carries |sets| x |keys| buffers;
-    needs the jar) or "jvm"/"python" (the same single-scan shape via an
+    needs the jar) or "python" (the same single-scan shape via an
     explode-based Expand — _expand_grouping_sets — then one grouped sketch
-    over dims+grouping_id; no jar, identical bytes).  Every engine is one
-    pass over the source.  One SQL-semantics edge: over an EMPTY input the
-    udaf path (df.groupingSets) still emits the global-set row with a NULL
-    sketch, while the groupBy engines emit no rows.
-    "auto" prefers jvm_udaf.  Scale note: full cube is 2^n sets
+    over dims+grouping_id with the xxhash64 prehash; no jar, identical
+    bytes).  Every engine is one pass over the source.  One SQL-semantics
+    edge: over an EMPTY input the udaf path (df.groupingSets) still emits
+    the global-set row with a NULL sketch, while the python engine emits no
+    rows.  "auto" prefers jvm_udaf.  Scale note: full cube is 2^n sets
     — at 100 TB pass sets= with the granularities a dashboard actually
     reads rather than cubing many dims (the Expand multiplier IS the cost
     model; guarded at n > 8)."""
@@ -676,14 +658,13 @@ def sketch_cube(
         # would duplicate the column in df.select(value_col, *dims) and
         # surface later as a confusing ambiguous-reference analysis error
         raise ValueError(f"value_col {value_col!r} cannot also be a dim column")
-    if engine == "auto":
-        engine = "jvm_udaf" if _udaf_available(df.sparkSession) else "jvm"
+    from . import jvm_udaf
+
+    engine = jvm_udaf.resolve_engine(df.sparkSession, engine)
     if finalize not in ("sketch", "estimate", "estimate_bigint"):
         raise ValueError(f"unknown finalize {finalize!r}")
     if engine == "jvm_udaf":
-        from .jvm_udaf import sketch_cube_jvm_udaf
-
-        return sketch_cube_jvm_udaf(
+        return jvm_udaf.sketch_cube_jvm_udaf(
             df, value_col, dims, resolved, b, binbits, error_rate, ndistinct,
             finalize, est_col, gid_col,
         )
@@ -692,7 +673,7 @@ def sketch_cube(
     )
     out = sketch(
         expanded, value_col, by=[*dims, gid_col], b=b, binbits=binbits,
-        error_rate=error_rate, ndistinct=ndistinct, engine=engine,
+        error_rate=error_rate, ndistinct=ndistinct, engine="python", jvm_prehash=True,
     )
     if finalize == "sketch":
         return out
@@ -737,11 +718,7 @@ def distinct(
     b, binbits = resolve_params(b, binbits, error_rate, ndistinct)
     by = list(by or [])
     spark = df.sparkSession
-    if engine == "auto":
-        if input_type == "auto" and jvm_prehash in ("auto", True):
-            engine = "jvm_udaf" if _udaf_available(spark) else "jvm"
-        else:
-            engine = "python"
+    engine, jvm_prehash = _route(df, engine, input_type, jvm_prehash)
     if engine == "jvm_udaf":
         from .jvm_udaf import sketch_jvm_udaf
 
@@ -749,32 +726,6 @@ def distinct(
             df, value_col, by, b, binbits,
             finalize="estimate_bigint" if bigint else "estimate", est_col=est_col,
         )
-    if engine in ("jvm", "jvm_driver"):
-        if engine == "jvm":
-            # distributed assembly emits estimates directly inside the
-            # per-key finalize — no extra Python-UDF job over the sketches.
-            # Global queries take the same path under a dummy key (no
-            # driver-side assembly anywhere in the default engine).
-            return sketch_jvm_distributed(
-                df, value_col, by, b, binbits,
-                finalize="estimate_bigint" if bigint else "estimate", est_col=est_col,
-            )
-        # forced driver assembly: states already live on the
-        # driver — estimate in numpy, skip the Spark estimate job entirely
-        states = _sketch_jvm_states(df, value_col, by, b, binbits)
-        if not by and not states:
-            states = {(): None}
-        rows = []
-        for k, s in sorted(states.items(), key=lambda kv: tuple(str(x) for x in kv[0])):
-            e = None if s is None else s.estimate()
-            if bigint:
-                rows.append((*k, 0 if e is None else int(round(e))))
-            else:
-                rows.append((*k, None if e is None else float(e)))
-        schema_fields = _nullable_key_fields(df, by) + [
-            StructField(est_col, LongType() if bigint else DoubleType(), not bigint)
-        ]
-        return spark.createDataFrame(rows, StructType(schema_fields))
     if driver_merge == "auto":
         driver_merge = not by and spark.sparkContext.defaultParallelism <= 256
     if driver_merge:
@@ -793,7 +744,7 @@ def distinct(
             StructField(est_col, LongType() if bigint else DoubleType(), not bigint)
         ]
         return spark.createDataFrame(rows, StructType(schema_fields))
-    sk = sketch(df, value_col, by, b, binbits, input_type, jvm_prehash=jvm_prehash)
+    sk = sketch(df, value_col, by, b, binbits, input_type, jvm_prehash=jvm_prehash, engine="python")
     est = hll_estimate_bigint(F.col("sketch")) if bigint else hll_estimate(F.col("sketch"))
     cols = by + [est.alias(est_col)]
     return sk.select(*cols)
@@ -838,467 +789,3 @@ def salted_repartition(df: DataFrame, keys: Sequence[str], num_partitions: int, 
     """
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys], F.spark_partition_id()), F.lit(salt_buckets))
     return df.repartition(num_partitions, *[F.col(c) for c in keys], salt)
-
-
-# ---------------------------------------------------------------------------
-# JVM-native engine: the register reduction as a Catalyst hash aggregate
-# ---------------------------------------------------------------------------
-
-
-def _bitlen_case(x, maxbits: int):
-    """Exact bit length of a small (< 2^maxbits) non-negative value as a
-    CASE cascade — pure integer comparisons, whole-stage-codegen friendly.
-    Tests descend from the high bit, so for uniform inputs the expected
-    number of comparisons is ~2 (geometric distribution)."""
-    expr = F.lit(0)
-    for k in range(1, maxbits + 1):
-        expr = F.when(x >= (1 << (k - 1)), k).otherwise(expr)
-    return expr
-
-
-def _with_jvm_kernels(df: DataFrame, hcol: str, b: int, binbits: int) -> DataFrame:
-    """Append bit-exact HLL kernel columns (__idx, __rho, __enc, __chain)
-    computed from a 64-bit hash column entirely with integer Catalyst ops:
-
-    - clz64 of the p'-suffix as 64 − popcount after OR-propagating the
-      leading bit right (6 shift|or steps, then one bit_count).  The steps
-      are expressed as LATERAL column aliases in a single selectExpr:
-      linear-size generated code (JIT-friendly, unlike a 64-branch CASE
-      whose bytecode exceeds HotSpot's JIT limits) with no exponential
-      subtree duplication (unlike inlining) and no 12-deep withColumn
-      chain (whose nested-Project analysis cost ~1s of driver time/query).
-    - dense rho recovered losslessly from the p'-prefix structure:
-      if any of bits [b, p') is set, rho = (p'-b) - bitlen(prefix&mask) + 1,
-      else rho = (p'-b) + rho_p (encode_hash decode identity, SURVEY §2.6)
-    - __chain marks the rho-overflow rehash case (all suffix bits zero)
-
-    Validated bit-for-bit against the numpy kernels (tests/test_jvm_engine).
-    """
-    pprime = 32 - 1 - binbits
-    mask = (1 << (pprime - b)) - 1
-    h = F.col(hcol)
-
-    out = df.selectExpr(
-        "*",
-        f"shiftleft({hcol}, {pprime}) AS __y0",
-        "__y0 | shiftrightunsigned(__y0, 1) AS __y1",
-        "__y1 | shiftrightunsigned(__y1, 2) AS __y2",
-        "__y2 | shiftrightunsigned(__y2, 4) AS __y3",
-        "__y3 | shiftrightunsigned(__y3, 8) AS __y4",
-        "__y4 | shiftrightunsigned(__y4, 16) AS __y5",
-        "__y5 | shiftrightunsigned(__y5, 32) AS __y6",
-    )
-    y = F.col("__y6")  # popcount(y) == bitlen(suffix); y == 0 ⟺ suffix == 0
-    idx_p = F.shiftrightunsigned(h, 64 - pprime)
-    prefix_bits = idx_p.bitwiseAND(F.lit(mask))
-    rho_p = F.when(y == 0, F.lit(64)).otherwise(F.lit(65) - F.bit_count(y))
-    enc = F.when(prefix_bits != 0, idx_p * 2).otherwise((idx_p * (1 << binbits) + rho_p) * 2 + 1)
-    rho = F.when(
-        prefix_bits != 0, F.lit(pprime - b + 1) - _bitlen_case(prefix_bits, pprime - b)
-    ).otherwise(F.lit(pprime - b) + rho_p)
-    keep = [c for c in df.columns]
-    return out.select(
-        *keep,
-        F.shiftrightunsigned(h, 64 - b).alias("__idx"),
-        rho.alias("__rho"),
-        enc.alias("__enc"),
-        (y == 0).alias("__chain"),
-    )
-
-
-def _jvm_exprs(h, b: int, binbits: int):
-    """Single-expression variants (bin()-based clz) kept for validation —
-    the production path uses _with_jvm_kernels (integer cascade)."""
-    pprime = 32 - 1 - binbits
-    mask = (1 << (pprime - b)) - 1
-    idx = F.shiftrightunsigned(h, 64 - b)
-    sh_b = F.shiftleft(h, b)
-    rho = F.when(sh_b == 0, F.lit(64)).otherwise(F.lit(65) - F.length(F.bin(sh_b)))
-    idx_p = F.shiftrightunsigned(h, 64 - pprime)
-    sh_p = F.shiftleft(h, pprime)
-    rho_p = F.when(sh_p == 0, F.lit(64)).otherwise(F.lit(65) - F.length(F.bin(sh_p)))
-    enc = F.when(idx_p.bitwiseAND(F.lit(mask)) != 0, idx_p * 2).otherwise(
-        (idx_p * (1 << binbits) + rho_p) * 2 + 1
-    )
-    # rho chain triggers iff every bit after the p' prefix is zero
-    # (hll_add_hash_dense/encode_hash rehash loops, hyperloglog.c:611-620,694-703)
-    chain = sh_p == 0
-    return idx, rho, enc, chain
-
-
-def _nullable_key_fields(df: DataFrame, by: Sequence[str]) -> list[StructField]:
-    """Key fields with nullability forced on: group keys can be NULL even
-    when the source column is declared non-nullable downstream of a join."""
-    return [StructField(c, df.schema[c].dataType, True) for c in by]
-
-
-def _semi_join_keys(left: DataFrame, keys_df: DataFrame, by: Sequence[str], broadcast: bool = True) -> DataFrame:
-    """left_semi join on the key columns with NULL-SAFE equality: NULL group
-    keys are real groups (SQL GROUP BY keeps them), and a plain equi-join
-    would silently drop every row of a NULL-key group."""
-    right = F.broadcast(keys_df) if broadcast else keys_df
-    cond = None
-    for c in by:
-        e = left[c].eqNullSafe(keys_df[c])
-        cond = e if cond is None else cond & e
-    return left.join(right, on=cond, how="left_semi")
-
-
-def _hll_kernel_frames(df: DataFrame, value_col: str, by: Sequence[str], b: int, binbits: int):
-    """Shared front half of the JVM engines: NULL-preserving canonicalized
-    xxhash64, kernel columns, and the register reduction
-
-        groupBy(key, idx).agg(max(rho), sum(chain))
-
-    — a pure whole-stage-codegen HashAggregate (no collect_list, which would
-    force the slower ObjectHashAggregate path on 100% of rows to serve a
-    2^-44-probability case).  Chain hashes, when the count says any exist,
-    are fetched by a dedicated filter pass instead.
-
-    NULL values keep a NULL hash and flow through as a (key, NULL idx) row —
-    that's how all-NULL groups still surface (to yield a NULL sketch, the
-    reference's NULL contract) without an extra key scan.
-    """
-    h = jvm_hash_expr(df, value_col)
-    hdf_all = _with_jvm_kernels(df.select(*by, h.alias("__h")), "__h", b, binbits)
-    # chain rows (probability ~2^-(63-binbits) per row): the C semantics
-    # REPLACE rho with the rehash-chain result (which may be < 64), so these
-    # rows are excluded from the JVM max and replayed through the exact
-    # python kernels during assembly.
-    regs = (
-        hdf_all.select(
-            *by,
-            "__idx",
-            F.when(~F.col("__chain"), F.col("__rho")).alias("__rho"),
-            F.col("__chain").cast("int").alias("__c"),
-        )
-        .groupBy(*by, "__idx")
-        .agg(F.max("__rho").alias("__rho"), F.sum("__c").alias("__nchain"))
-    )
-    return hdf_all, regs
-
-
-def _sketch_jvm_states(
-    df: DataFrame,
-    value_col: str,
-    by: Sequence[str] | None = None,
-    b: int | None = None,
-    binbits: int | None = None,
-) -> dict:
-    """Driver-side assembly of the JVM reduction → {key tuple: HLL | None}.
-
-    None marks an all-NULL group (reference NULL contract).  Key values are
-    extracted from Arrow (``to_pylist``), NOT pandas — pandas would turn a
-    NULL in an int64 key column into NaN and degrade the whole column to
-    float64, corrupting exact key round-trips.
-    """
-    from .core.hll import HASH_XXHASH_SPARK, sparse_capacity
-    from .functions import resolve_params
-
-    b, binbits = resolve_params(b, binbits)
-    by = list(by or [])
-    spark = df.sparkSession
-    cap = sparse_capacity(b)
-
-    hdf_all, regs = _hll_kernel_frames(df, value_col, by, b, binbits)
-    hdf = hdf_all.filter(~F.col("__chain"))
-
-    tbl = regs.toArrow()  # columnar fetch — ~100× cheaper than Row collect
-    n = tbl.num_rows
-    if n > 20_000_000:
-        raise ValueError(
-            f"sketch_jvm collected {n:,} register rows — group-key "
-            "cardinality is too high for driver-side assembly; use "
-            "sketch_jvm_distributed (unbounded keys) or engine='python'"
-        )
-    keys_list = list(zip(*(tbl.column(c).to_pylist() for c in by))) if by else [()] * n
-    # __idx/__rho/__nchain are small ints — exact through float64-with-NaN
-    idx_np = tbl.column("__idx").to_numpy(zero_copy_only=False).astype(np.float64)
-    rho_np = tbl.column("__rho").to_numpy(zero_copy_only=False).astype(np.float64)
-    nchain_np = tbl.column("__nchain").to_numpy(zero_copy_only=False).astype(np.float64)
-
-    per_key: dict = {}
-    for k in keys_list:
-        per_key.setdefault(k, [])
-    valid = ~np.isnan(rho_np)
-    for j in np.nonzero(valid)[0]:
-        per_key[keys_list[j]].append((int(idx_np[j]), int(rho_np[j])))
-
-    # rho-overflow chain replay: only when the aggregate says any exist
-    chain_map: dict = {}
-    if np.nansum(nchain_np) > 0:
-        ct = hdf_all.filter(F.col("__chain")).select(*by, "__h").toArrow()
-        ckeys = list(zip(*(ct.column(c).to_pylist() for c in by))) if by else [()] * ct.num_rows
-        for k, hv in zip(ckeys, ct.column("__h").to_pylist()):
-            chain_map.setdefault(k, []).append(hv)
-
-    # keys that might still be sparse: ≤ capacity nonzero registers
-    maybe_sparse = [k for k, rows in per_key.items() if len(rows) <= cap]
-    sparse_encs: dict = {}
-    if maybe_sparse and cap > 0:
-        if by:
-            keys_df = spark.createDataFrame(
-                [tuple(k) for k in maybe_sparse], StructType(_nullable_key_fields(df, by))
-            )
-            target = _semi_join_keys(hdf, keys_df, by)
-        else:
-            target = hdf
-        enc_tbl = target.select(*by, "__enc").distinct().toArrow()
-        ekeys = list(zip(*(enc_tbl.column(c).to_pylist() for c in by))) if by else [()] * enc_tbl.num_rows
-        for k, e in zip(ekeys, enc_tbl.column("__enc").to_pylist()):
-            sparse_encs.setdefault(k, []).append(e)
-
-    out: dict = {}
-    for k, rows in per_key.items():
-        encs = sparse_encs.get(k)
-        chains = chain_map.get(k)
-        if not rows and encs is None and not chains:
-            # key whose every value was NULL → SQL NULL sketch
-            # (hyperloglog_counter.c:511-513)
-            out[k] = None
-            continue
-        if (encs is not None or not rows) and len(encs or ()) <= cap and len(rows) <= cap:
-            # includes the chain-only key (rows and encodings both empty):
-            # start from the empty SPARSE state so the byte form matches the
-            # python engine and the distributed assembly
-            sk = HLL(
-                b, binbits, np.unique(np.array(encs or [], dtype=np.int64).astype(np.uint32)), None, HASH_XXHASH_SPARK
-            )
-        else:
-            dense = np.zeros(1 << b, dtype=np.uint8)
-            if rows:
-                ii = np.array([x[0] for x in rows], dtype=np.int64)
-                rr = np.array([x[1] for x in rows], dtype=np.int64)
-                np.maximum.at(dense, ii, np.minimum(rr, 255).astype(np.uint8))
-            sk = HLL(b, binbits, None, dense, HASH_XXHASH_SPARK)
-        if chains:
-            sk.add_hashes(np.array(chains, dtype=np.int64).view(np.uint64))
-        out[k] = sk
-    return out
-
-
-def sketch_jvm(
-    df: DataFrame,
-    value_col: str,
-    by: Sequence[str] | None = None,
-    b: int | None = None,
-    binbits: int | None = None,
-    error_rate: float | None = None,
-    ndistinct: float | None = None,
-) -> DataFrame:
-    """Two-phase HLL with the ENTIRE hot path in whole-stage-codegen JVM:
-
-      xxhash64(value) → groupBy(key, idx).agg(max(rho), sum(chain))
-                                                         [Catalyst partial agg:
-                                                          shuffle ≤ P × 2^b rows]
-      keys with ≤capacity nonzero registers → targeted distinct-encode pass
-                                                          (exact sparse content)
-      rho-overflow rows (probability 2^-(63-binbits-b)) → dedicated replay
-                                                          pass, only if the
-                                                          chain count says so
-
-    Python only assembles the final ≤2^b rows per key into canonical sketch
-    bytes — byte-identical to the python engine's jvm_prehash path (tested),
-    so sketches from either engine merge freely.
-
-    Scale envelope: assembly is driver-side, so this engine suits low-to-
-    moderate group-key cardinality (≲10^4 keys × ≤2^b register rows).  For
-    high-cardinality grouping (per-domain, per-user) the default engine
-    routes to sketch_jvm_distributed; a hard guard here fails loudly rather
-    than silently OOMing the driver.
-    """
-    from .functions import resolve_params
-
-    b, binbits = resolve_params(b, binbits, error_rate, ndistinct)
-    by = list(by or [])
-    spark = df.sparkSession
-    states = _sketch_jvm_states(df, value_col, by, b, binbits)
-    if not by and not states:
-        states = {(): None}  # aggregate over zero rows yields SQL NULL
-    schema = StructType(_nullable_key_fields(df, by) + [StructField("sketch", BinaryType(), True)])
-    rows_out = [
-        (*k, None if sk is None else sk.to_bytes())
-        for k, sk in sorted(states.items(), key=lambda kv: tuple(str(x) for x in kv[0]))
-    ]
-    return spark.createDataFrame(rows_out, schema)
-
-
-def sketch_jvm_distributed(
-    df: DataFrame,
-    value_col: str,
-    by: Sequence[str],
-    b: int | None = None,
-    binbits: int | None = None,
-    error_rate: float | None = None,
-    ndistinct: float | None = None,
-    finalize: str = "sketch",
-    est_col: str = "est",
-) -> DataFrame:
-    """sketch_jvm with DISTRIBUTED assembly — same JVM-native reduction, but
-    sketches are built inside applyInPandas per key, so group-key cardinality
-    is unbounded (the per-key state is ≤2^b register rows or ≤capacity
-    encodes).  Byte-identical output to sketch_jvm (tested).
-
-      pass 1: groupBy(key, idx).agg(max(rho), sum(chain)) → applyInPandas:
-              keys with more than `capacity` nonzero registers (and no chain
-              rows) become dense sketches here; all-NULL keys become NULL
-      pass 2: the remaining (maybe-sparse or chained) keys get a targeted
-              distinct-encode pass, unioned with their rare chain rows,
-              and assemble as canonical sparse (or decode-dense) sketches;
-              skipped entirely when pass 1 finished every key
-
-    ``finalize``: "sketch" emits canonical bytes; "estimate" /
-    "estimate_bigint" emit the estimate directly from the per-key finalize
-    (saving a whole Python-UDF job for distinct()-style queries).
-    """
-    from .core.hll import HASH_XXHASH_SPARK, sparse_capacity
-    from .functions import resolve_params
-
-    b, binbits = resolve_params(b, binbits, error_rate, ndistinct)
-    by = list(by or [])
-    if not by:
-        # Global aggregate: run the SAME distributed finalize under a dummy
-        # constant key — the ≤2^b register rows shuffle to one finalize task
-        # instead of a driver toArrow + assembly + result job (the last
-        # ~0.6 s of the DataSketches comparator gap).  A 1-row left join
-        # restores the zero-input-rows → SQL NULL aggregate contract
-        # (hyperloglog_counter.c:511-513) that a vanished dummy group would
-        # otherwise lose.
-        g = "__hllspark_g"
-        inner = sketch_jvm_distributed(
-            df.withColumn(g, F.lit(True)), value_col, [g], b, binbits,
-            finalize=finalize, est_col=est_col,
-        )
-        one = df.sparkSession.range(1).select(F.lit(True).alias(g))
-        out = one.join(F.broadcast(inner), on=g, how="left").drop(g)
-        if finalize == "estimate_bigint":
-            out = out.withColumn(est_col, F.coalesce(F.col(est_col), F.lit(0)))
-        return out
-    cap = sparse_capacity(b)
-    bb, bbin = b, binbits
-
-    hdf_all, regs = _hll_kernel_frames(df, value_col, by, b, binbits)
-    hdf = hdf_all.filter(~F.col("__chain"))
-
-    if finalize == "sketch":
-        out_field = StructField("sketch", BinaryType(), True)
-    elif finalize == "estimate":
-        out_field = StructField(est_col, DoubleType(), True)
-    elif finalize == "estimate_bigint":
-        # nullable: pass-1 defer rows carry None in this slot before pass 2
-        out_field = StructField(est_col, LongType(), True)
-    else:
-        raise ValueError(f"unknown finalize {finalize!r}")
-
-    def emit(sk: HLL | None):
-        if finalize == "sketch":
-            return None if sk is None else sk.to_bytes()
-        e = None if sk is None else sk.estimate()
-        if finalize == "estimate_bigint":
-            return 0 if e is None else int(round(e))
-        return e
-
-    def keyrow(pdf: pd.DataFrame) -> dict:
-        return pd_keyrow(pdf, by)
-
-    key_fields = _nullable_key_fields(df, by)
-    # __defer: 0 = finished in pass 1; 1 = maybe-sparse, pass 2 needs this
-    # key's distinct encodings (+ any chain rows); 2 = dense WITH rho-chain
-    # rows — the dense partial is complete here (__partial), pass 2 only
-    # replays the (astronomically rare) chain rows, NEVER the full
-    # distinct-encode of a hot key
-    pass1_schema = StructType(
-        key_fields
-        + [out_field, StructField("__defer", IntegerType(), False), StructField("__partial", BinaryType(), True)]
-    )
-    out_schema = StructType(key_fields + [out_field])
-    vname = out_field.name
-
-    def assemble_dense(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = keyrow(pdf)
-        valid = pdf["__rho"].notna()
-        nchain = int(np.nansum(pdf["__nchain"].to_numpy(dtype=np.float64)))
-        nvalid = int(valid.sum())
-        if nvalid == 0 and nchain == 0:
-            # key whose every value was NULL → SQL NULL (reference contract)
-            return pd.DataFrame({**key, vname: [emit(None)], "__defer": [0], "__partial": [None]})
-        if nvalid > cap:
-            dense = np.zeros(1 << bb, dtype=np.uint8)
-            np.maximum.at(
-                dense,
-                pdf.loc[valid, "__idx"].to_numpy(dtype=np.float64).astype(np.int64),
-                np.minimum(pdf.loc[valid, "__rho"].to_numpy(dtype=np.float64).astype(np.int64), 255).astype(np.uint8),
-            )
-            sk = HLL(bb, bbin, None, dense, HASH_XXHASH_SPARK)
-            if nchain == 0:
-                return pd.DataFrame({**key, vname: [emit(sk)], "__defer": [0], "__partial": [None]})
-            return pd.DataFrame({**key, vname: [None], "__defer": [2], "__partial": [sk.to_bytes()]})
-        # maybe-sparse (with or without chain rows) → pass 2 re-encodes
-        return pd.DataFrame({**key, vname: [None], "__defer": [1], "__partial": [None]})
-
-    # localCheckpoint, NOT cache(): cache is keyed on the LOGICAL PLAN, so a
-    # later identical query would silently reuse this result (skipping the
-    # whole scan — poisons benchmarks and surprises users), and the entry
-    # is never unpersisted.  localCheckpoint materializes eagerly (the one
-    # heavy reduction), is keyed on the RDD object (no cross-query reuse),
-    # and its blocks are GC-cleaned when the result goes out of scope.
-    # Output is tiny: one row per group key.
-    # Trade-off: checkpoint blocks have no lineage fallback — on a cluster,
-    # losing an executor between materialization and consumption fails the
-    # query (retry re-runs it) instead of recomputing; avoid aggressive
-    # dynamic-allocation downscaling mid-query, per Spark's own
-    # localCheckpoint guidance.
-    pass1 = regs.groupBy(*by).applyInPandas(assemble_dense, schema=pass1_schema).localCheckpoint(eager=True)
-    done = pass1.filter(F.col("__defer") == 0).select(*by, vname)
-    flag_sparse = pass1.filter(F.col("__defer") == 1).select(*by)
-    flag_any = pass1.filter(F.col("__defer") != 0).select(*by)
-
-    # pass1 is already materialized — the emptiness decision is free
-    if flag_any.isEmpty():
-        return done
-
-    def assemble_sparse(pdf: pd.DataFrame) -> pd.DataFrame:
-        key = keyrow(pdf)
-        # chain hashes travel as decimal strings: a nullable int64 column
-        # becomes float64 in pandas and would round hashes above 2^53
-        chains = np.array([int(x) for x in pdf["__chain_h"].dropna()], dtype=np.int64)
-        partial = pdf["__partial"].dropna()
-        if len(partial):
-            # dense partial from pass 1 — only its chain rows arrive here
-            sk = HLL.from_bytes(bytes(partial.iloc[0]))
-        else:
-            encs = np.unique(
-                pdf.loc[pdf["__enc"].notna(), "__enc"].to_numpy(dtype=np.float64).astype(np.int64).astype(np.uint32)
-            )
-            if len(encs) > cap:
-                idxs, rhos = decode_encodes(encs, bb, bbin)
-                dense = np.zeros(1 << bb, dtype=np.uint8)
-                np.maximum.at(dense, idxs, rhos)
-                sk = HLL(bb, bbin, None, dense, HASH_XXHASH_SPARK)
-            else:
-                # includes the chain-only key (no encodings at all): start
-                # from the empty SPARSE state, as the python engine does
-                sk = HLL(bb, bbin, encs, None, HASH_XXHASH_SPARK)
-        if len(chains):
-            sk.add_hashes(chains.view(np.uint64))
-        return pd.DataFrame({**key, vname: [emit(sk)]})
-
-    # flag_sparse can be any size (all keys, for high-cardinality sparse
-    # grouping): no broadcast hint — AQE picks broadcast when it fits
-    nulls = (F.lit(None).cast("long").alias("__enc"), F.lit(None).cast("string").alias("__chain_h"))
-    enc_rows = (
-        _semi_join_keys(hdf, flag_sparse, by, broadcast=False)
-        .select(*by, F.col("__enc"), nulls[1], F.lit(None).cast("binary").alias("__partial"))
-        .distinct()
-    )
-    chain_rows = _semi_join_keys(hdf_all.filter(F.col("__chain")), flag_any, by, broadcast=False).select(
-        *by, nulls[0], F.col("__h").cast("string").alias("__chain_h"), F.lit(None).cast("binary").alias("__partial")
-    )
-    partial_rows = pass1.filter(F.col("__defer") == 2).select(*by, nulls[0], nulls[1], F.col("__partial"))
-    pass2 = (
-        enc_rows.unionByName(chain_rows)
-        .unionByName(partial_rows)
-        .groupBy(*by)
-        .applyInPandas(assemble_sparse, schema=out_schema)
-    )
-    return done.unionByName(pass2)

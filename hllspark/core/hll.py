@@ -297,11 +297,22 @@ def compress_sparse(enc: np.ndarray) -> bytes:
     return head + bytes(tail)
 
 
+_TRUNCATED_VARINT = "truncated group-varint sparse payload"
+# tag byte → number of data bytes its four 2-bit lengths imply (4..16)
+_TAG_DATA_LEN = bytes(sum(((t >> (2 * j)) & 3) + 1 for j in range(4)) for t in range(256))
+
+
 def decompress_sparse(payload: bytes, n: int) -> np.ndarray:
-    """Inverse of compress_sparse → sorted-unique uint32 encode list."""
+    """Inverse of compress_sparse → sorted-unique uint32 encode list.
+
+    Raises ValueError when the payload does not hold exactly ``n`` entries
+    (cut short, a dangling continuation byte, or extra varints) — the same
+    refusal as the Java decoder (HllMergeAggregator.decompressSparse)."""
     ngroups = n // 4
     buf = np.frombuffer(payload, dtype=np.uint8)
     if ngroups:
+        if len(buf) < ngroups:
+            raise ValueError(_TRUNCATED_VARINT)
         tags = buf[:ngroups].astype(np.int64)
         l2 = np.empty(ngroups * 4, dtype=np.int64)
         l2[0::4] = tags & 3
@@ -312,6 +323,8 @@ def decompress_sparse(payload: bytes, n: int) -> np.ndarray:
         ends = np.cumsum(lens)
         starts = ends - lens
         data_end = ngroups + int(ends[-1])
+        if data_end > len(buf):
+            raise ValueError(_TRUNCATED_VARINT)
         data = buf[ngroups:data_end]
         vals = np.zeros((ngroups * 4, 4), dtype=np.uint8)
         for j in range(4):
@@ -333,6 +346,8 @@ def decompress_sparse(payload: bytes, n: int) -> np.ndarray:
             tail_vals.append(v)
             v = 0
             shift = 0
+    if shift or len(tail_vals) != n - 4 * ngroups:
+        raise ValueError(_TRUNCATED_VARINT)
     if tail_vals:
         d = np.concatenate([d, np.array(tail_vals, dtype=np.uint64)])
     return np.cumsum(d).astype(np.uint32)
@@ -726,15 +741,26 @@ def _sparse_fast_header(data: bytes):
     (n, binbits), so readers can skip the payload decode entirely.
 
     Corrupt shapes must NOT take the fast path (loud-failure discipline):
-    an idx outside [0, sparse_capacity(b)] or a raw payload shorter than
-    idx entries returns None so the caller's full decode raises the same
+    an idx outside [0, sparse_capacity(b)], a raw payload shorter than idx
+    entries, or a group-varint payload whose length disagrees with what its
+    tag bytes and tail imply (decompress_sparse's checks, from lengths
+    alone) returns None so the caller's full decode raises the same
     diagnostic error the per-row object path always raised."""
     version, b, binbits, flags, idx = _HEADER.unpack_from(data, 0)
     if version > STRUCT_VERSION or (flags & ~_KNOWN_FLAGS) or (flags & _FLAG_DENSE):
         return None
     if idx < 0 or idx > sparse_capacity(b):
         return None
-    if not (flags & _FLAG_VARINT) and len(data) < _HEADER.size + 4 * idx:
+    if flags & _FLAG_VARINT:
+        ngroups = idx // 4
+        off = _HEADER.size + ngroups
+        pos = off + sum(data[_HEADER.size : off].translate(_TAG_DATA_LEN))
+        tail = data[pos:]
+        if pos > len(data) or (tail and tail[-1] & 0x80):
+            return None
+        if sum(1 for x in tail if x < 0x80) != idx - 4 * ngroups:
+            return None
+    elif len(data) < _HEADER.size + 4 * idx:
         return None
     return b, binbits, (flags & _HASH_KIND_MASK) >> _HASH_KIND_SHIFT, idx
 

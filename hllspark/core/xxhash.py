@@ -157,8 +157,8 @@ def spark_xxhash64_series(s, sql_type: str = "auto") -> np.ndarray:
 
     Integral values ALWAYS hash via the 8-byte LongType path in "auto" mode.
     This is safe because every JVM hashing entry point in this library
-    (agg.jvm_hash_expr, used by sketch_jvm/_distributed, jvm_prehash,
-    countmin_jvm, bloom_jvm) canonicalizes byte/short/int/boolean columns to
+    (agg.jvm_hash_expr, used by every jvm_udaf builder and by jvm_prehash)
+    canonicalizes byte/short/int/boolean columns to
     LongType before calling F.xxhash64 — the probe side cannot recover the
     SQL type from a pandas batch (an int64 column WITH NULLS arrives as
     float64, per batch), so the builder side guarantees the domain instead.

@@ -1,30 +1,34 @@
 """JVM aggregate-buffer engines (`engine="jvm_udaf"` + sibling builders).
 
-The HLL register reduction runs as a typed JVM Aggregator
-(jvm/src/hllsparkjvm/HllRegisterAggregator.java); CountMin and Bloom have
-sibling aggregate buffers in the same jar (countmin_jvm_udaf /
-bloom_jvm_udaf, flat long[]/bitset buffers).  Registered through
-``functions.udaf`` Spark wraps it in a ``ScalaAggregator``, which is a
-``TypedImperativeAggregate``: one mutable buffer object per group, updated
-in place per row inside ObjectHashAggregate — the flat-buffer shape of
-Spark's DataSketches aggregates.  Compared to the groupBy(key, __idx)
-register reduction (agg._hll_kernel_frames) this removes the per-row
-composite-key hash-aggregate probe and the key×2^b intermediate row
-explosion, which is the residual flat per-task cost that capped 8→32
-scaling in round 2 (CLAUDE.md round-3 note).
+hllspark has two build engines.  ``jvm_udaf`` (this module) runs every
+reduction as a typed JVM Aggregator from ``dist/hllspark-udaf.jar``
+(jvm/src/hllsparkjvm: HLL registers, CountMin, Bloom, MinHash, t-digest,
+KLL, and the stored-blob merges).  ``python`` (agg.build_partials /
+sketch_generic) is the mapInArrow builder and the MurmurHash reference.
+Both emit byte-identical sketches for the same hash (tests/test_jvm_udaf.py).
+``engine="auto"`` means jvm_udaf when the jar loads in the session, else
+python — see ``resolve_engine``.
+
+Registered through ``functions.udaf`` Spark wraps each aggregator in a
+``ScalaAggregator``, which is a ``TypedImperativeAggregate``: one mutable
+buffer object per group, updated in place per row inside
+ObjectHashAggregate — the flat-buffer shape of Spark's DataSketches
+aggregates.
 
 Only the reduction is JVM; canonical serialization stays in Python: the
 aggregator emits a small intermediate blob per group (mode, chain hashes,
-encodings-or-registers) and ``_finalize_blob`` rebuilds the exact
-``core.hll.HLL`` state, so output bytes are identical to the python and
-groupBy-JVM engines by construction (tests/test_jvm_engine.py).
+encodings-or-registers) and ``_blob_to_hll`` rebuilds the exact
+``core.hll.HLL`` state, so output bytes equal the python engine's by
+construction.  Estimates finalize in the JVM (HllBlobEstimateUdf).
 
-Availability: the session needs ``dist/hllspark-udaf.jar`` on the driver
-classpath — ``configure_builder`` (session creation, preferred) or the
-best-effort runtime ``ADD JAR`` + shared-classloader reflection fallback.
-When neither works callers fall back to ``agg.sketch_jvm_distributed``.
-On a real cluster ship the jar with ``spark.jars`` exactly like the
---py-files zip (tools/make_pyfiles.py docs).
+Availability: the session needs the jar on the driver classpath —
+``configure_builder`` (session creation, preferred) or the best-effort
+runtime ``ADD JAR`` + shared-classloader reflection fallback.  The jar
+embeds the digest of the sources it was built from (tools/build_jar.py);
+``available`` checks it once per app against this checkout's jvm/src and
+raises on a mismatch, so every class the Python side calls exists in the
+loaded jar.  On a real cluster ship the jar with ``spark.jars`` exactly
+like the --py-files zip (tools/make_pyfiles.py docs).
 
 Tuning: ObjectHashAggregate falls back to sort-based aggregation past
 ``spark.sql.objectHashAggregate.sortBased.fallbackThreshold`` in-memory
@@ -39,6 +43,8 @@ serialization measured 3.6× on the whole query.
 
 from __future__ import annotations
 
+import functools
+import logging
 from typing import NamedTuple, Sequence
 
 import numpy as np
@@ -48,14 +54,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 _AGG_CLASS = "hllsparkjvm.HllRegisterAggregator"
+_log = logging.getLogger("hllspark")
+
+ENGINES = ("auto", "jvm_udaf", "python")
+
+_NO_JAR = (
+    "hllspark-udaf.jar is not loadable in this session; create the session "
+    "with hllspark.configure_session (or jvm_udaf.configure_builder), or use "
+    "engine='python' (byte-identical sketches)"
+)
 
 
-def jar_path() -> str:
-    """dist/hllspark-udaf.jar, compiled on demand when a JDK is present.
-
-    Loads tools/build_jar.py by file location (no sys.path mutation — a
-    concurrent import during the old insert/pop window could pop a foreign
-    entry, per round-3 ADVICE.md)."""
+@functools.lru_cache(maxsize=1)
+def _build_tool():
+    """tools/build_jar.py, loaded by file location (no sys.path mutation — a
+    concurrent import during an insert/pop window could pop a foreign
+    entry)."""
     import importlib.util
     import os
 
@@ -63,7 +77,23 @@ def jar_path() -> str:
     spec = importlib.util.spec_from_file_location("hllspark_build_jar", src)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    return str(mod.build())
+    return mod
+
+
+def jar_path() -> str:
+    """dist/hllspark-udaf.jar, (re)compiled on demand when its embedded
+    source digest is not the current one and a JDK is present."""
+    return str(_build_tool().build())
+
+
+def _driver_digest() -> str | None:
+    """Digest of this checkout's jvm/src, or None when the package runs
+    without its source tree (a --py-files zip): the jar the session was
+    given is then the only build there is."""
+    try:
+        return _build_tool().source_digest()
+    except OSError:  # no tools/ or jvm/src next to the package
+        return None
 
 
 def _to_col(jcol) -> Column:
@@ -81,14 +111,14 @@ def _col_seq(spark: SparkSession, cols):
     return _to_seq(spark.sparkContext, cols, _to_java_column)
 
 
-# app-key → ("direct", None) | ("loader", shared jar classloader) | ("none",
-# None).  Keyed per Spark application (applicationId + startTime — NOT
-# id(session), whose address a stopped session's successor can reuse, which
-# would poison the cache and crash an auto-routed query instead of falling
-# back).  Caching the RESOLVED path matters: without it, every query in an
-# ADD-JAR-fallback session re-pays the failed py4j probe + a jar mtime scan
-# + the reflection lookup.
+# app-key → ("direct", None) | ("loader", shared jar classloader).  Keyed per
+# Spark application (applicationId + startTime — NOT id(session), whose
+# address a stopped session's successor can reuse).  Caching the RESOLVED
+# path matters: without it, every query in an ADD-JAR-fallback session
+# re-pays the failed py4j probe + a jar digest scan + the reflection lookup.
 _SESSION_CACHE: dict[str, tuple[str, object]] = {}
+# app keys whose engine="auto" fallback to python has been logged
+_FALLBACK_LOGGED: set[str] = set()
 
 
 def _app_key(spark: SparkSession) -> str:
@@ -96,15 +126,15 @@ def _app_key(spark: SparkSession) -> str:
     return f"{sc.applicationId}:{sc.startTime}"
 
 
-def _resolve(spark: SparkSession) -> tuple[str, object]:
+def _resolve(spark: SparkSession):
     """Find a working way to instantiate the jar's aggregators: (1) the py4j
     view (classes on the driver classpath via spark.jars), then (2) ADD JAR
-    + the session's shared jar classloader via reflection."""
+    + the session's shared jar classloader via reflection.  Returns
+    (mode, loader, aggregator Class) or None."""
     jvm = spark._jvm
     try:
         probe = jvm.hllsparkjvm.HllRegisterAggregator(14, 6)
-        probe.toString()  # py4j resolves unknown classes to a package stub
-        return ("direct", None)
+        return ("direct", None, probe.getClass())
     except Exception:
         pass
     try:
@@ -113,9 +143,31 @@ def _resolve(spark: SparkSession) -> tuple[str, object]:
         loader = spark._jsparkSession.sharedState().jarClassLoader()
         # smoke one full instantiation so a broken path is never cached
         _reflect_new(spark, loader, _AGG_CLASS, [14, 6])
-        return ("loader", loader)
+        return ("loader", loader, loader.loadClass(_AGG_CLASS))
     except Exception:
-        return ("none", None)
+        return None
+
+
+def _check_digest(jcls) -> None:
+    """Raise when the loaded jar was built from other sources than this
+    checkout's jvm/src (a stale jar would lack classes or differ in bytes)."""
+    want = _driver_digest()
+    if want is None:
+        return
+    stream = jcls.getResourceAsStream("/hllsparkjvm/source.sha256")
+    got = None
+    if stream is not None:
+        try:
+            got = bytes(stream.readAllBytes()).decode().strip()
+        finally:
+            stream.close()
+    if got != want:
+        where = jcls.getProtectionDomain().getCodeSource().getLocation().toString()
+        raise RuntimeError(
+            f"stale hllspark-udaf.jar at {where}: it was built from other jvm/src "
+            f"sources than this driver's (jar digest {got}, sources {want}); "
+            "rebuild it with `python tools/build_jar.py --force` and restart the session"
+        )
 
 
 def _reflect_new(spark: SparkSession, loader, cls_name: str, args: list):
@@ -131,16 +183,15 @@ def _java_illegal_arg(exc, require_wrapped: bool) -> str | None:
     """If a py4j error carries a ctor-guard java.lang.IllegalArgumentException,
     return its message; else None.  Lets _new_jvm_obj tell a PARAMETER error
     (the Java ctor guards, e.g. CountMinAggregator's depth*width overflow
-    check) apart from a resolution failure (jar absent / version skew).
+    check) apart from any other failure.
 
     ``require_wrapped`` (the reflection path): Constructor.newInstance throws
-    a RAW IllegalArgumentException itself for wrong arity / argument types —
-    i.e. a version-skewed jar whose same-named class has a different ctor —
+    a RAW IllegalArgumentException itself for wrong arity / argument types,
     while a guard thrown INSIDE the ctor arrives wrapped in
     InvocationTargetException.  Only the wrapped form is a user parameter
-    error; a top-level IAE there must stay a silent fallback (None).  On the
-    direct py4j path a guard IAE arrives unwrapped (arity problems surface
-    as py4j-side errors with no java_exception), so top-level counts."""
+    error there.  On the direct py4j path a guard IAE arrives unwrapped
+    (arity problems surface as py4j-side errors with no java_exception), so
+    top-level counts."""
     try:
         je = getattr(exc, "java_exception", None)
         wrapped = False
@@ -160,65 +211,66 @@ def _java_illegal_arg(exc, require_wrapped: bool) -> str | None:
 def _new_jvm_obj(spark: SparkSession, cls_name: str, args: list):
     """Instantiate any class from the udaf jar via the cached working path.
 
-    Returns None when the jar isn't loadable in this session OR when THIS
-    class is missing from the jar that did load (version skew: e.g. a
-    cluster-deployed pre-round-3 jar has the HLL aggregator but not the
-    CountMin/Bloom siblings) — callers surface their own helpful error or
-    fall back, never a raw py4j 'JavaPackage not callable' crash.
-
-    A constructor that DID resolve but rejected its arguments
-    (IllegalArgumentException — the in-JVM parameter guards) re-raises as
-    ValueError instead: a user's bad parameter must surface as the clear
-    driver-side error the Java guard wrote, not be masked as 'jar not
-    loadable' or silently rerouted to a fallback engine (round-4 ADVICE).
-
-    A session where nothing resolves is NOT negatively cached: the probe
-    retries on the next call, so dropping a jar in (or installing a JDK)
-    mid-application starts working without a SparkContext restart."""
-    key = _app_key(spark)
-    if key not in _SESSION_CACHE:
-        resolved = _resolve(spark)
-        if resolved[0] == "none":
-            return None
-        # only the CURRENT application's entry can be live — drop the rest so
-        # a long-lived driver cycling many sessions doesn't leak py4j loader
-        # refs for stopped SparkContexts (round-3 ADVICE.md)
-        _SESSION_CACHE.clear()
-        _SESSION_CACHE[key] = resolved
-    mode, loader = _SESSION_CACHE[key]
+    Raises RuntimeError when the jar isn't loadable in this session.  A
+    constructor that rejected its arguments (IllegalArgumentException — the
+    in-JVM parameter guards) re-raises as ValueError: a user's bad parameter
+    must surface as the clear driver-side error the Java guard wrote, not
+    as 'jar not loadable'."""
+    if not available(spark):
+        raise RuntimeError(_NO_JAR)
+    mode, loader = _SESSION_CACHE[_app_key(spark)]
     try:
         if mode == "direct":
             cls = spark._jvm
             for part in cls_name.split("."):
                 cls = getattr(cls, part)
-            obj = cls(*args)
-            obj.toString()  # a missing class resolves to a py4j package stub
-            return obj
+            return cls(*args)
         return _reflect_new(spark, loader, cls_name, args)
     except Exception as exc:
         msg = _java_illegal_arg(exc, require_wrapped=(mode != "direct"))
         if msg is not None:
             raise ValueError(f"{cls_name.rsplit('.', 1)[-1]}: {msg}") from None
-        return None
-
-
-def _new_aggregator(spark: SparkSession, b: int, binbits: int):
-    return _new_jvm_obj(spark, _AGG_CLASS, [b, binbits])
+        raise
 
 
 def available(spark: SparkSession) -> bool:
-    """Can this session run the JVM aggregate engine?  Positive results are
-    cached per app; a failed resolve is retried next call (see
-    _new_jvm_obj)."""
+    """Can this session run the JVM aggregate engine?  Resolved, and the
+    loaded jar's source digest checked, once per app; a jar built from other
+    sources raises RuntimeError (rebuild with tools/build_jar.py --force).
+    A session where nothing resolves is NOT negatively cached: the probe
+    retries on the next call, so dropping a jar in (or installing a JDK)
+    mid-application starts working without a SparkContext restart."""
     key = _app_key(spark)
     if key in _SESSION_CACHE:
         return True
     resolved = _resolve(spark)
-    if resolved[0] == "none":
+    if resolved is None:
         return False
-    _SESSION_CACHE.clear()  # same single-live-app eviction as _new_jvm_obj
-    _SESSION_CACHE[key] = resolved
+    mode, loader, jcls = resolved
+    _check_digest(jcls)
+    # only the CURRENT application's entry can be live — drop the rest so a
+    # long-lived driver cycling many sessions doesn't leak py4j loader refs
+    # for stopped SparkContexts
+    _SESSION_CACHE.clear()
+    _SESSION_CACHE[key] = (mode, loader)
     return True
+
+
+def resolve_engine(spark: SparkSession, engine: str) -> str:
+    """Validate ``engine`` and resolve "auto": jvm_udaf when the jar loads
+    in this session, else python.  The python fallback is logged once per
+    app on the ``hllspark`` logger."""
+    if engine not in ENGINES:
+        raise ValueError(f"unknown engine {engine!r}; expected one of {ENGINES}")
+    if engine != "auto":
+        return engine
+    if available(spark):
+        return "jvm_udaf"
+    key = _app_key(spark)
+    if key not in _FALLBACK_LOGGED:
+        _FALLBACK_LOGGED.add(key)
+        _log.warning("hllspark-udaf.jar is not loadable; engine='auto' runs the python engine")
+    return "python"
 
 
 def configure_builder(builder, extra_jars: Sequence[str] = ()):
@@ -260,13 +312,7 @@ def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int)
     key = (_app_key(spark), "hll", b, binbits)
     judf = _UDAF_COL_CACHE.get(key)
     if judf is None:
-        jagg = _new_aggregator(spark, b, binbits)
-        if jagg is None:
-            raise RuntimeError(
-                "hllspark-udaf.jar not loadable in this session; create the session "
-                "with hllspark.jvm_udaf.configure_builder or use engine='jvm' "
-                "(the no-jar groupBy engine; byte-identical sketches)"
-            )
+        jagg = _new_jvm_obj(spark, _AGG_CLASS, [b, binbits])
         jvm = spark._jvm
         judf = jvm.org.apache.spark.sql.functions.udaf(jagg, jvm.org.apache.spark.sql.Encoders.LONG())
         if any(k[0] != key[0] for k in _UDAF_COL_CACHE):
@@ -275,44 +321,29 @@ def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int)
     return _to_col(judf.apply(_col_seq(spark, [hash_col])))
 
 
-def _estimate_udf_column(spark: SparkSession, blob_col: Column) -> Column | None:
+def _estimate_udf_column(spark: SparkSession, blob_col: Column) -> Column:
     """Column: udaf intermediate blob → estimate via the in-JVM estimator
-    (HllBlobEstimateUdf), or None when the class is absent (a pre-round-5
-    jar — version skew).  With it the distinct-count query path is
+    (HllBlobEstimateUdf).  With it the distinct-count query path is
     scan → xxhash64 → ObjectHashAggregate → one JVM scalar call per group:
-    no Arrow transfer, no Python worker.  Estimates match the pandas
-    finalize (_blob_estimate) bit-for-bit except in the linear-counting
-    regimes, where the JVM's StrictMath.log (fdlibm — chosen for
-    bit-reproducibility across JIT tiers/platforms) can differ from the
+    no Arrow transfer, no Python worker.  Estimates match
+    ``_blob_to_hll(blob).estimate()`` bit-for-bit except in the
+    linear-counting regimes, where the JVM's StrictMath.log (fdlibm — chosen
+    for bit-reproducibility across JIT tiers/platforms) can differ from the
     platform libm CPython uses by at most 1 ulp (~1e-16 relative; the
     10-decimal goldens and the micro-unit contract compare are unaffected;
     tests/test_jvm_estimate.py pins both regimes across modes, precisions
-    and chain rows).
-
-    Callers fall back silently to the pandas finalize: the aggregation
-    engine itself resolved (hll_udaf_column raised otherwise), only the
-    finalize optimization is missing, and results are identical either way
-    (the version-skew pattern: guard the calls, not the imports)."""
+    and chain rows)."""
     key = (_app_key(spark), "blob_estimate")
     ju = _UDAF_COL_CACHE.get(key)
     if ju is None:
-        factory = _new_jvm_obj(spark, "hllsparkjvm.HllUdfs", [])
-        if factory is None:
-            return None
-        try:
-            # overload selection happens in Java (HllUdfs.blobEstimate): py4j
-            # calling functions.udf(obj, dt) directly can bind the deprecated
-            # untyped-Scala overload, which Spark 4 rejects (UNTYPED_SCALA_UDF)
-            ju = factory.blobEstimate()
-        except Exception:
-            return None
+        # overload selection happens in Java (HllUdfs.blobEstimate): py4j
+        # calling functions.udf(obj, dt) directly can bind the deprecated
+        # untyped-Scala overload, which Spark 4 rejects (UNTYPED_SCALA_UDF)
+        ju = _new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []).blobEstimate()
         if any(k[0] != key[0] for k in _UDAF_COL_CACHE):
             _UDAF_COL_CACHE.clear()
         _UDAF_COL_CACHE[key] = ju
-    try:
-        return _to_col(ju.apply(_col_seq(spark, [blob_col])))
-    except Exception:
-        return None
+    return _to_col(ju.apply(_col_seq(spark, [blob_col])))
 
 
 def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
@@ -324,9 +355,8 @@ def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
     Java decoder the blob-merge aggregator uses) and estimates with the
     in-JVM estimator (parity contract in _estimate_udf_column).
 
-    EXPLICIT-engine semantics: raises RuntimeError when the jar (or this
-    class — version skew) isn't loadable, like the other jvm_udaf entry
-    points.  Scope contract — identical to the pandas reader's: CANONICAL
+    EXPLICIT-engine semantics: raises RuntimeError when the jar isn't
+    loadable, like the other jvm_udaf entry points.  Scope contract — identical to the pandas reader's: CANONICAL
     hllspark counters only; the Postgres reference's own legacy wire blobs
     (PGLZ dense, core/legacy.py) fail loudly in BOTH paths and must go
     through ``hll_update`` first, exactly as in the reference
@@ -347,21 +377,14 @@ def _read_udf_apply(spark: SparkSession, method: str, klass: str, fallback: str,
     """Bind one of HllUdfs' scalar read-UDF factories and apply it.
 
     EXPLICIT-engine semantics shared by every per-row read entry point:
-    RuntimeError when the jar (or the factory method — version skew on a
-    pre-round-5 jar) isn't loadable, naming the pandas fallback."""
-    factory = _new_jvm_obj(spark, "hllsparkjvm.HllUdfs", [])
-    ju = None
-    if factory is not None:
-        try:
-            ju = getattr(factory, method)()
-        except Exception:
-            ju = None
-    if ju is None:
+    RuntimeError when the jar isn't loadable, naming the pandas reader."""
+    if not available(spark):
         raise RuntimeError(
             f"hllspark-udaf.jar with {klass} not loadable in this session; "
             "create the session with hllspark.jvm_udaf.configure_builder "
-            f"(round-5+ jar) or use hllspark.{fallback} (pandas)"
+            f"or use hllspark.{fallback} (pandas)"
         )
+    ju = getattr(_new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []), method)()
     return _to_col(ju.apply(_col_seq(spark, cols)))
 
 
@@ -588,33 +611,11 @@ def _blob_to_hll(buf):
     return sk
 
 
-def _blob_estimate(buf):
-    """Fast estimate straight from the aggregator blob: the common sparse
-    no-chain case needs only the unique-encode COUNT (linear counting,
-    core.hll._estimate_sparse) — no array sort, no HLL construction.  Every
-    other shape falls back to the exact full path.  Bit-identical results:
-    the same formula on the same count."""
-    from .core.hll import _estimate_sparse
-
-    b_ = bytes(buf)
-    version, mode = b_[0], b_[1]
-    if mode == 0 and version in (1, 2):
-        binbits = b_[3]
-        off = 4 if version == 1 else 5
-        if version == 2 and b_[2] == 0:
-            return None  # uninitialized merge buffer
-        nchain = int.from_bytes(b_[off : off + 4], "little", signed=True)
-        if nchain == 0:
-            n = int.from_bytes(b_[off + 4 : off + 8], "little", signed=True)
-            if n == 0:
-                # v1: all-NULL → NULL; v2: a valid EMPTY stored counter
-                return None if version == 1 else _estimate_sparse(0, binbits)
-            return _estimate_sparse(n, binbits)
-    sk = _blob_to_hll(b_)
-    return None if sk is None else sk.estimate()
-
-
-def _finalize_udf(finalize: str):
+def _finish(spark: SparkSession, agged: DataFrame, keep: list, finalize: str, est_col: str) -> DataFrame:
+    """Select ``keep`` + the finalized ``__blob`` aggregate: canonical sketch
+    bytes (one pandas pass over the output groups), or the in-JVM estimate
+    (NULL for an all-NULL group; estimate_bigint rounds half-even and
+    coalesces NULL → 0, hyperloglog_get_estimate_bigint's contract)."""
     if finalize == "sketch":
 
         @pandas_udf("binary")
@@ -623,26 +624,13 @@ def _finalize_udf(finalize: str):
                 lambda v: None if v is None else (lambda sk: None if sk is None else sk.to_bytes())(_blob_to_hll(v))
             )
 
-        return fin
-    if finalize == "estimate":
-
-        @pandas_udf("double")
-        def fin(blobs: pd.Series) -> pd.Series:
-            return blobs.map(lambda v: None if v is None else _blob_estimate(v))
-
-        return fin
+        return agged.select(*keep, fin(F.col("__blob")).alias("sketch"))
+    if finalize not in ("estimate", "estimate_bigint"):
+        raise ValueError(f"unknown finalize {finalize!r}")
+    jcol = _estimate_udf_column(spark, F.col("__blob"))
     if finalize == "estimate_bigint":
-
-        @pandas_udf("long")
-        def fin(blobs: pd.Series) -> pd.Series:
-            def est(v):
-                e = None if v is None else _blob_estimate(v)
-                return 0 if e is None else int(round(e))
-
-            return blobs.map(est)
-
-        return fin
-    raise ValueError(f"unknown finalize {finalize!r}")
+        jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
+    return agged.select(*keep, jcol.alias(est_col))
 
 
 def sketch_jvm_udaf(
@@ -660,8 +648,9 @@ def sketch_jvm_udaf(
 
     Plan shape:  scan → project xxhash64 → ObjectHashAggregate(partial)
     → shuffle ONE buffer row per (partition, key) → final merge → one tiny
-    Python stage (rows == groups) for canonical serialization/estimates.
-    Byte-identical output to the python and groupBy-JVM engines (tested).
+    Python stage (rows == groups) for canonical serialization, or an in-JVM
+    estimate for ``finalize="estimate"``/``"estimate_bigint"``.
+    Byte-identical output to the python engine (tested).
 
     (A driver-side finalize for global queries was measured and REJECTED:
     with Python worker reuse the ArrowEvalPython stage over one blob row
@@ -677,17 +666,7 @@ def sketch_jvm_udaf(
     spark = df.sparkSession
     acol = hll_udaf_column(spark, jvm_hash_expr(df, value_col), b, binbits)
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    agged = gb.agg(acol.alias("__blob"))
-    outname = "sketch" if finalize == "sketch" else est_col
-    if finalize in ("estimate", "estimate_bigint"):
-        jcol = _estimate_udf_column(spark, F.col("__blob"))
-        if jcol is not None:
-            if finalize == "estimate_bigint":
-                # int(round(e)) is half-even → bround; NULL coalesces to 0
-                jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
-            return agged.select(*by, jcol.alias(outname))
-    fin = _finalize_udf(finalize)
-    return agged.select(*by, fin(F.col("__blob")).alias(outname))
+    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col)
 
 
 def sketch_cube_jvm_udaf(
@@ -720,8 +699,7 @@ def sketch_cube_jvm_udaf(
     ``agg.sketch(df, col, by=set)`` at that granularity (merge determinism:
     canonical state is a pure function of the value SET), so rollup tables
     built this way can be re-aggregated or read by every stored-blob path.
-    ``finalize`` as in sketch_jvm_udaf (estimates stay fully in-JVM when
-    the round-5 jar is loaded)."""
+    ``finalize`` as in sketch_jvm_udaf (estimates stay fully in-JVM)."""
     from .agg import jvm_hash_expr
     from .functions import resolve_params
 
@@ -731,15 +709,7 @@ def sketch_cube_jvm_udaf(
     acol = hll_udaf_column(spark, jvm_hash_expr(df, value_col), b, binbits)
     gd = df.groupingSets([list(s) for s in sets], *dims)
     agged = gd.agg(acol.alias("__blob"), F.grouping_id().cast("long").alias(gid_col))
-    outname = "sketch" if finalize == "sketch" else est_col
-    if finalize in ("estimate", "estimate_bigint"):
-        jcol = _estimate_udf_column(spark, F.col("__blob"))
-        if jcol is not None:
-            if finalize == "estimate_bigint":
-                jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
-            return agged.select(*dims, gid_col, jcol.alias(outname))
-    fin = _finalize_udf(finalize)
-    return agged.select(*dims, gid_col, fin(F.col("__blob")).alias(outname))
+    return _finish(spark, agged, [*dims, gid_col], finalize, est_col)
 
 
 # ---------------------------------------------------------------------------
@@ -752,12 +722,6 @@ def _sibling_udaf_column(
     spark: SparkSession, in_col: Column, cls_name: str, args: list, encoder: str = "long"
 ) -> Column:
     jagg = _new_jvm_obj(spark, cls_name, args)
-    if jagg is None:
-        raise RuntimeError(
-            "hllspark-udaf.jar not loadable in this session; create the session "
-            "with hllspark.jvm_udaf.configure_builder or use the groupBy builders "
-            "in hllspark.sketches.jvm (byte-identical sketches)"
-        )
     jvm = spark._jvm
     E = jvm.org.apache.spark.sql.Encoders
     jenc = {"long": E.LONG, "double": E.DOUBLE, "binary": E.BINARY}[encoder]()
@@ -867,14 +831,9 @@ def countmin_jvm_udaf(
     df: DataFrame, value_col: str, by: Sequence[str] | None = None, width: int = 4096, depth: int = 5
 ) -> DataFrame:
     """Count-Min as a single JVM aggregate buffer (long[depth×width] per
-    group, elementwise-add merge) — byte-identical sketches to
-    sketches.jvm.countmin_jvm and the python engine (tested).
-
-    Trade-off vs the groupBy builder: the buffer ships depth×width×8 bytes
-    per (partition, key) regardless of occupancy, where the groupBy builder
-    ships only occupied (j, bucket) count rows — prefer THIS for wide inputs
-    with few group keys, the groupBy builder for high-cardinality grouping
-    over sparse keys."""
+    group, elementwise-add merge) — byte-identical sketches to the python
+    engine (tested).  The buffer ships depth×width×8 bytes per
+    (partition, key) regardless of occupancy."""
     from .sketches.countmin import CountMin
 
     CountMin.create(width=width, depth=depth)  # same validation as every sibling builder
@@ -885,16 +844,15 @@ def bloom_jvm_udaf(
     df: DataFrame, value_col: str, by: Sequence[str] | None = None, m_bits: int = 1 << 20, k: int = 7
 ) -> DataFrame:
     """Bloom filter as a single JVM aggregate buffer (bit-packed
-    byte[m/8] per group, OR merge) — byte-identical to
-    sketches.jvm.bloom_jvm and the python engine (tested).  Same
-    ships-full-buffer trade-off as countmin_jvm_udaf."""
+    byte[m/8] per group, OR merge) — byte-identical to the python engine
+    (tested).  Same ships-full-buffer trade-off as countmin_jvm_udaf."""
     from .sketches.bloom import Bloom
 
     Bloom.create(m_bits=m_bits, k=k)  # same validation as every sibling builder
     if m_bits > (2**31 - 1) * 8:
         # a JVM byte[] caps the buffer at 2^31-1 bytes (~17 Gbit); the
         # numpy-backed builders have no such limit
-        raise ValueError("m_bits too large for the JVM buffer engine; use sketches.jvm.bloom_jvm")
+        raise ValueError("m_bits too large for the JVM buffer engine; use engine='python'")
     return _sibling_sketch(df, value_col, by, "hllsparkjvm.BloomAggregator", [m_bits, k], _bloom_blob_to_bytes)
 
 
@@ -930,13 +888,9 @@ def minhash_jvm_udaf(df: DataFrame, value_col: str, by: Sequence[str] | None = N
     """MinHash signature as a single JVM aggregate buffer (long[k] unsigned
     mins, elementwise-min merge — associative/commutative/idempotent, so the
     signature is a pure function of the value set like HLL's register max).
-    Byte-identical sketches to sketches.jvm.minhash_jvm and the python
-    engine with hash_kind=HASH_XXHASH_SPARK (tested): the aggregator replays
-    Spark's own xxhash64(hash, lit(j)) slot chain in-JVM.
-
-    Vs the groupBy builder (k min() aggregate columns): one flat buffer per
-    group instead of a k-column aggregate row — the same plan-shape win as
-    the HLL udaf engine, and the per-row cost is k hashInt calls either way."""
+    Byte-identical sketches to the python engine with
+    hash_kind=HASH_XXHASH_SPARK (tested): the aggregator replays Spark's own
+    xxhash64(hash, lit(j)) slot chain in-JVM."""
     from .sketches.minhash import MinHash
 
     MinHash.create(k=k)  # same validation as every sibling builder
@@ -944,8 +898,8 @@ def minhash_jvm_udaf(df: DataFrame, value_col: str, by: Sequence[str] | None = N
 
 
 def _quantile_in_expr(df: DataFrame, value_col: str) -> Column:
-    """cast-to-double with NaN→NULL, mirroring sketches/jvm.py _value_counts
-    (no quantile sketch ingests NaN; NULLs are skipped by the aggregator)."""
+    """cast-to-double with NaN→NULL (no quantile sketch ingests NaN; NULLs
+    are skipped by the aggregator)."""
     v = F.col(value_col).cast("double")
     return F.when(F.isnan(v), F.lit(None)).otherwise(v)
 
@@ -953,9 +907,9 @@ def _quantile_in_expr(df: DataFrame, value_col: str) -> Column:
 def _td_blob_to_bytes(buf) -> bytes | None:
     """TDigestAggregator blob → canonical TDigest bytes (None = all-NULL).
 
-    mode 0 (exact value→count map): replay the IDENTICAL sorted weighted
-    fold as sketches/jvm.py tdigest_jvm → byte parity with the groupBy
-    builder.  mode 1 (bounded in-JVM centroids): the state is already a
+    mode 0 (exact value→count map): one weighted fold over the distinct
+    values in ascending order — a pure function of the value multiset, so
+    any partitioning gives the same bytes.  mode 1 (bounded in-JVM centroids): the state is already a
     valid k1-scale digest — wrap and serialize."""
     from .sketches.tdigest import TDigest
 
@@ -986,9 +940,9 @@ def _td_blob_to_bytes(buf) -> bytes | None:
 
 def _kll_blob_to_bytes(buf) -> bytes | None:
     """KllAggregator blob → canonical KLL bytes (None = all-NULL).  mode 0
-    replays the sorted binary-weight-decomposition insert of
-    sketches/jvm.py kll_jvm (byte parity); mode 1 wraps the in-JVM
-    compactor levels directly."""
+    is the sorted binary-weight-decomposition insert of the distinct values
+    (a pure function of the multiset); mode 1 wraps the in-JVM compactor
+    levels directly."""
     from .sketches.kll import KLL
 
     buf = bytes(buf)
@@ -1035,14 +989,13 @@ def tdigest_jvm_udaf(
     while a buffer holds ≤ exact_capacity distinct values, folded into
     bounded k1-scale centroids past it (TDigestAggregator.java).
 
-    This is the scale path for CONTINUOUS columns, where the groupBy
-    builder (sketches.jvm.tdigest_jvm) degrades to shuffling one row per
-    distinct value (≈ the row count): here each buffer ships at most
-    min(distinct, exact_capacity) map entries or ~δ/2 centroids.
+    This is the scale path for CONTINUOUS columns: each buffer ships at
+    most min(distinct, exact_capacity) map entries or ~δ/2 centroids.
 
-    Determinism contract: while every buffer stays exact the sketch is
-    byte-identical to tdigest_jvm / the python engine (a pure function of
-    the value multiset — tested).  Past exact_capacity the centroid layout
+    Determinism contract: while every buffer stays exact the sketch is one
+    sorted weighted fold over the distinct values — a pure function of the
+    value multiset, equal to the direct ``TDigest.update_weighted`` fold
+    (tested).  Past exact_capacity the centroid layout
     depends on partition/merge order within the k1-scale rank-error bound
     (like every practical t-digest, incl. the python engine's
     partition-batching dependence), so bytes are not run-reproducible —
@@ -1077,7 +1030,8 @@ def kll_jvm_udaf(
     """KLL as a JVM aggregate buffer — same two-mode design as
     tdigest_jvm_udaf (exact map ≤ exact_capacity distinct values → real
     KLL compactor levels past it, KllAggregator.java).  Exact mode is
-    byte-identical to sketches.jvm.kll_jvm (tested); compactor mode is
+    byte-identical to the direct ``KLL.update_weighted`` fold (tested);
+    compactor mode is
     bounded at O(k) items per buffer with the ~1.33/k rank-error bound and
     the same order-dependence caveat as tdigest_jvm_udaf."""
     from .sketches.kll import KLL
@@ -1123,27 +1077,9 @@ def hll_merge_udaf(
     a SQL NULL sketch (strict-aggregate contract)."""
     by = list(by or [])
     spark = df.sparkSession
-    try:
-        acol = _sibling_udaf_column(
-            spark, F.col(sketch_col), "hllsparkjvm.HllMergeAggregator", [], encoder="binary"
-        )
-    except RuntimeError:
-        raise RuntimeError(
-            "hllspark-udaf.jar (with HllMergeAggregator) not loadable in this "
-            "session; create the session with hllspark.jvm_udaf.configure_builder "
-            "or use agg.merge_partials(engine='python') (byte-identical results)"
-        ) from None
+    acol = _sibling_udaf_column(spark, F.col(sketch_col), "hllsparkjvm.HllMergeAggregator", [], encoder="binary")
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    agged = gb.agg(acol.alias("__blob"))
-    outname = "sketch" if finalize == "sketch" else est_col
-    if finalize in ("estimate", "estimate_bigint"):
-        jcol = _estimate_udf_column(spark, F.col("__blob"))
-        if jcol is not None:  # silent pandas fallback on a pre-round-5 jar
-            if finalize == "estimate_bigint":
-                jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
-            return agged.select(*by, jcol.alias(outname))
-    fin = _finalize_udf(finalize)
-    return agged.select(*by, fin(F.col("__blob")).alias(outname))
+    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col)
 
 
 _MERGE_CLASSES = {

@@ -87,7 +87,7 @@ def configure_session(
 
         builder = jvm_udaf.configure_builder(builder, extra_jars=extra_jars)
     except Exception:
-        # no JDK and no prebuilt jar: every engine still works — auto routing
-        # falls back to the groupBy-JVM engine (byte-identical sketches)
+        # no JDK and no prebuilt jar: every API still works — engine="auto"
+        # runs the python engine (byte-identical sketches)
         pass
     return builder

@@ -52,7 +52,7 @@ class KLL:
         # loop until NO level overflows: a promotion can overflow the level
         # above (including one created mid-pass), and a single range() walk
         # would leave it uncompacted — with bulk weighted inserts that made
-        # the sketch unbounded (a 1M-distinct kll_jvm build retained 500k
+        # the sketch unbounded (a 1M-distinct weighted build retained 500k
         # items in a never-visited level)
         changed = True
         while changed:
@@ -90,7 +90,8 @@ class KLL:
         decomposition: a value with count c lands once in level h for every
         set bit h of c (an item at level h carries weight 2^h exactly, so
         the insert is lossless — no sampling error beyond later compaction).
-        This is the JVM-builder path, fed by groupBy(value).count()."""
+        This is the jar engine's exact-mode finalize, fed distinct values
+        with their counts."""
         vals = np.asarray(vals, dtype=np.float64)
         counts = np.asarray(counts, dtype=np.int64)
         ok = np.isfinite(vals) & (counts > 0)

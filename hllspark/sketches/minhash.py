@@ -37,8 +37,9 @@ def _remix(h: np.ndarray, salt: np.ndarray) -> np.ndarray:
 
 def _remix_spark(h: np.ndarray, k: int) -> np.ndarray:
     """Derived hashes matching Spark's ``xxhash64(hash_col, lit(j))`` for
-    j = 1..k — the remix the JVM builder (sketches.jvm.minhash_jvm) can run
-    natively without wrapping multiplies (ANSI mode forbids overflow), so
+    j = 1..k — the remix MinHashAggregator replays in the JVM, and the one
+    Spark SQL can run natively without wrapping multiplies (ANSI mode
+    forbids overflow), so
     hash_kind=HASH_XXHASH_SPARK sketches stay byte-identical across engines.
     Spark folds multi-arg xxhash64 left-to-right: hashLong(h, 42) seeds
     hashInt(j, ·)."""

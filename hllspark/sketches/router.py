@@ -1,22 +1,21 @@
-"""engine="auto" routing for the sibling sketches — the same three-tier
-engine surface agg.sketch gives HLL, for count-min / Bloom / MinHash /
-t-digest / KLL:
+"""engine="auto" routing for the sibling sketches — the same two-engine
+surface agg.sketch gives HLL, for count-min / Bloom / MinHash / t-digest /
+KLL:
 
-- ``jvm_udaf``: typed aggregate buffer in dist/hllspark-udaf.jar (preferred
-  by auto when the jar loads — flat buffer per group, one Arrow-batch
-  finalize over all groups; the only engine whose per-key cost doesn't grow
-  with group cardinality, and for the quantile sketches the only one
-  bounded on continuous columns);
-- ``jvm``: the no-jar groupBy builders (hllspark.sketches.jvm) — fully
-  Catalyst reductions, byte-identical sketches, but per-key pandas assembly
-  (count-min/Bloom/quantiles) that dominates past ~10^4 group keys;
+- ``jvm_udaf``: typed aggregate buffer in dist/hllspark-udaf.jar (chosen by
+  auto when the jar loads — flat buffer per group, one Arrow-batch finalize
+  over all groups; the only engine whose per-key cost doesn't grow with
+  group cardinality, and for the quantile sketches the one bounded on
+  continuous columns);
 - ``python``: agg.sketch_generic with jvm_prehash=True — per-partition
-  Arrow builds, never shuffles raw values; same bytes again.
+  Arrow builds, never shuffles raw values.  Theta sketches run here only.
 
-All engines produce byte-identical sketches for the same params (the
-sibling engine-parity invariant, tests/test_jvm_udaf.py + test_jvm_engine)
-except the quantile sketches past ``exact_capacity`` distinct values per
-buffer, where only jvm_udaf stays bounded (documented there).
+The hash kinds (count-min, Bloom, MinHash) are byte-identical across the
+two engines for the same params (tests/test_sketch_router.py,
+tests/test_jvm_udaf.py).  The quantile kinds build per partition on the
+python engine, so their centroids depend on partitioning there; the jar's
+exact mode is a pure function of the value multiset below
+``exact_capacity`` distinct values per buffer.
 """
 
 from __future__ import annotations
@@ -26,6 +25,33 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 
 _KINDS = ("countmin", "bloom", "minhash", "tdigest", "kll", "theta")
+
+
+def _engine(df: DataFrame, kind: str, engine: str) -> str:
+    """Validated, resolved engine for ``kind``.  Theta has no aggregate
+    buffer in the jar, so it runs on the python engine only."""
+    from ..jvm_udaf import resolve_engine
+
+    if kind != "theta":
+        return resolve_engine(df.sparkSession, engine)
+    if engine not in ("auto", "python"):
+        raise ValueError(
+            f"theta sketches run on the python engine only, not {engine!r}: the "
+            "two-phase partial pipeline keeps per-partition state <= k"
+        )
+    return "python"
+
+
+def _udaf_builder(kind: str):
+    from .. import jvm_udaf
+
+    return {
+        "countmin": jvm_udaf.countmin_jvm_udaf,
+        "bloom": jvm_udaf.bloom_jvm_udaf,
+        "minhash": jvm_udaf.minhash_jvm_udaf,
+        "tdigest": jvm_udaf.tdigest_jvm_udaf,
+        "kll": jvm_udaf.kll_jvm_udaf,
+    }[kind]
 
 
 def build(
@@ -40,73 +66,25 @@ def build(
 
     ``params`` are the kind's create() parameters (countmin: width/depth;
     bloom: m_bits/k; minhash: k; tdigest: delta [+ exact_capacity on the
-    udaf engine]; kll: k [+ exact_capacity]; theta: k — python engine only,
-    see the guard below).
+    udaf engine]; kll: k [+ exact_capacity]; theta: k — python engine only).
     """
     if kind not in _KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}; expected one of {_KINDS}")
-    if kind == "theta" and engine in ("jvm", "jvm_udaf"):
-        raise ValueError(
-            "theta sketches have no Catalyst/aggregate-buffer engine: "
-            "bounded per-group k-smallest isn't expressible as a groupBy "
-            "reduction without collect_set; use engine='python' (the "
-            "two-phase partial pipeline keeps per-partition state <= k)"
-        )
-    auto = engine == "auto"
-    if kind == "theta":
-        engine = "python"  # auto: the only (and scale-correct) engine
-    elif auto:
-        from ..agg import _udaf_available
+    if _engine(df, kind, engine) == "jvm_udaf":
+        return _udaf_builder(kind)(df, value_col, by=by, **params)
+    from ..agg import sketch_generic
+    from ..core.hll import HASH_XXHASH_SPARK
+    from . import KLL, Bloom, CountMin, MinHash, TDigest, Theta
 
-        engine = "jvm_udaf" if _udaf_available(df.sparkSession) else "jvm"
-    if engine == "jvm_udaf":
-        from .. import jvm_udaf
-
-        fn = {
-            "countmin": jvm_udaf.countmin_jvm_udaf,
-            "bloom": jvm_udaf.bloom_jvm_udaf,
-            "minhash": jvm_udaf.minhash_jvm_udaf,
-            "tdigest": jvm_udaf.tdigest_jvm_udaf,
-            "kll": jvm_udaf.kll_jvm_udaf,
-        }[kind]
-        try:
-            return fn(df, value_col, by=by, **params)
-        except RuntimeError:
-            # version-skewed jar: the HLL probe class loaded but THIS
-            # aggregator is missing — auto falls back to the groupBy
-            # builders (byte-identical sketches); an EXPLICIT jvm_udaf
-            # request stays loud
-            if not auto:
-                raise
-            engine = "jvm"
-    if engine == "jvm":
-        from . import jvm as jvm_builders
-
-        params.pop("exact_capacity", None)  # udaf-engine-only knob
-        fn = {
-            "countmin": jvm_builders.countmin_jvm,
-            "bloom": jvm_builders.bloom_jvm,
-            "minhash": jvm_builders.minhash_jvm,
-            "tdigest": jvm_builders.tdigest_jvm,
-            "kll": jvm_builders.kll_jvm,
-        }[kind]
-        return fn(df, value_col, by=by, **params)
-    if engine == "python":
-        from ..agg import sketch_generic
-        from ..core.hll import HASH_XXHASH_SPARK
-
-        params.pop("exact_capacity", None)
-        from . import KLL, Bloom, CountMin, MinHash, TDigest, Theta
-
-        cls = {"countmin": CountMin, "bloom": Bloom, "minhash": MinHash,
-               "tdigest": TDigest, "kll": KLL, "theta": Theta}[kind]
-        if kind in ("tdigest", "kll"):
-            # quantile sketches ingest VALUES, not hashes — no prehash
-            factory = lambda: cls.create(**params)  # noqa: E731
-            return sketch_generic(df, value_col, factory, cls, by=by)
-        factory = lambda: cls.create(**params, hash_kind=HASH_XXHASH_SPARK)  # noqa: E731
-        return sketch_generic(df, value_col, factory, cls, by=by, jvm_prehash=True)
-    raise ValueError(f"unknown engine {engine!r}; expected auto/jvm_udaf/jvm/python")
+    params.pop("exact_capacity", None)  # udaf-engine-only knob
+    cls = {"countmin": CountMin, "bloom": Bloom, "minhash": MinHash,
+           "tdigest": TDigest, "kll": KLL, "theta": Theta}[kind]
+    if kind in ("tdigest", "kll"):
+        # quantile sketches ingest VALUES, not hashes — no prehash
+        factory = lambda: cls.create(**params)  # noqa: E731
+        return sketch_generic(df, value_col, factory, cls, by=by)
+    factory = lambda: cls.create(**params, hash_kind=HASH_XXHASH_SPARK)  # noqa: E731
+    return sketch_generic(df, value_col, factory, cls, by=by, jvm_prehash=True)
 
 
 def build_cube(
@@ -128,13 +106,13 @@ def build_cube(
 
     Engines route like build(), and every path is ONE scan of the source:
     jvm_udaf via Catalyst Expand before map-side combine
-    (jvm_udaf.GroupingSets); jvm/python (theta included) via the
-    explode-based Expand (agg._expand_grouping_sets) feeding one grouped
-    build over dims+grouping_id.  Cells are byte-identical to a per-set
-    ``build(df, col, kind, by=set)`` — except the quantile kinds past
-    exact_capacity distinct values per buffer, where only rank-bounded
-    equivalence holds (the usual two-mode caveat)."""
-    from ..agg import _resolve_grouping_sets, _udaf_available
+    (jvm_udaf.GroupingSets); python (theta included) via the explode-based
+    Expand (agg._expand_grouping_sets) feeding one grouped build over
+    dims+grouping_id.  Cells are byte-identical to a per-set
+    ``build(df, col, kind, by=set)`` on the same engine — for the quantile
+    kinds on the jar engine only below exact_capacity distinct values per
+    buffer (the usual two-mode caveat)."""
+    from ..agg import _expand_grouping_sets, _resolve_grouping_sets
 
     if kind not in _KINDS:
         raise ValueError(f"unknown sketch kind {kind!r}; expected one of {_KINDS}")
@@ -143,38 +121,11 @@ def build_cube(
         # duplicate column in the Expand projection → confusing downstream
         # ambiguous-reference analysis error; refuse up front
         raise ValueError(f"value_col {value_col!r} cannot also be a dim column")
-    if kind == "theta" and engine in ("jvm", "jvm_udaf"):
-        raise ValueError(
-            "theta sketches have no Catalyst/aggregate-buffer engine: "
-            "bounded per-group k-smallest isn't expressible as a groupBy "
-            "reduction without collect_set; use engine='python' (the cube "
-            "is still one scan — explode-based Expand + one grouped build)"
-        )
-    auto = engine == "auto"
-    if kind == "theta":
-        engine = "python"
-    elif auto:
-        engine = "jvm_udaf" if _udaf_available(df.sparkSession) else "jvm"
+    engine = _engine(df, kind, engine)
     if engine == "jvm_udaf":
-        from .. import jvm_udaf
+        from ..jvm_udaf import GroupingSets
 
-        fn = {
-            "countmin": jvm_udaf.countmin_jvm_udaf,
-            "bloom": jvm_udaf.bloom_jvm_udaf,
-            "minhash": jvm_udaf.minhash_jvm_udaf,
-            "tdigest": jvm_udaf.tdigest_jvm_udaf,
-            "kll": jvm_udaf.kll_jvm_udaf,
-        }[kind]
-        try:
-            return fn(df, value_col, by=jvm_udaf.GroupingSets(dims, resolved, gid_col), **params)
-        except RuntimeError:
-            if not auto:
-                raise
-            engine = "jvm"
-    # groupBy-engine path (incl. theta): the same single-scan shape via the
-    # explode-based Expand, then one grouped build over dims+grouping_id
-    from ..agg import _expand_grouping_sets
-
+        return _udaf_builder(kind)(df, value_col, by=GroupingSets(dims, resolved, gid_col), **params)
     expanded = _expand_grouping_sets(
         df.select(value_col, *dims), [value_col], dims, resolved, gid_col
     )
@@ -198,40 +149,22 @@ def merge_stored(
     kinds = ("hll",) + _KINDS
     if kind not in kinds:
         raise ValueError(f"unknown sketch kind {kind!r}; expected one of {kinds}")
-    auto = engine == "auto"
-    if kind == "theta":
-        if engine == "jvm_udaf":
-            raise ValueError("theta sketches have no blob-merge aggregate buffer; use engine='python'")
-        engine = "python"  # exact deterministic merge — byte parity trivially holds
-    elif auto:
-        from ..agg import _udaf_available
-
-        engine = "jvm_udaf" if _udaf_available(df.sparkSession) else "python"
-    if engine == "jvm_udaf":
+    if _engine(df, kind, engine) == "jvm_udaf":
         from .. import jvm_udaf
 
-        try:
-            if kind == "hll":
-                out = jvm_udaf.hll_merge_udaf(df, sketch_col, by)
-                # engine-independent schema: python path names the output
-                # column sketch_col, so the udaf path must too
-                return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
-            return jvm_udaf.sibling_merge_udaf(df, kind, sketch_col, by)
-        except RuntimeError:
-            if not auto:
-                raise
-            engine = "python"  # version-skewed jar → pandas merge
-    if engine == "python":
-        from ..agg import merge_partials
-        from ..core.hll import HLL
-        from . import KLL, Bloom, CountMin, MinHash, TDigest
+        if kind == "hll":
+            out = jvm_udaf.hll_merge_udaf(df, sketch_col, by)
+            # engine-independent schema: python path names the output
+            # column sketch_col, so the udaf path must too
+            return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
+        return jvm_udaf.sibling_merge_udaf(df, kind, sketch_col, by)
+    from ..agg import merge_partials
+    from ..core.hll import HLL
+    from . import KLL, Bloom, CountMin, MinHash, TDigest, Theta
 
-        from . import Theta
-
-        cls = {"hll": HLL, "countmin": CountMin, "bloom": Bloom,
-               "minhash": MinHash, "tdigest": TDigest, "kll": KLL, "theta": Theta}[kind]
-        return merge_partials(df, by, sketch_col=sketch_col, cls=cls, engine="python")
-    raise ValueError(f"unknown engine {engine!r}; expected auto/jvm_udaf/python")
+    cls = {"hll": HLL, "countmin": CountMin, "bloom": Bloom,
+           "minhash": MinHash, "tdigest": TDigest, "kll": KLL, "theta": Theta}[kind]
+    return merge_partials(df, by, sketch_col=sketch_col, cls=cls, engine="python")
 
 
 def merge_stored_cube(

@@ -78,8 +78,8 @@ class TDigest:
         self.update_weighted(vals, np.ones(len(vals)))
 
     def update_weighted(self, vals: np.ndarray, weights: np.ndarray) -> None:
-        """Insert pre-aggregated (value, weight) pairs — the JVM-builder path
-        where duplicates were already collapsed by groupBy(value).count().
+        """Insert pre-aggregated (value, weight) pairs — the jar engine's
+        exact-mode finalize, where duplicates are already collapsed to counts.
         Equivalent to inserting each value `weight` times up to centroid
         boundary placement (both within the k1-scale error bound)."""
         vals = np.asarray(vals, dtype=np.float64)
@@ -94,7 +94,7 @@ class TDigest:
         if len(self.means):
             m = np.concatenate([self.means, vals])
             w = np.concatenate([self.weights, weights])
-        else:  # fresh digest (the JVM-builder fold): no empty-concat copies
+        else:  # fresh digest (the exact-mode fold): no empty-concat copies
             m, w = vals, weights
         if len(m) > 1 and not np.all(m[1:] >= m[:-1]):
             order = np.argsort(m, kind="stable")

@@ -102,15 +102,23 @@ public final class HllMergeAggregator
     return regs;
   }
 
-  /** Inverse of core/hll.py compress_sparse (tags-first group varint). */
+  static final String TRUNCATED = "truncated group-varint sparse payload";
+
+  /**
+   * Inverse of core/hll.py compress_sparse (tags-first group varint) over payload[off:]: exactly
+   * n entries must fill the payload to its end, else IllegalArgumentException (the same refusal
+   * as decompress_sparse).
+   */
   static int[] decompressSparse(byte[] payload, int off, int n) {
     long[] deltas = new long[n];
     int ngroups = n / 4;
     int pos = off + ngroups; // data bytes start after all tag bytes
+    if (pos > payload.length) throw new IllegalArgumentException(TRUNCATED);
     for (int g = 0; g < ngroups; g++) {
       int tag = payload[off + g] & 0xff;
       for (int j = 0; j < 4; j++) {
         int len = ((tag >> (2 * j)) & 3) + 1;
+        if (pos + len > payload.length) throw new IllegalArgumentException(TRUNCATED);
         long v = 0;
         for (int k = 0; k < len; k++) { // little-endian value bytes
           v |= (long) (payload[pos + k] & 0xff) << (8 * k);
@@ -123,6 +131,7 @@ public final class HllMergeAggregator
       long v = 0;
       int shift = 0;
       while (true) {
+        if (pos >= payload.length) throw new IllegalArgumentException(TRUNCATED);
         int by = payload[pos++] & 0xff;
         v |= (long) (by & 0x7f) << shift;
         if ((by & 0x80) == 0) break;
@@ -130,6 +139,7 @@ public final class HllMergeAggregator
       }
       deltas[i] = v;
     }
+    if (pos != payload.length) throw new IllegalArgumentException(TRUNCATED);
     int[] enc = new int[n];
     long run = 0;
     for (int i = 0; i < n; i++) {

@@ -44,3 +44,40 @@ def sf001_dir():
 @pytest.fixture(scope="session")
 def sf01_dir():
     return os.environ.get("SPARK_GRAFT_SF01", "/root/testdata/sf0.01")
+
+
+def _quantile_ref(df, value_col, by, kind, **params):
+    """{key tuple: canonical bytes} of the direct python build of a quantile
+    sketch: one sorted weighted fold over each group's distinct non-NULL,
+    non-NaN values (None for a group with none) — what the jar's exact mode
+    must reproduce byte-for-byte."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from hllspark.sketches.kll import KLL
+    from hllspark.sketches.tdigest import TDigest
+
+    by = list(by)
+    groups: dict = {}
+    for r in df.select(*by, F.col(value_col).cast("double").alias("__v")).collect():
+        groups.setdefault(tuple(r[c] for c in by), []).append(r["__v"])
+    out = {}
+    for key, vs in groups.items():
+        v = np.array([x for x in vs if x is not None and x == x], dtype=np.float64)
+        if not len(v):
+            out[key] = None
+            continue
+        vals, counts = np.unique(v, return_counts=True)
+        if kind == "tdigest":
+            st = TDigest.create(**params)
+            st.update_weighted(vals, counts.astype(np.float64))
+        else:
+            st = KLL.create(**params)
+            st.update_weighted(vals, counts)
+        out[key] = st.to_bytes()
+    return out
+
+
+@pytest.fixture(scope="session")
+def quantile_ref():
+    return _quantile_ref

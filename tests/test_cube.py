@@ -6,7 +6,7 @@ counters with any SQL GROUP BY (they are ordinary Postgres aggregates, so
 Invariants pinned here:
 - every cube cell's sketch is BYTE-IDENTICAL to a separate
   agg.sketch(df, col, by=set) at that granularity (merge determinism),
-- the single-scan jvm_udaf path and the per-set union fallback agree,
+- the single-scan jvm_udaf path and the python (explode-Expand) path agree,
 - grouping_id disambiguates rolled-up NULL dims from actual NULL keys,
 - the udaf plan reads the source ONCE (Catalyst Expand, not |sets| scans).
 """
@@ -80,13 +80,13 @@ def test_cube_cells_match_per_set_groupby(udaf_spark, sf001_dir):
 
 
 def test_cube_union_fallback_parity(udaf_spark, sf001_dir):
-    """The no-jar path (engine=jvm, explode-based Expand) and the udaf
+    """The no-jar path (engine=python, explode-based Expand) and the udaf
     path agree, for a rollup and for an explicit grouping-sets list."""
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")
     dims = ["o_orderpriority", "o_orderstatus"]
     for kw in ({"mode": "rollup"}, {"sets": [["o_orderstatus"], []]}):
         u = _cells(agg.sketch_cube(o, "o_custkey", dims, engine="jvm_udaf", **kw), dims)
-        j = _cells(agg.sketch_cube(o, "o_custkey", dims, engine="jvm", **kw), dims)
+        j = _cells(agg.sketch_cube(o, "o_custkey", dims, engine="python", **kw), dims)
         assert u == j
 
 
@@ -114,20 +114,18 @@ def test_cube_all_null_value_group(udaf_spark):
 
 def test_cube_single_scan_plan(udaf_spark, sf001_dir):
     """EVERY engine is one pass: the udaf path via Catalyst Expand, the
-    groupBy engines via the explode-based Expand (Generate node)."""
+    python engine via the explode-based Expand (Generate node)."""
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")
     dims = ["o_orderpriority", "o_orderstatus"]
     plan = agg.sketch_cube(o, "o_custkey", dims, engine="jvm_udaf")._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1, plan
-    # the jvm groupBy engine is inherently a two-branch plan over its input
-    # (distinct-encode pass ∪ chain rows), so the honest single-scan claim
-    # is relative: the cube reads the source exactly as often as ONE grouped
-    # sketch — the explode Expand replaced the per-set union's |sets|×.
-    plan = agg.sketch_cube(o, "o_custkey", dims, engine="jvm")._jdf.queryExecution().executedPlan().toString()
-    single = agg.sketch(o, "o_custkey", by=dims, engine="jvm")._jdf.queryExecution().executedPlan().toString()
+    # the cube reads the source exactly as often as ONE grouped sketch —
+    # the explode Expand replaced the per-set union's |sets|× scans
+    plan = agg.sketch_cube(o, "o_custkey", dims, engine="python")._jdf.queryExecution().executedPlan().toString()
+    single = agg.sketch(o, "o_custkey", by=dims, engine="python")._jdf.queryExecution().executedPlan().toString()
     assert "Generate explode" in plan
-    assert plan.count("Scan parquet") == single.count("Scan parquet"), plan
+    assert plan.count("Scan parquet") == single.count("Scan parquet") == 1, plan
 
 
 _SIBLING_PARAMS = {
@@ -139,29 +137,35 @@ _SIBLING_PARAMS = {
 }
 
 
-def test_sibling_cube_parity(udaf_spark, sf001_dir):
+def test_sibling_cube_parity(udaf_spark, sf001_dir, quantile_ref):
     """sketches.build_cube: udaf single-scan cells byte-identical to per-set
-    build() AND to the union fallback, for every sibling kind (quantile
-    kinds stay in exact mode at this cardinality)."""
+    build() AND to the python engine's cube for the hash kinds; the
+    quantile kinds stay in exact mode at this cardinality, so each cell is
+    the direct python fold of its values (the python engine folds per
+    partition, so its centroids are not a byte reference)."""
     from hllspark import sketches
 
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")
     dims = ["o_orderstatus"]
     for kind, params in _SIBLING_PARAMS.items():
         u = _cells(sketches.build_cube(o, "o_custkey", kind, dims, engine="jvm_udaf", **params), dims)
-        j = _cells(sketches.build_cube(o, "o_custkey", kind, dims, engine="jvm", **params), dims)
-        assert u == j, kind
+        if kind not in ("tdigest", "kll"):
+            j = _cells(sketches.build_cube(o, "o_custkey", kind, dims, engine="python", **params), dims)
+            assert u == j, kind
         for s in ([dims[0]], []):
             gid = _gid(dims, s)
             for r in sketches.build(o, "o_custkey", kind, by=s, **params).collect():
                 key = ((r[dims[0]] if s else None), gid)
                 assert u[key] == bytes(r["sketch"]), (kind, key)
+            if kind in ("tdigest", "kll"):
+                for k, v in quantile_ref(o, "o_custkey", s, kind, **params).items():
+                    assert u[(k[0] if s else None, gid)] == v, (kind, k)
 
 
 def test_theta_cube_single_scan(udaf_spark, sf001_dir):
     """theta has no aggregate-buffer engine, but its cube is still ONE scan
     (explode-based Expand + one grouped python build), byte-identical to
-    per-set builds; the jvm engines refuse with the build() rationale."""
+    per-set builds; the jar engine refuses with the build() rationale."""
     from hllspark import sketches
 
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")

@@ -1,23 +1,23 @@
-"""JVM-native engine: bit-exact expression parity with the numpy kernels and
-byte-identical sketches vs the python (mapInArrow) engine."""
+"""Engine parity: the jvm_udaf engine against the python (mapInArrow)
+engine with jvm_prehash=True — byte-identical sketches for strings, longs,
+NULL keys, all-NULL groups, the sparse/dense boundary and chain rows."""
+
+import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from hllspark import agg
-from hllspark.core.hash import clz64
-from hllspark.core.hll import encode_hashes
+
+ju = pytest.importorskip("hllspark.jvm_udaf")
 
 
-def test_jvm_expressions_bit_exact(spark):
-    df = spark.range(0, 100_000).select(F.xxhash64("id").alias("h"))
-    idx, rho, enc, chain = agg._jvm_exprs(F.col("h"), 14, 6)
-    rows = df.select("h", idx.alias("i"), rho.alias("r"), enc.alias("e")).collect()
-    hs = np.array([r["h"] for r in rows], dtype=np.int64).view(np.uint64)
-    assert np.array_equal((hs >> np.uint64(50)).astype(np.int64), np.array([r["i"] for r in rows]))
-    assert np.array_equal(clz64(hs << np.uint64(14)).astype(np.int64) + 1, np.array([r["r"] for r in rows]))
-    assert np.array_equal(encode_hashes(hs, 14, 6).astype(np.int64), np.array([r["e"] for r in rows]))
+@pytest.fixture(scope="module")
+def udaf(spark):
+    if not ju.available(spark):
+        pytest.skip("hllspark-udaf.jar not loadable (no JDK?)")
+    return spark
 
 
 def _bytes_by_key(df, by):
@@ -27,29 +27,33 @@ def _bytes_by_key(df, by):
     }
 
 
-def test_jvm_engine_byte_parity_strings(spark, pages_small_dir):
-    pages = spark.read.parquet(pages_small_dir)
-    py = _bytes_by_key(agg.sketch(pages, "url", by=["lang"], engine="python", jvm_prehash=True), ["lang"])
-    jvm = _bytes_by_key(agg.sketch_jvm(pages, "url", by=["lang"]), ["lang"])
-    assert py == jvm
+def _py(df, col, by=()):
+    return _bytes_by_key(agg.sketch(df, col, by=list(by), engine="python", jvm_prehash=True), list(by))
 
 
-def test_jvm_engine_byte_parity_global_and_longs(spark, sf01_dir):
-    li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
+def _udaf(df, col, by=()):
+    return _bytes_by_key(ju.sketch_jvm_udaf(df, col, list(by)), list(by))
+
+
+def test_jvm_engine_byte_parity_strings(udaf, pages_small_dir):
+    pages = udaf.read.parquet(pages_small_dir)
+    assert _py(pages, "url", ["lang"]) == _udaf(pages, "url", ["lang"])
+
+
+def test_jvm_engine_byte_parity_global_and_longs(udaf, sf01_dir):
+    li = udaf.read.parquet(f"{sf01_dir}/lineitem.parquet")
     # longs: python engine with jvm_prehash=True hashes via xxhash64 too
-    py = bytes(agg.sketch(li, "l_orderkey", engine="python", jvm_prehash=True).first()["sketch"])
-    jvm = bytes(agg.sketch_jvm(li, "l_orderkey").first()["sketch"])
-    assert py == jvm
+    assert _py(li, "l_orderkey") == _udaf(li, "l_orderkey")
 
 
-def test_jvm_engine_sparse_keys_and_nulls(spark):
+def test_jvm_engine_sparse_keys_and_nulls(udaf):
     # small distinct counts per key → sparse representation, plus a NULL-only key
-    df = spark.createDataFrame(
+    df = udaf.createDataFrame(
         [(g, f"v{i % (10 * (g + 1))}") for g in range(3) for i in range(500)] + [(9, None)] * 5,
         "g int, v string",
     )
-    py = _bytes_by_key(agg.sketch(df, "v", by=["g"], engine="python", jvm_prehash=True), ["g"])
-    jvm = _bytes_by_key(agg.sketch_jvm(df, "v", by=["g"]), ["g"])
+    py = _py(df, "v", ["g"])
+    jvm = _udaf(df, "v", ["g"])
     assert py == jvm
     from hllspark.core.hll import HLL
 
@@ -58,12 +62,12 @@ def test_jvm_engine_sparse_keys_and_nulls(spark):
     assert (9,) in jvm and jvm[(9,)] is None
 
 
-def test_jvm_engine_sparse_dense_boundary(spark):
+def test_jvm_engine_sparse_dense_boundary(udaf):
     # straddle the 1020-capacity promotion edge
     for n, sparse in ((1000, True), (1500, False)):
-        df = spark.range(n).select(F.col("id").cast("string").alias("v"))
-        py = bytes(agg.sketch(df, "v", engine="python", jvm_prehash=True).first()["sketch"])
-        jvm = bytes(agg.sketch_jvm(df, "v").first()["sketch"])
+        df = udaf.range(n).select(F.col("id").cast("string").alias("v"))
+        py = _py(df, "v")[()]
+        jvm = _udaf(df, "v")[()]
         assert py == jvm
         from hllspark.core.hll import HLL
 
@@ -76,18 +80,17 @@ def test_jvm_engine_sparse_dense_boundary(spark):
 def test_distinct_auto_uses_jvm_and_matches_exact(spark, sf01_dir):
     li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
     exact = li.select(F.countDistinct("l_orderkey")).first()[0]
-    est = agg.distinct(li, "l_orderkey").first()["est"]  # auto → jvm engine
+    est = agg.distinct(li, "l_orderkey").first()["est"]  # auto → jvm_udaf engine
     assert abs(est - exact) / exact < 3 * 1.04 / (2**14) ** 0.5
 
 
-def test_countmin_bloom_jvm_byte_parity(spark, sf01_dir):
-    """JVM-native count-min/bloom builders produce byte-identical sketches to
-    the python engine with jvm_prehash=True."""
+def test_countmin_bloom_jvm_byte_parity(udaf, sf01_dir):
+    """The count-min/bloom aggregate buffers produce byte-identical sketches
+    to the python engine with jvm_prehash=True."""
     from hllspark.core.hll import HASH_XXHASH_SPARK
     from hllspark.sketches import Bloom, CountMin
-    from hllspark.sketches.jvm import bloom_jvm, countmin_jvm
 
-    li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
+    li = udaf.read.parquet(f"{sf01_dir}/lineitem.parquet")
     py_cm = _bytes_by_key(
         agg.sketch_generic(
             li, "l_partkey",
@@ -95,7 +98,7 @@ def test_countmin_bloom_jvm_byte_parity(spark, sf01_dir):
             CountMin, by=["l_returnflag"], jvm_prehash=True,
         ), ["l_returnflag"],
     )
-    jv_cm = _bytes_by_key(countmin_jvm(li, "l_partkey", by=["l_returnflag"], width=1024, depth=4), ["l_returnflag"])
+    jv_cm = _bytes_by_key(ju.countmin_jvm_udaf(li, "l_partkey", by=["l_returnflag"], width=1024, depth=4), ["l_returnflag"])
     assert py_cm == jv_cm
 
     py_bf = _bytes_by_key(
@@ -105,36 +108,32 @@ def test_countmin_bloom_jvm_byte_parity(spark, sf01_dir):
             Bloom, jvm_prehash=True,
         ), [],
     )
-    jv_bf = _bytes_by_key(bloom_jvm(li, "l_suppkey", m_bits=1 << 16, k=5), [])
+    jv_bf = _bytes_by_key(ju.bloom_jvm_udaf(li, "l_suppkey", m_bits=1 << 16, k=5), [])
     assert py_bf == jv_bf
 
 
-def test_distributed_assembly_byte_parity(spark, sf01_dir, pages_small_dir):
-    """sketch_jvm_distributed (unbounded key cardinality) must match the
-    driver-assembled sketch_jvm byte-for-byte, including sparse keys, the
-    promotion boundary, and null-only groups."""
-    pages = spark.read.parquet(pages_small_dir)
-    a = _bytes_by_key(agg.sketch_jvm(pages, "url", by=["lang"]), ["lang"])
-    b = _bytes_by_key(agg.sketch_jvm_distributed(pages, "url", by=["lang"]), ["lang"])
-    assert a == b
+def test_distributed_assembly_byte_parity(udaf, sf01_dir, pages_small_dir):
+    """Distributed builds on both engines agree byte-for-byte on skewed
+    string keys, sparse keys with a null-only group, and high-cardinality
+    grouping (one tiny sketch per customer)."""
+    pages = udaf.read.parquet(pages_small_dir)
+    assert _py(pages, "url", ["lang"]) == _udaf(pages, "url", ["lang"])
 
     # sparse keys + a null-only group
-    df = spark.createDataFrame(
+    df = udaf.createDataFrame(
         [(g, f"v{i % (8 * (g + 1))}") for g in range(4) for i in range(400)] + [(9, None)] * 3,
         "g int, v string",
     )
-    a = _bytes_by_key(agg.sketch_jvm(df, "v", by=["g"]), ["g"])
-    b = _bytes_by_key(agg.sketch_jvm_distributed(df, "v", by=["g"]), ["g"])
-    assert a == b
+    assert _py(df, "v", ["g"]) == _udaf(df, "v", ["g"])
 
     # high-cardinality grouping: one tiny sketch per customer
-    o = spark.read.parquet(f"{sf01_dir}/orders.parquet")
-    a = _bytes_by_key(agg.sketch_jvm(o, "o_orderkey", by=["o_custkey"]), ["o_custkey"])
-    b = _bytes_by_key(agg.sketch_jvm_distributed(o, "o_orderkey", by=["o_custkey"]), ["o_custkey"])
+    o = udaf.read.parquet(f"{sf01_dir}/orders.parquet")
+    a = _py(o, "o_orderkey", ["o_custkey"])
+    b = _udaf(o, "o_orderkey", ["o_custkey"])
     assert a == b and len(a) > 500
 
 
-def test_null_group_keys_all_engines(spark):
+def test_null_group_keys_all_engines(udaf):
     """NULL group KEYS (not just NULL values) are real SQL groups: every
     engine must keep them and produce byte-identical sketches.  Covers both
     a NULL string key and a NULL int key (pandas degrades nullable int64 to
@@ -144,22 +143,19 @@ def test_null_group_keys_all_engines(spark):
         + [("en", f"v{i % 50}") for i in range(200)]
         + [("de", None)] * 4  # all-NULL-value group too
     )
-    df = spark.createDataFrame(rows, "lang string, url string")
-    py = _bytes_by_key(agg.sketch(df, "url", by=["lang"], engine="python", jvm_prehash=True), ["lang"])
-    jd = _bytes_by_key(agg.sketch_jvm(df, "url", by=["lang"]), ["lang"])
-    dd = _bytes_by_key(agg.sketch_jvm_distributed(df, "url", by=["lang"]), ["lang"])
+    df = udaf.createDataFrame(rows, "lang string, url string")
+    py = _py(df, "url", ["lang"])
+    jd = _udaf(df, "url", ["lang"])
     assert set(py) == {(None,), ("en",), ("de",)}
-    assert py == jd == dd
+    assert py == jd
     assert py[("de",)] is None and py[(None,)] is not None
 
     # NULL int64 key
     rows2 = [(None, i) for i in range(100)] + [(7, i) for i in range(2000)]
-    df2 = spark.createDataFrame(rows2, "g long, v long")
-    py2 = _bytes_by_key(agg.sketch(df2, "v", by=["g"], engine="python", jvm_prehash=True), ["g"])
-    jd2 = _bytes_by_key(agg.sketch_jvm(df2, "v", by=["g"]), ["g"])
-    dd2 = _bytes_by_key(agg.sketch_jvm_distributed(df2, "v", by=["g"]), ["g"])
+    df2 = udaf.createDataFrame(rows2, "g long, v long")
+    py2 = _py(df2, "v", ["g"])
     assert set(py2) == {(None,), (7,)}
-    assert py2 == jd2 == dd2
+    assert py2 == _udaf(df2, "v", ["g"])
 
 
 def test_grouped_distinct_null_semantics(spark):
@@ -172,17 +168,17 @@ def test_grouped_distinct_null_semantics(spark):
     assert big == {1: 0, 2: 2}
 
 
-def test_integer_type_probes(spark):
+def test_integer_type_probes(udaf):
     """JVM builders canonicalize IntegerType → LongType before xxhash64, so
     Python-side probes (which can't see the SQL type) agree.  Regression for
     the int-dtype dispatch bug: bloom_contains was False for every inserted
     value of an int column."""
     from hllspark.functions import register_sql
-    from hllspark.sketches.jvm import bloom_jvm, countmin_jvm
 
+    spark = udaf
     register_sql(spark)
     df = spark.createDataFrame([(i % 100,) for i in range(1000)], "v int")
-    bf = bloom_jvm(df, "v", m_bits=1 << 16, k=5)
+    bf = ju.bloom_jvm_udaf(df, "v", m_bits=1 << 16, k=5)
     bf.createOrReplaceTempView("bf_int")
     got = spark.sql(
         "SELECT bloom_contains(sketch, CAST(50 AS INT)) AS p50, "
@@ -190,17 +186,19 @@ def test_integer_type_probes(spark):
     ).first()
     assert got["p50"] is True and got["absent"] is False
 
-    cm = countmin_jvm(df, "v", width=1024, depth=4)
+    cm = ju.countmin_jvm_udaf(df, "v", width=1024, depth=4)
     cm.createOrReplaceTempView("cm_int")
     got = spark.sql("SELECT cm_query(sketch, CAST(50 AS INT)) AS c FROM cm_int").first()
     assert got["c"] == 10  # exact at this width (overestimates only)
 
 
-def test_global_distributed_finalize_parity(spark):
-    """engine="jvm" global sketches finalize in an executor task under a
-    dummy key (no driver assembly) — must stay byte-identical to the
-    driver-assembled engine and honor the zero-rows/all-NULL → SQL NULL
-    aggregate contract (hyperloglog_counter.c:511-513)."""
+def test_global_distributed_finalize_parity(udaf):
+    """Global sketches and distinct() estimates agree across engines and
+    honor the zero-rows/all-NULL → SQL NULL aggregate contract
+    (hyperloglog_counter.c:511-513).  The jar estimates in the JVM, whose
+    StrictMath.log may differ from CPython's libm by 1 ulp in the
+    linear-counting regime (jvm_udaf._estimate_udf_column)."""
+    spark = udaf
     cases = {
         "dense": spark.range(50_000).select(F.col("id").alias("v")),
         "sparse": spark.range(100).select(F.col("id").alias("v")),
@@ -208,53 +206,55 @@ def test_global_distributed_finalize_parity(spark):
         "empty": spark.range(0).select(F.col("id").alias("v")),
     }
     for name, df in cases.items():
-        new = agg.sketch(df, "v", engine="jvm").collect()
-        drv = agg.sketch(df, "v", engine="jvm_driver").collect()
-        assert len(new) == 1 and len(drv) == 1, name
-        a, b = new[0]["sketch"], drv[0]["sketch"]
+        new = agg.sketch(df, "v", engine="jvm_udaf").collect()
+        py = agg.sketch(df, "v", engine="python", jvm_prehash=True).collect()
+        assert len(new) == 1 and len(py) == 1, name
+        a, b = new[0]["sketch"], py[0]["sketch"]
         assert (a is None) == (b is None) and (a is None or bytes(a) == bytes(b)), name
-        e = agg.distinct(df, "v", engine="jvm").first()["est"]
-        assert e == agg.distinct(df, "v", engine="jvm_driver").first()["est"], name
-        bi = agg.distinct(df, "v", engine="jvm", bigint=True).first()["est"]
-        assert bi == agg.distinct(df, "v", engine="jvm_driver", bigint=True).first()["est"], name
-    assert agg.distinct(cases["empty"], "v", engine="jvm", bigint=True).first()["est"] == 0
-    assert agg.distinct(cases["allnull"], "v", engine="jvm").first()["est"] is None
+        e = agg.distinct(df, "v", engine="jvm_udaf").first()["est"]
+        pe = agg.distinct(df, "v", engine="python", jvm_prehash=True).first()["est"]
+        assert (e is None) == (pe is None), name
+        assert e is None or abs(e - pe) <= math.ulp(max(abs(e), abs(pe))), name
+        bi = agg.distinct(df, "v", engine="jvm_udaf", bigint=True).first()["est"]
+        assert bi == agg.distinct(df, "v", engine="python", jvm_prehash=True, bigint=True).first()["est"], name
+    assert agg.distinct(cases["empty"], "v", engine="jvm_udaf", bigint=True).first()["est"] == 0
+    assert agg.distinct(cases["allnull"], "v", engine="jvm_udaf").first()["est"] is None
 
 
-def test_minhash_jvm_byte_parity(spark, sf01_dir):
-    """minhash_jvm's Catalyst reduction (xxhash64(h, j) remix + sign-flipped
-    min) is byte-identical to the python engine with jvm_prehash=True and
-    hash_kind=HASH_XXHASH_SPARK (_remix_spark replays the same chain)."""
+def test_minhash_jvm_byte_parity(udaf, sf01_dir):
+    """The MinHash aggregate buffer (xxhash64(h, j) remix replayed in-JVM,
+    unsigned min) is byte-identical to the python engine with
+    jvm_prehash=True and hash_kind=HASH_XXHASH_SPARK (_remix_spark replays
+    the same chain)."""
     from hllspark.core.hll import HASH_XXHASH_SPARK
     from hllspark.sketches import MinHash
-    from hllspark.sketches.jvm import minhash_jvm
 
+    spark = udaf
     li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet").limit(20_000)
     fac = lambda: MinHash.create(k=128, hash_kind=HASH_XXHASH_SPARK)
     jvm = {r["l_returnflag"]: bytes(r["sketch"])
-           for r in minhash_jvm(li, "l_partkey", by=["l_returnflag"]).collect()}
+           for r in ju.minhash_jvm_udaf(li, "l_partkey", by=["l_returnflag"]).collect()}
     py = {r["l_returnflag"]: bytes(r["sketch"])
           for r in agg.sketch_generic(li, "l_partkey", fac, MinHash, by=["l_returnflag"], jvm_prehash=True).collect()}
     assert jvm == py and len(jvm) == 3
     # jaccard behaves: identical sets → 1.0, disjoint ranges → ~0
     a = spark.range(0, 4000).selectExpr("id AS v")
     b = spark.range(50_000, 54_000).selectExpr("id AS v")
-    sa = MinHash.from_bytes(bytes(minhash_jvm(a, "v", k=256).first()["sketch"]))
-    sb = MinHash.from_bytes(bytes(minhash_jvm(b, "v", k=256).first()["sketch"]))
-    sa2 = MinHash.from_bytes(bytes(minhash_jvm(a.repartition(7), "v", k=256).first()["sketch"]))
+    sa = MinHash.from_bytes(bytes(ju.minhash_jvm_udaf(a, "v", k=256).first()["sketch"]))
+    sb = MinHash.from_bytes(bytes(ju.minhash_jvm_udaf(b, "v", k=256).first()["sketch"]))
+    sa2 = MinHash.from_bytes(bytes(ju.minhash_jvm_udaf(a.repartition(7), "v", k=256).first()["sketch"]))
     assert sa.jaccard(sa2) == 1.0 and bytes(sa.to_bytes()) == bytes(sa2.to_bytes())
     assert sa.jaccard(sb) < 0.05
     assert sa.n_added == 4000
 
 
-def test_chain_rows_byte_parity_all_engines(spark, monkeypatch):
+def test_chain_rows_byte_parity_all_engines(udaf, monkeypatch):
     """rho-overflow (chain) rows occur with probability ~2^-39/row in
     production — force them by making the JVM 'hash' the identity, so h=0
-    (every suffix bit zero) chains.  All three assemblies must produce
-    byte-identical sketches to a direct python build over the same hashes:
-    chain-only keys start from the empty SPARSE state, and a dense key WITH
-    a chain row finishes as a pass-1 dense partial + chain replay (never a
-    full re-encode of the hot key)."""
+    (every suffix bit zero) chains.  The jar engine (global and grouped)
+    must produce byte-identical sketches to a direct python build over the
+    same hashes: chain-only keys start from the empty SPARSE state, and
+    sparse and dense keys replay their chain rows after the registers."""
     import hllspark.agg as A
     from hllspark.core.hll import HASH_XXHASH_SPARK, HLL
 
@@ -268,10 +268,10 @@ def test_chain_rows_byte_parity_all_engines(spark, monkeypatch):
         "dense_plus_chain": normal + [0],
     }
     for name, hs in cases.items():
-        df = spark.createDataFrame([(h,) for h in hs], "v long")
-        jvm_d = A.sketch_jvm_distributed(df.withColumn("g", F.lit(1)), "v", ["g"]).first()["sketch"]
-        jvm_drv = A.sketch_jvm(df, "v").first()["sketch"]
+        df = udaf.createDataFrame([(h,) for h in hs], "v long")
+        grouped = ju.sketch_jvm_udaf(df.withColumn("g", F.lit(1)), "v", ["g"]).first()["sketch"]
+        glob = ju.sketch_jvm_udaf(df, "v").first()["sketch"]
         ref = HLL.create(hash_kind=HASH_XXHASH_SPARK)
         ref.add_hashes(np.array(hs, dtype=np.int64).view(np.uint64))
-        assert bytes(jvm_d) == ref.to_bytes(), name
-        assert bytes(jvm_drv) == ref.to_bytes(), name
+        assert bytes(grouped) == ref.to_bytes(), name
+        assert bytes(glob) == ref.to_bytes(), name

@@ -1,6 +1,7 @@
 """In-JVM estimate finalize (HllBlobEstimateUdf / HllEstimator): parity with
-the pandas finalize across modes, precisions, chain rows and the v2
-stored-merge path, plus the all-JVM plan shape it exists for.
+the Python estimate of the same aggregate blob (jvm_udaf._blob_to_hll)
+across modes, precisions, chain rows and the v2 stored-merge path, plus the
+all-JVM plan shape it exists for.
 
 Parity contract (HllEstimator.java header): bit-identical wherever no log
 is taken (bias-corrected dense regime); ≤ 1 ulp in the linear-counting
@@ -27,8 +28,6 @@ ju = pytest.importorskip("hllspark.jvm_udaf")
 def udaf_spark(spark):
     if not ju.available(spark):
         pytest.skip("hllspark-udaf.jar not loadable (no JDK?)")
-    if ju._estimate_udf_column(spark, F.lit(None).cast("binary")) is None:
-        pytest.skip("jar predates HllBlobEstimateUdf (version skew)")
     return spark
 
 
@@ -39,7 +38,9 @@ def _close1ulp(a, b):
 
 
 def _pandas_estimate(spark, agged):
-    return agged.select(ju._finalize_udf("estimate")(F.col("__blob")).alias("est")).first()["est"]
+    """Python estimate of the single aggregate blob (None for all-NULL)."""
+    sk = ju._blob_to_hll(agged.first()["__blob"])
+    return None if sk is None else sk.estimate()
 
 
 @pytest.mark.parametrize("b,binbits", [(14, 6), (4, 4), (11, 5), (18, 8), (16, 7)])
@@ -131,13 +132,17 @@ def test_jvm_estimate_v2_merge_path(udaf_spark):
     edf = udaf_spark.createDataFrame([(bytearray(empty),)], "sketch binary")
     assert ju.hll_merge_udaf(edf, "sketch", finalize="estimate").first()["est"] == 0.0
 
+    # a murmur-hashed (hash_kind 0) stored counter estimates as HLL.estimate
+    from hllspark.core.hash import hash_int64
+
+    h = HLL.create()
+    h.add_hashes(hash_int64(np.arange(700, dtype=np.int64)))
+    hdf = udaf_spark.createDataFrame([(bytearray(h.to_bytes()),)], "sketch binary")
+    assert ju.hll_merge_udaf(hdf, "sketch", finalize="estimate").first()["est"] == h.estimate()
+
 
 @pytest.fixture(scope="module")
 def sketch_est_spark(udaf_spark):
-    try:
-        ju.hll_estimate_col(udaf_spark, F.lit(None).cast("binary"))
-    except RuntimeError:
-        pytest.skip("jar predates HllSketchEstimateUdf (version skew)")
     return udaf_spark
 
 
@@ -201,9 +206,9 @@ def test_sketch_estimate_col_refuses_non_canonical(sketch_est_spark):
 
 
 def test_sketch_estimate_col_no_jar_is_loud(sketch_est_spark, monkeypatch):
-    """Explicit-engine semantics: unlike the auto routes, a missing jar (or
-    version skew) raises RuntimeError instead of silently degrading."""
-    monkeypatch.setattr(ju, "_new_jvm_obj", lambda *a, **k: None)
+    """Explicit-engine semantics: unlike the auto routes, a missing jar
+    raises RuntimeError instead of silently degrading."""
+    monkeypatch.setattr(ju, "available", lambda spark: False)
     with pytest.raises(RuntimeError, match="HllSketchEstimateUdf"):
         ju.hll_estimate_col(sketch_est_spark, F.lit(None).cast("binary"))
 
@@ -218,3 +223,29 @@ def test_jvm_estimate_bit_exact_in_bias_corrected_regime(udaf_spark):
     acol = ju.hll_udaf_column(udaf_spark, agg.jvm_hash_expr(df, "v"), 14, 6)
     pv = _pandas_estimate(udaf_spark, df.groupBy().agg(acol.alias("__blob")))
     assert jv == pv
+
+
+def test_truncated_varint_sparse_fails_in_every_decoder(sketch_est_spark):
+    """A group-varint sparse blob cut short must raise in every decoder —
+    the Python object path, the header-only batch estimate, the batched
+    merge, and the Java decoder behind hll_estimate_col / hll_merge_udaf —
+    instead of returning a made-up estimate."""
+    from hllspark.core.hash import hash_int64
+    from hllspark.core.hll import estimate_blobs, merge_blobs
+
+    spark = sketch_est_spark
+    h = HLL.create()
+    h.add_hashes(hash_int64(np.arange(203, dtype=np.int64)))
+    blob = h.to_bytes(compress=True)
+    assert len(HLL.from_bytes(blob).sparse) == 203
+    msg = "truncated group-varint sparse payload"
+    for cut in (1, 2, 5, 40):
+        bad = blob[:-cut]
+        for decode in (HLL.from_bytes, lambda v: estimate_blobs([v]), lambda v: merge_blobs([v])):
+            with pytest.raises(ValueError, match=msg):
+                decode(bad)
+        bdf = spark.createDataFrame([(bytearray(bad),)], "sketch binary")
+        with pytest.raises(Exception, match=msg):
+            bdf.select(ju.hll_estimate_col(spark, "sketch")).collect()
+        with pytest.raises(Exception, match=msg):
+            ju.hll_merge_udaf(bdf, "sketch").collect()

@@ -1,6 +1,6 @@
 """JVM aggregate-buffer engine (engine="jvm_udaf"): byte parity with the
-python and groupBy-JVM engines, crafted-hash edge cases (sparse/dense
-boundary, rho-overflow chain rows), NULL contract, and auto-routing."""
+python engine, crafted-hash edge cases (sparse/dense boundary, rho-overflow
+chain rows), NULL contract, and auto-routing."""
 
 import numpy as np
 import pytest
@@ -23,19 +23,27 @@ def _by_key(df, by, col="sketch"):
     return {tuple(r[c] for c in by): None if r[col] is None else bytes(r[col]) for r in df.collect()}
 
 
+def _py(df, col, by=()):
+    """python engine in the xxhash64 domain — the jar engine's byte reference."""
+    return _by_key(agg.sketch(df, col, by=list(by), engine="python", jvm_prehash=True), list(by))
+
+
+def _py_sibling(df, col, kind, by=(), **params):
+    from hllspark import sketches
+
+    return _by_key(sketches.build(df, col, kind, by=list(by), engine="python", **params), list(by))
+
+
 def test_udaf_byte_parity_grouped_strings(udaf_spark, pages_small_dir):
     pages = udaf_spark.read.parquet(pages_small_dir)
     u = _by_key(ju.sketch_jvm_udaf(pages, "url", ["lang"]), ["lang"])
-    d = _by_key(agg.sketch_jvm_distributed(pages, "url", ["lang"]), ["lang"])
-    p = _by_key(agg.sketch(pages, "url", by=["lang"], engine="python", jvm_prehash=True), ["lang"])
-    assert u == d == p
+    assert u == _py(pages, "url", ["lang"])
 
 
 def test_udaf_byte_parity_global_longs(udaf_spark, sf01_dir):
     li = udaf_spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
     u = bytes(ju.sketch_jvm_udaf(li, "l_orderkey").first()["sketch"])
-    d = bytes(agg.sketch_jvm_distributed(li, "l_orderkey", []).first()["sketch"])
-    assert u == d
+    assert u == _py(li, "l_orderkey")[()]
 
 
 def test_udaf_null_groups_and_narrow_ints(udaf_spark):
@@ -45,8 +53,7 @@ def test_udaf_null_groups_and_narrow_ints(udaf_spark):
     rows += [(None, 5), (None, 6), (9, None), (9, None)]
     df = udaf_spark.createDataFrame(rows, "g int, v int")
     u = _by_key(ju.sketch_jvm_udaf(df, "v", ["g"]), ["g"])
-    d = _by_key(agg.sketch_jvm_distributed(df, "v", ["g"]), ["g"])
-    assert u == d
+    assert u == _py(df, "v", ["g"])
     assert u[(9,)] is None  # all-NULL group → SQL NULL sketch
     assert u[(None,)] is not None  # NULL key is a real group
 
@@ -64,11 +71,13 @@ def test_udaf_estimates_match_distributed(udaf_spark, sf01_dir):
         r["o_orderpriority"]: r["est"]
         for r in ju.sketch_jvm_udaf(orders, "o_custkey", ["o_orderpriority"], finalize="estimate").collect()
     }
-    d = {
-        r["o_orderpriority"]: r["est"]
-        for r in agg.sketch_jvm_distributed(orders, "o_custkey", ["o_orderpriority"], finalize="estimate").collect()
+    # the python engine's estimate of the same sketches (exactly equal on
+    # this data; the JVM estimator may differ by 1 ulp in linear counting)
+    p = {
+        k[0]: HLL.from_bytes(v).estimate()
+        for k, v in _py(orders, "o_custkey", ["o_orderpriority"]).items()
     }
-    assert u == d
+    assert u == p
 
 
 @pytest.mark.parametrize(
@@ -115,11 +124,11 @@ def test_auto_engine_routes_to_udaf(udaf_spark):
 
 def test_udaf_merges_with_other_engine_sketches(udaf_spark):
     """Sketches from the udaf engine carry the same hash_kind and must merge
-    freely with groupBy-JVM-engine sketches of the same params."""
+    freely with python-engine (jvm_prehash) sketches of the same params."""
     df1 = udaf_spark.range(0, 3000).select(F.col("id").alias("v"))
     df2 = udaf_spark.range(2000, 5000).select(F.col("id").alias("v"))
     a = HLL.from_bytes(bytes(ju.sketch_jvm_udaf(df1, "v").first()["sketch"]))
-    b_ = HLL.from_bytes(bytes(agg.sketch_jvm_distributed(df2, "v", []).first()["sketch"]))
+    b_ = HLL.from_bytes(_py(df2, "v")[()])
     merged = a.merge(b_)
     direct = HLL.from_bytes(
         bytes(ju.sketch_jvm_udaf(udaf_spark.range(0, 5000).select(F.col("id").alias("v")), "v").first()["sketch"])
@@ -130,7 +139,7 @@ def test_udaf_merges_with_other_engine_sketches(udaf_spark):
 def test_udaf_high_cardinality_grouping_sort_fallback(udaf_spark):
     """16k group keys blow past ObjectHashAggregate's default 128-key
     in-memory threshold, forcing the sort-based fallback — buffers must
-    still be exact (byte parity with the distributed groupBy engine).
+    still be exact (byte parity with the python engine).
     Sessions doing high-cardinality grouped sketches should raise
     spark.sql.objectHashAggregate.sortBased.fallbackThreshold (bench.py
     does); this test runs at the DEFAULT to pin fallback correctness."""
@@ -138,40 +147,33 @@ def test_udaf_high_cardinality_grouping_sort_fallback(udaf_spark):
         (F.col("id") % 16384).alias("g"), (F.col("id") % 4099).alias("v")
     )
     u = _by_key(ju.sketch_jvm_udaf(df, "v", ["g"]), ["g"])
-    d = _by_key(agg.sketch_jvm_distributed(df, "v", ["g"]), ["g"])
-    assert len(u) == 16384 and u == d
+    assert len(u) == 16384 and u == _py(df, "v", ["g"])
 
 
 def test_countmin_udaf_byte_parity(udaf_spark, sf001_dir):
-    """CountMin aggregate buffer vs the groupBy builder: byte-identical
+    """CountMin aggregate buffer vs the python engine: byte-identical
     sketches, grouped (incl. all-NULL group + NULL key) and global."""
-    from hllspark.sketches.jvm import countmin_jvm
-
     ev = udaf_spark.read.parquet(f"{sf001_dir}/events.parquet")
     u = _by_key(ju.countmin_jvm_udaf(ev, "user_id", ["event_type"], width=512, depth=4), ["event_type"])
-    g = _by_key(countmin_jvm(ev, "user_id", ["event_type"], width=512, depth=4), ["event_type"])
+    g = _py_sibling(ev, "user_id", "countmin", ["event_type"], width=512, depth=4)
     assert u == g and len(u) >= 2
 
     rows = [(1, 10), (1, 11), (2, None), (None, 12)]
     df = udaf_spark.createDataFrame(rows, "g int, v int")
     u2 = _by_key(ju.countmin_jvm_udaf(df, "v", ["g"], width=64, depth=3), ["g"])
-    g2 = _by_key(countmin_jvm(df, "v", ["g"], width=64, depth=3), ["g"])
-    assert u2 == g2
+    assert u2 == _py_sibling(df, "v", "countmin", ["g"], width=64, depth=3)
     assert u2[(2,)] is None and u2[(None,)] is not None
 
     ug = ju.countmin_jvm_udaf(ev, "user_id", width=512, depth=4).first()["sketch"]
-    gg = countmin_jvm(ev, "user_id", width=512, depth=4).first()["sketch"]
-    assert bytes(ug) == bytes(gg)
+    assert bytes(ug) == _py_sibling(ev, "user_id", "countmin", width=512, depth=4)[()]
 
 
 def test_bloom_udaf_byte_parity(udaf_spark, sf001_dir):
     from hllspark.sketches.bloom import Bloom
-    from hllspark.sketches.jvm import bloom_jvm
 
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")
     u = bytes(ju.bloom_jvm_udaf(o, "o_orderkey", m_bits=1 << 14, k=5).first()["sketch"])
-    g = bytes(bloom_jvm(o, "o_orderkey", m_bits=1 << 14, k=5).first()["sketch"])
-    assert u == g
+    assert u == _py_sibling(o, "o_orderkey", "bloom", m_bits=1 << 14, k=5)[()]
     # the parity bytes decode to a working filter
     bf = Bloom.from_bytes(u)
     assert bf.n_added == o.count()
@@ -179,15 +181,14 @@ def test_bloom_udaf_byte_parity(udaf_spark, sf001_dir):
     rows = [(1, "a"), (1, "b"), (9, None)]
     df = udaf_spark.createDataFrame(rows, "g int, v string")
     u2 = _by_key(ju.bloom_jvm_udaf(df, "v", ["g"], m_bits=256, k=3), ["g"])
-    g2 = _by_key(bloom_jvm(df, "v", ["g"], m_bits=256, k=3), ["g"])
-    assert u2 == g2 and u2[(9,)] is None
+    assert u2 == _py_sibling(df, "v", "bloom", ["g"], m_bits=256, k=3) and u2[(9,)] is None
 
 
 def test_sibling_param_validation_and_version_skew(udaf_spark):
     """Review regressions: invalid sibling params must raise the same
-    ValueError as the groupBy builders (not build silently-wrong sketches),
-    and a class missing from the loaded jar (version skew) must surface as
-    the helpful RuntimeError, never a raw py4j crash."""
+    ValueError as the python builders (not build silently-wrong sketches),
+    and a class missing from the loaded jar fails loudly — the jar digest
+    check (jvm_udaf.available) keeps a stale jar from loading at all."""
     df = udaf_spark.range(10).select(F.col("id").alias("v"))
     with pytest.raises(ValueError):
         ju.bloom_jvm_udaf(df, "v", k=0)
@@ -197,9 +198,7 @@ def test_sibling_param_validation_and_version_skew(udaf_spark):
         ju.countmin_jvm_udaf(df, "v", width=1)
     with pytest.raises(ValueError):
         ju.bloom_jvm_udaf(df, "v", m_bits=(2**31) * 8)
-    # missing class → None from the resolver → RuntimeError from the wrapper
-    assert ju._new_jvm_obj(udaf_spark, "hllsparkjvm.NoSuchAggregator", [1]) is None
-    with pytest.raises(RuntimeError):
+    with pytest.raises(Exception):
         ju._sibling_udaf_column(udaf_spark, F.col("v"), "hllsparkjvm.NoSuchAggregator", [1])
 
 
@@ -209,28 +208,24 @@ def test_sibling_param_validation_and_version_skew(udaf_spark):
 
 
 def test_minhash_udaf_byte_parity(udaf_spark, pages_small_dir):
-    """MinHash aggregate buffer vs the groupBy builder: min-merge is exact,
+    """MinHash aggregate buffer vs the python engine: min-merge is exact,
     so byte parity holds unconditionally (grouped incl. NULL contract +
-    global), and the in-JVM xxhash64(h, lit(j)) replay must match Spark's
-    own expression chain."""
-    from hllspark.sketches.jvm import minhash_jvm
+    global), and the in-JVM xxhash64(h, lit(j)) replay must match the
+    python remix of Spark's expression chain (minhash._remix_spark)."""
     from hllspark.sketches.minhash import MinHash
 
     pages = udaf_spark.read.parquet(pages_small_dir)
     u = _by_key(ju.minhash_jvm_udaf(pages, "url", ["lang"], k=32), ["lang"])
-    g = _by_key(minhash_jvm(pages, "url", ["lang"], k=32), ["lang"])
-    assert u == g and len(u) >= 2
+    assert u == _py_sibling(pages, "url", "minhash", ["lang"], k=32) and len(u) >= 2
 
     rows = [(1, "a"), (1, "b"), (2, None), (None, "c")]
     df = udaf_spark.createDataFrame(rows, "g int, v string")
     u2 = _by_key(ju.minhash_jvm_udaf(df, "v", ["g"], k=16), ["g"])
-    g2 = _by_key(minhash_jvm(df, "v", ["g"], k=16), ["g"])
-    assert u2 == g2
+    assert u2 == _py_sibling(df, "v", "minhash", ["g"], k=16)
     assert u2[(2,)] is None and u2[(None,)] is not None
 
     ug = bytes(ju.minhash_jvm_udaf(pages, "url", k=32).first()["sketch"])
-    gg = bytes(minhash_jvm(pages, "url", k=32).first()["sketch"])
-    assert ug == gg
+    assert ug == _py_sibling(pages, "url", "minhash", k=32)[()]
     mh = MinHash.from_bytes(ug)
     assert mh.k == 32 and mh.n_added == pages.count()
 
@@ -238,33 +233,26 @@ def test_minhash_udaf_byte_parity(udaf_spark, pages_small_dir):
         ju.minhash_jvm_udaf(df, "v", k=0)
 
 
-def test_tdigest_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir):
+def test_tdigest_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir, quantile_ref):
     """While every buffer stays under exact_capacity distinct values the
-    udaf engine must be byte-identical to the groupBy builder (the sorted
-    weighted fold is replayed verbatim at finalize)."""
-    from hllspark.sketches.jvm import tdigest_jvm
-
+    udaf engine must be byte-identical to the direct python fold (one
+    sorted weighted update over the distinct values, replayed verbatim at
+    finalize)."""
     li = udaf_spark.read.parquet(f"{sf001_dir}/lineitem.parquet")
     u = _by_key(ju.tdigest_jvm_udaf(li, "l_extendedprice", ["l_returnflag"]), ["l_returnflag"])
-    g = _by_key(tdigest_jvm(li, "l_extendedprice", ["l_returnflag"]), ["l_returnflag"])
-    assert u == g and len(u) >= 2
+    assert u == quantile_ref(li, "l_extendedprice", ["l_returnflag"], "tdigest") and len(u) >= 2
 
     ug = bytes(ju.tdigest_jvm_udaf(li, "l_quantity").first()["sketch"])
-    gg = bytes(tdigest_jvm(li, "l_quantity").first()["sketch"])
-    assert ug == gg
+    assert ug == quantile_ref(li, "l_quantity", [], "tdigest")[()]
 
 
-def test_kll_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir):
-    from hllspark.sketches.jvm import kll_jvm
-
+def test_kll_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir, quantile_ref):
     li = udaf_spark.read.parquet(f"{sf001_dir}/lineitem.parquet")
     u = _by_key(ju.kll_jvm_udaf(li, "l_quantity", ["l_returnflag"]), ["l_returnflag"])
-    g = _by_key(kll_jvm(li, "l_quantity", ["l_returnflag"]), ["l_returnflag"])
-    assert u == g and len(u) >= 2
+    assert u == quantile_ref(li, "l_quantity", ["l_returnflag"], "kll") and len(u) >= 2
 
     ug = bytes(ju.kll_jvm_udaf(li, "l_extendedprice").first()["sketch"])
-    gg = bytes(kll_jvm(li, "l_extendedprice").first()["sketch"])
-    assert ug == gg
+    assert ug == quantile_ref(li, "l_extendedprice", [], "kll")[()]
 
 
 def test_quantile_udaf_null_contract(udaf_spark):
@@ -312,43 +300,37 @@ def test_quantile_udaf_digest_mode_accuracy(udaf_spark):
         assert abs(true_rank - q) < 0.03, (q, est, true_rank)
 
 
-def test_quantile_udaf_mixed_mode_merge(udaf_spark):
+def test_quantile_udaf_mixed_mode_merge(udaf_spark, quantile_ref):
     """Skewed grouping: one group overflows exact_capacity (digest mode),
     another stays exact — the exact group must STILL be byte-identical to
-    the groupBy builder (per-group mode independence), and the digest group
-    must carry the full total."""
-    import numpy as np
-
-    from hllspark.sketches.jvm import tdigest_jvm
+    the direct python fold (per-group mode independence), and the digest
+    group must carry the full total."""
     from hllspark.sketches.tdigest import TDigest
 
     big = udaf_spark.range(50_000).selectExpr("'hot' as g", "cast(xxhash64(id) as double) as v")
     small = udaf_spark.range(40).selectExpr("'cold' as g", "cast(id as double) as v")
     df = big.unionByName(small).repartition(8)
     u = _by_key(ju.tdigest_jvm_udaf(df, "v", ["g"], exact_capacity=1000), ["g"])
-    g = _by_key(tdigest_jvm(df, "v", ["g"]), ["g"])
-    assert u[("cold",)] == g[("cold",)]  # exact mode: byte parity
+    cold = quantile_ref(df.filter("g = 'cold'"), "v", ["g"], "tdigest")
+    assert u[("cold",)] == cold[("cold",)]  # exact mode: byte parity
     hot = TDigest.from_bytes(u[("hot",)])
     assert abs(hot.total - 50_000) < 1e-6
     med = hot.quantile(0.5)
     assert abs(med) < 0.05 * 9.3e18  # xxhash64 is ~uniform over int64
 
 
-def test_kll_udaf_mixed_mode_merge(udaf_spark):
+def test_kll_udaf_mixed_mode_merge(udaf_spark, quantile_ref):
     """KLL twin of the t-digest mixed-mode test: a hot group overflows into
     compactor mode while a cold group stays exact — per-group mode
     independence, full total carried, exact group byte-identical."""
-    import numpy as np
-
-    from hllspark.sketches.jvm import kll_jvm
     from hllspark.sketches.kll import KLL
 
     big = udaf_spark.range(50_000).selectExpr("'hot' as g", "cast(xxhash64(id) as double) as v")
     small = udaf_spark.range(40).selectExpr("'cold' as g", "cast(id as double) as v")
     df = big.unionByName(small).repartition(8)
     u = _by_key(ju.kll_jvm_udaf(df, "v", ["g"], exact_capacity=1000), ["g"])
-    g = _by_key(kll_jvm(df, "v", ["g"]), ["g"])
-    assert u[("cold",)] == g[("cold",)]  # exact mode: byte parity
+    cold = quantile_ref(df.filter("g = 'cold'"), "v", ["g"], "kll")
+    assert u[("cold",)] == cold[("cold",)]  # exact mode: byte parity
     hot = KLL.from_bytes(u[("hot",)])
     assert hot.total == 50_000
     assert sum(len(b) for b in hot.levels) <= 30 * 200  # bounded retained items
@@ -463,41 +445,6 @@ def test_merge_partials_auto_routes_through_udaf(udaf_spark):
     assert "FlatMapGroupsInPandas" in pinned._jdf.queryExecution().executedPlan().toString()
 
 
-def test_blob_estimate_fast_path_bit_identical(udaf_spark):
-    """The sparse no-chain estimate fast path must be bit-identical to the
-    full _blob_to_hll construction, across sparse/dense/chain/v2 shapes."""
-    import numpy as np
-
-    b, binbits = 14, 6
-    rng = np.random.RandomState(11)
-
-    def blob_for(hs):
-        sdf = udaf_spark.createDataFrame([(int(x),) for x in hs], "h long").repartition(3)
-        col = ju.hll_udaf_column(udaf_spark, F.col("h"), b, binbits)
-        return bytes(sdf.groupBy().agg(col.alias("blob")).first()["blob"])
-
-    chain_rows = np.arange(1, 4, dtype=np.int64) << 39
-    cases = {
-        "sparse": rng.randint(-(2**63), 2**63, size=200, dtype=np.int64),
-        "dense": rng.randint(-(2**63), 2**63, size=60_000, dtype=np.int64),
-        "chains": np.concatenate([rng.randint(-(2**63), 2**63, size=50, dtype=np.int64), chain_rows]),
-    }
-    for name, hs in cases.items():
-        blob = blob_for(hs)
-        fast = ju._blob_estimate(blob)
-        full = ju._blob_to_hll(blob).estimate()
-        assert fast == full, name  # bit-identical, not approximately
-
-    # v2 merge blob: estimate through hll_merge_udaf's finalize
-    h = HLL.create()
-    from hllspark.core.hash import hash_int64
-
-    h.add_hashes(hash_int64(np.arange(700, dtype=np.int64)))
-    df = udaf_spark.createDataFrame([(bytearray(h.to_bytes()),)], "sketch binary")
-    est = ju.hll_merge_udaf(df, "sketch", finalize="estimate").first()["est"]
-    assert est == h.estimate()
-
-
 def test_hll_merge_udaf_empty_counter_not_null(udaf_spark):
     """Review regression: a LEGITIMATE empty stored counter (zero entries,
     non-NULL blob) must survive the blob-merge as an empty sketch — NULL is
@@ -517,7 +464,7 @@ def test_ctor_param_errors_surface_not_masked(udaf_spark):
     """Round-4 ADVICE: a Java ctor guard (IllegalArgumentException) must
     reach the user as a clear ValueError, not be masked as 'jar not
     loadable' or silently rerouted to a fallback engine; a genuinely missing
-    class still resolves to None (version-skew fallback path)."""
+    class is a resolution failure, not a parameter error."""
     df = udaf_spark.createDataFrame([(1, 1.0)], "g int, v double")
     # Python-side mirrors of the Java exactCap guards fire before any JVM call
     with pytest.raises(ValueError, match="exact_capacity"):
@@ -527,8 +474,10 @@ def test_ctor_param_errors_surface_not_masked(udaf_spark):
     # the in-JVM CountMin depth*width overflow guard re-raises as ValueError
     with pytest.raises(ValueError, match="flat JVM buffer limit"):
         ju._new_jvm_obj(udaf_spark, "hllsparkjvm.CountMinAggregator", [1 << 26, 33])
-    # class-resolution failure (version skew) still returns None, not raise
-    assert ju._new_jvm_obj(udaf_spark, "hllsparkjvm.NoSuchAggregator", []) is None
+    # class-resolution failure raises, but never as a parameter ValueError
+    with pytest.raises(Exception) as ei:
+        ju._new_jvm_obj(udaf_spark, "hllsparkjvm.NoSuchAggregator", [])
+    assert not isinstance(ei.value, ValueError)
 
 
 def test_b18_memory_envelope_grouped(udaf_spark):

@@ -8,74 +8,69 @@ so a refactor that silently loses one fails fast.
 import pytest
 from pyspark.sql import functions as F
 
-from hllspark import agg
-
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_scan_prunes_to_value_column(spark, pages_small_dir):
+@pytest.fixture(scope="module")
+def udaf(spark):
+    ju = pytest.importorskip("hllspark.jvm_udaf")
+    if not ju.available(spark):
+        pytest.skip("udaf jar not loadable")
+    return ju
+
+
+def test_scan_prunes_to_value_column(spark, pages_small_dir, udaf):
     """The register reduction over (url) must read ONLY url from parquet."""
     pages = spark.read.parquet(pages_small_dir)
-    _, regs = agg._hll_kernel_frames(pages, "url", [], 14, 6)
-    plan = _plan(regs)
+    plan = _plan(udaf.sketch_jvm_udaf(pages, "url", finalize="estimate"))
     assert "ReadSchema: struct<url:string>" in plan, plan
     # html/text (the wide columns) must not appear anywhere in the scan
     assert "html" not in plan and "text" not in plan
 
 
-def test_filter_pushed_to_parquet(spark, pages_small_dir):
+def test_filter_pushed_to_parquet(spark, pages_small_dir, udaf):
     pages = spark.read.parquet(pages_small_dir)
-    _, regs = agg._hll_kernel_frames(pages.filter(F.col("lang") == "en"), "url", [], 14, 6)
-    plan = _plan(regs)
+    plan = _plan(udaf.sketch_jvm_udaf(pages.filter(F.col("lang") == "en"), "url", finalize="estimate"))
     assert "PushedFilters: [IsNotNull(lang), EqualTo(lang,en)]" in plan, plan
 
 
-def test_partial_aggregation_before_shuffle(spark, pages_small_dir):
-    """groupBy(key, idx).agg(max(rho)) must partial-aggregate map-side: at
-    most P × 2^b rows cross the exchange, never the raw rows."""
+def test_partial_aggregation_before_shuffle(spark, pages_small_dir, udaf):
+    """The HLL buffer must partial-aggregate map-side: one buffer row per
+    (partition, key) crosses the exchange, never the raw rows."""
     pages = spark.read.parquet(pages_small_dir)
-    _, regs = agg._hll_kernel_frames(pages, "url", ["lang"], 14, 6)
-    plan = _plan(regs)
+    plan = _plan(udaf.sketch_jvm_udaf(pages, "url", ["lang"], finalize="estimate"))
     exch = plan.index("Exchange hashpartitioning")
-    # a partial HashAggregate appears BELOW (after, in toString order) the
+    # a partial aggregate appears BELOW (after, in toString order) the
     # exchange — i.e. on the map side
     below = plan[exch:]
-    assert "partial_max" in below or "partial" in below, plan
-    assert "HashAggregate" in below
+    assert "partial_hllregisteraggregator" in below, plan
+    assert "ObjectHashAggregate" in below
 
 
-def test_whole_stage_codegen_on_hot_path(spark, pages_small_dir):
-    """The kernel columns (hash, clz cascade, encode) and the register
-    reduction must run inside WholeStageCodegen spans — no interpreted
-    projections on the per-row path."""
+def test_whole_stage_codegen_on_hot_path(spark, pages_small_dir, udaf):
+    """The per-row path below the aggregate — scan and filter — runs inside
+    WholeStageCodegen spans, and the xxhash64 hash is the map-side
+    aggregate's own input expression: no separate projection stage and no
+    Python evaluation on the per-row path."""
     import contextlib
     import io
+    import re
 
     pages = spark.read.parquet(pages_small_dir)
-    _, regs = agg._hll_kernel_frames(pages, "url", [], 14, 6)
-    regs.collect()  # under AQE, codegen subtrees exist only in the final plan
+    q = udaf.sketch_jvm_udaf(pages.filter(F.col("lang") == "en"), "url", finalize="estimate")
+    q.collect()  # under AQE, codegen subtrees exist only in the final plan
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        regs.explain("codegen")
+        q.explain("codegen")
     cg = buf.getvalue()
     assert "Found" in cg and "WholeStageCodegen subtrees" in cg, cg[:500]
-    # the map-side partial aggregate and every kernel projection must be
-    # inside a codegen span (starred nodes)
-    assert "*(1) HashAggregate" in cg and "partial_max" in cg, cg[:800]
-    assert "*(1) Project" in cg
-
-
-def test_minhash_jvm_single_aggregate(spark, pages_small_dir):
-    """minhash_jvm's k mins must be ONE hash aggregate (one shuffle), not k
-    of them."""
-    from hllspark.sketches.jvm import minhash_jvm
-
-    pages = spark.read.parquet(pages_small_dir)
-    out = minhash_jvm(pages, "url", by=["lang"], k=32)
-    plan = _plan(out)
-    assert plan.count("Exchange hashpartitioning") <= 2, plan  # agg + (maybe) pandas grouping
+    assert re.search(r"\*\(\d+\) Filter", cg) and re.search(r"\*\(\d+\) ColumnarToRow", cg), cg[:800]
+    plan = _plan(q)
+    hashed_input = r"partial_hllregisteraggregator\(CASE WHEN isnull\(url#\d+\) THEN null ELSE xxhash64\(url"
+    assert re.search(hashed_input, plan), plan
+    assert "EvalPython" not in plan, plan
 
 
 def test_udaf_engine_plan_shape(spark, pages_small_dir):

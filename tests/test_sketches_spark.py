@@ -69,12 +69,16 @@ def test_minhash_partition_invariance(spark, sf001_dir):
 
 
 def test_tdigest_jvm_builder(spark, sf01_dir):
-    """JVM value-count reduction + weighted fold: same rank accuracy as the
-    python engine, deterministic across partitionings, empty-input row."""
-    from hllspark.sketches.jvm import tdigest_jvm
+    """Jar-engine exact mode (value→count buffer + one weighted fold): same
+    rank accuracy as the python engine, deterministic across
+    partitionings, empty-input row."""
+    from hllspark import sketches
+
+    def build_td(df, col):  # exact mode for every distinct price
+        return sketches.build(df, col, "tdigest", exact_capacity=1 << 17)
 
     li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
-    td = TDigest.from_bytes(bytes(tdigest_jvm(li, "l_extendedprice").first()["sketch"]))
+    td = TDigest.from_bytes(bytes(build_td(li, "l_extendedprice").first()["sketch"]))
     vals = np.array([r[0] for r in li.select("l_extendedprice").collect()])
     s = np.sort(vals)
     for q in (0.1, 0.5, 0.9):
@@ -82,20 +86,20 @@ def test_tdigest_jvm_builder(spark, sf01_dir):
         assert abs(rank - q) < 0.02, (q, rank)
     assert td.total == pytest.approx(len(vals))
     # determinism: a different partitioning yields byte-identical sketches
-    a = bytes(tdigest_jvm(li.repartition(3), "l_extendedprice").first()["sketch"])
-    b = bytes(tdigest_jvm(li.repartition(17), "l_extendedprice").first()["sketch"])
+    a = bytes(build_td(li.repartition(3), "l_extendedprice").first()["sketch"])
+    b = bytes(build_td(li.repartition(17), "l_extendedprice").first()["sketch"])
     assert a == b
     # zero rows → single row, SQL NULL sketch (strict-aggregate contract)
-    row = tdigest_jvm(li.filter("l_extendedprice < 0"), "l_extendedprice").first()
+    row = build_td(li.filter("l_extendedprice < 0"), "l_extendedprice").first()
     assert row["sketch"] is None
 
 
 def test_kll_jvm_builder_grouped(spark, sf01_dir):
-    from hllspark.sketches.jvm import kll_jvm
+    from hllspark import sketches
 
     li = spark.read.parquet(f"{sf01_dir}/lineitem.parquet")
     rows = {r["l_returnflag"]: KLL.from_bytes(bytes(r["sketch"]))
-            for r in kll_jvm(li, "l_quantity", by=["l_returnflag"]).collect()}
+            for r in sketches.build(li, "l_quantity", "kll", by=["l_returnflag"]).collect()}
     assert len(rows) == 3
     exact_mid = {
         r["l_returnflag"]: r["m"]
@@ -106,7 +110,7 @@ def test_kll_jvm_builder_grouped(spark, sf01_dir):
         assert k.total == li.filter(F.col("l_returnflag") == flag).count()
     # determinism across partitionings (per key)
     again = {r["l_returnflag"]: bytes(r["sketch"])
-             for r in kll_jvm(li.repartition(13), "l_quantity", by=["l_returnflag"]).collect()}
+             for r in sketches.build(li.repartition(13), "l_quantity", "kll", by=["l_returnflag"]).collect()}
     assert {f: bytes(KLL.from_bytes(b).to_bytes()) for f, b in again.items()} == {
         f: bytes(k.to_bytes()) for f, k in rows.items()
     }
@@ -141,22 +145,21 @@ def test_kll_weighted_bulk_stays_bounded():
 
 
 def test_jvm_builders_null_contract(spark):
-    """Every JVM builder must emit a (key, NULL sketch) row for a group
+    """Every jar builder must emit a (key, NULL sketch) row for a group
     whose values are all NULL — same row set as the python engine — and a
     single NULL-sketch row for an all-NULL or empty global aggregate."""
     from hllspark import agg
-    from hllspark.core.hll import HASH_XXHASH_SPARK
-    from hllspark.sketches.jvm import bloom_jvm, countmin_jvm, kll_jvm, minhash_jvm, tdigest_jvm
+    from hllspark import jvm_udaf as ju
 
     df = spark.createDataFrame(
         [("a", 1.0), ("a", 2.0), ("b", None), ("b", None)], "k string, v double"
     )
     for name, fn in (
-        ("tdigest", lambda: tdigest_jvm(df, "v", by=["k"])),
-        ("kll", lambda: kll_jvm(df, "v", by=["k"])),
-        ("countmin", lambda: countmin_jvm(df, "v", by=["k"], width=256, depth=3)),
-        ("bloom", lambda: bloom_jvm(df, "v", by=["k"], m_bits=1 << 12, k=3)),
-        ("minhash", lambda: minhash_jvm(df, "v", by=["k"], k=16)),
+        ("tdigest", lambda: ju.tdigest_jvm_udaf(df, "v", by=["k"])),
+        ("kll", lambda: ju.kll_jvm_udaf(df, "v", by=["k"])),
+        ("countmin", lambda: ju.countmin_jvm_udaf(df, "v", by=["k"], width=256, depth=3)),
+        ("bloom", lambda: ju.bloom_jvm_udaf(df, "v", by=["k"], m_bits=1 << 12, k=3)),
+        ("minhash", lambda: ju.minhash_jvm_udaf(df, "v", by=["k"], k=16)),
     ):
         rows = {r["k"]: r["sketch"] for r in fn().collect()}
         assert set(rows) == {"a", "b"}, (name, rows)
@@ -167,7 +170,7 @@ def test_jvm_builders_null_contract(spark):
     assert set(py) == {"a", "b"} and py["b"] is None
     # empty / all-NULL global → one row, NULL sketch (no 0x8000... slots)
     empty = spark.range(0).select(F.col("id").cast("double").alias("v"))
-    assert minhash_jvm(empty, "v", k=8).first()["sketch"] is None
+    assert ju.minhash_jvm_udaf(empty, "v", k=8).first()["sketch"] is None
     allnull = spark.range(4).select(F.lit(None).cast("double").alias("v"))
-    assert minhash_jvm(allnull, "v", k=8).first()["sketch"] is None
-    assert tdigest_jvm(allnull, "v").first()["sketch"] is None
+    assert ju.minhash_jvm_udaf(allnull, "v", k=8).first()["sketch"] is None
+    assert ju.tdigest_jvm_udaf(allnull, "v").first()["sketch"] is None

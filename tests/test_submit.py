@@ -76,8 +76,8 @@ def test_spark_submit_with_udaf_jar(tmp_path):
     subprocess.run([sys.executable, str(ROOT / "tools" / "make_pyfiles.py")], check=True, cwd=ROOT)
     if shutil.which("javac"):
         subprocess.run([sys.executable, str(ROOT / "tools" / "build_jar.py")], check=True, cwd=ROOT)
-    # else: a prebuilt (possibly stale) jar is fine — the job only needs
-    # the HLL aggregator class, present since the jar first shipped
+    # else: the prebuilt jar must carry the digest of these sources, or
+    # jvm_udaf.available refuses it
     job = tmp_path / "job_jar.py"
     job.write_text(JAR_JOB)
     out = subprocess.run(
@@ -97,7 +97,7 @@ def test_spark_submit_with_udaf_jar(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = [l for l in out.stdout.splitlines() if l.startswith("SUBMIT_RESULT")]
-    # same estimates as the fallback engine (byte-identical sketches)
+    # same estimates as the python engine (byte-identical sketches)
     assert line and "('A', 1085)" in line[0] and "('N', 1117)" in line[0] and "('R', 1103)" in line[0], line
 
 
@@ -112,7 +112,8 @@ from hllspark.jvm_udaf import (
     available, sketch_jvm_udaf, minhash_jvm_udaf, tdigest_jvm_udaf,
     kll_jvm_udaf, countmin_jvm_udaf, bloom_jvm_udaf, hll_merge_udaf,
 )
-from hllspark.sketches.jvm import minhash_jvm, tdigest_jvm, kll_jvm, countmin_jvm, bloom_jvm
+from hllspark import sketches
+from hllspark.sketches import KLL, TDigest
 
 assert available(spark), "udaf classes not visible via --jars on the cluster"
 df = spark.range(20_000).selectExpr("id % 4 as g", "cast(id % 3001 as int) as v").repartition(6)
@@ -121,16 +122,27 @@ num = spark.range(20_000).selectExpr("id % 4 as g", "cast(xxhash64(id) as double
 def by_key(out):
     return {r["g"]: None if r["sketch"] is None else bytes(r["sketch"]) for r in out.collect()}
 
+def py(kind, **params):
+    return by_key(sketches.build(df, "v", kind, ["g"], engine="python", **params))
+
+def fold(cls, **params):  # the quantile kinds' exact mode: one sorted weighted fold per group
+    out = {}
+    for g in range(4):
+        vals, counts = np.unique([float(i % 3001) for i in range(g, 20_000, 4)], return_counts=True)
+        st = cls.create(**params)
+        st.update_weighted(vals, counts)
+        out[g] = st.to_bytes()
+    return out
+
 # every aggregator crosses REAL executor JVM boundaries here (kryo buffer
 # transport through the block manager, classes from --jars)
-assert by_key(sketch_jvm_udaf(df, "v", ["g"])) == by_key(agg.sketch_jvm_distributed(df, "v", ["g"]))
-assert by_key(minhash_jvm_udaf(df, "v", ["g"], k=16)) == by_key(minhash_jvm(df, "v", ["g"], k=16))
-assert by_key(tdigest_jvm_udaf(df, "v", ["g"])) == by_key(tdigest_jvm(df, "v", ["g"]))
-assert by_key(kll_jvm_udaf(df, "v", ["g"])) == by_key(kll_jvm(df, "v", ["g"]))
-assert by_key(countmin_jvm_udaf(df, "v", ["g"], width=128, depth=3)) == by_key(countmin_jvm(df, "v", ["g"], width=128, depth=3))
-assert by_key(bloom_jvm_udaf(df, "v", ["g"], m_bits=1 << 12, k=4)) == by_key(bloom_jvm(df, "v", ["g"], m_bits=1 << 12, k=4))
+assert by_key(sketch_jvm_udaf(df, "v", ["g"])) == by_key(agg.sketch(df, "v", ["g"], engine="python", jvm_prehash=True))
+assert by_key(minhash_jvm_udaf(df, "v", ["g"], k=16)) == py("minhash", k=16)
+assert by_key(tdigest_jvm_udaf(df, "v", ["g"])) == fold(TDigest)
+assert by_key(kll_jvm_udaf(df, "v", ["g"])) == fold(KLL)
+assert by_key(countmin_jvm_udaf(df, "v", ["g"], width=128, depth=3)) == py("countmin", width=128, depth=3)
+assert by_key(bloom_jvm_udaf(df, "v", ["g"], m_bits=1 << 12, k=4)) == py("bloom", m_bits=1 << 12, k=4)
 # quantile digest mode (bounded buffers) across executors
-from hllspark.sketches.tdigest import TDigest
 td = TDigest.from_bytes(bytes(tdigest_jvm_udaf(num, "v", exact_capacity=500).first()["sketch"]))
 assert abs(td.total - 20_000) < 1e-6
 # stored-blob merge across executors

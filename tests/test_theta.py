@@ -264,9 +264,9 @@ class TestThetaSpark:
         from hllspark import sketches
 
         df = spark.range(10).select(F.col("id").alias("v"))
-        with pytest.raises(ValueError, match="no Catalyst"):
+        with pytest.raises(ValueError, match="python engine only"):
             sketches.build(df, "v", "theta", engine="jvm")
-        with pytest.raises(ValueError, match="no Catalyst"):
+        with pytest.raises(ValueError, match="python engine only"):
             sketches.build(df, "v", "theta", engine="jvm_udaf")
 
 

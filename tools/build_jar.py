@@ -1,30 +1,54 @@
 """Compile jvm/src → dist/hllspark-udaf.jar against the installed pyspark jars.
 
-Idempotent: skips the build when the jar is newer than every source file.
-Used by hllspark.jvm_udaf.ensure_jar() as a lazy fallback, and runnable
-directly:  python tools/build_jar.py
+The jar carries the SHA-256 of the sources it was built from as the
+resource ``hllsparkjvm/source.sha256``.  ``build()`` is idempotent: it skips
+the compile when the existing jar's digest equals the digest of the current
+sources, and ``hllspark.jvm_udaf.available`` refuses a loaded jar whose
+digest differs from this checkout's sources.  Used by
+hllspark.jvm_udaf.jar_path() as a lazy build, and runnable directly:
+python tools/build_jar.py [--force]
 """
 
-import glob
+import hashlib
 import os
 import shutil
 import subprocess
 import sys
 import tempfile
+import zipfile
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 SRC = ROOT / "jvm" / "src"
 JAR = ROOT / "dist" / "hllspark-udaf.jar"
+DIGEST_RESOURCE = "hllsparkjvm/source.sha256"
 
 
-def build(force: bool = False) -> Path:
+def source_digest() -> str:
+    """Hex SHA-256 over every Java source under jvm/src (relative path and
+    bytes, in sorted path order) — the version a built jar must carry."""
     sources = sorted(SRC.rglob("*.java"))
     if not sources:
         raise FileNotFoundError(f"no java sources under {SRC}")
-    if JAR.exists() and not force:
-        if JAR.stat().st_mtime >= max(s.stat().st_mtime for s in sources):
-            return JAR
+    h = hashlib.sha256()
+    for s in sources:
+        h.update(s.relative_to(SRC).as_posix().encode() + b"\0")
+        h.update(s.read_bytes() + b"\0")
+    return h.hexdigest()
+
+
+def _jar_digest(jar: Path) -> str | None:
+    try:
+        with zipfile.ZipFile(jar) as z:
+            return z.read(DIGEST_RESOURCE).decode().strip()
+    except (OSError, KeyError, zipfile.BadZipFile):
+        return None
+
+
+def build(force: bool = False) -> Path:
+    digest = source_digest()
+    if JAR.exists() and not force and _jar_digest(JAR) == digest:
+        return JAR
     javac = shutil.which("javac")
     jar = shutil.which("jar")
     if not javac or not jar:
@@ -36,9 +60,10 @@ def build(force: bool = False) -> Path:
     with tempfile.TemporaryDirectory() as td:
         subprocess.run(
             [javac, "-classpath", cp, "-d", td, "--release", "17"]
-            + [str(s) for s in sources],
+            + [str(s) for s in sorted(SRC.rglob("*.java"))],
             check=True,
         )
+        (Path(td) / DIGEST_RESOURCE).write_text(digest + "\n")
         JAR.parent.mkdir(parents=True, exist_ok=True)
         tmp_jar = Path(td) / "out.jar"
         subprocess.run([jar, "cf", str(tmp_jar), "-C", td, "hllsparkjvm"], check=True)

@@ -5,7 +5,7 @@ Usage: python tools/make_pyfiles.py [out.zip]
 The optional JVM aggregate-buffer engine (engine="jvm_udaf") ships as a
 SEPARATE artifact: add `--jars dist/hllspark-udaf.jar` (built by
 tools/build_jar.py) next to --py-files.  Without the jar every API still
-works — engine="auto" falls back to the groupBy-JVM engine.
+works — engine="auto" runs the python engine (byte-identical sketches).
 """
 
 import sys
