@@ -361,8 +361,7 @@ def merge_partials(
     if engine == "auto" and (cls is not HLL or merge_rounds is not None):
         engine = "python"  # only the HLL merge in the default topology has a jar aggregate
     if jvm_udaf.resolve_engine(partials.sparkSession, engine) == "jvm_udaf":
-        out = jvm_udaf.hll_merge_udaf(partials, sketch_col, by)
-        return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
+        return jvm_udaf.hll_merge_udaf(partials, sketch_col, by)
     out_fields = [f for f in partials.schema.fields if f.name in by]
     out_fields.append(StructField(sketch_col, BinaryType(), True))
     out_schema = StructType(out_fields)

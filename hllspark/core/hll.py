@@ -353,6 +353,19 @@ def decompress_sparse(payload: bytes, n: int) -> np.ndarray:
     return np.cumsum(d).astype(np.uint32)
 
 
+_TRUNCATED_PAYLOAD = "truncated sketch payload"
+
+
+def _fixed_payload_size(b: int, binbits: int, flags: int, idx: int) -> int:
+    """Bytes a raw-sparse, raw-dense or bit-packed-dense payload needs (0
+    for the group-varint and deflate forms, which check their own length)."""
+    if not flags & _FLAG_DENSE:
+        return 0 if flags & _FLAG_VARINT else 4 * idx
+    if flags & _FLAG_DEFLATE:
+        return 0
+    return ((1 << b) * binbits + 7) // 8 if flags & _FLAG_PACKED else 1 << b
+
+
 def _pack_registers(regs: np.ndarray, binbits: int) -> bytes:
     """Bit-pack uint8 registers (< 2^binbits) to binbits bits each, vectorized
     via unpackbits/packbits (big-endian within the stream, self-consistent)."""
@@ -588,6 +601,8 @@ class HLL:
         # versions 1/2 share this layout; older versions would be upgraded here
         # (mirrors hyperloglog_update / upgrade.c:24-60)
         payload = data[_HEADER.size :]
+        if len(payload) < _fixed_payload_size(b, binbits, flags, idx):
+            raise ValueError(_TRUNCATED_PAYLOAD)
         hash_kind = (flags & _HASH_KIND_MASK) >> _HASH_KIND_SHIFT
         if flags & _FLAG_DENSE:
             m = 1 << b
@@ -645,10 +660,12 @@ def merge_blobs(blobs) -> HLL | None:
             version > STRUCT_VERSION
             or (flags & ~_KNOWN_FLAGS)
             or (flags & (_FLAG_PACKED | _FLAG_DEFLATE))
+            or len(data) - _HEADER.size < _fixed_payload_size(b, binbits, flags, idx)
         ):
             # rare payload forms (bit-packed / deflated dense) and the error
             # cases route through the reference decoder so unsupported
-            # versions/flags raise the exact same messages
+            # versions/flags and truncated payloads raise the exact same
+            # messages
             s = HLL.from_bytes(data)
             b, binbits, hk = s.b, s.binbits, s.hash_kind
             dense, sparse = s.dense, s.sparse

@@ -15,11 +15,13 @@ buffer object per group, updated in place per row inside
 ObjectHashAggregate — the flat-buffer shape of Spark's DataSketches
 aggregates.
 
-Only the reduction is JVM; canonical serialization stays in Python: the
-aggregator emits a small intermediate blob per group (mode, chain hashes,
-encodings-or-registers) and ``_blob_to_hll`` rebuilds the exact
-``core.hll.HLL`` state, so output bytes equal the python engine's by
-construction.  Estimates finalize in the JVM (HllBlobEstimateUdf).
+Each aggregator finishes to the canonical ``to_bytes()`` form of its
+sketch, so the aggregate column IS the sketch column: HLL, count-min, Bloom
+and MinHash results leave the JVM with no Python stage, and
+``finalize="estimate"`` applies the stored-counter reader
+(HllSketchEstimateUdf, ``hll_estimate_col``) to that column.  Only the
+t-digest / KLL exact-mode fold still finishes in Python
+(``_td_blob_to_bytes`` / ``_kll_blob_to_bytes``).
 
 Availability: the session needs the jar on the driver classpath —
 ``configure_builder`` (session creation, preferred) or the best-effort
@@ -296,54 +298,38 @@ def configure_builder(builder, extra_jars: Sequence[str] = ()):
     return builder.config("spark.jars", ",".join(seen))
 
 
-# (app_key, b, binbits) -> registered UserDefinedFunction.  The aggregator
-# object is stateless (b/binbits final fields; buffers come from zero() per
-# group), so one functions.udaf registration serves every query in the app —
-# building it costs ~5 py4j round trips (~30-50 ms of driver plan-build per
-# query otherwise, paid inside every timed rep).  Same single-live-app
-# eviction discipline as _SESSION_CACHE: a key miss after an app restart
-# clears refs into the dead JVM.
+# (app_key, ...) -> registered UserDefinedFunction.  The aggregator objects
+# are stateless (final parameter fields; buffers come from zero() per group)
+# and the read UDFs hold no state at all, so one registration serves every
+# query in the app — building one costs ~3-5 py4j round trips (~30-50 ms of
+# driver plan-build per query otherwise, paid inside every timed rep).
+# Same single-live-app eviction discipline as _SESSION_CACHE: a key miss
+# after an app restart clears refs into the dead JVM.
 _UDAF_COL_CACHE: dict[tuple, object] = {}
 
 
-def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int) -> Column:
-    """Aggregate Column: intermediate blob of HLL state over a 64-bit hash
-    column (NULL hashes are ignored; an all-NULL group → empty blob)."""
-    key = (_app_key(spark), "hll", b, binbits)
+def _cached_udf(spark: SparkSession, key: tuple, make):
+    key = (_app_key(spark), *key)
     judf = _UDAF_COL_CACHE.get(key)
     if judf is None:
-        jagg = _new_jvm_obj(spark, _AGG_CLASS, [b, binbits])
-        jvm = spark._jvm
-        judf = jvm.org.apache.spark.sql.functions.udaf(jagg, jvm.org.apache.spark.sql.Encoders.LONG())
+        judf = make()
         if any(k[0] != key[0] for k in _UDAF_COL_CACHE):
             _UDAF_COL_CACHE.clear()  # single live app: drop dead-JVM refs
         _UDAF_COL_CACHE[key] = judf
+    return judf
+
+
+def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int) -> Column:
+    """Aggregate Column: canonical HLL sketch bytes over a 64-bit hash
+    column (NULL hashes are ignored; an all-NULL group → SQL NULL)."""
+
+    def make():
+        jagg = _new_jvm_obj(spark, _AGG_CLASS, [b, binbits])
+        jvm = spark._jvm
+        return jvm.org.apache.spark.sql.functions.udaf(jagg, jvm.org.apache.spark.sql.Encoders.LONG())
+
+    judf = _cached_udf(spark, ("hll", b, binbits), make)
     return _to_col(judf.apply(_col_seq(spark, [hash_col])))
-
-
-def _estimate_udf_column(spark: SparkSession, blob_col: Column) -> Column:
-    """Column: udaf intermediate blob → estimate via the in-JVM estimator
-    (HllBlobEstimateUdf).  With it the distinct-count query path is
-    scan → xxhash64 → ObjectHashAggregate → one JVM scalar call per group:
-    no Arrow transfer, no Python worker.  Estimates match
-    ``_blob_to_hll(blob).estimate()`` bit-for-bit except in the
-    linear-counting regimes, where the JVM's StrictMath.log (fdlibm — chosen
-    for bit-reproducibility across JIT tiers/platforms) can differ from the
-    platform libm CPython uses by at most 1 ulp (~1e-16 relative; the
-    10-decimal goldens and the micro-unit contract compare are unaffected;
-    tests/test_jvm_estimate.py pins both regimes across modes, precisions
-    and chain rows)."""
-    key = (_app_key(spark), "blob_estimate")
-    ju = _UDAF_COL_CACHE.get(key)
-    if ju is None:
-        # overload selection happens in Java (HllUdfs.blobEstimate): py4j
-        # calling functions.udf(obj, dt) directly can bind the deprecated
-        # untyped-Scala overload, which Spark 4 rejects (UNTYPED_SCALA_UDF)
-        ju = _new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []).blobEstimate()
-        if any(k[0] != key[0] for k in _UDAF_COL_CACHE):
-            _UDAF_COL_CACHE.clear()
-        _UDAF_COL_CACHE[key] = ju
-    return _to_col(ju.apply(_col_seq(spark, [blob_col])))
 
 
 def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
@@ -352,8 +338,16 @@ def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
     path over sketch rollup tables (reference postgres.sql:112-114) with no
     pandas decode per row: decodes every v1/v2 canonical payload form
     (raw/group-varint sparse, raw/bit-packed/deflated dense, via the same
-    Java decoder the blob-merge aggregator uses) and estimates with the
-    in-JVM estimator (parity contract in _estimate_udf_column).
+    Java decoder the blob-merge aggregator uses; a sparse counter
+    estimates from its header's entry count alone, like
+    ``core.hll.estimate_blobs``) and estimates with the in-JVM estimator.
+    Estimates match ``HLL.from_bytes(v).estimate()`` bit-for-bit except in
+    the linear-counting regimes, where the JVM's StrictMath.log (fdlibm —
+    chosen for bit-reproducibility across JIT tiers/platforms) can differ
+    from the platform libm CPython uses by at most 1 ulp (~1e-16 relative;
+    the 10-decimal goldens and the micro-unit contract compare are
+    unaffected; tests/test_jvm_estimate.py pins both regimes across modes,
+    precisions and chain rows).
 
     EXPLICIT-engine semantics: raises RuntimeError when the jar isn't
     loadable, like the other jvm_udaf entry points.  Scope contract — identical to the pandas reader's: CANONICAL
@@ -374,7 +368,10 @@ def _as_col(c: Column | str) -> Column:
 
 
 def _read_udf_apply(spark: SparkSession, method: str, klass: str, fallback: str, cols) -> Column:
-    """Bind one of HllUdfs' scalar read-UDF factories and apply it.
+    """Bind one of HllUdfs' scalar read-UDF factories (once per app) and
+    apply it.  Overload selection happens in Java (HllUdfs): py4j calling
+    functions.udf(obj, dt) directly can bind the deprecated untyped-Scala
+    overload, which Spark 4 rejects (UNTYPED_SCALA_UDF).
 
     EXPLICIT-engine semantics shared by every per-row read entry point:
     RuntimeError when the jar isn't loadable, naming the pandas reader."""
@@ -384,7 +381,7 @@ def _read_udf_apply(spark: SparkSession, method: str, klass: str, fallback: str,
             "create the session with hllspark.jvm_udaf.configure_builder "
             f"or use hllspark.{fallback} (pandas)"
         )
-    ju = getattr(_new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []), method)()
+    ju = _cached_udf(spark, (method,), lambda: getattr(_new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []), method)())
     return _to_col(ju.apply(_col_seq(spark, cols)))
 
 
@@ -557,77 +554,18 @@ def register_sql_jvm(spark: SparkSession) -> None:
         ) from None
 
 
-def _blob_to_hll(buf):
-    """Rebuild the exact core.hll.HLL state from the aggregator's blob
-    (v1: HllRegisterAggregator.finish — pre-hashed build path, hash_kind is
-    always xxhash; v2: HllMergeAggregator.finish — stored-sketch merge path,
-    hash_kind carried in the blob).  Returns None for the empty blob
-    (all-NULL or zero-row group → SQL NULL, reference contract)."""
-    from .core.hll import HASH_XXHASH_SPARK, HLL, sparse_capacity
-
-    buf = bytes(buf)
-    version, mode, b, binbits = buf[0], buf[1], buf[2], buf[3]
-    if version == 1:
-        hash_kind = HASH_XXHASH_SPARK
-        off = 4
-    elif version == 2:
-        hash_kind = buf[4]
-        off = 5
-        if b == 0:
-            return None  # uninitialized merge buffer: every input was NULL
-    else:
-        raise ValueError(f"unknown udaf blob version {version}")
-    nchain = int.from_bytes(buf[off : off + 4], "little", signed=True)
-    off += 4
-    chains = np.frombuffer(buf, dtype="<i8", count=nchain, offset=off)
-    off += 8 * nchain
-    if mode == 0:
-        n = int.from_bytes(buf[off : off + 4], "little", signed=True)
-        off += 4
-        # the aggregator's open-addressing table guarantees UNIQUE encodings;
-        # only sortedness is needed for the canonical sparse state — np.sort
-        # halves the per-blob finalize cost vs np.unique (measured 10.9 →
-        # ~6 µs/blob, which is 25% of a 100k-group query)
-        encs = np.sort(np.frombuffer(buf, dtype="<u4", count=n, offset=off))
-        if n == 0 and nchain == 0 and version == 1:
-            # v1 build path: zero ingested values → all-NULL group → SQL NULL.
-            # v2 (stored-blob merge) marks all-NULL with b == 0 (checked
-            # above); n == 0 there is a LEGITIMATE empty stored counter and
-            # must round-trip as one — the python merge path keeps it, and
-            # byte parity with merge_partials requires we do too
-            return None
-        if len(encs) > sparse_capacity(b):
-            # can't arise from the aggregator (it promotes at >cap) but keep
-            # the invariant locally enforced
-            sk = HLL(b, binbits, encs, None, hash_kind)
-            sk._promote()
-        else:
-            sk = HLL(b, binbits, encs, None, hash_kind)
-    else:
-        regs = np.frombuffer(buf, dtype=np.uint8, count=1 << b, offset=off).copy()
-        sk = HLL(b, binbits, None, regs, hash_kind)
-    if nchain:
-        sk.add_hashes(chains.view(np.uint64))
-    return sk
-
-
-def _finish(spark: SparkSession, agged: DataFrame, keep: list, finalize: str, est_col: str) -> DataFrame:
-    """Select ``keep`` + the finalized ``__blob`` aggregate: canonical sketch
-    bytes (one pandas pass over the output groups), or the in-JVM estimate
+def _finish(
+    spark: SparkSession, agged: DataFrame, keep: list, finalize: str, est_col: str, sketch_col: str = "sketch"
+) -> DataFrame:
+    """Select ``keep`` + the ``__blob`` aggregate, which already is the
+    canonical sketch (``finalize="sketch"``), or its in-JVM estimate
     (NULL for an all-NULL group; estimate_bigint rounds half-even and
     coalesces NULL → 0, hyperloglog_get_estimate_bigint's contract)."""
     if finalize == "sketch":
-
-        @pandas_udf("binary")
-        def fin(blobs: pd.Series) -> pd.Series:
-            return blobs.map(
-                lambda v: None if v is None else (lambda sk: None if sk is None else sk.to_bytes())(_blob_to_hll(v))
-            )
-
-        return agged.select(*keep, fin(F.col("__blob")).alias("sketch"))
+        return agged.select(*keep, F.col("__blob").alias(sketch_col))
     if finalize not in ("estimate", "estimate_bigint"):
         raise ValueError(f"unknown finalize {finalize!r}")
-    jcol = _estimate_udf_column(spark, F.col("__blob"))
+    jcol = hll_estimate_col(spark, F.col("__blob"))
     if finalize == "estimate_bigint":
         jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
     return agged.select(*keep, jcol.alias(est_col))
@@ -647,16 +585,10 @@ def sketch_jvm_udaf(
     """HLL aggregation with the reduction in a single JVM aggregate buffer.
 
     Plan shape:  scan → project xxhash64 → ObjectHashAggregate(partial)
-    → shuffle ONE buffer row per (partition, key) → final merge → one tiny
-    Python stage (rows == groups) for canonical serialization, or an in-JVM
-    estimate for ``finalize="estimate"``/``"estimate_bigint"``.
-    Byte-identical output to the python engine (tested).
-
-    (A driver-side finalize for global queries was measured and REJECTED:
-    with Python worker reuse the ArrowEvalPython stage over one blob row
-    costs less than the extra first() action + createDataFrame round-trip
-    it would replace — interleaved A/B 0.72s vs 0.81s on the 32M-row
-    flagship — and it would make the call eager.)
+    → shuffle ONE buffer row per (partition, key) → final merge, whose
+    output is the canonical sketch — or its in-JVM estimate for
+    ``finalize="estimate"``/``"estimate_bigint"``.  No Python stage either
+    way.  Byte-identical output to the python engine (tested).
     """
     from .agg import jvm_hash_expr
     from .functions import resolve_params
@@ -713,8 +645,8 @@ def sketch_cube_jvm_udaf(
 
 
 # ---------------------------------------------------------------------------
-# sibling aggregate buffers: CountMin and Bloom (same jar, same pattern —
-# flat JVM buffer per group, canonical serialization in Python)
+# sibling aggregate buffers (same jar, same pattern — flat JVM buffer per
+# group, finished to canonical sketch bytes in the JVM)
 # ---------------------------------------------------------------------------
 
 
@@ -727,58 +659,6 @@ def _sibling_udaf_column(
     jenc = {"long": E.LONG, "double": E.DOUBLE, "binary": E.BINARY}[encoder]()
     judf = jvm.org.apache.spark.sql.functions.udaf(jagg, jenc)
     return _to_col(judf.apply(_col_seq(spark, [in_col])))
-
-
-def _cm_blob_to_bytes(buf) -> bytes | None:
-    """CountMinAggregator blob → canonical CountMin bytes (None = all-NULL).
-
-    v1 (build path): hash_kind is always xxhash, total == 0 means all-NULL.
-    v2 (stored-blob merge): hash_kind carried after the version byte;
-    width == 0 is the ONLY all-NULL marker — total == 0 with width > 0 is
-    a legitimate EMPTY stored sketch (the HLL v2 lesson)."""
-    from .core.hll import HASH_XXHASH_SPARK
-    from .sketches.countmin import CountMin
-
-    buf = bytes(buf)
-    version = buf[0]
-    if version == 1:
-        hash_kind, off = HASH_XXHASH_SPARK, 1
-    elif version == 2:
-        hash_kind, off = buf[1], 2
-    else:
-        raise ValueError(f"unknown countmin blob version {version}")
-    width = int.from_bytes(buf[off : off + 4], "little", signed=True)
-    depth = int.from_bytes(buf[off + 4 : off + 8], "little", signed=True)
-    total = int.from_bytes(buf[off + 8 : off + 16], "little", signed=True)
-    if (version == 1 and total == 0) or (version == 2 and width == 0):
-        return None
-    counts = np.frombuffer(buf, dtype="<i8", count=depth * width, offset=off + 16)
-    st = CountMin(width, depth, counts.astype(np.uint64).reshape(depth, width), total, hash_kind)
-    return st.to_bytes()
-
-
-def _bloom_blob_to_bytes(buf) -> bytes | None:
-    """BloomAggregator blob → canonical Bloom bytes (None = all-NULL).
-    v1: n_added == 0 means all-NULL; v2 (stored merge, hash_kind after the
-    version byte): m_bits == 0 is the only all-NULL marker."""
-    from .core.hll import HASH_XXHASH_SPARK
-    from .sketches.bloom import Bloom
-
-    buf = bytes(buf)
-    version = buf[0]
-    if version == 1:
-        hash_kind, off = HASH_XXHASH_SPARK, 1
-    elif version == 2:
-        hash_kind, off = buf[1], 2
-    else:
-        raise ValueError(f"unknown bloom blob version {version}")
-    m_bits = int.from_bytes(buf[off : off + 8], "little", signed=True)
-    k = int.from_bytes(buf[off + 8 : off + 12], "little", signed=True)
-    n_added = int.from_bytes(buf[off + 12 : off + 20], "little", signed=True)
-    if (version == 1 and n_added == 0) or (version == 2 and m_bits == 0):
-        return None
-    bits = np.frombuffer(buf, dtype=np.uint8, count=(m_bits + 7) // 8, offset=off + 20).copy()
-    return Bloom(m_bits, k, bits, n_added, hash_kind).to_bytes()
 
 
 class GroupingSets(NamedTuple):
@@ -800,31 +680,33 @@ def _sibling_sketch(
     by,
     cls_name: str,
     args: list,
-    blob_fn,
     in_col: Column | None = None,
     encoder: str = "long",
 ) -> DataFrame:
+    """``by`` (or the GroupingSets dims + gid) + the aggregate as ``sketch``."""
     from .agg import jvm_hash_expr
 
     spark = df.sparkSession
     if in_col is None:
         in_col = jvm_hash_expr(df, value_col)
-    acol = _sibling_udaf_column(spark, in_col, cls_name, args, encoder=encoder)
+    acol = _sibling_udaf_column(spark, in_col, cls_name, args, encoder=encoder).alias("sketch")
     if isinstance(by, GroupingSets):
         gd = df.groupingSets([list(s) for s in by.sets], *by.dims)
-        agged = gd.agg(acol.alias("__blob"), F.grouping_id().cast("long").alias(by.gid_col))
-        keep = [*by.dims, by.gid_col]
-    else:
-        by = list(by or [])
-        gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-        agged = gb.agg(acol.alias("__blob"))
-        keep = by
+        return gd.agg(F.grouping_id().cast("long").alias(by.gid_col), acol)
+    by = list(by or [])
+    gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
+    return gb.agg(acol)
+
+
+def _py_finish(out: DataFrame, blob_fn, col: str = "sketch") -> DataFrame:
+    """Replace the quantile aggregators' blob column ``col`` with canonical
+    bytes (one pandas pass over the output groups; None = all-NULL)."""
 
     @pandas_udf("binary")
     def fin(blobs: pd.Series) -> pd.Series:
         return blobs.map(lambda v: None if v is None else blob_fn(v))
 
-    return agged.select(*keep, fin(F.col("__blob")).alias("sketch"))
+    return out.withColumn(col, fin(F.col(col)))
 
 
 def countmin_jvm_udaf(
@@ -837,7 +719,7 @@ def countmin_jvm_udaf(
     from .sketches.countmin import CountMin
 
     CountMin.create(width=width, depth=depth)  # same validation as every sibling builder
-    return _sibling_sketch(df, value_col, by, "hllsparkjvm.CountMinAggregator", [width, depth], _cm_blob_to_bytes)
+    return _sibling_sketch(df, value_col, by, "hllsparkjvm.CountMinAggregator", [width, depth])
 
 
 def bloom_jvm_udaf(
@@ -853,35 +735,12 @@ def bloom_jvm_udaf(
         # a JVM byte[] caps the buffer at 2^31-1 bytes (~17 Gbit); the
         # numpy-backed builders have no such limit
         raise ValueError("m_bits too large for the JVM buffer engine; use engine='python'")
-    return _sibling_sketch(df, value_col, by, "hllsparkjvm.BloomAggregator", [m_bits, k], _bloom_blob_to_bytes)
+    return _sibling_sketch(df, value_col, by, "hllsparkjvm.BloomAggregator", [m_bits, k])
 
 
 # ---------------------------------------------------------------------------
 # round 4: MinHash + quantile (t-digest / KLL) aggregate buffers
 # ---------------------------------------------------------------------------
-
-
-def _mh_blob_to_bytes(buf) -> bytes | None:
-    """MinHashAggregator blob → canonical MinHash v2 bytes (None = all-NULL)."""
-    from .core.hll import HASH_XXHASH_SPARK
-    from .sketches.minhash import MinHash
-
-    buf = bytes(buf)
-    version = buf[0]
-    if version == 1:
-        hash_kind, off = HASH_XXHASH_SPARK, 1
-    elif version == 2:  # stored-blob merge: hash_kind after the version byte
-        hash_kind, off = buf[1], 2
-    else:
-        raise ValueError(f"unknown minhash blob version {version}")
-    k = int.from_bytes(buf[off : off + 4], "little", signed=True)
-    n = int.from_bytes(buf[off + 4 : off + 12], "little", signed=True)
-    if (version == 1 and n == 0) or (version == 2 and k == 0):
-        # v1 build path: no values → all-NULL; v2: k == 0 is the marker
-        # (n == 0 with k > 0 is a legitimate empty stored signature)
-        return None
-    sig = np.frombuffer(buf, dtype="<i8", count=k, offset=off + 12).view(np.uint64).copy()
-    return MinHash(k, sig, n, hash_kind).to_bytes()
 
 
 def minhash_jvm_udaf(df: DataFrame, value_col: str, by: Sequence[str] | None = None, k: int = 128) -> DataFrame:
@@ -894,7 +753,7 @@ def minhash_jvm_udaf(df: DataFrame, value_col: str, by: Sequence[str] | None = N
     from .sketches.minhash import MinHash
 
     MinHash.create(k=k)  # same validation as every sibling builder
-    return _sibling_sketch(df, value_col, by, "hllsparkjvm.MinHashAggregator", [k], _mh_blob_to_bytes)
+    return _sibling_sketch(df, value_col, by, "hllsparkjvm.MinHashAggregator", [k])
 
 
 def _quantile_in_expr(df: DataFrame, value_col: str) -> Column:
@@ -1011,13 +870,13 @@ def tdigest_jvm_udaf(
     TDigest.create(delta=delta)  # same validation as every sibling builder
     if exact_capacity < 16:  # mirror the TDigestAggregator.java ctor guard
         raise ValueError("exact_capacity must be >= 16")
-    return _sibling_sketch(
+    out = _sibling_sketch(
         df, value_col, by,
         "hllsparkjvm.TDigestAggregator", [delta, exact_capacity],
-        _td_blob_to_bytes,
         in_col=_quantile_in_expr(df, value_col),
         encoder="double",
     )
+    return _py_finish(out, _td_blob_to_bytes)
 
 
 def kll_jvm_udaf(
@@ -1039,13 +898,13 @@ def kll_jvm_udaf(
     KLL.create(k=k)  # same validation as every sibling builder
     if exact_capacity < 16:  # mirror the KllAggregator.java ctor guard
         raise ValueError("exact_capacity must be >= 16")
-    return _sibling_sketch(
+    out = _sibling_sketch(
         df, value_col, by,
         "hllsparkjvm.KllAggregator", [k, exact_capacity],
-        _kll_blob_to_bytes,
         in_col=_quantile_in_expr(df, value_col),
         encoder="double",
     )
+    return _py_finish(out, _kll_blob_to_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -1072,23 +931,25 @@ def hll_merge_udaf(
 
     This is the scale path for stored-sketch rollup tables (per-domain /
     per-day counters re-aggregated with NO raw-data pass): one bounded
-    buffer per output group, no per-key Python until the final canonical
-    serialization.  NULL counters are skipped; a group of only NULLs yields
-    a SQL NULL sketch (strict-aggregate contract)."""
+    buffer per output group and no Python stage: the output column (named
+    ``sketch_col`` like the input) holds canonical counters.  NULL counters
+    are skipped; a group of only NULLs yields a SQL NULL sketch
+    (strict-aggregate contract)."""
     by = list(by or [])
     spark = df.sparkSession
     acol = _sibling_udaf_column(spark, F.col(sketch_col), "hllsparkjvm.HllMergeAggregator", [], encoder="binary")
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col)
+    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col, sketch_col)
 
 
 _MERGE_CLASSES = {
-    "countmin": ("hllsparkjvm.CountMinBlobMergeAggregator", _cm_blob_to_bytes),
-    "bloom": ("hllsparkjvm.BloomBlobMergeAggregator", _bloom_blob_to_bytes),
-    "minhash": ("hllsparkjvm.MinHashBlobMergeAggregator", _mh_blob_to_bytes),
-    "tdigest": ("hllsparkjvm.TDigestBlobMergeAggregator", _td_blob_to_bytes),
-    "kll": ("hllsparkjvm.KllBlobMergeAggregator", _kll_blob_to_bytes),
+    "countmin": "hllsparkjvm.CountMinBlobMergeAggregator",
+    "bloom": "hllsparkjvm.BloomBlobMergeAggregator",
+    "minhash": "hllsparkjvm.MinHashBlobMergeAggregator",
+    "tdigest": "hllsparkjvm.TDigestBlobMergeAggregator",
+    "kll": "hllsparkjvm.KllBlobMergeAggregator",
 }
+_QUANTILE_BLOB_FNS = {"tdigest": _td_blob_to_bytes, "kll": _kll_blob_to_bytes}
 
 
 def sibling_merge_udaf(
@@ -1112,16 +973,11 @@ def sibling_merge_udaf(
     empty sketches."""
     if kind not in _MERGE_CLASSES:
         raise ValueError(f"unknown sketch kind {kind!r}; expected one of {tuple(_MERGE_CLASSES)}")
-    cls_name, blob_fn = _MERGE_CLASSES[kind]
     by = list(by or [])
     spark = df.sparkSession
-    acol = _sibling_udaf_column(spark, F.col(sketch_col), cls_name, [], encoder="binary")
+    acol = _sibling_udaf_column(spark, F.col(sketch_col), _MERGE_CLASSES[kind], [], encoder="binary")
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    agged = gb.agg(acol.alias("__blob"))
-
-    @pandas_udf("binary")
-    def fin(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda v: None if v is None else blob_fn(v))
-
-    out = agged.select(*by, fin(F.col("__blob")).alias("sketch"))
-    return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
+    out = gb.agg(acol.alias(sketch_col))
+    if kind in _QUANTILE_BLOB_FNS:
+        return _py_finish(out, _QUANTILE_BLOB_FNS[kind], sketch_col)
+    return out

@@ -3,8 +3,9 @@ surface agg.sketch gives HLL, for count-min / Bloom / MinHash / t-digest /
 KLL:
 
 - ``jvm_udaf``: typed aggregate buffer in dist/hllspark-udaf.jar (chosen by
-  auto when the jar loads — flat buffer per group, one Arrow-batch finalize
-  over all groups; the only engine whose per-key cost doesn't grow with
+  auto when the jar loads — flat buffer per group, finished to canonical
+  bytes in the JVM, plus one Arrow-batch finalize over all groups for the
+  quantile kinds; the only engine whose per-key cost doesn't grow with
   group cardinality, and for the quantile sketches the one bounded on
   continuous columns);
 - ``python``: agg.sketch_generic with jvm_prehash=True — per-partition
@@ -153,10 +154,7 @@ def merge_stored(
         from .. import jvm_udaf
 
         if kind == "hll":
-            out = jvm_udaf.hll_merge_udaf(df, sketch_col, by)
-            # engine-independent schema: python path names the output
-            # column sketch_col, so the udaf path must too
-            return out if sketch_col == "sketch" else out.withColumnRenamed("sketch", sketch_col)
+            return jvm_udaf.hll_merge_udaf(df, sketch_col, by)
         return jvm_udaf.sibling_merge_udaf(df, kind, sketch_col, by)
     from ..agg import merge_partials
     from ..core.hll import HLL

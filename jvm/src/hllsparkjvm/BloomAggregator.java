@@ -20,7 +20,8 @@ import org.apache.spark.sql.expressions.Aggregator;
  * Positions are the Kirsch–Mitzenmacher double hash of the canonicalized
  * xxhash64 input, identical to the Python kernels (see CountMinAggregator
  * for the arithmetic-parity argument).  NULL hashes are skipped; an
- * all-NULL group leaves n_added == 0 → SQL NULL sketch at finalize.
+ * all-NULL group leaves n_added == 0 and finishes to a SQL NULL sketch.
+ * finish() writes the canonical Bloom.to_bytes() bytes ({@link #toBytes}).
  */
 public final class BloomAggregator
     extends Aggregator<Long, BloomAggregator.Buf, byte[]> {
@@ -99,18 +100,22 @@ public final class BloomAggregator
     return a;
   }
 
-  /** Blob (little-endian): u8 version=1 | i64 m_bits | i32 k |
-   *  i64 n_added | ceil(m/8) bit bytes.  n_added == 0 ⇒ all-NULL group. */
+  /** Canonical sketch bytes; null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
-    ByteBuffer bb = ByteBuffer.allocate(1 + 8 + 4 + 8 + buf.bits.length);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 1);
-    bb.putLong(buf.mBits);
-    bb.putInt(buf.k);
-    bb.putLong(buf.nAdded);
-    bb.put(buf.bits);
-    return bb.array();
+    if (buf.nAdded == 0) return null;
+    return toBytes(buf.bits, buf.mBits, buf.k, buf.nAdded, HllConstants.HASH_XXHASH_SPARK);
+  }
+
+  /**
+   * hllspark.sketches.bloom Bloom.to_bytes(), the one writer of both Bloom
+   * aggregators: little-endian header {@code <BBHqq} (version 1, hash_kind,
+   * k, m_bits, n_added), then the ceil(m/8) bit bytes.
+   */
+  static byte[] toBytes(byte[] bits, long mBits, int k, long nAdded, int hashKind) {
+    ByteBuffer bb = ByteBuffer.allocate(20 + bits.length).order(ByteOrder.LITTLE_ENDIAN);
+    bb.put((byte) 1).put((byte) hashKind).putShort((short) k).putLong(mBits).putLong(nAdded);
+    return bb.put(bits).array();
   }
 
   @Override

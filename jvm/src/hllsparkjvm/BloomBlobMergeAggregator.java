@@ -17,7 +17,9 @@ import org.apache.spark.sql.expressions.Aggregator;
  * hash_kind, k, m_bits, n_added; payload bit bytes).  Bitwise-OR merge,
  * n_added summed (an upper bound, duplicates double-counted — exactly
  * Bloom.merge).  Parameterless, adopts (m_bits, k, hash_kind) from the
- * first filter, refuses mismatches.  m_bits == 0 marks the all-NULL group.
+ * first filter, refuses mismatches.  finish() writes the canonical bytes
+ * (BloomAggregator.toBytes); an all-NULL group (m_bits still 0) finishes
+ * to a SQL NULL sketch.
  */
 public final class BloomBlobMergeAggregator
     extends Aggregator<byte[], BloomBlobMergeAggregator.Buf, byte[]> {
@@ -114,26 +116,11 @@ public final class BloomBlobMergeAggregator
     return a;
   }
 
-  /** v2 intermediate blob = BloomAggregator's v1 + a hash_kind byte:
-   *  u8 version=2 | u8 hash_kind | i64 m_bits | i32 k | i64 n_added |
-   *  bit bytes.  m_bits == 0 ⇒ all-NULL group. */
+  /** Canonical bytes of the merged filter; null (SQL NULL) when every input was NULL. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.mBits == 0) {
-      ByteBuffer bb = ByteBuffer.allocate(14).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 2).put((byte) 0);
-      bb.putLong(0L).putInt(0);
-      return bb.array();
-    }
-    ByteBuffer bb = ByteBuffer.allocate(2 + 8 + 4 + 8 + buf.bits.length);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 2);
-    bb.put((byte) buf.hashKind);
-    bb.putLong(buf.mBits);
-    bb.putInt(buf.k);
-    bb.putLong(buf.nAdded);
-    bb.put(buf.bits);
-    return bb.array();
+    if (buf.mBits == 0) return null;
+    return BloomAggregator.toBytes(buf.bits, buf.mBits, buf.k, buf.nAdded, buf.hashKind);
   }
 
   @Override

@@ -21,9 +21,9 @@ import org.apache.spark.sql.expressions.Aggregator;
  * (h1 = h & 0xFFFFFFFF, h2 = (h >>> 32) | 1, (h1 + j*h2) mod width — the
  * sum never exceeds ~2^38 so signed-64 floorMod equals the uint64 modulo),
  * and total counts ROWS added.  NULL hashes are skipped; an all-NULL group
- * leaves total == 0, which the Python finalize maps to a SQL NULL sketch
- * (the reference strict-aggregate contract).  Canonical serialization stays
- * in Python — finish() emits a raw intermediate blob.
+ * leaves total == 0 and finishes to a SQL NULL sketch (the reference
+ * strict-aggregate contract).  finish() writes the canonical
+ * CountMin.to_bytes() bytes ({@link #toBytes}).
  */
 public final class CountMinAggregator
     extends Aggregator<Long, CountMinAggregator.Buf, byte[]> {
@@ -108,17 +108,38 @@ public final class CountMinAggregator
     return a;
   }
 
-  /** Blob (little-endian): u8 version=1 | i32 width | i32 depth |
-   *  i64 total | depth×width × i64 counts.  total == 0 ⇒ all-NULL group. */
+  /** Canonical sketch bytes; null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
-    ByteBuffer bb = ByteBuffer.allocate(1 + 4 + 4 + 8 + 8 * buf.counts.length);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 1);
-    bb.putInt(buf.width);
-    bb.putInt(buf.depth);
-    bb.putLong(buf.total);
-    for (long c : buf.counts) bb.putLong(c);
+    if (buf.total == 0) return null;
+    return toBytes(buf.counts, buf.width, buf.depth, buf.total, HllConstants.HASH_XXHASH_SPARK);
+  }
+
+  /**
+   * hllspark.sketches.countmin CountMin.to_bytes(), the one writer of both
+   * count-min aggregators: little-endian header {@code <BBHIq} (version 1,
+   * hash_kind, depth, width, total), then the row-major depth×width counts
+   * in the narrowest unsigned width (1, 2, 4 or 8 bytes) that holds the
+   * largest count.
+   */
+  static byte[] toBytes(long[] counts, int width, int depth, long total, int hashKind) {
+    long mx = 0;
+    for (long c : counts) {
+      if (Long.compareUnsigned(c, mx) > 0) mx = c;
+    }
+    int size = Long.compareUnsigned(mx, 1L << 8) < 0 ? 1
+        : Long.compareUnsigned(mx, 1L << 16) < 0 ? 2
+        : Long.compareUnsigned(mx, 1L << 32) < 0 ? 4 : 8;
+    ByteBuffer bb = ByteBuffer.allocate(16 + size * counts.length).order(ByteOrder.LITTLE_ENDIAN);
+    bb.put((byte) 1).put((byte) hashKind).putShort((short) depth).putInt(width).putLong(total);
+    for (long c : counts) {
+      switch (size) {
+        case 1: bb.put((byte) c); break;
+        case 2: bb.putShort((short) c); break;
+        case 4: bb.putInt((int) c); break;
+        default: bb.putLong(c); break;
+      }
+    }
     return bb.array();
   }
 

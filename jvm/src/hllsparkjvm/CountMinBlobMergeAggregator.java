@@ -19,9 +19,10 @@ import org.apache.spark.sql.expressions.Aggregator;
  * unsigned dtype that fits, derived from the payload length), decoded and
  * elementwise-added in the JVM.  Parameterless: (width, depth, hash_kind)
  * adopt from the first counter; mismatches refuse to merge exactly like
- * CountMin.merge.  NULL blobs skipped; an all-NULL group finishes
- * uninitialized → SQL NULL at the Python finalize (width == 0 marker —
- * total == 0 with width > 0 is a LEGITIMATE empty stored sketch).
+ * CountMin.merge.  finish() writes the canonical bytes
+ * (CountMinAggregator.toBytes).  NULL blobs skipped; an all-NULL group
+ * (buffer still uninitialized, width == 0) finishes to a SQL NULL sketch,
+ * while total == 0 with width > 0 is a LEGITIMATE empty stored sketch.
  */
 public final class CountMinBlobMergeAggregator
     extends Aggregator<byte[], CountMinBlobMergeAggregator.Buf, byte[]> {
@@ -133,26 +134,11 @@ public final class CountMinBlobMergeAggregator
     return a;
   }
 
-  /** v2 intermediate blob = CountMinAggregator's v1 + a hash_kind byte:
-   *  u8 version=2 | u8 hash_kind | i32 width | i32 depth | i64 total |
-   *  d×w × i64 counts.  width == 0 ⇒ all-NULL group. */
+  /** Canonical bytes of the merged sketch; null (SQL NULL) when every input was NULL. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.width == 0) {
-      ByteBuffer bb = ByteBuffer.allocate(10).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 2).put((byte) 0);
-      bb.putInt(0).putInt(0);
-      return bb.array();
-    }
-    ByteBuffer bb = ByteBuffer.allocate(2 + 4 + 4 + 8 + 8 * buf.counts.length);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 2);
-    bb.put((byte) buf.hashKind);
-    bb.putInt(buf.width);
-    bb.putInt(buf.depth);
-    bb.putLong(buf.total);
-    for (long c : buf.counts) bb.putLong(c);
-    return bb.array();
+    if (buf.width == 0) return null;
+    return CountMinAggregator.toBytes(buf.counts, buf.width, buf.depth, buf.total, buf.hashKind);
   }
 
   @Override

@@ -1,14 +1,10 @@
 package hllsparkjvm;
 
-import java.nio.ByteBuffer;
-import java.nio.ByteOrder;
-
 /**
- * In-JVM HLL++ estimation from the udaf intermediate blobs (v1:
- * HllRegisterAggregator.finish, v2: HllMergeAggregator.finish) — the same
- * math as the Python kernels (hllspark/core/hll.py _estimate_sparse /
- * _estimate_dense / _error_estimate, mirroring the reference's
- * hyperloglog.c:421-566):
+ * In-JVM HLL++ estimation of canonical counters (HllSketchEstimateUdf,
+ * HllSetOpUdfs) — the same math as the Python kernels
+ * (hllspark/core/hll.py _estimate_sparse / _estimate_dense /
+ * _error_estimate, mirroring the reference's hyperloglog.c:421-566):
  *
  *  - identical operation ORDER everywhere (sequential double sums in the
  *    harmonic mean and the OLS bias fit, the float32 alpham table and
@@ -20,7 +16,7 @@ import java.nio.ByteOrder;
  *    last ulp, so the SAME query could flip a final bit across JIT tiers —
  *    StrictMath is bit-reproducible on every JVM, platform and tier.
  *
- * Parity with the Python finalize: BIT-identical wherever no logarithm is
+ * Parity with HLL.estimate(): BIT-identical wherever no logarithm is
  * taken (the bias-corrected dense regime — every register walk, harmonic
  * sum, OLS fit and float32 quirk), and within 1 ulp of the platform libm
  * CPython uses in the linear-counting regimes (sparse estimates and
@@ -29,11 +25,11 @@ import java.nio.ByteOrder;
  * both the reference's 10-decimal golden tolerance and the micro-unit
  * contract compare; tests/test_jvm_estimate.py pins this).
  *
- * Chain rows (suffix == 0 hashes the aggregator defers, probability
+ * Chain rows (suffix == 0 hashes HllRegisterAggregator defers, probability
  * ~2^-39/row — but an expected ~2 occurrences per 10^12-row query) are
- * replayed here with the same murmur rehash chain the Python finalize uses
- * (core/hll.py _rho_chain / encode_hashes / dense_add_hashes), so the JVM
- * estimate path never needs a Python fallback.
+ * replayed at its finish with the murmur rehash chain below, the same one
+ * core/hll.py add_hashes applies (_rho_chain / encode_hashes /
+ * dense_add_hashes).
  */
 final class HllEstimator {
   private HllEstimator() {}
@@ -168,58 +164,5 @@ final class HllEstimator {
       if (Hlin <= (double) HllConstants.THRESHOLD[b]) E = Hlin;
     }
     return E;
-  }
-
-  /**
-   * Estimate straight from a udaf intermediate blob.  Mirrors
-   * jvm_udaf._blob_estimate exactly: the common sparse no-chain case is
-   * linear counting on the unique-encode COUNT alone; chain rows replay
-   * through the murmur chain; v1 all-NULL (n==0, no chains) → null; v2
-   * b==0 → null, while a v2 empty stored counter (n==0, b>0) estimates 0.0.
-   */
-  static Double estimateBlob(byte[] blob) {
-    ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
-    int version = blob[0] & 0xff;
-    int mode = blob[1] & 0xff;
-    int b = blob[2] & 0xff;
-    int binbits = blob[3] & 0xff;
-    int off;
-    if (version == 1) {
-      off = 4;
-    } else if (version == 2) {
-      if (b == 0) return null; // uninitialized merge buffer: every input NULL
-      off = 5; // hash_kind byte at blob[4] — irrelevant to estimation
-    } else {
-      throw new IllegalArgumentException("unknown udaf blob version " + version);
-    }
-    int nchain = bb.getInt(off);
-    off += 4;
-    long[] chains = new long[nchain];
-    for (int i = 0; i < nchain; i++) chains[i] = bb.getLong(off + 8 * i);
-    off += 8 * nchain;
-    if (mode == 0) {
-      int n = bb.getInt(off);
-      off += 4;
-      if (nchain == 0) {
-        if (n == 0) {
-          // v1 build path: all-NULL group → SQL NULL; v2: a legitimate
-          // EMPTY stored counter → estimate 0.0 (the round-4 v2 lesson)
-          return version == 1 ? null : estimateSparse(0, binbits);
-        }
-        return estimateSparse(n, binbits);
-      }
-      // chain replay: rebuild the sparse set, add chain hashes through the
-      // exact encode path (promotion included), then estimate whatever mode
-      // results — the value-set purity invariant makes this order-free
-      HllRegisterAggregator.Buf buf = new HllRegisterAggregator.Buf(b, binbits);
-      for (int i = 0; i < n; i++) buf.addEnc(bb.getInt(off + 4 * i));
-      for (long h : chains) buf.addEnc(encodeHash(h, b, binbits));
-      if (buf.dense != null) return estimateDense(buf.dense, b, binbits);
-      return estimateSparse(buf.n, binbits);
-    }
-    byte[] regs = new byte[1 << b];
-    System.arraycopy(blob, off, regs, 0, regs.length);
-    for (long h : chains) denseAdd(regs, h, b, binbits);
-    return estimateDense(regs, b, binbits);
   }
 }

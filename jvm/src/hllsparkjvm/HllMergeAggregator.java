@@ -19,9 +19,9 @@ import org.apache.spark.sql.expressions.Aggregator;
  * hyperloglog_merge(agg)} re-aggregation workflow (README.md:135-166,
  * postgres.sql:248-262) with the whole reduction in the JVM: each input row
  * is a serialized hllspark HLL counter (any payload encoding), decoded and
- * register-merged in place; the Python finalize only turns the final state
- * back into canonical bytes, so results are byte-identical to
- * agg.merge_partials (tested).
+ * register-merged in place, and finish() writes the merged counter's
+ * canonical bytes (HllRegisterAggregator.toBytes), so results are
+ * byte-identical to agg.merge_partials (tested).
  *
  * Decodes every v1/v2 payload form of hllspark.core.hll.to_bytes
  * (header {@code <BbBBi}: version, b, binbits, flags, idx):
@@ -29,30 +29,22 @@ import org.apache.spark.sql.expressions.Aggregator;
  * compress_sparse), raw dense registers, bit-packed dense (MSB-first at
  * binbits bits, _pack_registers), and zlib-deflated dense.  Unknown flag
  * bits and newer versions fail loudly (the forward-compat contract of
- * core/hll.py _KNOWN_FLAGS).
+ * core/hll.py _KNOWN_FLAGS), and so does a payload shorter than its header
+ * promises.
  *
  * The aggregator is PARAMETERLESS: the buffer adopts (b, binbits,
  * hash_kind) from the first non-NULL blob and refuses to merge mismatched
  * parameters or hash kinds — the reference errors on mismatched b/binbits
  * (hyperloglog.c:858-874) and the hash_kind flag exists precisely to stop
  * differently-hashed sketches merging (CLAUDE.md invariant).  NULL blobs
- * are skipped; an all-NULL group finishes uninitialized → SQL NULL sketch
- * in the Python finalize (strict-aggregate contract).
+ * are skipped; an all-NULL group finishes to a SQL NULL sketch
+ * (strict-aggregate contract), while a group of EMPTY stored counters
+ * finishes to an empty counter.
  */
 public final class HllMergeAggregator
     extends Aggregator<byte[], HllMergeAggregator.Buf, byte[]> {
 
   private static final long serialVersionUID = 1L;
-
-  private static final int STRUCT_VERSION = 2;
-  private static final int FLAG_DENSE = 1;
-  private static final int FLAG_PACKED = 8;
-  private static final int FLAG_VARINT = 16;
-  private static final int FLAG_DEFLATE = 32;
-  private static final int HASH_KIND_SHIFT = 1;
-  private static final int HASH_KIND_MASK = 0b110;
-  private static final int KNOWN_FLAGS =
-      FLAG_DENSE | FLAG_PACKED | FLAG_VARINT | FLAG_DEFLATE | HASH_KIND_MASK;
 
   public HllMergeAggregator() {}
 
@@ -149,15 +141,33 @@ public final class HllMergeAggregator
     return enc;
   }
 
-  /** Merge one serialized counter into the buffer. */
-  static void mergeBlob(Buf buf, byte[] blob) {
+  static final String TRUNCATED_PAYLOAD = "truncated sketch payload";
+
+  /** Header fields of a canonical counter. */
+  record Header(int b, int binbits, int flags, int idx) {
+    boolean dense() {
+      return (flags & HllConstants.FLAG_DENSE) != 0;
+    }
+
+    int hashKind() {
+      return (flags & HllConstants.HASH_KIND_MASK) >>> HllConstants.HASH_KIND_SHIFT;
+    }
+  }
+
+  /**
+   * Read and validate a counter's header: a newer version, parameters out
+   * of range, unknown flag bits, or a raw-sparse / raw-dense / bit-packed
+   * payload shorter than the header promises (core/hll.py from_bytes's
+   * checks) throw IllegalArgumentException.
+   */
+  static Header readHeader(byte[] blob) {
     ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
     int version = bb.get() & 0xff;
     int b = bb.get(); // signed i8 — negative would be a reference-compressed flag form
     int binbits = bb.get() & 0xff;
     int flags = bb.get() & 0xff;
     int idx = bb.getInt();
-    if (version > STRUCT_VERSION) {
+    if (version > HllConstants.STRUCT_VERSION) {
       throw new IllegalArgumentException("unsupported sketch version " + version);
     }
     if (b < 4 || b > 18 || binbits < 4 || binbits > 8) {
@@ -166,11 +176,28 @@ public final class HllMergeAggregator
       throw new IllegalArgumentException(
           "sketch header out of range (b=" + b + ", binbits=" + binbits + "): not a canonical hllspark counter");
     }
-    if ((flags & ~KNOWN_FLAGS) != 0) {
+    if ((flags & ~HllConstants.KNOWN_FLAGS) != 0) {
       throw new IllegalArgumentException(String.format(
           "sketch flags 0x%02x carry payload-encoding bits unknown to this decoder", flags));
     }
-    int hashKind = (flags & HASH_KIND_MASK) >>> HASH_KIND_SHIFT;
+    long need = 0; // the group-varint and deflate forms check their own lengths
+    if ((flags & HllConstants.FLAG_DENSE) == 0) {
+      if ((flags & HllConstants.FLAG_VARINT) == 0) need = 4L * idx;
+    } else if ((flags & HllConstants.FLAG_DEFLATE) == 0) {
+      need = (flags & HllConstants.FLAG_PACKED) != 0 ? (((long) binbits << b) + 7) / 8 : 1L << b;
+    }
+    if (blob.length - 8 < need) throw new IllegalArgumentException(TRUNCATED_PAYLOAD);
+    return new Header(b, binbits, flags, idx);
+  }
+
+  /** Merge one serialized counter into the buffer. */
+  static void mergeBlob(Buf buf, byte[] blob) {
+    Header h = readHeader(blob);
+    int b = h.b();
+    int binbits = h.binbits();
+    int flags = h.flags();
+    int idx = h.idx();
+    int hashKind = h.hashKind();
     if (buf.state == null) {
       HllRegisterAggregator proto = new HllRegisterAggregator(b, binbits);
       buf.state = proto.zero();
@@ -186,10 +213,10 @@ public final class HllMergeAggregator
       }
     }
     int off = 8; // header size
-    if ((flags & FLAG_DENSE) != 0) {
+    if (h.dense()) {
       int m = 1 << b;
       byte[] regs;
-      if ((flags & FLAG_DEFLATE) != 0) {
+      if ((flags & HllConstants.FLAG_DEFLATE) != 0) {
         regs = new byte[m];
         Inflater inf = new Inflater();
         inf.setInput(blob, off, blob.length - off);
@@ -206,7 +233,7 @@ public final class HllMergeAggregator
         } finally {
           inf.end();
         }
-      } else if ((flags & FLAG_PACKED) != 0) {
+      } else if ((flags & HllConstants.FLAG_PACKED) != 0) {
         regs = unpackRegisters(blob, off, m, binbits);
       } else {
         regs = new byte[m];
@@ -219,9 +246,10 @@ public final class HllMergeAggregator
       return;
     }
     int[] enc;
-    if ((flags & FLAG_VARINT) != 0) {
+    if ((flags & HllConstants.FLAG_VARINT) != 0) {
       enc = decompressSparse(blob, off, idx);
     } else {
+      ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
       enc = new int[idx];
       for (int i = 0; i < idx; i++) enc[i] = bb.getInt(off + 4 * i);
     }
@@ -259,41 +287,10 @@ public final class HllMergeAggregator
     return a;
   }
 
-  /**
-   * Intermediate blob v2 — v1 (HllRegisterAggregator.finish) plus a
-   * hash_kind byte, finalized by hllspark.jvm_udaf._blob_to_hll:
-   *   u8 version=2 | u8 mode (0 sparse, 1 dense) | u8 b | u8 binbits |
-   *   u8 hash_kind | i32 nchain=0 | sparse: i32 n | n × u32 encodings
-   *                               | dense: 2^b register bytes
-   * An uninitialized buffer (all inputs NULL) emits b=0/n=0 → SQL NULL.
-   */
+  /** Canonical bytes of the merged counter; null (SQL NULL) when every input was NULL. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.state == null) {
-      ByteBuffer bb = ByteBuffer.allocate(13).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 2).put((byte) 0).put((byte) 0).put((byte) 0).put((byte) 0);
-      bb.putInt(0); // nchain
-      bb.putInt(0); // n encodings
-      return bb.array();
-    }
-    boolean isDense = buf.state.dense != null;
-    int payload = isDense ? (1 << buf.state.b) : (4 + 4 * buf.state.n);
-    ByteBuffer bb = ByteBuffer.allocate(5 + 4 + payload).order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 2);
-    bb.put((byte) (isDense ? 1 : 0));
-    bb.put((byte) buf.state.b);
-    bb.put((byte) buf.state.binbits);
-    bb.put((byte) buf.hashKind);
-    bb.putInt(0); // stored sketches carry no unreplayed chain rows
-    if (isDense) {
-      bb.put(buf.state.dense);
-    } else {
-      bb.putInt(buf.state.n);
-      for (int e : buf.state.table) {
-        if (e != 0) bb.putInt(e);
-      }
-    }
-    return bb.array();
+    return buf.state == null ? null : HllRegisterAggregator.toBytes(buf.state, buf.hashKind);
   }
 
   @Override

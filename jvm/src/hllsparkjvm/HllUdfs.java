@@ -21,11 +21,6 @@ public final class HllUdfs implements java.io.Serializable {
 
   public HllUdfs() {}
 
-  /** udaf intermediate blob → HLL++ estimate (HllBlobEstimateUdf). */
-  public UserDefinedFunction blobEstimate() {
-    return functions.udf(new HllBlobEstimateUdf(), DataTypes.DoubleType);
-  }
-
   /** stored canonical counter → HLL++ estimate (HllSketchEstimateUdf). */
   public UserDefinedFunction sketchEstimate() {
     return functions.udf(new HllSketchEstimateUdf(), DataTypes.DoubleType);

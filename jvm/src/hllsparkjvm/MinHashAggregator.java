@@ -19,16 +19,16 @@ import org.apache.spark.sql.expressions.Aggregator;
  * final signature is a pure function of the value set, like HLL's
  * register max).
  *
- * Bit-parity contract with hllspark.sketches.jvm.minhash_jvm (and the
- * python engine's minhash._remix_spark): each row's k derived hashes are
+ * Bit-parity contract with the python engine's minhash._remix_spark: each
+ * row's k derived hashes are
  * Spark's own xxhash64(hash_col, lit(j)) chain for j = 1..k — seed 42
  * hashLong over the canonicalized input hash, then hashInt over the
  * 4-byte literal j (XXH64, Yann Collet, BSD; the two fixed-width paths
- * replicated below).  Serialization v2 semantics (hash_kind=1) are
- * inherited: the Python finalize builds the canonical MinHash bytes.
+ * replicated below) — serialization v2 semantics for hash_kind=1.
+ * finish() writes the canonical MinHash.to_bytes() bytes ({@link #toBytes}).
  *
- * NULL hashes are skipped; an all-NULL group leaves n == 0, which the
- * Python finalize maps to a SQL NULL sketch (strict-aggregate contract).
+ * NULL hashes are skipped; an all-NULL group leaves n == 0 and finishes to
+ * a SQL NULL sketch (strict-aggregate contract).
  */
 public final class MinHashAggregator
     extends Aggregator<Long, MinHashAggregator.Buf, byte[]> {
@@ -129,16 +129,22 @@ public final class MinHashAggregator
     return a;
   }
 
-  /** Blob (little-endian): u8 version=1 | i32 k | i64 n | k × i64 sig.
-   *  n == 0 ⇒ all-NULL group (Python finalize emits SQL NULL). */
+  /** Canonical sketch bytes; null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
-    ByteBuffer bb = ByteBuffer.allocate(1 + 4 + 8 + 8 * buf.sig.length);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 1);
-    bb.putInt(buf.sig.length);
-    bb.putLong(buf.n);
-    for (long s : buf.sig) bb.putLong(s);
+    if (buf.n == 0) return null;
+    return toBytes(buf.sig, buf.n, HllConstants.HASH_XXHASH_SPARK);
+  }
+
+  /**
+   * hllspark.sketches.minhash MinHash.to_bytes() (serialization v2), the
+   * one writer of both MinHash aggregators: little-endian header
+   * {@code <BBHq} (version 2, hash_kind, k, n_added), then k × u64 slots.
+   */
+  static byte[] toBytes(long[] sig, long n, int hashKind) {
+    ByteBuffer bb = ByteBuffer.allocate(12 + 8 * sig.length).order(ByteOrder.LITTLE_ENDIAN);
+    bb.put((byte) 2).put((byte) hashKind).putShort((short) sig.length).putLong(n);
+    for (long s : sig) bb.putLong(s);
     return bb.array();
   }
 

@@ -18,7 +18,9 @@ import org.apache.spark.sql.expressions.Aggregator;
  * unsigned-min merge, n_added summed — exactly MinHash.merge, so results
  * are byte-identical to the python path (min is exact and order-free).
  * Replicates the serialization-v2 guard: v1 blobs with hash_kind=1 used
- * the old splitmix remix and refuse to decode.  k == 0 marks all-NULL.
+ * the old splitmix remix and refuse to decode.  finish() writes the
+ * canonical v2 bytes (MinHashAggregator.toBytes); an all-NULL group (k
+ * still 0) finishes to a SQL NULL sketch.
  */
 public final class MinHashBlobMergeAggregator
     extends Aggregator<byte[], MinHashBlobMergeAggregator.Buf, byte[]> {
@@ -116,25 +118,11 @@ public final class MinHashBlobMergeAggregator
     return a;
   }
 
-  /** v2 intermediate blob = MinHashAggregator's v1 + a hash_kind byte:
-   *  u8 version=2 | u8 hash_kind | i32 k | i64 n | k × i64 sig.
-   *  k == 0 ⇒ all-NULL group. */
+  /** Canonical bytes of the merged signature; null (SQL NULL) when every input was NULL. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.k == 0) {
-      ByteBuffer bb = ByteBuffer.allocate(14).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 2).put((byte) 0);
-      bb.putInt(0).putLong(0L);
-      return bb.array();
-    }
-    ByteBuffer bb = ByteBuffer.allocate(2 + 4 + 8 + 8 * buf.k);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 2);
-    bb.put((byte) buf.hashKind);
-    bb.putInt(buf.k);
-    bb.putLong(buf.n);
-    for (long s : buf.sig) bb.putLong(s);
-    return bb.array();
+    if (buf.k == 0) return null;
+    return MinHashAggregator.toBytes(buf.sig, buf.n, buf.hashKind);
   }
 
   @Override

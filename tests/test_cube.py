@@ -113,13 +113,15 @@ def test_cube_all_null_value_group(udaf_spark):
 
 
 def test_cube_single_scan_plan(udaf_spark, sf001_dir):
-    """EVERY engine is one pass: the udaf path via Catalyst Expand, the
-    python engine via the explode-based Expand (Generate node)."""
+    """EVERY engine is one pass: the udaf path via Catalyst Expand (with no
+    Python stage), the python engine via the explode-based Expand
+    (Generate node)."""
     o = udaf_spark.read.parquet(f"{sf001_dir}/orders.parquet")
     dims = ["o_orderpriority", "o_orderstatus"]
     plan = agg.sketch_cube(o, "o_custkey", dims, engine="jvm_udaf")._jdf.queryExecution().executedPlan().toString()
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1, plan
+    assert "EvalPython" not in plan, plan  # the cube cells leave the JVM as canonical sketches
     # the cube reads the source exactly as often as ONE grouped sketch —
     # the explode Expand replaced the per-set union's |sets|× scans
     plan = agg.sketch_cube(o, "o_custkey", dims, engine="python")._jdf.queryExecution().executedPlan().toString()

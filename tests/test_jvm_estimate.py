@@ -1,7 +1,7 @@
-"""In-JVM estimate finalize (HllBlobEstimateUdf / HllEstimator): parity with
-the Python estimate of the same aggregate blob (jvm_udaf._blob_to_hll)
-across modes, precisions, chain rows and the v2 stored-merge path, plus the
-all-JVM plan shape it exists for.
+"""In-JVM estimate finalize (HllSketchEstimateUdf / HllEstimator over the
+aggregators' canonical output): parity with HLL.from_bytes(...).estimate()
+of the same aggregate bytes across modes, precisions, chain rows and the
+stored-merge path, plus the all-JVM plan shape it exists for.
 
 Parity contract (HllEstimator.java header): bit-identical wherever no log
 is taken (bias-corrected dense regime); ≤ 1 ulp in the linear-counting
@@ -18,7 +18,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from hllspark import agg
 from hllspark.core.hll import HASH_XXHASH_SPARK, HLL, sparse_capacity
 
 ju = pytest.importorskip("hllspark.jvm_udaf")
@@ -37,27 +36,49 @@ def _close1ulp(a, b):
     return a == b or abs(a - b) <= math.ulp(max(abs(a), abs(b)))
 
 
-def _pandas_estimate(spark, agged):
-    """Python estimate of the single aggregate blob (None for all-NULL)."""
-    sk = ju._blob_to_hll(agged.first()["__blob"])
-    return None if sk is None else sk.estimate()
+def _py_estimate(blob):
+    """HLL.estimate() of an aggregate's output (None for all-NULL), after
+    checking the bytes are canonical: decoding and re-serializing them
+    gives them back unchanged."""
+    if blob is None:
+        return None
+    sk = HLL.from_bytes(bytes(blob))
+    assert sk.to_bytes() == bytes(blob)
+    return sk.estimate()
+
+
+def _no_python_stage(q):
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "EvalPython" not in plan, plan
 
 
 @pytest.mark.parametrize("b,binbits", [(14, 6), (4, 4), (11, 5), (18, 8), (16, 7)])
 def test_jvm_estimate_parity_sweep(udaf_spark, b, binbits):
     """Sparse, boundary, dense and bias-corrected cardinalities at five
     precision shapes (incl. the b>16 alpham formula branch and both
-    binbits register-term branches) — every estimate within 1 ulp of the
-    pandas finalize and equal at contract micro-units."""
-    for n in [0, 1, 5, 100, 1020, 1021, 5000, 60000]:
-        df = udaf_spark.range(n).select((F.col("id") * 7919).alias("v"))
-        jv = ju.sketch_jvm_udaf(df, "v", b=b, binbits=binbits, finalize="estimate").first()["est"]
-        acol = ju.hll_udaf_column(udaf_spark, agg.jvm_hash_expr(df, "v"), b, binbits)
-        agged = df.groupBy().agg(acol.alias("__blob"))
-        pv = _pandas_estimate(udaf_spark, agged)
-        assert _close1ulp(jv, pv), (n, jv, pv)
-        if jv is not None:
-            assert round(jv * 1e6) == round(pv * 1e6), (n, jv, pv)
+    binbits register-term branches) — the aggregate's bytes equal
+    HLL.add_hashes over the same xxhash64 values, and every estimate is
+    within 1 ulp of HLL.from_bytes(...).estimate() and equal at contract
+    micro-units."""
+    from hllspark.core.xxhash import xxh64_long
+
+    ns = [1, 5, 100, 1020, 1021, 5000, 60000]
+    df = None
+    for n in ns:
+        part = udaf_spark.range(n).select(F.lit(n).alias("n"), (F.col("id") * 7919).alias("v"))
+        df = part if df is None else df.unionByName(part)
+    kw = {"b": b, "binbits": binbits}
+    jv = {r["n"]: r["est"] for r in ju.sketch_jvm_udaf(df, "v", ["n"], finalize="estimate", **kw).collect()}
+    blobs = {r["n"]: bytes(r["sketch"]) for r in ju.sketch_jvm_udaf(df, "v", ["n"], **kw).collect()}
+    for n in ns:
+        ref = HLL.create(hash_kind=HASH_XXHASH_SPARK, **kw)
+        ref.add_hashes(xxh64_long(np.arange(n, dtype=np.int64) * 7919))
+        assert blobs[n] == ref.to_bytes(), n
+        pv = _py_estimate(blobs[n])
+        assert _close1ulp(jv[n], pv), (n, jv[n], pv)
+        assert round(jv[n] * 1e6) == round(pv * 1e6), (n, jv[n], pv)
+    none = udaf_spark.range(0).select(F.col("id").alias("v"))
+    assert ju.sketch_jvm_udaf(none, "v", finalize="estimate", **kw).first()["est"] is None
 
 
 def test_jvm_estimate_plan_has_no_python_stage(udaf_spark):
@@ -69,8 +90,7 @@ def test_jvm_estimate_plan_has_no_python_stage(udaf_spark):
         ju.sketch_jvm_udaf(df, "v", finalize="estimate"),
         ju.sketch_jvm_udaf(df, "v", ["g"], finalize="estimate_bigint"),
     ]:
-        plan = q._jdf.queryExecution().executedPlan().toString()
-        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+        _no_python_stage(q)
 
 
 def test_jvm_estimate_null_contract(udaf_spark):
@@ -86,8 +106,10 @@ def test_jvm_estimate_null_contract(udaf_spark):
 
 def test_jvm_estimate_chain_replay_parity(udaf_spark):
     """Crafted suffix==0 hashes exercise the in-JVM murmur rehash chain
-    (HllEstimator.rhoChain/encodeHash/denseAdd) in sparse, dense and
-    promote-during-replay shapes — parity with the Python chain replay."""
+    (HllEstimator.rhoChain/encodeHash/denseAdd, replayed at the
+    aggregator's finish) in sparse, dense and promote-during-replay shapes
+    — bytes equal HLL.add_hashes over the same hashes, and the estimate
+    is within 1 ulp of its estimate."""
     b, binbits = 14, 6
     cap = sparse_capacity(b)
     rng = np.random.RandomState(7)
@@ -104,33 +126,37 @@ def test_jvm_estimate_chain_replay_parity(udaf_spark):
     for name, hs in cases.items():
         sdf = udaf_spark.createDataFrame([(int(x),) for x in hs], "h long").repartition(4)
         col = ju.hll_udaf_column(udaf_spark, F.col("h"), b, binbits)
-        agged = sdf.groupBy().agg(col.alias("__blob"))
-        jv = agged.select(ju._estimate_udf_column(udaf_spark, F.col("__blob")).alias("est")).first()["est"]
-        pv = _pandas_estimate(udaf_spark, agged)
-        assert _close1ulp(jv, pv), (name, jv, pv)
+        agged = sdf.groupBy().agg(col.alias("blob"))
+        row = agged.select("blob", ju.hll_estimate_col(udaf_spark, "blob").alias("est")).first()
+        ref = HLL.create(b=b, binbits=binbits, hash_kind=HASH_XXHASH_SPARK)
+        ref.add_hashes(hs.view(np.uint64))
+        assert bytes(row["blob"]) == ref.to_bytes(), name
+        assert _close1ulp(row["est"], ref.estimate()), (name, row["est"], ref.estimate())
 
 
 def test_jvm_estimate_v2_merge_path(udaf_spark):
-    """hll_merge_udaf(finalize="estimate") — the stored-sketch rollup path —
-    runs the v2 intermediate blob through the same JVM estimator; an EMPTY
-    stored counter survives as estimate 0.0 (NOT NULL: the v2 b==0 marker
-    alone means all-NULL)."""
+    """hll_merge_udaf — the stored-sketch rollup path — finishes to the
+    canonical merged counter and estimates it with the same JVM reader,
+    with no Python stage anywhere in the build-then-merge plan; an EMPTY
+    stored counter survives as an empty counter with estimate 0.0 (NOT
+    NULL: only an all-NULL group merges to NULL)."""
     df = udaf_spark.range(3000).select((F.col("id") % 17).alias("g"), F.col("id").alias("v"))
     stored = ju.sketch_jvm_udaf(df, "v", ["g"])
-    # (no plan assertion here: the upstream `stored` build serializes
-    # canonical sketches through the pandas finalize by design, so the
-    # composed plan legitimately contains that Arrow stage)
     q = ju.hll_merge_udaf(stored, "sketch", finalize="estimate")
+    merged = ju.hll_merge_udaf(stored, "sketch")
+    _no_python_stage(q)
+    _no_python_stage(merged)
     jv = q.first()["est"]
-    acol = ju._sibling_udaf_column(
-        udaf_spark, F.col("sketch"), "hllsparkjvm.HllMergeAggregator", [], encoder="binary"
-    )
-    pv = _pandas_estimate(udaf_spark, stored.groupBy().agg(acol.alias("__blob")))
+    assert bytes(merged.first()["sketch"]) == bytes(ju.sketch_jvm_udaf(df, "v").first()["sketch"])
+    pv = _py_estimate(merged.first()["sketch"])
     assert _close1ulp(jv, pv)
 
     empty = HLL.create(b=14, binbits=6, hash_kind=HASH_XXHASH_SPARK).to_bytes()
     edf = udaf_spark.createDataFrame([(bytearray(empty),)], "sketch binary")
     assert ju.hll_merge_udaf(edf, "sketch", finalize="estimate").first()["est"] == 0.0
+    assert bytes(ju.hll_merge_udaf(edf, "sketch").first()["sketch"]) == empty
+    nulls = udaf_spark.createDataFrame([(None,)], "sketch binary")
+    assert ju.hll_merge_udaf(nulls, "sketch").first()["sketch"] is None
 
     # a murmur-hashed (hash_kind 0) stored counter estimates as HLL.estimate
     from hllspark.core.hash import hash_int64
@@ -220,27 +246,30 @@ def test_jvm_estimate_bit_exact_in_bias_corrected_regime(udaf_spark):
     exactly.  n=60000 at b=14 sits in that regime (threshold 11500)."""
     df = udaf_spark.range(60_000).select((F.col("id") * 31) .alias("v"))
     jv = ju.sketch_jvm_udaf(df, "v", finalize="estimate").first()["est"]
-    acol = ju.hll_udaf_column(udaf_spark, agg.jvm_hash_expr(df, "v"), 14, 6)
-    pv = _pandas_estimate(udaf_spark, df.groupBy().agg(acol.alias("__blob")))
+    pv = _py_estimate(ju.sketch_jvm_udaf(df, "v").first()["sketch"])
     assert jv == pv
 
 
 def test_truncated_varint_sparse_fails_in_every_decoder(sketch_est_spark):
-    """A group-varint sparse blob cut short must raise in every decoder —
-    the Python object path, the header-only batch estimate, the batched
-    merge, and the Java decoder behind hll_estimate_col / hll_merge_udaf —
-    instead of returning a made-up estimate."""
+    """A sketch cut short must raise in every decoder — the Python object
+    path, the header-only batch estimate, the batched merge, and the Java
+    decoder behind hll_estimate_col (incl. its header-only sparse path) /
+    hll_merge_udaf — instead of returning a made-up estimate: group-varint
+    sparse blobs at several cuts, and 4 bytes off raw sparse, raw dense and
+    bit-packed dense blobs."""
     from hllspark.core.hash import hash_int64
     from hllspark.core.hll import estimate_blobs, merge_blobs
 
     spark = sketch_est_spark
-    h = HLL.create()
-    h.add_hashes(hash_int64(np.arange(203, dtype=np.int64)))
-    blob = h.to_bytes(compress=True)
-    assert len(HLL.from_bytes(blob).sparse) == 203
-    msg = "truncated group-varint sparse payload"
-    for cut in (1, 2, 5, 40):
-        bad = blob[:-cut]
+    small, big = HLL.create(), HLL.create()
+    small.add_hashes(hash_int64(np.arange(203, dtype=np.int64)))
+    big.add_hashes(hash_int64(np.arange(50_000, dtype=np.int64)))
+    assert len(small.sparse) == 203 and not big.is_sparse
+    varint = small.to_bytes(compress=True)
+    cases = [(varint[:-cut], "truncated group-varint sparse payload") for cut in (1, 2, 5, 40)]
+    for blob in (small.to_bytes(packed=False), big.to_bytes(packed=False), big.to_bytes(packed=True)):
+        cases.append((blob[:-4], "truncated sketch payload"))
+    for bad, msg in cases:
         for decode in (HLL.from_bytes, lambda v: estimate_blobs([v]), lambda v: merge_blobs([v])):
             with pytest.raises(ValueError, match=msg):
                 decode(bad)
@@ -249,3 +278,17 @@ def test_truncated_varint_sparse_fails_in_every_decoder(sketch_est_spark):
             bdf.select(ju.hll_estimate_col(spark, "sketch")).collect()
         with pytest.raises(Exception, match=msg):
             ju.hll_merge_udaf(bdf, "sketch").collect()
+
+
+def test_generated_java_constants_are_current():
+    """HllConstants.java is generated from core/_constants.py and the header
+    constants of core/hll.py; the committed file must be what the generator
+    emits today, so the jar's writer and decoders use Python's values."""
+    import importlib.util
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location("gen_java_constants", root / "tools" / "gen_java_constants.py")
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert gen.emit() == gen.OUT.read_text()

@@ -2,6 +2,8 @@
 python engine, crafted-hash edge cases (sparse/dense boundary, rho-overflow
 chain rows), NULL contract, and auto-routing."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -88,7 +90,8 @@ def test_udaf_crafted_hash_edges(udaf_spark, case):
     """Feed PRECOMPUTED 64-bit hashes straight to the aggregate column so the
     sparse→dense promotion boundary and the rho-overflow chain rows
     (suffix==0, probability ~2^-39 — unreachable via real data) are
-    exercised, then compare byte-for-byte with HLL.add_hashes."""
+    exercised, then compare the aggregate's own bytes with HLL.add_hashes
+    over the same hashes, and its in-JVM estimate with HLL.estimate()."""
     b, binbits = 14, 6
     cap = sparse_capacity(b)
     rng = np.random.RandomState(7)
@@ -106,12 +109,14 @@ def test_udaf_crafted_hash_edges(udaf_spark, case):
     }[case]
     sdf = udaf_spark.createDataFrame([(int(x),) for x in hs], "h long").repartition(4)
     col = ju.hll_udaf_column(udaf_spark, F.col("h"), b, binbits)
-    blob = sdf.groupBy().agg(col.alias("blob")).first()["blob"]
-    got = ju._blob_to_hll(blob)
+    agged = sdf.groupBy().agg(col.alias("blob"))
+    row = agged.select("blob", ju.hll_estimate_col(udaf_spark, "blob").alias("est")).first()
     ref = HLL.create(b=b, binbits=binbits, hash_kind=HASH_XXHASH_SPARK)
     ref.add_hashes(hs.view(np.uint64))
-    assert got.to_bytes() == ref.to_bytes()
-    assert got.is_sparse == ("sparse" in case or case == "boundary_exact_cap")
+    assert bytes(row["blob"]) == ref.to_bytes()
+    assert ref.is_sparse == ("sparse" in case or case == "boundary_exact_cap")
+    est = ref.estimate()
+    assert row["est"] == est or abs(row["est"] - est) <= math.ulp(est)
 
 
 def test_auto_engine_routes_to_udaf(udaf_spark):

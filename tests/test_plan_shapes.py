@@ -77,7 +77,8 @@ def test_udaf_engine_plan_shape(spark, pages_small_dir):
     """engine=jvm_udaf must plan as ObjectHashAggregate (the
     TypedImperativeAggregate home) with a map-side partial before the
     exchange, one buffer row per (partition, key) crossing it, and the scan
-    pruned to the value column — never the raw rows through the shuffle."""
+    pruned to the value column — never the raw rows through the shuffle —
+    and no Python stage: the aggregate's output is the canonical sketch."""
     ju = pytest.importorskip("hllspark.jvm_udaf")
     if not ju.available(spark):
         pytest.skip("udaf jar not loadable")
@@ -93,6 +94,7 @@ def test_udaf_engine_plan_shape(spark, pages_small_dir):
     exch = plan.index("Exchange hashpartitioning")
     assert "ObjectHashAggregate" in plan[exch:], plan  # partial below the exchange
     assert "hllregisteraggregator" in plan.lower() or "HllRegisterAggregator".lower() in plan.lower(), plan
+    assert "EvalPython" not in plan, plan
 
 
 def test_quantile_udaf_plan_shape(spark, pages_small_dir):
@@ -126,6 +128,23 @@ def test_minhash_udaf_plan_shape(spark, pages_small_dir):
     assert "ObjectHashAggregate" in plan, plan
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "minhashaggregator" in plan.lower(), plan
+    assert "EvalPython" not in plan, plan
+
+
+def test_hash_sibling_udaf_plans_have_no_python_stage(spark, pages_small_dir, udaf):
+    """The count-min, Bloom and MinHash aggregators finish to canonical
+    sketch bytes, so neither their builders nor their stored-blob merges
+    add a Python stage."""
+    pages = spark.read.parquet(pages_small_dir)
+    built = {
+        "countmin": udaf.countmin_jvm_udaf(pages, "url", by=["lang"], width=64, depth=3),
+        "bloom": udaf.bloom_jvm_udaf(pages, "url", by=["lang"], m_bits=1 << 12, k=3),
+        "minhash": udaf.minhash_jvm_udaf(pages, "url", by=["lang"], k=16),
+    }
+    for kind, out in built.items():
+        assert "EvalPython" not in _plan(out), kind
+        merged = udaf.sibling_merge_udaf(out, kind, "sketch")
+        assert "EvalPython" not in _plan(merged), kind
 
 
 def test_cosine_pairs_lsh_exchange_reuse(spark, sf001_dir):

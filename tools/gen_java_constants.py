@@ -1,10 +1,13 @@
-"""Emit jvm/src/hllsparkjvm/HllConstants.java from hllspark.core._constants.
+"""Emit jvm/src/hllsparkjvm/HllConstants.java from hllspark.core._constants
+and the serialized-counter header constants of hllspark.core.hll.
 
 The Java estimate path (HllEstimator) needs the same published HLL++ tables
 the Python kernels use (Flajolet et al. 2007; Heule, Nunkesser & Hall 2013
 empirical bias curves; layout per /root/reference/src/constants.h).  This
-tool renders them as Java source so the two sides can never drift — rerun
-after tools/extract_constants.py:
+tool renders them, and the header version/flag bits the jar's canonical
+writer and decoder use, as Java source so the two sides can never drift —
+rerun after tools/extract_constants.py or a header change in core/hll.py
+(tests/test_jvm_estimate.py checks the committed file is current):
 
     python tools/gen_java_constants.py
 
@@ -24,6 +27,7 @@ import sys
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from hllspark.core import hll  # noqa: E402
 from hllspark.core._constants import ALPHAM, BIAS, NUM_POINTS, PE, RAW_ESTIMATE, THRESHOLD  # noqa: E402
 
 OUT = Path(__file__).resolve().parent.parent / "jvm" / "src" / "hllsparkjvm" / "HllConstants.java"
@@ -52,6 +56,7 @@ def emit() -> str:
     w("")
     w("/**")
     w(" * GENERATED by tools/gen_java_constants.py from hllspark/core/_constants.py")
+    w(" * and hllspark/core/hll.py")
     w(" * — do not edit.  Published HLL++ constants (Flajolet et al. 2007; Heule,")
     w(" * Nunkesser &amp; Hall 2013 empirical bias tables), the same values the")
     w(" * Python kernels use, per /root/reference/src/constants.h.")
@@ -59,7 +64,21 @@ def emit() -> str:
     w("final class HllConstants {")
     w("  private HllConstants() {}")
     w("")
-    w("  static final int MIN_INDEX_BITS = 4;")
+    w(f"  static final int MIN_INDEX_BITS = {hll.MIN_INDEX_BITS};")
+    w("")
+    w("  /** Serialized-counter header ({@code <BbBBi}, core/hll.py) and its flag bits. */")
+    for name, v in [
+        ("STRUCT_VERSION", hll.STRUCT_VERSION),
+        ("FLAG_DENSE", hll._FLAG_DENSE),
+        ("FLAG_PACKED", hll._FLAG_PACKED),
+        ("FLAG_VARINT", hll._FLAG_VARINT),
+        ("FLAG_DEFLATE", hll._FLAG_DEFLATE),
+        ("HASH_KIND_SHIFT", hll._HASH_KIND_SHIFT),
+        ("HASH_KIND_MASK", hll._HASH_KIND_MASK),
+        ("KNOWN_FLAGS", hll._KNOWN_FLAGS),
+        ("HASH_XXHASH_SPARK", hll.HASH_XXHASH_SPARK),
+    ]:
+        w(f"  static final int {name} = {v};")
     w("")
     # ALPHAM: float32 table, b=4..16 (len 17)
     vals = ", ".join(flit(v) for v in ALPHAM)
