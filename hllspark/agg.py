@@ -190,12 +190,15 @@ def _make_builder(
         # HLL partials ship group-varint-compressed sparse payloads (the
         # hyperloglog_comp finalfunc role, greenplum.sql:327): ~2.6 B/entry
         # instead of 4 on the partial shuffle; the merge phase re-expands.
+        # Dense partials stay unpacked: bit-packing at binbits masks
+        # registers above 2^binbits - 1, and max(mask(a), mask(b)) is not
+        # mask(max(a, b)) — the merge must see the true registers.
         def emit(k):
             if k not in touched:
                 return None
             if factory is not None:
                 return states[k].to_bytes()
-            return states[k].to_bytes(compress=True)
+            return states[k].to_bytes(packed=False, compress=True)
 
         arrays.append(pa.array([emit(k) for k in keys], type=pa.binary()))
         names.append("sketch")

@@ -3,19 +3,33 @@
 The reference's counters are updatable state without any notion of event
 time (SURVEY.md §1.4), which maps to two Spark streaming patterns:
 
-- ``SketchStream`` (foreachBatch): each micro-batch builds partial sketches
-  (the same mapInArrow phase 1 as batch mode) and writes them as a per-batch
-  DELTA holding only that batch's TOUCHED keys — per-batch write cost is
-  O(touched keys), not O(all keys ever seen) (the round-3 verdict's
-  write-amplification fix: the old design rewrote the entire merged state
-  every micro-batch, quadratic over the stream's life at high key
-  cardinality).  Every ``compact_every`` batches the deltas are folded with
+- ``SketchStream`` (foreachBatch): each micro-batch is one ``agg.sketch``
+  over the batch, written as a per-batch DELTA holding only that batch's
+  TOUCHED keys — per-batch write cost is O(touched keys), not O(all keys
+  ever seen).  Every ``compact_every`` batches the deltas are folded with
   the previous compact into a new full state and dropped.  Deltas are keyed
   by batch_id, so retries are idempotent (skip if the delta — or a compact
   covering it — exists) and merge idempotence makes duplicate input
   harmless.  ``state``/``estimates`` serve the current merged view at any
   time (lazy merge of compact + live deltas) — the streaming twin of the
   checkpoint-resumable batch path (hllspark.io).
+
+  Routing: with the udaf jar loadable, a delta is one JVM aggregate (scan →
+  xxhash64 → partial ObjectHashAggregate → final canonical bytes), the view
+  is one ``hll_merge_udaf`` over the compact and the live deltas, and
+  ``estimates`` finishes that same aggregate to estimates in the JVM — no
+  Python stage anywhere.  Without the jar every step runs the python engine
+  with the same xxhash64 prehash, so the bytes do not depend on which
+  engine ran.
+
+  Hash domain: a stream hashes like a default ``agg.sketch`` — xxhash64
+  (hash_kind=1) for every column type.  Pass ``input_type`` (e.g.
+  ``"int64"``) to pin the MurmurHash reference domain instead (hash_kind=0,
+  python builder).  Earlier releases streamed every column but strings and
+  binaries with murmur; such a state refuses to merge with new default-hash
+  deltas (the hash_kind check raises) — keep writing it with the
+  ``input_type`` the old default picked (``"int64"`` for integers and
+  booleans, ``"float64"``, ``"timestamp"``; README "Upgrade notes").
 
 - ``running_distinct`` (applyInPandasWithState): per-key running distinct
   estimates emitted every micro-batch, state = the serialized sketch itself
@@ -41,9 +55,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from . import agg
+from . import agg, jvm_udaf
 from .core.hll import HLL
-from .functions import DEFAULT_B, DEFAULT_BINBITS, build_sketch
+from .functions import DEFAULT_B, DEFAULT_BINBITS, build_sketch, hll_estimate
 
 
 class SketchStream:
@@ -51,9 +65,17 @@ class SketchStream:
     incrementally: per-batch DELTAS (touched keys only) + periodic
     compaction (see module doc — per-batch write cost is O(touched keys)).
 
-    Layout: ``{state_dir}/delta/v={batch_id}`` per-batch merged partials;
+    Layout: ``{state_dir}/delta/v={batch_id}`` per-batch sketches;
     ``{state_dir}/compact/v={batch_id}`` full states, rewritten every
-    ``compact_every`` batches and whenever a reader wants a compact view.
+    ``compact_every`` batches.
+
+    A delta is ``agg.sketch(batch, value_col, by, b, binbits,
+    input_type=input_type)``, so it runs the engine a batch sketch runs:
+    the jar's aggregate when it loads, else the python builder.  The
+    default hash is xxhash64 for every column type; ``input_type="int64"``
+    (or any explicit type) pins MurmurHash on the python builder, which a
+    non-string-column state written by an earlier release needs — mixing
+    the two domains in one state raises at its next merge.
 
     >>> ss = SketchStream("/state/url_by_lang", "url", by=["lang"])
     >>> q = (stream.writeStream.foreachBatch(ss)
@@ -107,33 +129,33 @@ class SketchStream:
         cv = compacts[-1] if compacts else -1
         return cv, [d for d in self._versions(spark, "delta") if d > cv]
 
-    def _view(self, spark: SparkSession) -> tuple[int, list[int], DataFrame | None]:
-        """(latest compact id or -1, live delta ids, lazy merged state)."""
+    def _rows(self, spark: SparkSession) -> tuple[int, DataFrame | None, int]:
+        """(latest compact id or -1, the rows of that compact and the live
+        deltas read as one parquet relation, unmerged — None when there are
+        none — and the number of directories read)."""
         cv, deltas = self._ids(spark)
-        parts = []
-        if cv >= 0:
-            parts.append(spark.read.parquet(self._compact_dir(cv)))
-        parts += [spark.read.parquet(self._delta_dir(d)) for d in deltas]
-        if not parts:
-            return cv, deltas, None
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        merged = agg.merge_partials(df.select(*self.by, "sketch"), self.by) if len(parts) > 1 else parts[0]
-        return cv, deltas, merged
+        paths = ([self._compact_dir(cv)] if cv >= 0 else []) + [self._delta_dir(d) for d in deltas]
+        if not paths:
+            return cv, None, 0
+        return cv, spark.read.parquet(*paths).select(*self.by, "sketch"), len(paths)
+
+    def _view(self, spark: SparkSession) -> tuple[int, DataFrame | None]:
+        """(latest compact id or -1, lazy merged state or None)."""
+        cv, rows, n = self._rows(spark)
+        if n > 1:
+            rows = agg.merge_partials(rows, self.by)
+        return cv, rows
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         cv, deltas = self._ids(spark)
         if batch_id <= cv or batch_id in deltas:
             return  # replayed batch — state already includes it (idempotent)
-        partials = agg.build_partials(
-            batch_df, self.value_col, self.by, b=self.b, binbits=self.binbits,
-            input_type=self.input_type, lineage=False,
-        )
         # one row per key TOUCHED BY THIS BATCH — the whole prior state is
         # neither read nor rewritten on the hot path
-        agg.merge_partials(partials, self.by).write.mode("overwrite").parquet(self._delta_dir(batch_id))
+        agg.sketch(
+            batch_df, self.value_col, self.by, self.b, self.binbits, input_type=self.input_type,
+        ).write.mode("overwrite").parquet(self._delta_dir(batch_id))
         if len(deltas) + 1 >= self.compact_every:
             self._compact(spark, batch_id)
 
@@ -149,7 +171,7 @@ class SketchStream:
         same grace the pre-round-4 design gave its keep-last-2 versions)."""
         from .io import _hadoop_fs
 
-        cv_prev, _, merged = self._view(spark)
+        cv_prev, merged = self._view(spark)
         if merged is None:
             return
         merged.write.mode("overwrite").parquet(self._compact_dir(batch_id))
@@ -161,12 +183,16 @@ class SketchStream:
             fs.delete(jvm.org.apache.hadoop.fs.Path(self._compact_dir(c)), True)
 
     def state(self, spark: SparkSession) -> DataFrame | None:
-        """Current merged state (lazy union-merge of compact + live deltas)."""
-        return self._view(spark)[2]
+        """Current merged state (lazy merge of compact + live deltas)."""
+        return self._view(spark)[1]
 
     def estimates(self, spark: SparkSession) -> DataFrame | None:
-        from .functions import hll_estimate
-
+        """Per-key estimates (``by..., est double``) of the current state:
+        one JVM merge-and-estimate aggregate when the jar loads, else the
+        merged state through the pandas ``hll_estimate``."""
+        if jvm_udaf.resolve_engine(spark, "auto") == "jvm_udaf":
+            rows = self._rows(spark)[1]
+            return None if rows is None else jvm_udaf.hll_merge_udaf(rows, "sketch", self.by, finalize="estimate")
         st = self.state(spark)
         if st is None:
             return None
@@ -193,7 +219,12 @@ def running_distinct(
     exists only in TTL mode, so the default output schema is unchanged) and
     its state is removed — a later arrival of the same key starts a fresh
     sketch.  Use the durable SketchStream delta/compact path when evicted
-    keys must remain mergeable."""
+    keys must remain mergeable.
+
+    Processing-time timeouts make Spark follow every micro-batch with a
+    no-data batch, so a ``Trigger.AvailableNow`` query with ``ttl_ms`` never
+    terminates on its own; set ``spark.sql.streaming.noDataMicroBatches.enabled``
+    to false for it, and idle keys expire with the next batch that has data."""
     by = list(by or [])
     extra = [] if ttl_ms is None else [StructField("expired", BooleanType(), False)]
     out_schema = StructType(

@@ -18,6 +18,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from hllspark import agg
 from hllspark.core.hll import HASH_XXHASH_SPARK, HLL, sparse_capacity
 
 ju = pytest.importorskip("hllspark.jvm_udaf")
@@ -56,8 +57,10 @@ def _no_python_stage(q):
 def test_jvm_estimate_parity_sweep(udaf_spark, b, binbits):
     """Sparse, boundary, dense and bias-corrected cardinalities at five
     precision shapes (incl. the b>16 alpham formula branch and both
-    binbits register-term branches) — the aggregate's bytes equal
-    HLL.add_hashes over the same xxhash64 values, and every estimate is
+    binbits register-term branches) — the aggregate's bytes, and the
+    python engine's, equal HLL.add_hashes over the same xxhash64 values
+    (at b=4/binbits=4 and 60k values the largest register exceeds
+    2^binbits - 1), and every estimate is
     within 1 ulp of HLL.from_bytes(...).estimate() and equal at contract
     micro-units."""
     from hllspark.core.xxhash import xxh64_long
@@ -70,10 +73,17 @@ def test_jvm_estimate_parity_sweep(udaf_spark, b, binbits):
     kw = {"b": b, "binbits": binbits}
     jv = {r["n"]: r["est"] for r in ju.sketch_jvm_udaf(df, "v", ["n"], finalize="estimate", **kw).collect()}
     blobs = {r["n"]: bytes(r["sketch"]) for r in ju.sketch_jvm_udaf(df, "v", ["n"], **kw).collect()}
+    # the python engine over 8 partials per group: its partial → merge
+    # hand-off must carry registers above 2^binbits - 1 unmasked
+    py = {
+        r["n"]: bytes(r["sketch"])
+        for r in agg.sketch(df.repartition(8), "v", ["n"], engine="python", jvm_prehash=True, **kw).collect()
+    }
     for n in ns:
         ref = HLL.create(hash_kind=HASH_XXHASH_SPARK, **kw)
         ref.add_hashes(xxh64_long(np.arange(n, dtype=np.int64) * 7919))
         assert blobs[n] == ref.to_bytes(), n
+        assert py[n] == ref.to_bytes(), ("python", n)
         pv = _py_estimate(blobs[n])
         assert _close1ulp(jv[n], pv), (n, jv[n], pv)
         assert round(jv[n] * 1e6) == round(pv * 1e6), (n, jv[n], pv)

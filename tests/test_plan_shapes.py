@@ -147,6 +147,37 @@ def test_hash_sibling_udaf_plans_have_no_python_stage(spark, pages_small_dir, ud
         assert "EvalPython" not in _plan(merged), kind
 
 
+_PYTHON_NODES = ("EvalPython", "MapInArrow", "InPandas")  # InPandas: MapInPandas, FlatMapGroupsInPandas, ...
+
+
+def test_sketch_stream_plans_have_no_python_stage(spark, tmp_path, monkeypatch, udaf):
+    """With the jar loaded, a SketchStream micro-batch delta is one JVM
+    aggregate and estimates() one JVM merge-and-estimate aggregate.  A
+    murmur-pinned stream (input_type="int64") still runs the python
+    builder, which shows the check sees a Python stage when there is one."""
+    from hllspark import agg
+    from hllspark.streaming import SketchStream
+
+    deltas = []
+    sketch = agg.sketch
+
+    def spy(*args, **kwargs):
+        deltas.append(sketch(*args, **kwargs))
+        return deltas[-1]
+
+    monkeypatch.setattr(agg, "sketch", spy)
+    batch = spark.createDataFrame([(f"k{i % 3}", i) for i in range(100)], "k string, v long")
+    ss = SketchStream(str(tmp_path / "st"), "v", by=["k"])
+    ss(batch, 0)
+    ss(batch.where("v > 50"), 1)
+    for plan in [_plan(deltas[0]), _plan(deltas[1]), _plan(ss.estimates(spark))]:
+        assert not any(node in plan for node in _PYTHON_NODES), plan
+    assert "hllregisteraggregator" in _plan(deltas[0]).lower()
+
+    SketchStream(str(tmp_path / "murmur"), "v", by=["k"], input_type="int64")(batch, 0)
+    assert "MapInArrow" in _plan(deltas[-1])
+
+
 def test_cosine_pairs_lsh_exchange_reuse(spark, sf001_dir):
     """Round-5: cosine_pairs_lsh's candidate branches (small / oversized /
     sub-bucket / chain) all derive from ONE scan→GEMM→groupBy subtree; AQE

@@ -4,12 +4,30 @@ equals the batch answer; running per-key estimates via applyInPandasWithState.""
 import math
 
 import pytest
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
-from hllspark import agg
+from hllspark import agg, jvm_udaf
+from hllspark.core.hll import HLL
 from hllspark.streaming import SketchStream, running_distinct
 
 BOUND = 3 * 1.04 / math.sqrt(2**14)
+HASH_KIND_REFUSAL = "hash kind of (sketches|estimators) differs"
+REFUSED = (Py4JJavaError, PythonException)  # the jar's merge / the python merge
+
+
+@pytest.fixture(autouse=True)
+def no_leaked_queries(spark):
+    """Stop any streaming query a test left running: a leftover stateful
+    query keeps scheduling micro-batches and slows every later test."""
+    yield
+    for q in spark.streams.active:
+        q.stop()
+
+
+def _sketches(df, key):
+    return {r[key]: bytes(r["sketch"]) for r in df.collect()}
 
 
 @pytest.fixture()
@@ -31,15 +49,11 @@ def test_sketch_stream_matches_batch(spark, staged_events, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
 
-    got = {r["event_type"]: bytes(r["sketch"]) for r in ss.state(spark).collect()}
-    # streaming state is built by the python-engine builder → compare same engine
-    direct = {
-        r["event_type"]: bytes(r["sketch"])
-        for r in agg.sketch(e, "user_id", by=["event_type"], engine="python").collect()
-    }
-    assert got == direct  # byte-identical to the batch pipeline
+    got = _sketches(ss.state(spark), "event_type")
+    # the stream's deltas are default agg.sketch builds → same engine, same hash
+    assert got == _sketches(agg.sketch(e, "user_id", by=["event_type"]), "event_type")
 
     ests = {r["event_type"]: r["est"] for r in ss.estimates(spark).collect()}
     exact = {r["event_type"]: r["d"] for r in e.groupBy("event_type").agg(F.countDistinct("user_id").alias("d")).collect()}
@@ -69,7 +83,7 @@ def test_running_distinct_stateful(spark, staged_events, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
     # last update per key = final state after all 3 micro-batches
     final = (
         spark.table("running_d")
@@ -86,7 +100,18 @@ def test_running_distinct_stateful(spark, staged_events, tmp_path):
         assert abs(r["est"] - exact[k]) / exact[k] < BOUND
 
 
-def test_running_distinct_ttl_evicts_idle_keys(spark, tmp_path):
+@pytest.fixture()
+def no_empty_batches(spark):
+    """Processing-time timeouts make Spark follow every micro-batch with a
+    no-data batch, so an availableNow query never ends; with those off, idle
+    keys expire in the next batch that has data."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    spark.conf.set(key, "false")
+    yield
+    spark.conf.unset(key)
+
+
+def test_running_distinct_ttl_evicts_idle_keys(spark, tmp_path, no_empty_batches):
     """Round-5 fix: with ttl_ms set, a key idle past the TTL is evicted at
     the next micro-batch — its final estimate is emitted with expired=true,
     its state is removed, and a later arrival starts a fresh sketch (so the
@@ -109,19 +134,18 @@ def test_running_distinct_ttl_evicts_idle_keys(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
         return sunk[mark:]  # only THIS run's emissions
 
     r1 = run_batch([("a", 1), ("a", 2), ("a", 3)])
     time.sleep(2.5)  # key "a" idles past the 1s TTL
     r2 = run_batch([("b", 10)])
-    # "a" expires exactly ONCE — in run 1's trailing micro-batch or in run 2
-    # (micro-batches here take >1s, so trailing-batch expiry is legitimate);
-    # the eviction row carries the final estimate and rows_seen
+    # "a" expires exactly ONCE, in run 2's batch (no trailing no-data
+    # batches); the eviction row carries the final estimate and rows_seen
     expired = [r for r in r1 + r2 if r["k"] == "a" and r["expired"]]
     assert len(expired) == 1
     assert expired[0]["rows_seen"] == 3
-    # "b" was updated live in run 2 (it may ALSO expire in a trailing batch)
+    # "b" was updated live in run 2
     assert any(not r["expired"] for r in r2 if r["k"] == "b")
 
     time.sleep(2.5)
@@ -172,16 +196,142 @@ def test_sketch_stream_incremental_deltas(spark, tmp_path):
     assert all(d > 2 for d in ss._versions(spark, "delta"))
 
     # merged view = batch-built sketches over the full concatenation
-    from hllspark import agg
-
     allrows = batch(
         [("a", 1), ("a", 2), ("b", 3), ("a", 9)]
         + [(f"k{i}", i) for i in range(1000)]
         + [("a", 10), ("b", 11)]
     )
-    direct = {
-        r["k"]: bytes(r["sketch"])
-        for r in agg.sketch(allrows, "v", by=["k"], engine="python").collect()
-    }
-    got = {r["k"]: bytes(r["sketch"]) for r in ss.state(spark).collect()}
-    assert got == direct
+    assert _sketches(ss.state(spark), "k") == _sketches(agg.sketch(allrows, "v", by=["k"]), "k")
+
+
+ROWS = [(f"k{i % 4}", (i * 2654435761) % 50_000) for i in range(6000)]
+
+
+def _batch(spark, rows):
+    return spark.createDataFrame(rows, "k string, v long")
+
+
+def _slices(spark, n):
+    """ROWS cut into n micro-batches (round robin, so keys repeat)."""
+    return [_batch(spark, ROWS[i::n]) for i in range(n)]
+
+
+def test_sketch_stream_murmur_pinned(spark, tmp_path):
+    """input_type="int64" pins MurmurHash: the deltas run the python
+    builder and the state equals the python engine's murmur sketch byte for
+    byte (hash_kind 0) — the way to keep writing an integer-column state
+    built before streams hashed with xxhash64."""
+    ss = SketchStream(str(tmp_path / "mm"), "v", by=["k"], input_type="int64", compact_every=2)
+    for i, b in enumerate(_slices(spark, 3)):
+        ss(b, i)  # delta, delta + compact, delta
+    got = _sketches(ss.state(spark), "k")
+    want = agg.sketch(_batch(spark, ROWS), "v", by=["k"], engine="python", input_type="int64")
+    assert got == _sketches(want, "k")
+    assert {HLL.from_bytes(v).hash_kind for v in got.values()} == {0}
+
+
+def test_sketch_stream_without_jar_matches_default_engine(spark, tmp_path, monkeypatch):
+    """No loadable jar: deltas, view and estimates run the python engine
+    with the xxhash64 prehash, and the state equals the default-engine bytes
+    (the jar's, when it loads here)."""
+    want = _sketches(agg.sketch(_batch(spark, ROWS), "v", by=["k"]), "k")
+    monkeypatch.setattr(jvm_udaf, "available", lambda spark: False)
+    monkeypatch.setattr(jvm_udaf, "_FALLBACK_LOGGED", set())
+    ss = SketchStream(str(tmp_path / "nojar"), "v", by=["k"], compact_every=2)
+    for i, b in enumerate(_slices(spark, 3)):
+        ss(b, i)
+    assert _sketches(ss.state(spark), "k") == want
+    assert {HLL.from_bytes(v).hash_kind for v in want.values()} == {1}
+    ests = {r["k"]: r["est"] for r in ss.estimates(spark).collect()}
+    assert ests == pytest.approx({k: HLL.from_bytes(v).estimate() for k, v in want.items()}, rel=1e-12)
+
+
+@pytest.mark.parametrize("jar", [True, False], ids=["jar", "nojar"])
+def test_sketch_stream_refuses_mixed_hash_domains(spark, tmp_path, monkeypatch, jar):
+    """A murmur delta (an integer-column state from before the xxhash64
+    default) followed by a default-hash delta: every merge of the state
+    raises the hash_kind refusal — state(), estimates() and compaction, in
+    the jar's merge and in the python one — and none returns a merged
+    sketch."""
+    if not jar:
+        monkeypatch.setattr(jvm_udaf, "available", lambda spark: False)
+        monkeypatch.setattr(jvm_udaf, "_FALLBACK_LOGGED", set())
+    sd = str(tmp_path / "mixed")
+    b = _batch(spark, [("a", 1), ("a", 2), ("b", 3)])
+    SketchStream(sd, "v", by=["k"], input_type="int64")(b, 0)
+    ss = SketchStream(sd, "v", by=["k"], compact_every=3)
+    ss(b, 1)
+    for read in (ss.state, ss.estimates):
+        with pytest.raises(REFUSED, match=HASH_KIND_REFUSAL):
+            read(spark).collect()
+    with pytest.raises(REFUSED, match=HASH_KIND_REFUSAL):
+        ss(b, 2)  # the third live delta triggers compaction
+    assert ss._versions(spark, "compact") == []
+
+
+class _DeleteFails:
+    """Hadoop FileSystem proxy whose delete raises: a crash after the
+    compact was written, before the folded deltas are removed."""
+
+    def __init__(self, fs):
+        self._fs = fs
+
+    def delete(self, *args):
+        raise OSError("crash before delete")
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def test_sketch_stream_crash_after_compact_write(spark, tmp_path, monkeypatch):
+    """fs.delete fails after the compact write; the same batch id re-run
+    after the crash is skipped, and the state stays byte-identical to a
+    one-shot sketch of the same rows — also once later compactions have
+    cleaned up what the crash left."""
+    from hllspark import io as hio
+
+    batches = _slices(spark, 6)
+    oneshot = [_sketches(agg.sketch(_batch(spark, [r for i in range(n) for r in ROWS[i::6]]), "v", by=["k"]), "k")
+               for n in (4, 6)]
+    ss = SketchStream(str(tmp_path / "crash"), "v", by=["k"], compact_every=2)
+    for i in range(3):
+        ss(batches[i], i)  # compact 1 deletes nothing; batch 2 is a live delta
+    real = hio._hadoop_fs
+
+    def crashing(spark, path):
+        fs, hpath, jvm = real(spark, path)
+        return _DeleteFails(fs), hpath, jvm
+
+    monkeypatch.setattr(hio, "_hadoop_fs", crashing)
+    with pytest.raises(OSError, match="crash before delete"):
+        ss(batches[3], 3)  # compact 3 written, then deleting deltas <= 1 fails
+    monkeypatch.undo()
+    assert ss._versions(spark, "compact") == [1, 3]
+    assert _sketches(ss.state(spark), "k") == oneshot[0]
+    ss(batches[3], 3)  # the restarted query re-runs the batch: covered by compact 3
+    assert _sketches(ss.state(spark), "k") == oneshot[0]
+    for i in (4, 5):
+        ss(batches[i], i)  # compact 5 removes the deltas the crash left behind
+    assert all(d > 3 for d in ss._versions(spark, "delta"))
+    assert _sketches(ss.state(spark), "k") == oneshot[1]
+
+
+def test_sketch_stream_replay_of_compacted_batch(spark, tmp_path):
+    """Replaying batch ids already folded into a compact — while their
+    delta still exists, and after it was deleted — changes nothing: the
+    state stays byte-identical to a one-shot sketch of the same rows."""
+    batches = _slices(spark, 4)
+    oneshot = _sketches(agg.sketch(_batch(spark, ROWS), "v", by=["k"]), "k")
+    ss = SketchStream(str(tmp_path / "replay"), "v", by=["k"], compact_every=2)
+    ss(batches[0], 0)
+    ss(batches[1], 1)  # compact 1 folds deltas 0 and 1
+    ss(batches[0], 0)
+    ss(batches[1], 1)
+    assert ss._ids(spark) == (1, [])
+    ss(batches[2], 2)
+    ss(batches[3], 3)  # compact 3; deltas 0 and 1 are deleted now
+    assert all(d > 1 for d in ss._versions(spark, "delta"))
+    for i in (0, 1, 3):
+        ss(batches[i], i)
+    assert ss._ids(spark) == (3, [])
+    assert _sketches(ss.state(spark), "k") == oneshot
