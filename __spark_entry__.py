@@ -968,9 +968,10 @@ def q_rollup_read_udfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     check runs against the stored blobs entirely in the JVM — frequency
     point-queries for suppkeys 1..3 (inside the count-min 3ε envelope over
     the exact counts), the distinct-orderkey estimate (inside the b=14
-    envelope), and the p50 extendedprice (exact rank within 2%).  Falls
-    back to the pandas readers without the jar — identical results by the
-    bit-parity contract (tests/test_jvm_read_udfs.py)."""
+    envelope), and the p50 extendedprice (exact rank within 2%).  The
+    functions.* readers run their pandas twins without the jar, and the
+    count-min probe falls back to functions.cm_query — identical results
+    by the bit-parity contract (tests/test_jvm_read_udfs.py)."""
     from hllspark import agg, sketches
     from hllspark import functions as hfn
     from hllspark import jvm_udaf as ju
@@ -996,12 +997,10 @@ def q_rollup_read_udfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = rollup.join(probes, "l_returnflag").join(stats, "l_returnflag")
     if use_jvm:
         freq = ju.cm_query_col(spark, j, "cm", "l_suppkey")
-        est = ju.hll_estimate_col(spark, F.col("hll"))
-        p50 = ju.tdigest_quantile_col(spark, "td", 0.5)
     else:
         freq = hfn.cm_query(F.col("cm"), F.col("l_suppkey"))
-        est = hfn.hll_estimate(F.col("hll"))
-        p50 = hfn.tdigest_quantile(F.col("td"), F.lit(0.5))
+    est = hfn.hll_estimate(F.col("hll"))
+    p50 = hfn.tdigest_quantile(F.col("td"), 0.5)
     eps3 = 3.0 * math.e / 4096.0  # 3× count-min ε, scaled by group rows below
     per_probe = j.select(
         "l_returnflag", "exact_freq", "exact_distinct", "n_rows",
@@ -1045,11 +1044,11 @@ def q_setops_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference postgres.sql:131-160, hyperloglog_counter.c:1051-1193) and
     checked against EXACT inclusion–exclusion counts — each estimate's
     envelope is the b=14 bound scaled by the set sizes that contribute
-    error terms to it.  Falls back to the pandas set-op UDFs without the
-    jar — identical by the parity contract (tests/test_jvm_read_udfs.py)."""
+    error terms to it.  The functions.* set-op readers run their pandas
+    twins without the jar — identical by the parity contract
+    (tests/test_jvm_read_udfs.py)."""
     from hllspark import agg
     from hllspark import functions as hfn
-    from hllspark import jvm_udaf as ju
 
     orders = _read(spark, sf_dir, "orders")
     seg = orders.where(F.col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
@@ -1058,16 +1057,10 @@ def q_setops_jvm(spark: SparkSession, sf_dir: str) -> DataFrame:
         sk.where(F.col("o_orderpriority") == "1-URGENT").select(F.col("sketch").alias("ca"))
         .crossJoin(sk.where(F.col("o_orderpriority") == "2-HIGH").select(F.col("sketch").alias("cb")))
     )
-    if ju.available(spark):
-        u = ju.hll_union_estimate_col(spark, "ca", "cb")
-        i = ju.hll_intersection_col(spark, "ca", "cb")
-        c = ju.hll_compliment_col(spark, "ca", "cb")
-        s = ju.hll_symmetric_diff_col(spark, "ca", "cb")
-    else:
-        u = hfn.hll_union_estimate(F.col("ca"), F.col("cb"))
-        i = hfn.hll_intersection(F.col("ca"), F.col("cb"))
-        c = hfn.hll_compliment(F.col("ca"), F.col("cb"))
-        s = hfn.hll_symmetric_diff(F.col("ca"), F.col("cb"))
+    u = hfn.hll_union_estimate(F.col("ca"), F.col("cb"))
+    i = hfn.hll_intersection(F.col("ca"), F.col("cb"))
+    c = hfn.hll_compliment(F.col("ca"), F.col("cb"))
+    s = hfn.hll_symmetric_diff(F.col("ca"), F.col("cb"))
     est = pair.select(u.alias("u"), i.alias("i"), c.alias("c"), s.alias("s"))
     exact = seg.agg(
         F.countDistinct(

@@ -44,7 +44,13 @@ from pyspark.sql.types import (
 
 from .core.hash import hash_arrow_array
 from .core.hll import HLL, merge_blobs
-from .functions import DEFAULT_B, DEFAULT_BINBITS, hll_estimate, hll_estimate_bigint
+from .functions import DEFAULT_B, DEFAULT_BINBITS, _hll_estimate, _round_bigint
+
+# partial sketches merged per task at each level of the global merge tree
+_MERGE_FANIN = 64
+# agg.distinct (python engine) merges a global sketch's partials on the
+# driver up to this default parallelism
+_DRIVER_MERGE_MAX_PARALLELISM = 256
 
 LINEAGE_FIELDS = [
     StructField("partition_id", IntegerType(), False),
@@ -340,7 +346,6 @@ def build_partials(
 def merge_partials(
     partials: DataFrame,
     by: Sequence[str] | None = None,
-    fanin: int = 64,
     merge_rounds: int | None = None,
     sketch_col: str = "sketch",
     cls=HLL,
@@ -421,7 +426,7 @@ def merge_partials(
         yield pd.DataFrame({sketch_col: [None if acc is None else acc.to_bytes()]})
 
     # global (keyless): partition-local pre-merge, then iterated fan-in —
-    # depth ceil(log_fanin(P)).  The pre-merge is the map-side combine of
+    # depth ceil(log_{_MERGE_FANIN}(P)).  The pre-merge is the map-side combine of
     # this reduction: one blob leaves each scan partition, so the exchange
     # below ships ≤ P sketches instead of every stored partial (measured
     # ~3× on a 100k-blob stored rollup: the repartition(1) final task was
@@ -436,8 +441,8 @@ def merge_partials(
     if cls is HLL:
         cur = cur.mapInPandas(merge_partition, schema=sk_schema)
     n = nparts
-    while n > fanin:
-        n = max(1, math.ceil(n / fanin))
+    while n > _MERGE_FANIN:
+        n = max(1, math.ceil(n / _MERGE_FANIN))
         cur = cur.repartition(n).mapInPandas(merge_partition, schema=sk_schema)
     # repartition, NOT coalesce: coalesce(1) would collapse the upstream
     # builder stage into a single task and serialize the whole scan
@@ -469,12 +474,6 @@ def merge_partials_driver(partials: DataFrame, by: Sequence[str] | None = None, 
     return acc
 
 
-def _nullable_key_fields(df: DataFrame, by: Sequence[str]) -> list[StructField]:
-    """Key fields with nullability forced on: group keys can be NULL even
-    when the source column is declared non-nullable downstream of a join."""
-    return [StructField(c, df.schema[c].dataType, True) for c in by]
-
-
 def sketch(
     df: DataFrame,
     value_col: str,
@@ -482,7 +481,6 @@ def sketch(
     b: int | None = None,
     binbits: int | None = None,
     input_type: str = "auto",
-    fanin: int = 64,
     merge_rounds: int | None = None,
     jvm_prehash="auto",
     error_rate: float | None = None,
@@ -510,7 +508,7 @@ def sketch(
         df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash,
         error_rate=error_rate, ndistinct=ndistinct,
     )
-    return merge_partials(partials, by, fanin=fanin, merge_rounds=merge_rounds)
+    return merge_partials(partials, by, merge_rounds=merge_rounds)
 
 
 def _route(df: DataFrame, engine: str, input_type: str, jvm_prehash) -> tuple[str, object]:
@@ -679,10 +677,10 @@ def sketch_cube(
     )
     if finalize == "sketch":
         return out
-    from .functions import hll_estimate, hll_estimate_bigint
-
-    fin = hll_estimate if finalize == "estimate" else hll_estimate_bigint
-    return out.select(*dims, gid_col, fin(F.col("sketch")).alias(est_col))
+    est = _hll_estimate(F.col("sketch"))
+    if finalize == "estimate_bigint":
+        est = _round_bigint(est)
+    return out.select(*dims, gid_col, est.alias(est_col))
 
 
 def distinct(
@@ -695,7 +693,6 @@ def distinct(
     bigint: bool = False,
     est_col: str = "est",
     jvm_prehash="auto",
-    driver_merge: bool | str = "auto",
     engine: str = "auto",
     error_rate: float | None = None,
     ndistinct: float | None = None,
@@ -706,10 +703,9 @@ def distinct(
     ``hyperloglog_distinct(col[, error_rate[, ndistinct]])`` derivation
     (postgres.sql:219-245) — same resolution as ``sketch``.
 
-    ``driver_merge``: finalize small partial sets on the driver (coordinator
-    finalfunc role) instead of an extra Spark stage.  "auto" enables it for
-    global sketches on ≤256-way clusters; pass True for grouped queries whose
-    key cardinality is known to be small (e.g. per-lang).
+    On the python engine a global sketch's partials are merged on the
+    driver (the coordinator's finalfunc role) instead of in an extra Spark
+    stage, up to _DRIVER_MERGE_MAX_PARALLELISM-way clusters.
 
     NULL contract (hyperloglog_counter.c:511-513): a group with zero non-NULL
     values estimates NULL; ``bigint=True`` coalesces NULL→0
@@ -728,28 +724,19 @@ def distinct(
             df, value_col, by, b, binbits,
             finalize="estimate_bigint" if bigint else "estimate", est_col=est_col,
         )
-    if driver_merge == "auto":
-        driver_merge = not by and spark.sparkContext.defaultParallelism <= 256
-    if driver_merge:
+    if not by and spark.sparkContext.defaultParallelism <= _DRIVER_MERGE_MAX_PARALLELISM:
         partials = build_partials(df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash)
-        acc = merge_partials_driver(partials, by)
-        if not by and not acc:
-            acc = {(): None}
-        rows = []
-        for k, s in sorted(acc.items(), key=lambda kv: tuple(str(x) for x in kv[0])):
-            e = None if s is None else s.estimate()
-            if bigint:
-                rows.append((*k, 0 if e is None else int(round(e))))
-            else:
-                rows.append((*k, None if e is None else float(e)))
-        schema_fields = _nullable_key_fields(df, by) + [
-            StructField(est_col, LongType() if bigint else DoubleType(), not bigint)
-        ]
-        return spark.createDataFrame(rows, StructType(schema_fields))
+        s = merge_partials_driver(partials).get(())
+        e = None if s is None else float(s.estimate())
+        if bigint:
+            e = 0 if e is None else int(round(e))
+        field = StructField(est_col, LongType() if bigint else DoubleType(), not bigint)
+        return spark.createDataFrame([(e,)], StructType([field]))
     sk = sketch(df, value_col, by, b, binbits, input_type, jvm_prehash=jvm_prehash, engine="python")
-    est = hll_estimate_bigint(F.col("sketch")) if bigint else hll_estimate(F.col("sketch"))
-    cols = by + [est.alias(est_col)]
-    return sk.select(*cols)
+    est = _hll_estimate(F.col("sketch"))
+    if bigint:
+        est = _round_bigint(est)
+    return sk.select(*by, est.alias(est_col))
 
 
 def sketch_generic(
@@ -759,7 +746,6 @@ def sketch_generic(
     cls,
     by: Sequence[str] | None = None,
     input_type: str = "auto",
-    fanin: int = 64,
     merge_rounds: int | None = None,
     jvm_prehash: bool = False,
 ) -> DataFrame:
@@ -776,7 +762,7 @@ def sketch_generic(
     partials = build_partials(
         df, value_col, by, input_type=input_type, lineage=False, factory=factory, jvm_prehash=jvm_prehash
     )
-    return merge_partials(partials, by, fanin=fanin, merge_rounds=merge_rounds, cls=cls)
+    return merge_partials(partials, by, merge_rounds=merge_rounds, cls=cls)
 
 
 def salted_repartition(df: DataFrame, keys: Sequence[str], num_partitions: int, salt_buckets: int = 16) -> DataFrame:

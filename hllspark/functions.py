@@ -1,7 +1,7 @@
-"""Scalar + simple-aggregate pandas UDFs over the sketch BinaryType column.
+"""The SQL-facing surface over the sketch BinaryType column.
 
-This is the SQL-facing surface mirroring the reference's scalar functions and
-operators (sql/postgres.sql:43-330; see SURVEY.md §2.3-2.5):
+It mirrors the reference's scalar functions and operators
+(sql/postgres.sql:43-330; see SURVEY.md §2.3-2.5):
 
 | reference                              | here                               |
 |----------------------------------------|------------------------------------|
@@ -21,6 +21,17 @@ operators (sql/postgres.sql:43-330; see SURVEY.md §2.3-2.5):
 | hyperloglog_merge(col) (agg)           | hll_merge_agg(sketch_col)          |
 | sum(counter) → bigint                  | hll_estimate_bigint(hll_merge_agg) |
 
+Routing: the stored-sketch readers with a jar twin — hll_estimate,
+hll_estimate_bigint, hll_union_estimate, hll_intersection, hll_compliment,
+hll_symmetric_diff, tdigest_quantile, tdigest_rank, kll_quantile and
+minhash_jaccard — run the jar's read UDFs (no Python stage) when
+``jvm_udaf.resolve_engine(<active session>, "auto")`` is "jvm_udaf", and
+their pandas twins otherwise; ``register_sql`` registers their SQL names on
+the same route.  Every other function here is a pandas UDF, including the
+aggregates and the probes cm_query / bloom_contains, whose probe hash
+depends on the probe's SQL type (jvm_udaf.cm_query_col /
+bloom_contains_col read in the JVM from a DataFrame).
+
 NULL contract matches hyperloglog_counter.c:218-220/633-645: NULL inputs are
 skipped, an all-NULL group yields NULL, merging NULL with a sketch returns
 the sketch, and hll_estimate_bigint coalesces NULL→0.
@@ -37,6 +48,7 @@ import operator as _operator
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BinaryType, BooleanType, DoubleType, IntegerType, LongType, StringType
@@ -92,24 +104,21 @@ def build_sketch(s: pd.Series, b: int = DEFAULT_B, binbits: int = DEFAULT_BINBIT
 # ---------------------------------------------------------------------------
 
 
-@pandas_udf(DoubleType())
-def hll_estimate(sketch: pd.Series) -> pd.Series:
-    """# operator / hyperloglog_get_estimate: NULL in → NULL out.
+def _pandas_twin(f):
+    """DoubleType pandas UDF of a routed reader, named like the public
+    reader (``_hll_estimate`` → ``hll_estimate``) so both routes name their
+    result columns alike."""
+    f.__name__ = f.__name__.lstrip("_")
+    return pandas_udf(DoubleType())(f)
 
-    Batched via core.hll.estimate_blobs — sparse rows estimate from the
+
+@_pandas_twin
+def _hll_estimate(sketch: pd.Series) -> pd.Series:
+    """Batched via core.hll.estimate_blobs — sparse rows estimate from the
     header alone (same arithmetic, evaluated once per distinct entry
     count), so a 10^5-row stored-rollup read does a handful of ``log``
     calls instead of 10^5 payload decodes."""
     return pd.Series(hllmod.estimate_blobs(sketch), index=sketch.index, dtype="object")
-
-
-@pandas_udf(LongType())
-def hll_estimate_bigint(sketch: pd.Series) -> pd.Series:
-    """round(estimate)::bigint with NULL→0 (postgres.sql:169-171)."""
-    ests = hllmod.estimate_blobs(sketch)
-    return pd.Series(
-        [0 if e is None else int(round(e)) for e in ests], index=sketch.index, dtype="int64"
-    )
 
 
 def _pairwise(a: pd.Series, b: pd.Series, fn, null_passthrough: bool = True):
@@ -136,37 +145,37 @@ def hll_union(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(_pairwise(a, b, f))
 
 
-@pandas_udf(DoubleType())
-def hll_union_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
+@_pandas_twin
+def _hll_union_estimate(a: pd.Series, b: pd.Series) -> pd.Series:
     # Pairwise object path ON PURPOSE: a whole-batch vectorized kernel
     # (composite-key searchsorted over the concatenated sparse encodings)
     # was A/B'd and REJECTED this round — wall parity at the bench shape
     # and up to 4× more CPU at ~400-entry sparse pairs, where the global
     # searchsorted loses cache locality that the per-row small-array ops
     # keep.  The batched win that IS real is the single-column header-only
-    # estimate (hll_estimate above).
+    # estimate (_hll_estimate above).
     def f(x, y):
         return x.estimate() if y is None else hllmod.union_estimate(x, y)
     return pd.Series(_pairwise(a, b, f), dtype="float64")
 
 
-@pandas_udf(DoubleType())
-def hll_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
+@_pandas_twin
+def _hll_intersection(a: pd.Series, b: pd.Series) -> pd.Series:
     def f(x, y):
         return 0.0 if y is None else hllmod.intersection_estimate(x, y)
     return pd.Series(_pairwise(a, b, f), dtype="float64")
 
 
-@pandas_udf(DoubleType())
-def hll_compliment(a: pd.Series, b: pd.Series) -> pd.Series:
+@_pandas_twin
+def _hll_compliment(a: pd.Series, b: pd.Series) -> pd.Series:
     # [sic] — the reference spells complement this way (postgres.sql:143-145)
     def f(x, y):
         return 0.0 if y is None else hllmod.compliment_estimate(x, y)
     return pd.Series(_pairwise(a, b, f), dtype="float64")
 
 
-@pandas_udf(DoubleType())
-def hll_symmetric_diff(a: pd.Series, b: pd.Series) -> pd.Series:
+@_pandas_twin
+def _hll_symmetric_diff(a: pd.Series, b: pd.Series) -> pd.Series:
     def f(x, y):
         return 0.0 if y is None else hllmod.symmetric_diff_estimate(x, y)
     return pd.Series(_pairwise(a, b, f), dtype="float64")
@@ -412,44 +421,37 @@ def make_sketch_agg(
 hll_sketch_agg = make_sketch_agg()
 
 
-@pandas_udf(BinaryType())
-def hll_merge_agg(sketches: pd.Series) -> bytes:
-    """hyperloglog_merge aggregate over a stored sketch column."""
-    acc: HLL | None = None
-    for v in sketches:
-        if v is None:
-            continue
-        s = HLL.from_bytes(bytes(v))
-        acc = s if acc is None else acc.merge(s)
-    return None if acc is None else acc.to_bytes()
-
-
 # ---------------------------------------------------------------------------
 # sibling-sketch SQL surface: GROUPED_AGG builders + scalar query functions
 # ---------------------------------------------------------------------------
 
 
 def make_generic_sketch_agg(factory, value_based: bool = False, input_type: str = "auto"):
-    """GROUPED_AGG UDAF for any Sketch-protocol class.
+    """GROUPED_AGG UDAF for any Sketch-protocol class; an all-NULL group
+    yields SQL NULL, like hll_sketch_agg.
 
     ``value_based``: t-digest/KLL consume raw numeric values; the hash-based
     sketches (count-min, bloom, minhash) consume hash_series output."""
 
     @pandas_udf(BinaryType())
     def _agg(v: pd.Series) -> bytes:
-        sk = factory()
         vv = v.dropna()
-        if len(vv):
-            if value_based:
-                sk.update_values(vv.to_numpy(dtype="float64"))
-            else:
-                sk.add_hashes(hash_series(vv, input_type))
+        if not len(vv):
+            return None
+        sk = factory()
+        if value_based:
+            sk.update_values(vv.to_numpy(dtype="float64"))
+        else:
+            sk.add_hashes(hash_series(vv, input_type))
         return sk.to_bytes()
 
     return _agg
 
 
 def make_generic_merge_agg(cls):
+    """hyperloglog_merge-style GROUPED_AGG over a stored ``cls`` column:
+    NULLs skipped, an all-NULL group yields SQL NULL."""
+
     @pandas_udf(BinaryType())
     def _merge(sketches: pd.Series) -> bytes:
         acc = None
@@ -461,6 +463,9 @@ def make_generic_merge_agg(cls):
         return None if acc is None else acc.to_bytes()
 
     return _merge
+
+
+hll_merge_agg = make_generic_merge_agg(HLL)
 
 
 def _probe_hashes(values: pd.Series, hash_kind: int) -> np.ndarray:
@@ -513,8 +518,8 @@ def bloom_contains(sketch: pd.Series, value: pd.Series) -> pd.Series:
     ).astype("boolean")
 
 
-@pandas_udf(DoubleType())
-def tdigest_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
+@_pandas_twin
+def _tdigest_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
     from .sketches import TDigest
 
     return pd.Series(
@@ -523,8 +528,8 @@ def tdigest_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(DoubleType())
-def tdigest_rank(sketch: pd.Series, x: pd.Series) -> pd.Series:
+@_pandas_twin
+def _tdigest_rank(sketch: pd.Series, x: pd.Series) -> pd.Series:
     from .sketches import TDigest
 
     return pd.Series(
@@ -533,8 +538,8 @@ def tdigest_rank(sketch: pd.Series, x: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(DoubleType())
-def kll_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
+@_pandas_twin
+def _kll_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
     from .sketches import KLL
 
     return pd.Series(
@@ -543,8 +548,8 @@ def kll_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
     )
 
 
-@pandas_udf(DoubleType())
-def minhash_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
+@_pandas_twin
+def _minhash_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
     from .sketches import MinHash
 
     out = []
@@ -556,16 +561,150 @@ def minhash_jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
+# ---------------------------------------------------------------------------
+# stored-sketch readers with a jar twin: one public surface, two routes
+# ---------------------------------------------------------------------------
+
+# reader name (public function and SQL name) -> its jar-free pandas twin
+_PANDAS_READERS = {
+    "hll_estimate": _hll_estimate,
+    "hll_union_estimate": _hll_union_estimate,
+    "hll_intersection": _hll_intersection,
+    "hll_compliment": _hll_compliment,
+    "hll_symmetric_diff": _hll_symmetric_diff,
+    "tdigest_quantile": _tdigest_quantile,
+    "tdigest_rank": _tdigest_rank,
+    "kll_quantile": _kll_quantile,
+    "minhash_jaccard": _minhash_jaccard,
+}
+
+# SQL twin of _round_bigint over the registered hll_estimate
+_ESTIMATE_BIGINT_SQL = (
+    "CREATE OR REPLACE TEMPORARY FUNCTION hll_estimate_bigint(sketch BINARY) RETURNS BIGINT "
+    "RETURN coalesce(CAST(bround(hll_estimate(sketch)) AS BIGINT), 0)"
+)
+
+
+def _read(name: str, *cols) -> Column:
+    """Reader ``name`` over ``cols``: the jar's read UDF when the jar loads
+    in the active session (``jvm_udaf.resolve_engine(spark, "auto")``, as
+    ``agg.sketch`` routes), else its pandas twin."""
+    from . import jvm_udaf
+
+    spark = SparkSession.active()
+    if jvm_udaf.resolve_engine(spark, "auto") == "jvm_udaf":
+        return jvm_udaf._read_udf_apply(spark, name, cols)
+    return _PANDAS_READERS[name](*cols)
+
+
+def _num(v) -> Column:
+    """A probe argument (q, x) as a double column; numbers become literals."""
+    if isinstance(v, (int, float)):
+        v = F.lit(float(v))
+    elif isinstance(v, str):
+        v = F.col(v)
+    return v.cast("double")
+
+
+def _round_bigint(est: Column) -> Column:
+    """hyperloglog_get_estimate_bigint's rounding (postgres.sql:169-171):
+    half-even like Python's round, NULL → 0."""
+    return F.coalesce(F.bround(est).cast("long"), F.lit(0))
+
+
+def hll_estimate(sketch: Column | str) -> Column:
+    """``#`` / hyperloglog_get_estimate (postgres.sql:112-114) of stored
+    canonical counters: NULL in → NULL out.
+
+    Both routes decode every canonical v1/v2 payload form (raw/group-varint
+    sparse, raw/bit-packed/deflated dense) and estimate a sparse counter
+    from its header's entry count alone.  The jar's estimates equal
+    ``HLL.from_bytes(v).estimate()`` bit for bit except in the
+    linear-counting regimes, where the JVM's StrictMath.log (fdlibm, chosen
+    for bit-reproducibility across JIT tiers and platforms) may differ from
+    CPython's libm by at most 1 ulp (tests/test_jvm_estimate.py).  Only
+    canonical hllspark counters are read: the reference's legacy wire blobs
+    fail loudly on both routes and go through ``hll_update`` first, as in
+    the reference (test/sql/update.sql)."""
+    return _read("hll_estimate", sketch)
+
+
+def hll_estimate_bigint(sketch: Column | str) -> Column:
+    """round(hll_estimate)::bigint with NULL → 0 (postgres.sql:169-171)."""
+    return _round_bigint(hll_estimate(sketch))
+
+
+def hll_union_estimate(a: Column | str, b: Column | str) -> Column:
+    """est(A∪B) of two stored counter columns (hyperloglog_union,
+    postgres.sql:131-136).  One NULL operand → the estimate of the other,
+    both NULL → NULL.  Operands with other (b, binbits) or hash kinds
+    refuse loudly, like the merge aggregates.  Estimate parity between the
+    routes as hll_estimate."""
+    return _read("hll_union_estimate", a, b)
+
+
+def hll_intersection(a: Column | str, b: Column | str) -> Column:
+    """est(A) + est(B) − est(A∪B) (hyperloglog_counter.c:1089-1113); the
+    jar replays core.hll.intersection_estimate's operation order.  One NULL
+    operand → 0.0 (the empty set), both NULL → NULL."""
+    return _read("hll_intersection", a, b)
+
+
+def hll_compliment(a: Column | str, b: Column | str) -> Column:
+    """est(A∪B) − est(B), in the reference's spelling
+    (hyperloglog_counter.c:1115-1152); NULL contract as hll_intersection."""
+    return _read("hll_compliment", a, b)
+
+
+def hll_symmetric_diff(a: Column | str, b: Column | str) -> Column:
+    """2·est(A∪B) − est(A) − est(B) (hyperloglog_counter.c:1154-1193);
+    NULL contract as hll_intersection."""
+    return _read("hll_symmetric_diff", a, b)
+
+
+def tdigest_quantile(sketch: Column | str, q: Column | str | float) -> Column:
+    """Value at quantile ``q`` of stored t-digests.  The routes agree bit
+    for bit (sequential cumsum, searchsorted-left and the same
+    interpolation order; no transcendental calls).  A NULL sketch, a NULL
+    ``q`` or an empty digest → NULL."""
+    return _read("tdigest_quantile", sketch, _num(q))
+
+
+def tdigest_rank(sketch: Column | str, x: Column | str | float) -> Column:
+    """Approximate CDF at ``x`` of stored t-digests (np.interp over the
+    centroid centers, replayed bit for bit by the jar); NULL contract as
+    tdigest_quantile."""
+    return _read("tdigest_rank", sketch, _num(x))
+
+
+def kll_quantile(sketch: Column | str, q: Column | str | float) -> Column:
+    """Value at quantile ``q`` of stored KLL sketches (stable weighted sort
+    + searchsorted-left item selection, bit for bit on both routes); NULL
+    contract as tdigest_quantile."""
+    return _read("kll_quantile", sketch, _num(q))
+
+
+def minhash_jaccard(a: Column | str, b: Column | str) -> Column:
+    """Jaccard estimate of two stored MinHash signature columns; signatures
+    of other k or hash kinds refuse on both routes.  A NULL operand → NULL."""
+    return _read("minhash_jaccard", a, b)
+
+
 def register_sql(spark, b: int = DEFAULT_B, binbits: int = DEFAULT_BINBITS) -> None:
-    """Register the surface for use from spark.sql(...)."""
+    """Register the surface for use from spark.sql(...).  The readers of
+    _PANDAS_READERS are registered on the same route their functions take:
+    the jar's read UDFs when the jar loads, else the pandas twins."""
+    from . import jvm_udaf
     from .sketches import KLL, Bloom, CountMin, MinHash, TDigest
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("hll_estimate_bigint", hll_estimate_bigint)
+
+    jar = jvm_udaf.resolve_engine(spark, "auto") == "jvm_udaf"
+    for name, pd_reader in _PANDAS_READERS.items():
+        if jar:
+            spark._jsparkSession.udf().register(name, jvm_udaf._read_udf(spark, name))
+        else:
+            spark.udf.register(name, pd_reader)
+    spark.sql(_ESTIMATE_BIGINT_SQL)
     spark.udf.register("hll_union", hll_union)
-    spark.udf.register("hll_union_estimate", hll_union_estimate)
-    spark.udf.register("hll_intersection", hll_intersection)
-    spark.udf.register("hll_compliment", hll_compliment)
-    spark.udf.register("hll_symmetric_diff", hll_symmetric_diff)
     spark.udf.register("hll_equal", hll_equal)
     # estimate-comparison operators > < >= <= (each side: counter OR number)
     spark.udf.register("hll_gt", hll_gt)
@@ -591,14 +730,10 @@ def register_sql(spark, b: int = DEFAULT_B, binbits: int = DEFAULT_BINBITS) -> N
     spark.udf.register("bloom_contains", bloom_contains)
     spark.udf.register("tdigest_agg", make_generic_sketch_agg(lambda: TDigest.create(delta=100), value_based=True))
     spark.udf.register("tdigest_merge_agg", make_generic_merge_agg(TDigest))
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("tdigest_rank", tdigest_rank)
     spark.udf.register("kll_agg", make_generic_sketch_agg(lambda: KLL.create(k=200), value_based=True))
     spark.udf.register("kll_merge_agg", make_generic_merge_agg(KLL))
-    spark.udf.register("kll_quantile", kll_quantile)
     spark.udf.register("minhash_agg", make_generic_sketch_agg(lambda: MinHash.create(k=256)))
     spark.udf.register("minhash_merge_agg", make_generic_merge_agg(MinHash))
-    spark.udf.register("minhash_jaccard", minhash_jaccard)
     # theta (KMV) sketch: bounded-error set operations (see sketches/theta.py)
     from .sketches import Theta
 

@@ -23,6 +23,15 @@ and MinHash results leave the JVM with no Python stage, and
 t-digest / KLL exact-mode fold still finishes in Python
 (``_td_blob_to_bytes`` / ``_kll_blob_to_bytes``).
 
+The jar's per-row readers of stored sketches (HllUdfs factories, table
+``_READ_UDFS``) have one public surface: ``functions.hll_estimate``,
+``tdigest_quantile`` and the other routed readers run them when the jar
+loads, and ``functions.register_sql`` registers them under the same SQL
+names.  Four explicit helpers stay here: ``hll_estimate_col`` and
+``hll_union_estimate_col``, and the probes ``cm_query_col`` /
+``bloom_contains_col``, which hash the probe by its DataFrame column's SQL
+type (``agg.jvm_hash_expr``) — something a SQL call site cannot see.
+
 Availability: the session needs the jar on the driver classpath —
 ``configure_builder`` (session creation, preferred) or the best-effort
 runtime ``ADD JAR`` + shared-classloader reflection fallback.  The jar
@@ -332,57 +341,60 @@ def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int)
     return _to_col(judf.apply(_col_seq(spark, [hash_col])))
 
 
-def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
-    """Per-row estimate of STORED canonical counters in the JVM
-    (HllSketchEstimateUdf) — the ``hyperloglog_get_estimate`` / ``#`` read
-    path over sketch rollup tables (reference postgres.sql:112-114) with no
-    pandas decode per row: decodes every v1/v2 canonical payload form
-    (raw/group-varint sparse, raw/bit-packed/deflated dense, via the same
-    Java decoder the blob-merge aggregator uses; a sparse counter
-    estimates from its header's entry count alone, like
-    ``core.hll.estimate_blobs``) and estimates with the in-JVM estimator.
-    Estimates match ``HLL.from_bytes(v).estimate()`` bit-for-bit except in
-    the linear-counting regimes, where the JVM's StrictMath.log (fdlibm —
-    chosen for bit-reproducibility across JIT tiers/platforms) can differ
-    from the platform libm CPython uses by at most 1 ulp (~1e-16 relative;
-    the 10-decimal goldens and the micro-unit contract compare are
-    unaffected; tests/test_jvm_estimate.py pins both regimes across modes,
-    precisions and chain rows).
-
-    EXPLICIT-engine semantics: raises RuntimeError when the jar isn't
-    loadable, like the other jvm_udaf entry points.  Scope contract — identical to the pandas reader's: CANONICAL
-    hllspark counters only; the Postgres reference's own legacy wire blobs
-    (PGLZ dense, core/legacy.py) fail loudly in BOTH paths and must go
-    through ``hll_update`` first, exactly as in the reference
-    (test/sql/update.sql workflow).  ``functions.hll_estimate`` remains the
-    jar-free default; this is the faster all-JVM read for sketch rollup
-    tables."""
-    return _read_udf_apply(
-        spark, "sketchEstimate", "HllSketchEstimateUdf", "functions.hll_estimate",
-        [_as_col(sketch_col)],
-    )
+# reader name -> (HllUdfs factory method, the Java UDF it wraps)
+_READ_UDFS = {
+    "hll_estimate": ("sketchEstimate", "HllSketchEstimateUdf"),
+    "hll_union_estimate": ("unionEstimate", "HllSetOpUdfs.UnionEstimate"),
+    "hll_intersection": ("intersectionEstimate", "HllSetOpUdfs.IntersectionEstimate"),
+    "hll_compliment": ("complimentEstimate", "HllSetOpUdfs.ComplimentEstimate"),
+    "hll_symmetric_diff": ("symmetricDiffEstimate", "HllSetOpUdfs.SymmetricDiffEstimate"),
+    "tdigest_quantile": ("tdigestQuantile", "SketchReadUdfs.TDigestQuantile"),
+    "tdigest_rank": ("tdigestRank", "SketchReadUdfs.TDigestRank"),
+    "kll_quantile": ("kllQuantile", "SketchReadUdfs.KllQuantile"),
+    "minhash_jaccard": ("minhashJaccard", "SketchReadUdfs.MinHashJaccard"),
+    "cm_query": ("cmQuery", "SketchReadUdfs.CountMinQuery"),
+    "bloom_contains": ("bloomContains", "SketchReadUdfs.BloomContains"),
+}
 
 
-def _as_col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
-
-
-def _read_udf_apply(spark: SparkSession, method: str, klass: str, fallback: str, cols) -> Column:
-    """Bind one of HllUdfs' scalar read-UDF factories (once per app) and
-    apply it.  Overload selection happens in Java (HllUdfs): py4j calling
+def _read_udf(spark: SparkSession, name: str):
+    """The JVM UserDefinedFunction of reader ``name``, bound once per app.
+    Overload selection happens in Java (HllUdfs): py4j calling
     functions.udf(obj, dt) directly can bind the deprecated untyped-Scala
     overload, which Spark 4 rejects (UNTYPED_SCALA_UDF).
 
-    EXPLICIT-engine semantics shared by every per-row read entry point:
-    RuntimeError when the jar isn't loadable, naming the pandas reader."""
+    Raises RuntimeError when the jar isn't loadable, naming the pandas
+    reader."""
+    method, klass = _READ_UDFS[name]
     if not available(spark):
         raise RuntimeError(
             f"hllspark-udaf.jar with {klass} not loadable in this session; "
             "create the session with hllspark.jvm_udaf.configure_builder "
-            f"or use hllspark.{fallback} (pandas)"
+            f"or use hllspark.functions.{name}, which runs its pandas twin without the jar"
         )
-    ju = _cached_udf(spark, (method,), lambda: getattr(_new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []), method)())
-    return _to_col(ju.apply(_col_seq(spark, cols)))
+    return _cached_udf(
+        spark, (method,), lambda: getattr(_new_jvm_obj(spark, "hllsparkjvm.HllUdfs", []), method)().withName(name)
+    )
+
+
+def _read_udf_apply(spark: SparkSession, name: str, cols) -> Column:
+    return _to_col(_read_udf(spark, name).apply(_col_seq(spark, cols)))
+
+
+def hll_estimate_col(spark: SparkSession, sketch_col: Column | str) -> Column:
+    """Per-row in-JVM estimate of STORED canonical counters
+    (HllSketchEstimateUdf): ``functions.hll_estimate``'s jar route, which
+    documents the parity and NULL contracts.  Raises RuntimeError when the
+    jar isn't loadable; ``functions.hll_estimate`` picks the route itself."""
+    return _read_udf_apply(spark, "hll_estimate", [sketch_col])
+
+
+def hll_union_estimate_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
+    """Per-row in-JVM est(A∪B) of two STORED counter columns
+    (HllSetOpUdfs.UnionEstimate): ``functions.hll_union_estimate``'s jar
+    route, which documents the parity and NULL contracts.  Raises
+    RuntimeError when the jar isn't loadable."""
+    return _read_udf_apply(spark, "hll_union_estimate", [a, b])
 
 
 def cm_query_col(spark: SparkSession, df, sketch_col: Column | str, value_col: str) -> Column:
@@ -396,13 +408,11 @@ def cm_query_col(spark: SparkSession, df, sketch_col: Column | str, value_col: s
     sketches ONLY — murmur-built sketches are refused loudly in the task,
     because an xxhash64 probe would silently miss their cells.
     ``functions.cm_query`` remains the universal reader (it re-hashes the
-    probe in whatever domain the sketch header declares)."""
+    probe in whatever domain the sketch header declares).  Raises
+    RuntimeError when the jar isn't loadable."""
     from . import agg as _agg
 
-    return _read_udf_apply(
-        spark, "cmQuery", "SketchReadUdfs.CountMinQuery", "functions.cm_query",
-        [_as_col(sketch_col), _agg.jvm_hash_expr(df, value_col)],
-    )
+    return _read_udf_apply(spark, "cm_query", [sketch_col, _agg.jvm_hash_expr(df, value_col)])
 
 
 def bloom_contains_col(spark: SparkSession, df, sketch_col: Column | str, value_col: str) -> Column:
@@ -411,147 +421,7 @@ def bloom_contains_col(spark: SparkSession, df, sketch_col: Column | str, value_
     contract as cm_query_col; bit parity with functions.bloom_contains."""
     from . import agg as _agg
 
-    return _read_udf_apply(
-        spark, "bloomContains", "SketchReadUdfs.BloomContains", "functions.bloom_contains",
-        [_as_col(sketch_col), _agg.jvm_hash_expr(df, value_col)],
-    )
-
-
-def tdigest_quantile_col(spark: SparkSession, sketch_col: Column | str, q: Column | float) -> Column:
-    """Per-row t-digest quantile over STORED canonical digests in the JVM
-    (SketchReadUdfs.TDigestQuantile) — replicates functions.tdigest_quantile
-    bit-exactly (sequential cumsum + searchsorted-left + the same
-    interpolation operation order; no transcendental calls)."""
-    qc = q if isinstance(q, Column) else F.lit(float(q))
-    return _read_udf_apply(
-        spark, "tdigestQuantile", "SketchReadUdfs.TDigestQuantile", "functions.tdigest_quantile",
-        [_as_col(sketch_col), qc.cast("double")],
-    )
-
-
-def tdigest_rank_col(spark: SparkSession, sketch_col: Column | str, x: Column | float) -> Column:
-    """Per-row approximate CDF over STORED canonical digests in the JVM
-    (SketchReadUdfs.TDigestRank) — replicates functions.tdigest_rank's
-    np.interp formula bit-exactly."""
-    xc = x if isinstance(x, Column) else F.lit(float(x))
-    return _read_udf_apply(
-        spark, "tdigestRank", "SketchReadUdfs.TDigestRank", "functions.tdigest_rank",
-        [_as_col(sketch_col), xc.cast("double")],
-    )
-
-
-def kll_quantile_col(spark: SparkSession, sketch_col: Column | str, q: Column | float) -> Column:
-    """Per-row KLL quantile over STORED canonical sketches in the JVM
-    (SketchReadUdfs.KllQuantile) — replicates functions.kll_quantile
-    (stable weighted sort + searchsorted-left item selection) bit-exactly."""
-    qc = q if isinstance(q, Column) else F.lit(float(q))
-    return _read_udf_apply(
-        spark, "kllQuantile", "SketchReadUdfs.KllQuantile", "functions.kll_quantile",
-        [_as_col(sketch_col), qc.cast("double")],
-    )
-
-
-def minhash_jaccard_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
-    """Per-row jaccard between two STORED minhash signature columns in the
-    JVM (SketchReadUdfs.MinHashJaccard) — bit parity with
-    functions.minhash_jaccard, including the k / hash-kind refusals."""
-    return _read_udf_apply(
-        spark, "minhashJaccard", "SketchReadUdfs.MinHashJaccard", "functions.minhash_jaccard",
-        [_as_col(a), _as_col(b)],
-    )
-
-
-def hll_union_estimate_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
-    """Per-row union estimate est(A∪B) of two STORED counter columns in the
-    JVM (HllSetOpUdfs.UnionEstimate) — the ``hyperloglog_union`` read path
-    (reference postgres.sql:131-136) over sketch rollup tables without a
-    pandas decode per row.  Decode/merge reuse HllMergeAggregator.mergeBlob,
-    so every canonical v1/v2 payload form is accepted and parameter- or
-    hash-kind-mismatched operands refuse loudly, exactly like the merge
-    aggregator.  Estimate parity contract as hll_estimate_col (StrictMath
-    ≤1 ulp in the linear-counting regimes only).  NULL contract matches
-    functions.hll_union_estimate: one NULL operand → estimate of the other,
-    both NULL → NULL."""
-    return _read_udf_apply(
-        spark, "unionEstimate", "HllSetOpUdfs.UnionEstimate", "functions.hll_union_estimate",
-        [_as_col(a), _as_col(b)],
-    )
-
-
-def hll_intersection_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
-    """Per-row inclusion–exclusion intersection estimate
-    est(A) + est(B) − est(A∪B) in the JVM (HllSetOpUdfs.IntersectionEstimate;
-    reference hyperloglog_counter.c:1089-1113) — same decode/parity/refusal
-    contract as hll_union_estimate_col; the double arithmetic replays
-    core.hll.intersection_estimate's operation order exactly.  NULL contract
-    matches functions.hll_intersection: one NULL operand → 0.0 (empty set),
-    both NULL → NULL."""
-    return _read_udf_apply(
-        spark, "intersectionEstimate", "HllSetOpUdfs.IntersectionEstimate",
-        "functions.hll_intersection", [_as_col(a), _as_col(b)],
-    )
-
-
-def hll_compliment_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
-    """Per-row difference estimate est(A∪B) − est(B) in the JVM
-    (HllSetOpUdfs.ComplimentEstimate; reference spelling,
-    hyperloglog_counter.c:1115-1152) — contract as hll_intersection_col."""
-    return _read_udf_apply(
-        spark, "complimentEstimate", "HllSetOpUdfs.ComplimentEstimate",
-        "functions.hll_compliment", [_as_col(a), _as_col(b)],
-    )
-
-
-def hll_symmetric_diff_col(spark: SparkSession, a: Column | str, b: Column | str) -> Column:
-    """Per-row symmetric-difference estimate 2·est(A∪B) − est(A) − est(B) in
-    the JVM (HllSetOpUdfs.SymmetricDiffEstimate; reference
-    hyperloglog_counter.c:1154-1193) — contract as hll_intersection_col."""
-    return _read_udf_apply(
-        spark, "symmetricDiffEstimate", "HllSetOpUdfs.SymmetricDiffEstimate",
-        "functions.hll_symmetric_diff", [_as_col(a), _as_col(b)],
-    )
-
-
-def register_sql_jvm(spark: SparkSession) -> None:
-    """Register the sketch-argument read UDFs for spark.sql(...) as
-    ``*_jvm`` names next to functions.register_sql's pandas surface:
-    hll_estimate_jvm, tdigest_quantile_jvm, tdigest_rank_jvm,
-    kll_quantile_jvm, minhash_jaccard_jvm, and the pairwise set-operation
-    estimates hll_union_estimate_jvm / hll_intersection_jvm /
-    hll_compliment_jvm / hll_symmetric_diff_jvm.
-
-    The PROBING readers (count-min point query, bloom membership) are
-    deliberately NOT SQL-registered: their probe argument must be hashed
-    with jvm_hash_expr's TYPE-dependent canonicalization, which a raw SQL
-    call site can't see — use cm_query_col / bloom_contains_col from
-    Python, or the SQL-registered pandas cm_query / bloom_contains, which
-    re-hash the probe safely from the sketch header.
-
-    EXPLICIT-engine semantics: RuntimeError when the jar isn't resolvable
-    by the driver's class loader (spark.jars / --jars; the runtime ADD JAR
-    fallback can't serve registerJavaFunction)."""
-    from pyspark.sql.types import DoubleType
-
-    names = {
-        "hll_estimate_jvm": "hllsparkjvm.HllSketchEstimateUdf",
-        "tdigest_quantile_jvm": "hllsparkjvm.SketchReadUdfs$TDigestQuantile",
-        "tdigest_rank_jvm": "hllsparkjvm.SketchReadUdfs$TDigestRank",
-        "kll_quantile_jvm": "hllsparkjvm.SketchReadUdfs$KllQuantile",
-        "minhash_jaccard_jvm": "hllsparkjvm.SketchReadUdfs$MinHashJaccard",
-        "hll_union_estimate_jvm": "hllsparkjvm.HllSetOpUdfs$UnionEstimate",
-        "hll_intersection_jvm": "hllsparkjvm.HllSetOpUdfs$IntersectionEstimate",
-        "hll_compliment_jvm": "hllsparkjvm.HllSetOpUdfs$ComplimentEstimate",
-        "hll_symmetric_diff_jvm": "hllsparkjvm.HllSetOpUdfs$SymmetricDiffEstimate",
-    }
-    try:
-        for name, cls in names.items():
-            spark.udf.registerJavaFunction(name, cls, DoubleType())
-    except Exception:
-        raise RuntimeError(
-            "hllspark-udaf.jar classes not resolvable for SQL registration; "
-            "put the jar on spark.jars/--jars (hllspark.configure_session does) "
-            "or use functions.register_sql's pandas surface"
-        ) from None
+    return _read_udf_apply(spark, "bloom_contains", [sketch_col, _agg.jvm_hash_expr(df, value_col)])
 
 
 def _finish(
@@ -567,7 +437,9 @@ def _finish(
         raise ValueError(f"unknown finalize {finalize!r}")
     jcol = hll_estimate_col(spark, F.col("__blob"))
     if finalize == "estimate_bigint":
-        jcol = F.coalesce(F.bround(jcol).cast("long"), F.lit(0))
+        from .functions import _round_bigint
+
+        jcol = _round_bigint(jcol)
     return agged.select(*keep, jcol.alias(est_col))
 
 

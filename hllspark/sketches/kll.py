@@ -151,7 +151,9 @@ class KLL:
         return v[order], w[order]
 
     def quantile(self, q: float) -> float:
-        if self.total == 0:
+        # NaN q (SQL NULL reaches pandas UDFs as NaN) passes neither guard
+        # below and would select the largest item
+        if self.total == 0 or q != q:
             return float("nan")
         if q <= 0:
             return self.vmin

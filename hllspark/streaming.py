@@ -57,7 +57,7 @@ from pyspark.sql.types import (
 
 from . import agg, jvm_udaf
 from .core.hll import HLL
-from .functions import DEFAULT_B, DEFAULT_BINBITS, build_sketch, hll_estimate
+from .functions import DEFAULT_B, DEFAULT_BINBITS, _hll_estimate, build_sketch
 
 
 class SketchStream:
@@ -189,14 +189,14 @@ class SketchStream:
     def estimates(self, spark: SparkSession) -> DataFrame | None:
         """Per-key estimates (``by..., est double``) of the current state:
         one JVM merge-and-estimate aggregate when the jar loads, else the
-        merged state through the pandas ``hll_estimate``."""
+        merged state through the pandas estimate, so no jar code runs."""
         if jvm_udaf.resolve_engine(spark, "auto") == "jvm_udaf":
             rows = self._rows(spark)[1]
             return None if rows is None else jvm_udaf.hll_merge_udaf(rows, "sketch", self.by, finalize="estimate")
         st = self.state(spark)
         if st is None:
             return None
-        return st.select(*self.by, hll_estimate(F.col("sketch")).alias("est"))
+        return st.select(*self.by, _hll_estimate(F.col("sketch")).alias("est"))
 
 
 def running_distinct(

@@ -17,7 +17,9 @@ import org.apache.spark.sql.api.java.UDF2;
  * arithmetic is integer selection, exact power-of-two weight sums, or the
  * same double operation order (sequential cumsum, np.searchsorted
  * side='left', np.interp's slope formula), with no transcendental calls.
- * NULL in (either argument) → NULL out, SQL semantics.
+ * NULL in (either argument) → NULL out, SQL semantics.  An empty digest or
+ * a NaN probe gives NULL too, as on the pandas route, where Spark's Arrow
+ * conversion turns every NaN result into NULL.
  *
  * Hash-domain contract for the probing readers (count-min, bloom): the
  * probe hash argument must be computed with agg.jvm_hash_expr (Spark
@@ -201,10 +203,10 @@ public final class SketchReadUdfs {
       if (blob == null || qArg == null) return null;
       double q = ((Number) qArg).doubleValue(); // SQL literals arrive as BigDecimal
       Td td = Td.decode(blob);
-      if (td.total == 0) return Double.NaN;
+      if (td.total == 0) return null;
       if (q <= 0) return td.vmin;
       if (q >= 1) return td.vmax;
-      if (Double.isNaN(q)) return Double.NaN;
+      if (Double.isNaN(q)) return null;
       double target = q * td.total;
       double[] cum = td.centers();
       int idx = searchLeft(cum, target);
@@ -248,10 +250,10 @@ public final class SketchReadUdfs {
       if (blob == null || xArg == null) return null;
       double x = ((Number) xArg).doubleValue(); // SQL literals arrive as BigDecimal
       Td td = Td.decode(blob);
-      if (td.total == 0) return Double.NaN;
+      if (td.total == 0) return null;
       if (x <= td.vmin) return 0.0;
       if (x >= td.vmax) return 1.0;
-      if (Double.isNaN(x)) return Double.NaN;
+      if (Double.isNaN(x)) return null;
       double[] xp = td.means;
       double[] fp = td.centers();
       int n = xp.length;
@@ -328,10 +330,10 @@ public final class SketchReadUdfs {
       if (blob.length != off + 8 * nitems) {
         throw new IllegalArgumentException("kll payload size inconsistent with header");
       }
-      if (total == 0) return Double.NaN;
+      if (total == 0) return null;
       if (q <= 0) return vmin;
       if (q >= 1) return vmax;
-      if (Double.isNaN(q)) return Double.NaN;
+      if (Double.isNaN(q)) return null;
       double[] vals = new double[nitems];
       double[] wts = new double[nitems];
       int p = 0;

@@ -182,11 +182,12 @@ def sketch_est_spark(udaf_spark):
     return udaf_spark
 
 
-def test_sketch_estimate_col_payload_forms(sketch_est_spark):
-    """Per-row in-JVM estimate of STORED canonical counters matches the
-    pandas reader (functions.hll_estimate) across EVERY serialization the
-    library emits — raw + group-varint sparse, raw + bit-packed + deflated
-    dense — plus NULL→NULL and empty-counter→0.0."""
+def test_sketch_estimate_col_payload_forms(sketch_est_spark, monkeypatch):
+    """functions.hll_estimate on the jar route (= hll_estimate_col) matches
+    its pandas twin (the jar reported unloadable) within 1 ulp across EVERY
+    serialization the library emits — raw + group-varint sparse, raw +
+    bit-packed + deflated dense — plus NULL→NULL and empty-counter→0.0;
+    the pandas route equals HLL.estimate() exactly."""
     spark = sketch_est_spark
     df = spark.range(50_000).select((F.col("id") % 6).alias("g"), (F.col("id") * 13).alias("v"))
     # 6 groups of ~8.3k values: dense registers; plus small groups for sparse
@@ -201,14 +202,21 @@ def test_sketch_estimate_col_payload_forms(sketch_est_spark):
     blobs.append(HLL.create(b=14, binbits=6, hash_kind=HASH_XXHASH_SPARK).to_bytes())  # empty
     rows = [(i, bytearray(b)) for i, b in enumerate(blobs)] + [(len(blobs), None)]
     sdf = spark.createDataFrame(rows, "i int, sketch binary").repartition(3)
-    got = sdf.select("i", ju.hll_estimate_col(spark, F.col("sketch")).alias("jv")).collect()
     import hllspark.functions as hf
 
-    pv_rows = sdf.select("i", hf.hll_estimate(F.col("sketch")).alias("pv")).collect()
-    pv = {r["i"]: r["pv"] for r in pv_rows}
+    routed = hf.hll_estimate(F.col("sketch"))
+    with monkeypatch.context() as m:
+        m.setattr(ju, "available", lambda spark: False)
+        pandas = hf.hll_estimate(F.col("sketch"))
+    got = sdf.select(
+        "i", ju.hll_estimate_col(spark, F.col("sketch")).alias("jv"), routed.alias("fv"), pandas.alias("pv")
+    ).collect()
     assert len(got) == len(blobs) + 1
     for r in got:
-        assert _close1ulp(r["jv"], pv[r["i"]]), (r["i"], r["jv"], pv[r["i"]])
+        assert r["fv"] == r["jv"], (r["i"], r["fv"], r["jv"])
+        assert _close1ulp(r["jv"], r["pv"]), (r["i"], r["jv"], r["pv"])
+        if r["i"] < len(blobs):
+            assert r["pv"] == HLL.from_bytes(blobs[r["i"]]).estimate(), r["i"]
     by_i = {r["i"]: r["jv"] for r in got}
     assert by_i[len(blobs) - 1] == 0.0  # empty stored counter
     assert by_i[len(blobs)] is None  # SQL NULL sketch

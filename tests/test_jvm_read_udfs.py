@@ -1,8 +1,10 @@
 """Per-row in-JVM read UDFs over STORED sibling-sketch blobs
-(SketchReadUdfs): bit parity with the pandas readers (functions.cm_query /
-bloom_contains / tdigest_quantile / tdigest_rank / kll_quantile /
-minhash_jaccard), NULL propagation, the xxhash64 hash-domain refusal for
-the probing readers, and the all-JVM plan shape they exist for.
+(SketchReadUdfs, HllSetOpUdfs): the functions.* readers give bit-equal
+results on the jar route and on their pandas twins (the jar reported
+unloadable), the probes cm_query_col / bloom_contains_col match the pandas
+cm_query / bloom_contains; NULL propagation, the xxhash64 hash-domain
+refusal for the probing readers, the SQL names register_sql routes, and
+the all-JVM plan shape the jar route exists for.
 
 Unlike the HLL estimate (which takes a log), every reader here is integer
 selection, exact power-of-two sums, or the same double operation order —
@@ -23,6 +25,22 @@ def read_spark(spark):
     if not ju.available(spark):
         pytest.skip("hllspark-udaf.jar not loadable (no JDK?)")
     return spark
+
+
+def _routes(monkeypatch, reader, *args):
+    """(jar column, pandas column) of one functions.* reader call: the call
+    with the jar loaded, then the same call with the jar reported
+    unloadable (the route is picked when the column is built)."""
+    jar = reader(*args)
+    with monkeypatch.context() as m:
+        m.setattr(ju, "available", lambda spark: False)
+        py = reader(*args)
+    return jar, py
+
+
+def _python_nodes(q) -> bool:
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    return "ArrowEvalPython" in plan or "BatchEvalPython" in plan
 
 
 def _eq(a, b):
@@ -84,11 +102,11 @@ def test_bloom_contains_parity(read_spark):
     assert any(r["pv"] for r in rows) and any(not r["pv"] for r in rows)
 
 
-def test_quantile_rank_parity(read_spark):
-    """t-digest quantile/rank and KLL quantile bit-equal to the pandas
-    readers across a q sweep incl. the 0/1 extremes — covers both the
-    exact-capacity (small groups) and folded-digest (large groups) stored
-    shapes."""
+def test_quantile_rank_parity(read_spark, monkeypatch):
+    """functions.tdigest_quantile / tdigest_rank / kll_quantile bit-equal
+    on the jar and pandas routes across a q sweep incl. the 0/1 extremes —
+    covers both the exact-capacity (small groups) and folded-digest (large
+    groups) stored shapes."""
     import hllspark.functions as hf
 
     spark = read_spark
@@ -101,24 +119,14 @@ def test_quantile_rank_parity(read_spark):
     td = ju.tdigest_jvm_udaf(both, "x", ["g"], delta=100)
     kl = ju.kll_jvm_udaf(both, "x", ["g"], k=200)
     for q in [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]:
-        r1 = td.select(
-            ju.tdigest_quantile_col(spark, "sketch", q).alias("jv"),
-            hf.tdigest_quantile(F.col("sketch"), F.lit(float(q))).alias("pv"),
-        ).collect()
         x = q * 200 - 100
-        r2 = td.select(
-            ju.tdigest_rank_col(spark, "sketch", x).alias("jv"),
-            hf.tdigest_rank(F.col("sketch"), F.lit(float(x))).alias("pv"),
-        ).collect()
-        r3 = kl.select(
-            ju.kll_quantile_col(spark, "sketch", q).alias("jv"),
-            hf.kll_quantile(F.col("sketch"), F.lit(float(q))).alias("pv"),
-        ).collect()
-        for rows in (r1, r2, r3):
+        for sk, reader, arg in ((td, hf.tdigest_quantile, q), (td, hf.tdigest_rank, x), (kl, hf.kll_quantile, q)):
+            jv, pv = _routes(monkeypatch, reader, "sketch", arg)
+            rows = sk.select(jv.alias("jv"), pv.alias("pv")).collect()
             assert rows and all(_eq(r["jv"], r["pv"]) for r in rows), (q, rows)
 
 
-def test_minhash_jaccard_parity(read_spark):
+def test_minhash_jaccard_parity(read_spark, monkeypatch):
     import hllspark.functions as hf
 
     spark = read_spark
@@ -130,29 +138,50 @@ def test_minhash_jaccard_parity(read_spark):
     a = mh.select(F.col("g").alias("ga"), F.col("sketch").alias("sa"))
     b = mh.select(F.col("g").alias("gb"), F.col("sketch").alias("sb"))
     pairs = a.crossJoin(b).where(F.col("ga") < F.col("gb"))
-    rows = pairs.select(
-        ju.minhash_jaccard_col(spark, "sa", "sb").alias("jv"),
-        hf.minhash_jaccard(F.col("sa"), F.col("sb")).alias("pv"),
-    ).collect()
+    jv, pv = _routes(monkeypatch, hf.minhash_jaccard, "sa", "sb")
+    rows = pairs.select(jv.alias("jv"), pv.alias("pv")).collect()
     assert len(rows) == 15 and all(_eq(r["jv"], r["pv"]) for r in rows)
     assert any(r["pv"] > 0 for r in rows)
 
 
-def test_read_udfs_null_propagation(read_spark):
-    """NULL sketch or NULL probe/argument → SQL NULL from every reader."""
+def test_read_udfs_null_propagation(read_spark, monkeypatch):
+    """NULL sketch or NULL probe/argument → SQL NULL from every reader, on
+    both routes of the functions.* readers — including a NULL q / x over a
+    non-empty sketch, which reaches the pandas twin as NaN, and a quantile
+    or rank of an empty t-digest / KLL sketch."""
+    import hllspark.functions as hf
+    from hllspark.sketches import KLL, TDigest
+
     spark = read_spark
     df = spark.range(100).select(F.col("id").alias("v"))
     cm = ju.countmin_jvm_udaf(df, "v", width=64, depth=3).first()["sketch"]
-    rows = [(bytearray(cm), None), (None, 5), (None, None)]
-    pdf = spark.createDataFrame(rows, "sketch binary, v long")
-    got = pdf.select(
-        ju.cm_query_col(spark, pdf, "sketch", "v").alias("cm"),
-        ju.tdigest_quantile_col(spark, F.lit(None).cast("binary"), 0.5).alias("td"),
-        ju.kll_quantile_col(spark, F.lit(None).cast("binary"), 0.5).alias("kl"),
-        ju.minhash_jaccard_col(spark, F.lit(None).cast("binary"), F.lit(None).cast("binary")).alias("mh"),
-    ).collect()
+    td = ju.tdigest_jvm_udaf(df, "v").first()["sketch"]
+    kl = ju.kll_jvm_udaf(df, "v").first()["sketch"]
+    mh = ju.minhash_jvm_udaf(df, "v", k=64).first()["sketch"]
+    empty_td, empty_kl = TDigest.create(delta=100).to_bytes(), KLL.create(k=200).to_bytes()
+    rows = [
+        (bytearray(cm), bytearray(td), bytearray(kl), bytearray(mh), None),
+        (None, None, None, None, 5),
+        (None,) * 5,
+        (None, bytearray(empty_td), bytearray(empty_kl), None, 5),
+    ]
+    pdf = spark.createDataFrame(rows, "cm binary, td binary, kl binary, mh binary, v long")
+    nul = F.lit(None).cast("binary")
+    cols = [ju.cm_query_col(spark, pdf, "cm", "v")]
+    for reader, args in (
+        (hf.tdigest_quantile, ("td", F.col("v"))),
+        (hf.tdigest_rank, ("td", F.col("v"))),
+        (hf.kll_quantile, ("kl", F.col("v"))),
+        (hf.tdigest_quantile, (nul, F.lit(0.5))),
+        (hf.kll_quantile, (nul, F.lit(0.5))),
+        (hf.minhash_jaccard, ("mh", nul)),
+        (hf.minhash_jaccard, (nul, nul)),
+    ):
+        cols.extend(_routes(monkeypatch, reader, *args))
+    got = pdf.select(*[c.alias(f"c{i}") for i, c in enumerate(cols)]).collect()
+    assert len(got) == 4
     for r in got:
-        assert r["cm"] is None and r["td"] is None and r["kl"] is None and r["mh"] is None
+        assert all(v is None for v in r), r
 
 
 def test_probing_readers_refuse_murmur_domain(read_spark):
@@ -181,6 +210,8 @@ def test_probing_readers_refuse_murmur_domain(read_spark):
 
 def test_read_plan_is_all_jvm(read_spark, tmp_path):
     """Scan a stored rollup table → probe/quantile: no Python stage."""
+    import hllspark.functions as hf
+
     spark = read_spark
     df = spark.range(2_000).select((F.col("id") % 5).alias("g"), (F.col("id") % 97).alias("v"))
     ju.countmin_jvm_udaf(df, "v", ["g"], width=128, depth=4).write.parquet(str(tmp_path / "cm"))
@@ -190,42 +221,78 @@ def test_read_plan_is_all_jvm(read_spark, tmp_path):
     j = cm.join(probes, "g")
     q1 = j.select("g", ju.cm_query_col(spark, j, "sketch", "v").alias("freq"))
     td = spark.read.parquet(str(tmp_path / "td"))
-    q2 = td.select("g", ju.tdigest_quantile_col(spark, "sketch", 0.5).alias("p50"))
+    q2 = td.select("g", hf.tdigest_quantile("sketch", 0.5).alias("p50"))
     for q in (q1, q2):
         plan = q._jdf.queryExecution().executedPlan().toString()
         assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
         assert q.count() > 0
 
 
-def test_register_sql_jvm(read_spark):
-    """The *_jvm SQL names run the same Java UDFs: results equal the
-    registered pandas surface on the same stored sketches."""
+def test_register_sql_routes_readers_to_jar(read_spark, monkeypatch, tmp_path):
+    """register_sql registers the jar's read UDFs under the unprefixed SQL
+    names: with the jar, no routed name's plan has a Python evaluation
+    node, and the results equal register_sql's pandas registration (the
+    jar reported unloadable) — exactly, except the HLL estimates (≤1 ulp
+    for hll_estimate; the set operations within the 1e-9 relative bound of
+    test_setop_estimates_parity, whose inclusion–exclusion cancels)."""
+    from hllspark import agg
     from hllspark.functions import register_sql
 
     spark = read_spark
-    try:
-        ju.register_sql_jvm(spark)
-    except RuntimeError:
-        pytest.skip("jar not on driver classpath (ADD JAR session)")
-    register_sql(spark)
-    df = spark.range(5_000).select((F.col("id") % 3).alias("g"), (F.col("id") % 400).cast("double").alias("x"))
-    td = ju.tdigest_jvm_udaf(df, "x", ["g"])
-    td.createOrReplaceTempView("td_rollup")
-    rows = spark.sql(
-        "SELECT g, tdigest_quantile_jvm(sketch, 0.5) AS jv, tdigest_quantile(sketch, 0.5) AS pv, "
-        "tdigest_rank_jvm(sketch, 100.0) AS jr, tdigest_rank(sketch, 100.0) AS pr FROM td_rollup"
-    ).collect()
-    assert len(rows) == 3
-    for r in rows:
-        assert _eq(r["jv"], r["pv"]) and _eq(r["jr"], r["pr"])
+    ids = spark.range(6_000).select((F.col("id") % 3).alias("g"), "id")
+    # per group a different, overlapping value set: 100 / 200 / 300 values
+    df = ids.select("g", (F.col("id") % (F.lit(300) * (F.col("g") + 1))).cast("double").alias("x"))
+    parts = {
+        "hll": agg.sketch(df, "x", by=["g"]),
+        "td": ju.tdigest_jvm_udaf(df, "x", ["g"]),
+        "kl": ju.kll_jvm_udaf(df, "x", ["g"]),
+        "mh": ju.minhash_jvm_udaf(df, "x", ["g"], k=64),
+    }
+    rollup = None
+    for name, sk in parts.items():
+        sk = sk.select("g", F.col("sketch").alias(name))
+        rollup = sk if rollup is None else rollup.join(sk, "g")
+    rollup.write.parquet(str(tmp_path / "rollup"))
+    spark.read.parquet(str(tmp_path / "rollup")).createOrReplaceTempView("sql_rollup")
+    exprs = {
+        "hll_estimate": "hll_estimate(a.hll)",
+        "hll_estimate_bigint": "hll_estimate_bigint(a.hll)",
+        "hll_union_estimate": "hll_union_estimate(a.hll, b.hll)",
+        "hll_intersection": "hll_intersection(a.hll, b.hll)",
+        "hll_compliment": "hll_compliment(a.hll, b.hll)",
+        "hll_symmetric_diff": "hll_symmetric_diff(a.hll, b.hll)",
+        "tdigest_quantile": "tdigest_quantile(a.td, 0.5)",
+        "tdigest_rank": "tdigest_rank(a.td, 100.0)",
+        "kll_quantile": "kll_quantile(a.kl, 0.5)",
+        "minhash_jaccard": "minhash_jaccard(a.mh, b.mh)",
+    }
 
-    hl = __import__("hllspark").agg.sketch(df, "x", by=["g"])
-    hl.createOrReplaceTempView("hll_rollup")
-    rows = spark.sql(
-        "SELECT hll_estimate_jvm(sketch) AS jv, hll_estimate(sketch) AS pv FROM hll_rollup"
-    ).collect()
-    for r in rows:
-        assert r["jv"] is not None and abs(r["jv"] - r["pv"]) <= 1e-9 * max(1.0, abs(r["pv"]))
+    def run():
+        out = {}
+        for name, expr in exprs.items():
+            q = spark.sql(f"SELECT a.g AS ga, b.g AS gb, {expr} AS v FROM sql_rollup a CROSS JOIN sql_rollup b")
+            out[name] = (_python_nodes(q), {(r["ga"], r["gb"]): r["v"] for r in q.collect()})
+        return out
+
+    register_sql(spark)
+    jar = run()
+    with monkeypatch.context() as m:
+        m.setattr(ju, "available", lambda spark: False)
+        register_sql(spark)
+        py = run()
+    register_sql(spark)  # later tests read the jar registration
+    for name in exprs:
+        (jar_python, jv), (py_python, pv) = jar[name], py[name]
+        assert not jar_python and py_python, name
+        assert len(jv) == 9 and jv.keys() == pv.keys(), name
+        for k, v in jv.items():
+            assert v is not None, (name, k)
+            if name == "hll_estimate":
+                assert abs(v - pv[k]) <= math.ulp(max(abs(v), abs(pv[k]))), (name, k, v, pv[k])
+            elif name.startswith("hll_") and name != "hll_estimate_bigint":
+                assert abs(v - pv[k]) <= 1e-9 * max(1.0, abs(pv[k])), (name, k, v, pv[k])
+            else:
+                assert _eq(v, pv[k]), (name, k, v, pv[k])
 
 
 @pytest.fixture(scope="module")
@@ -254,27 +321,25 @@ def _setop_rollup(spark):
     return a.crossJoin(b)
 
 
-def test_setop_estimates_parity(setop_spark):
-    """Union/intersection/compliment/symmetric-diff estimates match the
-    pandas set-operation UDFs on every operand-shape pair (the estimator's
-    documented ≤1-ulp linear-counting latitude; bit-exact elsewhere)."""
+def test_setop_estimates_parity(setop_spark, monkeypatch):
+    """functions.hll_union_estimate / intersection / compliment /
+    symmetric_diff match between the jar and pandas routes on every
+    operand-shape pair (the estimator's documented ≤1-ulp linear-counting
+    latitude; bit-exact elsewhere); the public hll_union_estimate_col is
+    the jar route's column."""
     import hllspark.functions as hf
 
     spark = setop_spark
     pairs = _setop_rollup(spark)
-    rows = pairs.select(
-        "sa", "sb",
-        ju.hll_union_estimate_col(spark, "ca", "cb").alias("ju"),
-        hf.hll_union_estimate(F.col("ca"), F.col("cb")).alias("pu"),
-        ju.hll_intersection_col(spark, "ca", "cb").alias("ji"),
-        hf.hll_intersection(F.col("ca"), F.col("cb")).alias("pi"),
-        ju.hll_compliment_col(spark, "ca", "cb").alias("jc"),
-        hf.hll_compliment(F.col("ca"), F.col("cb")).alias("pc"),
-        ju.hll_symmetric_diff_col(spark, "ca", "cb").alias("js"),
-        hf.hll_symmetric_diff(F.col("ca"), F.col("cb")).alias("ps"),
-    ).collect()
+    cols = []
+    for tag, reader in (("u", hf.hll_union_estimate), ("i", hf.hll_intersection),
+                        ("c", hf.hll_compliment), ("s", hf.hll_symmetric_diff)):
+        jv, pv = _routes(monkeypatch, reader, "ca", "cb")
+        cols += [jv.alias("j" + tag), pv.alias("p" + tag)]
+    rows = pairs.select("sa", "sb", ju.hll_union_estimate_col(spark, "ca", "cb").alias("uc"), *cols).collect()
     assert len(rows) == 9
     for r in rows:
+        assert r["uc"] == r["ju"]
         for jv, pv in ((r["ju"], r["pu"]), (r["ji"], r["pi"]), (r["jc"], r["pc"]), (r["js"], r["ps"])):
             assert jv is not None and pv is not None
             assert abs(jv - pv) <= 1e-9 * max(1.0, abs(pv)), r
@@ -285,10 +350,11 @@ def test_setop_estimates_parity(setop_spark):
         assert r["ji"] > 0 and abs(r["js"]) < 1e-6 and abs(r["jc"]) < 1e-6
 
 
-def test_setop_null_contract(setop_spark):
+def test_setop_null_contract(setop_spark, monkeypatch):
     """One NULL operand: union estimates the surviving side, the difference
-    forms give 0.0 (empty-set semantics); both NULL → SQL NULL — exactly
-    functions._pairwise(null_passthrough=True)."""
+    forms give 0.0 (empty-set semantics); both NULL → SQL NULL — on both
+    routes, exactly functions._pairwise(null_passthrough=True)."""
+    import hllspark.functions as hf
     from hllspark import agg
 
     spark = setop_spark
@@ -297,16 +363,16 @@ def test_setop_null_contract(setop_spark):
     pdf = spark.createDataFrame(
         [(bytearray(blob), None), (None, bytearray(blob)), (None, None)], "ca binary, cb binary"
     )
-    rows = pdf.select(
-        ju.hll_union_estimate_col(spark, "ca", "cb").alias("u"),
-        ju.hll_intersection_col(spark, "ca", "cb").alias("i"),
-        ju.hll_compliment_col(spark, "ca", "cb").alias("c"),
-        ju.hll_symmetric_diff_col(spark, "ca", "cb").alias("s"),
-    ).collect()
-    one_side = [r for r in rows[:2]]
-    for r in one_side:
-        assert r["u"] is not None and r["u"] > 400
-        assert r["i"] == 0.0 and r["c"] == 0.0 and r["s"] == 0.0
+    cols = []
+    for tag, reader in (("u", hf.hll_union_estimate), ("i", hf.hll_intersection),
+                        ("c", hf.hll_compliment), ("s", hf.hll_symmetric_diff)):
+        jv, pv = _routes(monkeypatch, reader, "ca", "cb")
+        cols += [jv.alias("j" + tag), pv.alias("p" + tag)]
+    rows = pdf.select(*cols).collect()
+    for route in "jp":
+        for r in rows[:2]:
+            assert r[route + "u"] is not None and r[route + "u"] > 400
+            assert r[route + "i"] == 0.0 and r[route + "c"] == 0.0 and r[route + "s"] == 0.0
     assert all(v is None for v in rows[2])
 
 
@@ -332,15 +398,18 @@ def test_setop_param_mismatch_is_loud(setop_spark):
 
 
 def test_setop_plan_is_all_jvm(setop_spark, tmp_path):
-    """Rollup-table scan → pairwise set-op estimates: no Python stage."""
+    """Rollup-table scan → pairwise set-op estimates through the routed
+    functions.* readers: no Python stage."""
+    import hllspark.functions as hf
+
     spark = setop_spark
     pairs = _setop_rollup(spark)
     pairs.write.parquet(str(tmp_path / "pairs"))
     stored = spark.read.parquet(str(tmp_path / "pairs"))
     q = stored.select(
         "sa", "sb",
-        ju.hll_union_estimate_col(spark, "ca", "cb").alias("u"),
-        ju.hll_symmetric_diff_col(spark, "ca", "cb").alias("s"),
+        hf.hll_union_estimate("ca", "cb").alias("u"),
+        hf.hll_symmetric_diff("ca", "cb").alias("s"),
     )
     plan = q._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
@@ -348,6 +417,18 @@ def test_setop_plan_is_all_jvm(setop_spark, tmp_path):
 
 
 def test_read_udfs_no_jar_is_loud(read_spark, monkeypatch):
+    """The explicit jar readers raise without the jar, naming the Java UDF
+    (the functions.* readers take the pandas route instead)."""
+    spark = read_spark
+    pdf = spark.createDataFrame([(None, 5)], "sketch binary, v long")
+    nul = F.lit(None).cast("binary")
     monkeypatch.setattr(ju, "available", lambda spark: False)
-    with pytest.raises(RuntimeError, match="SketchReadUdfs.KllQuantile"):
-        ju.kll_quantile_col(read_spark, F.lit(None).cast("binary"), 0.5)
+    for klass, call in (
+        ("HllSketchEstimateUdf", lambda: ju.hll_estimate_col(spark, nul)),
+        ("HllSetOpUdfs.UnionEstimate", lambda: ju.hll_union_estimate_col(spark, nul, nul)),
+        ("SketchReadUdfs.CountMinQuery", lambda: ju.cm_query_col(spark, pdf, "sketch", "v")),
+        ("SketchReadUdfs.BloomContains", lambda: ju.bloom_contains_col(spark, pdf, "sketch", "v")),
+        ("SketchReadUdfs.KllQuantile", lambda: ju._read_udf_apply(spark, "kll_quantile", [nul, F.lit(0.5)])),
+    ):
+        with pytest.raises(RuntimeError, match=klass):
+            call()

@@ -139,3 +139,21 @@ def test_estimate_comparison_operators(spark):
     # numeric NULL arrives in the pandas UDF as float64 NaN (Spark's
     # numeric-with-NULLs behavior) — must still compare as SQL NULL
     assert row["gt_null_num"] is None
+
+
+def test_build_aggregates_all_null_group_is_null(spark):
+    """Strict-aggregate NULL contract for every SQL build aggregate: a group
+    whose values are all NULL yields SQL NULL (not an empty sketch), like
+    hll_sketch_agg; a group with values yields a sketch."""
+    aggs = ["hll_sketch_agg", "cm_sketch_agg", "bloom_sketch_agg", "tdigest_agg", "kll_agg", "minhash_agg", "theta_agg"]
+    rows = spark.sql(
+        f"""
+        SELECT g, {", ".join(f"{a}(v) AS {a}" for a in aggs)}
+        FROM (SELECT l_returnflag AS g, CASE WHEN l_returnflag = 'A' THEN l_partkey END AS v FROM li_sql)
+        GROUP BY g
+        """
+    ).collect()
+    assert len(rows) == 3
+    for r in rows:
+        for a in aggs:
+            assert (r[a] is not None) == (r["g"] == "A"), (r["g"], a)
