@@ -449,28 +449,26 @@ def merge_partials(
     return cur.repartition(1).mapInPandas(merge_partition_final, schema=sk_schema)
 
 
-def merge_partials_driver(partials: DataFrame, by: Sequence[str] | None = None, sketch_col: str = "sketch", cls=HLL):
-    """Collect partial sketches to the driver and merge in numpy.
+def merge_partials_driver(partials: DataFrame) -> dict:
+    """Collect the ``sketch`` column of keyless HLL partials to the driver
+    and merge in numpy: ``{(): HLL}``, ``{(): None}`` when every partial is
+    NULL, ``{}`` when there are none.
 
     For P ≤ ~4096 partials (P × ≤16 KiB = a few MiB) this removes an entire
     Exchange + single-task stage + Python-worker round trip per query — the
     same role the coordinator's finalfunc plays in Greenplum (SURVEY.md §3.2).
-    Returns a list of Rows-like tuples [(key..., sketch_bytes)].
     """
-    by = list(by or [])
     acc: dict = {}
-    for r in partials.select(*by, sketch_col).collect():
-        k = tuple(r[c] for c in by)
-        blob = r[sketch_col]
-        if blob is None:
+    for r in partials.select("sketch").collect():
+        if r["sketch"] is None:
             # all-NULL partial: keep the key (its merged result may stay NULL)
-            acc.setdefault(k, None)
+            acc.setdefault((), None)
             continue
-        s = cls.from_bytes(bytes(blob))
-        if acc.get(k) is not None:
-            acc[k].merge(s)
+        s = HLL.from_bytes(bytes(r["sketch"]))
+        if acc.get(()) is not None:
+            acc[()].merge(s)
         else:
-            acc[k] = s
+            acc[()] = s
     return acc
 
 

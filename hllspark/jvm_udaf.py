@@ -16,12 +16,10 @@ ObjectHashAggregate — the flat-buffer shape of Spark's DataSketches
 aggregates.
 
 Each aggregator finishes to the canonical ``to_bytes()`` form of its
-sketch, so the aggregate column IS the sketch column: HLL, count-min, Bloom
-and MinHash results leave the JVM with no Python stage, and
-``finalize="estimate"`` applies the stored-counter reader
-(HllSketchEstimateUdf, ``hll_estimate_col``) to that column.  Only the
-t-digest / KLL exact-mode fold still finishes in Python
-(``_td_blob_to_bytes`` / ``_kll_blob_to_bytes``).
+sketch, so the aggregate column IS the sketch column: every sketch kind
+leaves the JVM with no Python stage, and ``finalize="estimate"`` applies
+the stored-counter reader (HllSketchEstimateUdf, ``hll_estimate_col``) to
+that column.
 
 The jar's per-row readers of stored sketches (HllUdfs factories, table
 ``_READ_UDFS``) have one public surface: ``functions.hll_estimate``,
@@ -58,11 +56,8 @@ import functools
 import logging
 from typing import NamedTuple, Sequence
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 _AGG_CLASS = "hllsparkjvm.HllRegisterAggregator"
 _log = logging.getLogger("hllspark")
@@ -570,17 +565,6 @@ def _sibling_sketch(
     return gb.agg(acol)
 
 
-def _py_finish(out: DataFrame, blob_fn, col: str = "sketch") -> DataFrame:
-    """Replace the quantile aggregators' blob column ``col`` with canonical
-    bytes (one pandas pass over the output groups; None = all-NULL)."""
-
-    @pandas_udf("binary")
-    def fin(blobs: pd.Series) -> pd.Series:
-        return blobs.map(lambda v: None if v is None else blob_fn(v))
-
-    return out.withColumn(col, fin(F.col(col)))
-
-
 def countmin_jvm_udaf(
     df: DataFrame, value_col: str, by: Sequence[str] | None = None, width: int = 4096, depth: int = 5
 ) -> DataFrame:
@@ -630,82 +614,10 @@ def minhash_jvm_udaf(df: DataFrame, value_col: str, by: Sequence[str] | None = N
 
 def _quantile_in_expr(df: DataFrame, value_col: str) -> Column:
     """cast-to-double with NaN→NULL (no quantile sketch ingests NaN; NULLs
-    are skipped by the aggregator)."""
+    are skipped by the aggregator, and ±inf are left out of the sketch by
+    its finish, so a group of only ±inf is an empty sketch, not NULL)."""
     v = F.col(value_col).cast("double")
     return F.when(F.isnan(v), F.lit(None)).otherwise(v)
-
-
-def _td_blob_to_bytes(buf) -> bytes | None:
-    """TDigestAggregator blob → canonical TDigest bytes (None = all-NULL).
-
-    mode 0 (exact value→count map): one weighted fold over the distinct
-    values in ascending order — a pure function of the value multiset, so
-    any partitioning gives the same bytes.  mode 1 (bounded in-JVM centroids): the state is already a
-    valid k1-scale digest — wrap and serialize."""
-    from .sketches.tdigest import TDigest
-
-    buf = bytes(buf)
-    if buf[0] != 1:
-        raise ValueError(f"unknown tdigest blob version {buf[0]}")
-    mode = buf[1]
-    delta = int.from_bytes(buf[2:4], "little")
-    if mode == 0:
-        n = int.from_bytes(buf[4:8], "little", signed=True)
-        if n == 0:
-            return None
-        vals = np.frombuffer(buf, dtype="<f8", count=n, offset=8)
-        counts = np.frombuffer(buf, dtype="<i8", count=n, offset=8 + 8 * n)
-        order = np.argsort(vals, kind="stable")
-        st = TDigest.create(delta=delta)
-        st.update_weighted(vals[order], counts[order].astype(np.float64))
-        return st.to_bytes()
-    ncent = int.from_bytes(buf[4:8], "little", signed=True)
-    total, vmin, vmax = np.frombuffer(buf, dtype="<f8", count=3, offset=8)
-    # mode-1 with zero centroids only arises from the stored-blob merge of
-    # EMPTY digests (the build aggregator's digest mode always holds data):
-    # a legitimate empty sketch, not SQL NULL
-    means = np.frombuffer(buf, dtype="<f8", count=ncent, offset=32).astype(np.float64)
-    weights = np.frombuffer(buf, dtype="<f8", count=ncent, offset=32 + 8 * ncent).astype(np.float64)
-    return TDigest(delta, means, weights, float(total), float(vmin), float(vmax)).to_bytes()
-
-
-def _kll_blob_to_bytes(buf) -> bytes | None:
-    """KllAggregator blob → canonical KLL bytes (None = all-NULL).  mode 0
-    is the sorted binary-weight-decomposition insert of the distinct values
-    (a pure function of the multiset); mode 1 wraps the in-JVM compactor
-    levels directly."""
-    from .sketches.kll import KLL
-
-    buf = bytes(buf)
-    if buf[0] != 1:
-        raise ValueError(f"unknown kll blob version {buf[0]}")
-    mode = buf[1]
-    k = int.from_bytes(buf[2:4], "little")
-    if mode == 0:
-        n = int.from_bytes(buf[4:8], "little", signed=True)
-        if n == 0:
-            return None
-        vals = np.frombuffer(buf, dtype="<f8", count=n, offset=8)
-        counts = np.frombuffer(buf, dtype="<i8", count=n, offset=8 + 8 * n)
-        order = np.argsort(vals, kind="stable")
-        st = KLL.create(k=k)
-        st.update_weighted(vals[order], counts[order])
-        return st.to_bytes()
-    nlevels = int.from_bytes(buf[4:8], "little", signed=True)
-    total = int.from_bytes(buf[8:16], "little", signed=True)
-    compactions = int.from_bytes(buf[16:24], "little", signed=True)
-    vmin, vmax = np.frombuffer(buf, dtype="<f8", count=2, offset=24)
-    # mode-1 with total == 0 only arises from the stored-blob merge of
-    # EMPTY sketches — a legitimate empty KLL, not SQL NULL
-    sizes = np.frombuffer(buf, dtype="<i4", count=nlevels, offset=40)
-    off = 40 + 4 * nlevels
-    levels = []
-    for sz in sizes:
-        levels.append(np.frombuffer(buf, dtype="<f8", count=int(sz), offset=off).astype(np.float64))
-        off += 8 * int(sz)
-    if not levels:
-        levels = [np.empty(0, np.float64)]
-    return KLL(k, levels, total, compactions, float(vmin), float(vmax)).to_bytes()
 
 
 def tdigest_jvm_udaf(
@@ -742,13 +654,12 @@ def tdigest_jvm_udaf(
     TDigest.create(delta=delta)  # same validation as every sibling builder
     if exact_capacity < 16:  # mirror the TDigestAggregator.java ctor guard
         raise ValueError("exact_capacity must be >= 16")
-    out = _sibling_sketch(
+    return _sibling_sketch(
         df, value_col, by,
         "hllsparkjvm.TDigestAggregator", [delta, exact_capacity],
         in_col=_quantile_in_expr(df, value_col),
         encoder="double",
     )
-    return _py_finish(out, _td_blob_to_bytes)
 
 
 def kll_jvm_udaf(
@@ -770,13 +681,12 @@ def kll_jvm_udaf(
     KLL.create(k=k)  # same validation as every sibling builder
     if exact_capacity < 16:  # mirror the KllAggregator.java ctor guard
         raise ValueError("exact_capacity must be >= 16")
-    out = _sibling_sketch(
+    return _sibling_sketch(
         df, value_col, by,
         "hllsparkjvm.KllAggregator", [k, exact_capacity],
         in_col=_quantile_in_expr(df, value_col),
         encoder="double",
     )
-    return _py_finish(out, _kll_blob_to_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -821,7 +731,6 @@ _MERGE_CLASSES = {
     "tdigest": "hllsparkjvm.TDigestBlobMergeAggregator",
     "kll": "hllsparkjvm.KllBlobMergeAggregator",
 }
-_QUANTILE_BLOB_FNS = {"tdigest": _td_blob_to_bytes, "kll": _kll_blob_to_bytes}
 
 
 def sibling_merge_udaf(
@@ -849,7 +758,4 @@ def sibling_merge_udaf(
     spark = df.sparkSession
     acol = _sibling_udaf_column(spark, F.col(sketch_col), _MERGE_CLASSES[kind], [], encoder="binary")
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    out = gb.agg(acol.alias(sketch_col))
-    if kind in _QUANTILE_BLOB_FNS:
-        return _py_finish(out, _QUANTILE_BLOB_FNS[kind], sketch_col)
-    return out
+    return gb.agg(acol.alias(sketch_col))

@@ -4,10 +4,9 @@ KLL:
 
 - ``jvm_udaf``: typed aggregate buffer in dist/hllspark-udaf.jar (chosen by
   auto when the jar loads — flat buffer per group, finished to canonical
-  bytes in the JVM, plus one Arrow-batch finalize over all groups for the
-  quantile kinds; the only engine whose per-key cost doesn't grow with
-  group cardinality, and for the quantile sketches the one bounded on
-  continuous columns);
+  bytes in the JVM with no Python stage; the only engine whose per-key
+  cost doesn't grow with group cardinality, and for the quantile sketches
+  the one bounded on continuous columns);
 - ``python``: agg.sketch_generic with jvm_prehash=True — per-partition
   Arrow builds, never shuffles raw values.  Theta sketches run here only.
 

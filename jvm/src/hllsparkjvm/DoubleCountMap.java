@@ -4,14 +4,15 @@ import java.io.Serializable;
 
 /**
  * Open-addressing map double→count used by the quantile aggregate buffers'
- * EXACT mode (the value-multiset phase that keeps byte parity with the
- * groupBy(value).count() builders).  Keys are stored as double bits with
- * -0.0 normalized to 0.0 — the same collapse Spark's groupBy applies to
- * floating group keys — and a live entry always has count ≥ 1, so
- * counts[i] == 0 marks an empty slot (0.0 bits are a valid key).
+ * EXACT mode (the value multiset whose ascending weighted fold is
+ * byte-identical to the python sketches' update_weighted).  Keys are
+ * stored as double bits with -0.0 normalized to 0.0 — the same collapse
+ * Spark's groupBy applies to floating group keys — and a live entry always
+ * has count ≥ 1, so counts[i] == 0 marks an empty slot (0.0 bits are a
+ * valid key).
  *
  * NaN never enters: the Python wrapper projects NaN→NULL before the
- * aggregator, mirroring sketches/jvm.py _value_counts.
+ * aggregator.  ±inf do enter; the finish drops them.
  */
 final class DoubleCountMap implements Serializable {
   private static final long serialVersionUID = 1L;

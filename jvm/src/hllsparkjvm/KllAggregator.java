@@ -16,26 +16,31 @@ import org.apache.spark.sql.expressions.Aggregator;
  * as TDigestAggregator:
  *
  *  - EXACT mode (≤ exactCap distinct values): open-addressing value→count
- *    map; the Python finalize replays the identical sorted
- *    binary-weight-decomposition insert as sketches/jvm.py kll_jvm →
- *    byte-identical sketches to the groupBy builder (tested).
+ *    map; finish() replays hllspark.sketches.kll KLL.update_weighted (the
+ *    sorted binary-weight-decomposition insert) over its finite values —
+ *    byte-identical to that fold (tested).
  *
  *  - COMPACTOR mode past exactCap: real KLL levels (Karnin, Lang & Liberty
- *    2016) with the same capacity schedule and deterministic alternating
- *    compaction coin as hllspark.sketches.kll (max(2, ceil(k·(2/3)^d)),
- *    offset = compactions & 1) — the buffer is BOUNDED at O(k) items
- *    regardless of input cardinality.  Level contents then depend on
- *    partition/merge order (within the ~1.33/k rank-error bound), so
- *    compactor-mode results are not bit-reproducible run-to-run —
- *    documented in hllspark.jvm_udaf.kll_jvm_udaf.
+ *    2016) with the same capacity schedule, compaction order and
+ *    deterministic alternating compaction coin as hllspark.sketches.kll
+ *    (max(2, ceil(k·(2/3)^d)), offset = compactions & 1) — the buffer is
+ *    BOUNDED at O(k) items regardless of input cardinality.  Level
+ *    contents then depend on partition/merge order (within the ~1.33/k
+ *    rank-error bound), so compactor-mode results are not bit-reproducible
+ *    run-to-run — documented in hllspark.jvm_udaf.kll_jvm_udaf.
  *
- * NULLs skipped (NaN projected to NULL upstream); zero ingested values →
- * SQL NULL sketch via the Python finalize (strict-aggregate contract).
+ * finish() writes the canonical KLL.to_bytes() bytes ({@link #toBytes}).
+ * NULLs skipped (NaN projected to NULL upstream); ±inf are kept in the
+ * exact map but never enter a level, as KLL drops non-finite values.  A
+ * group with no values finishes to a SQL NULL sketch (strict-aggregate
+ * contract); a group of only ±inf finishes to an empty sketch.
  */
 public final class KllAggregator
     extends Aggregator<Double, KllAggregator.Buf, byte[]> {
 
   private static final long serialVersionUID = 1L;
+
+  static final int HEADER = 38; // <BBHHqqdd
 
   private final int k;
   private final int exactCap;
@@ -102,17 +107,15 @@ public final class KllAggregator
       levels[h][levelLen[h]++] = v;
     }
 
-    /** Package hook for KllBlobMergeAggregator: raw append at a height
-     *  (caller compacts afterwards, mirroring kll.py merge). */
-    void ingestLevelItem(int h, double v) {
-      appendLevel(h, v);
-    }
-
+    /** kll.py _compact: each pass walks the levels that existed when it
+     *  began (a level created mid-pass waits for the next pass, after the
+     *  lower levels whose capacity it shrank), so the exact-mode finish
+     *  compacts in Python's order and draws the same coins. */
     void compact() {
       boolean changed = true;
       while (changed) {
         changed = false;
-        for (int h = 0; h < nlevels; h++) {
+        for (int h = 0, depth = nlevels; h < depth; h++) {
           int cap = capacity(k, Math.max(nlevels, h + 2), h);
           if (levelLen[h] <= cap) continue;
           java.util.Arrays.sort(levels[h], 0, levelLen[h]);
@@ -126,23 +129,27 @@ public final class KllAggregator
       }
     }
 
+    /** Exact map → compactor mode: KLL.update_weighted of its finite
+     *  values in ascending order (level-batched binary decomposition). */
     void promote() {
       long[] bits = map.sortedValuesBits();
-      int len = bits.length;
-      double[] v = new double[len];
-      long[] c = new long[len];
+      double[] v = new double[bits.length];
+      long[] c = new long[bits.length];
+      int len = 0;
       long maxc = 0;
-      for (int i = 0; i < len; i++) {
-        v[i] = Double.longBitsToDouble(bits[i]);
-        c[i] = map.countOf(v[i]);
-        if (c[i] > maxc) maxc = c[i];
+      for (long b : bits) {
+        double x = Double.longBitsToDouble(b);
+        if (Double.isInfinite(x)) continue;
+        v[len] = x;
+        c[len] = map.countOf(x);
+        maxc = Math.max(maxc, c[len++]);
       }
       map = null;
       ensureLevel(0);
       if (len == 0) return;
       vmin = v[0];
       vmax = v[len - 1];
-      for (long cc : c) total += cc;
+      for (int i = 0; i < len; i++) total += c[i];
       // binary weight decomposition, level-batched like kll.py update_weighted
       for (int h = 0; h < 64 - Long.numberOfLeadingZeros(maxc); h++) {
         boolean any = false;
@@ -157,6 +164,7 @@ public final class KllAggregator
     }
 
     void addOne(double v) { // compactor mode only
+      if (Double.isInfinite(v)) return;
       if (v < vmin) vmin = v;
       if (v > vmax) vmax = v;
       total++;
@@ -171,6 +179,7 @@ public final class KllAggregator
         return;
       }
       // weighted insert via binary decomposition (exact, no sampling)
+      if (Double.isInfinite(v)) return;
       if (v < vmin) vmin = v;
       if (v > vmax) vmax = v;
       total += c;
@@ -278,50 +287,71 @@ public final class KllAggregator
     return a;
   }
 
-  /**
-   * Blob (little-endian), finalized by hllspark.jvm_udaf._kll_blob_to_bytes:
-   *   u8 version=1 | u8 mode | u16 k |
-   *   mode 0 (exact):     i32 n | n × f64 values | n × i64 counts (unsorted)
-   *   mode 1 (compactor): i32 nlevels | i64 total | i64 compactions |
-   *                       f64 vmin | f64 vmax | nlevels × i32 sizes |
-   *                       concatenated level items (f64)
-   * mode 0 with n == 0 ⇒ all-NULL group.
-   */
+  /** Canonical sketch bytes; null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
     if (buf.map != null) {
-      int n = buf.map.n;
-      ByteBuffer bb = ByteBuffer.allocate(1 + 1 + 2 + 4 + 16 * n);
-      bb.order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 1);
-      bb.put((byte) 0);
-      bb.putShort((short) buf.k);
-      bb.putInt(n);
-      for (int i = 0; i < buf.map.keys.length; i++) {
-        if (buf.map.counts[i] != 0) bb.putDouble(Double.longBitsToDouble(buf.map.keys[i]));
-      }
-      for (int i = 0; i < buf.map.keys.length; i++) {
-        if (buf.map.counts[i] != 0) bb.putLong(buf.map.counts[i]);
-      }
-      return bb.array();
+      if (buf.map.n == 0) return null;
+      buf.promote();
     }
+    return toBytes(buf);
+  }
+
+  /**
+   * hllspark.sketches.kll KLL.to_bytes() of a compactor-mode buffer, the one
+   * writer of both KLL aggregators: little-endian header {@code <BBHHqqdd}
+   * (version 1, pad, k, nlevels, total, compactions, vmin, vmax), then the
+   * nlevels i32 level sizes, then each level's items as f64.
+   */
+  static byte[] toBytes(Buf buf) {
     int items = 0;
     for (int h = 0; h < buf.nlevels; h++) items += buf.levelLen[h];
-    ByteBuffer bb = ByteBuffer.allocate(1 + 1 + 2 + 4 + 16 + 16 + 4 * buf.nlevels + 8 * items);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 1);
-    bb.put((byte) 1);
-    bb.putShort((short) buf.k);
-    bb.putInt(buf.nlevels);
-    bb.putLong(buf.total);
-    bb.putLong(buf.compactions);
-    bb.putDouble(buf.vmin);
-    bb.putDouble(buf.vmax);
+    ByteBuffer bb = ByteBuffer.allocate(HEADER + 4 * buf.nlevels + 8 * items).order(ByteOrder.LITTLE_ENDIAN);
+    bb.put((byte) 1).put((byte) 0).putShort((short) buf.k).putShort((short) buf.nlevels);
+    bb.putLong(buf.total).putLong(buf.compactions).putDouble(buf.vmin).putDouble(buf.vmax);
     for (int h = 0; h < buf.nlevels; h++) bb.putInt(buf.levelLen[h]);
     for (int h = 0; h < buf.nlevels; h++) {
       for (int i = 0; i < buf.levelLen[h]; i++) bb.putDouble(buf.levels[h][i]);
     }
     return bb.array();
+  }
+
+  /**
+   * KLL.from_bytes, the one decoder of canonical KLL bytes (stored merge
+   * and read UDF): a compactor-mode buffer holding the stored levels.
+   * Refuses a newer version, a k or level count no sketch has, and a header
+   * that the payload length disagrees with, with from_bytes's messages.
+   */
+  static Buf fromBytes(byte[] blob) {
+    ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
+    int version = bb.get() & 0xff;
+    bb.get(); // pad
+    Buf buf = new Buf();
+    buf.k = bb.getShort() & 0xffff;
+    int nlevels = bb.getShort() & 0xffff;
+    buf.total = bb.getLong();
+    buf.compactions = bb.getLong();
+    buf.vmin = bb.getDouble();
+    buf.vmax = bb.getDouble();
+    if (version > 1) throw new IllegalArgumentException("unsupported kll version " + version);
+    if (buf.k < 8 || nlevels > 64) {
+      throw new IllegalArgumentException("kll header out of range: k=" + buf.k + " nlevels=" + nlevels);
+    }
+    int[] sizes = new int[nlevels];
+    long items = 0;
+    for (int h = 0; h < nlevels; h++) {
+      sizes[h] = bb.getInt();
+      if (sizes[h] < 0) throw new IllegalArgumentException("negative kll level size");
+      items += sizes[h];
+    }
+    if (blob.length != HEADER + 4L * nlevels + 8L * items) {
+      throw new IllegalArgumentException("kll payload size inconsistent with header");
+    }
+    buf.ensureLevel(Math.max(nlevels, 1) - 1);
+    for (int h = 0; h < nlevels; h++) {
+      for (int i = 0; i < sizes[h]; i++) buf.appendLevel(h, bb.getDouble());
+    }
+    return buf;
   }
 
   @Override

@@ -1,8 +1,5 @@
 package hllsparkjvm;
 
-import java.nio.ByteBuffer;
-import java.nio.ByteOrder;
-
 import com.esotericsoftware.kryo.Kryo;
 import com.esotericsoftware.kryo.KryoSerializable;
 import com.esotericsoftware.kryo.io.Input;
@@ -12,16 +9,17 @@ import org.apache.spark.sql.Encoders;
 import org.apache.spark.sql.expressions.Aggregator;
 
 /**
- * Merge of STORED canonical KLL blobs
- * (hllspark.sketches.kll.KLL.to_bytes, header {@code <BBHHqqdd}: version,
- * pad, k, nlevels, total, compactions, vmin, vmax; payload i32 level sizes
- * then concatenated f64 level items).  Levels concatenate at their heights
+ * Merge of STORED canonical KLL blobs (hllspark.sketches.kll.KLL.to_bytes,
+ * decoded by KllAggregator.fromBytes).  Levels concatenate at their heights
  * and compact through KllAggregator's deterministic-coin machinery — the
  * same concat-then-compact python KLL.merge performs (compaction counters
  * summed; merge-order-dependent within the rank bound, no byte-parity
  * claim).  Parameterless, adopts k from the first sketch, refuses
  * mismatches ("kll k differs"); empty stored sketches are skipped exactly
- * as python merge does.
+ * as python merge does.  finish() writes the canonical bytes
+ * (KllAggregator.toBytes); a group of only NULL blobs finishes to a SQL
+ * NULL sketch, while one of only empty stored sketches stays an empty
+ * sketch.
  */
 public final class KllBlobMergeAggregator
     extends Aggregator<byte[], KllBlobMergeAggregator.Buf, byte[]> {
@@ -54,48 +52,16 @@ public final class KllBlobMergeAggregator
   }
 
   static void mergeBlob(Buf buf, byte[] blob) {
-    ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
-    int version = bb.get() & 0xff;
-    bb.get(); // pad
-    int k = bb.getShort() & 0xffff;
-    int nlevels = bb.getShort() & 0xffff;
-    long total = bb.getLong();
-    long compactions = bb.getLong();
-    double vmin = bb.getDouble();
-    double vmax = bb.getDouble();
-    if (version > 1) throw new IllegalArgumentException("unsupported kll version " + version);
-    if (k < 8 || k > 65535) throw new IllegalArgumentException("kll header out of range: k=" + k);
-    int off = 38;
-    long items = 0;
-    int[] sizes = new int[nlevels];
-    for (int h = 0; h < nlevels; h++) {
-      sizes[h] = bb.getInt(off + 4 * h);
-      if (sizes[h] < 0) throw new IllegalArgumentException("kll level size negative");
-      items += sizes[h];
-    }
-    if (blob.length != off + 4L * nlevels + 8L * items) {
-      throw new IllegalArgumentException("kll header inconsistent with payload size");
-    }
+    KllAggregator.Buf stored = KllAggregator.fromBytes(blob);
     if (buf.state == null) {
-      KllAggregator proto = new KllAggregator(k, 16);
-      buf.state = proto.zero();
+      buf.state = new KllAggregator(stored.k, 16).zero();
       buf.state.promote(); // empty map → compactor mode
-    } else if (buf.state.k != k) {
+    } else if (buf.state.k != stored.k) {
       throw new IllegalArgumentException("kll k differs");
     }
-    if (total == 0) return; // empty sketch: python merge skips it
-    int pos = off + 4 * nlevels;
-    for (int h = 0; h < nlevels; h++) {
-      for (int i = 0; i < sizes[h]; i++) {
-        buf.state.ingestLevelItem(h, bb.getDouble(pos));
-        pos += 8;
-      }
-    }
-    buf.state.total += total;
-    buf.state.compactions += compactions;
-    if (vmin < buf.state.vmin) buf.state.vmin = vmin;
-    if (vmax > buf.state.vmax) buf.state.vmax = vmax;
-    buf.state.compact();
+    // kll.py merge: skips an empty sketch, else concatenates levels, sums
+    // totals/compactions and compacts
+    new KllAggregator(stored.k, 16).merge(buf.state, stored);
   }
 
   @Override
@@ -124,17 +90,11 @@ public final class KllBlobMergeAggregator
     return a;
   }
 
-  /** Emits KllAggregator's intermediate blob (mode 1 compactor — reused
-   *  Python finalize _kll_blob_to_bytes); uninitialized → mode-0 n=0 form
-   *  → SQL NULL. */
+  /** Canonical sketch bytes (KllAggregator.toBytes); null (SQL NULL) for
+   *  a group of only NULL blobs. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.state == null) {
-      ByteBuffer bb = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 1).put((byte) 0).putShort((short) 200).putInt(0);
-      return bb.array();
-    }
-    return new KllAggregator(buf.state.k, buf.state.exactCap).finish(buf.state);
+    return buf.state == null ? null : KllAggregator.toBytes(buf.state);
   }
 
   @Override

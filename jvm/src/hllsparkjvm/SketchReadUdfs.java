@@ -1,8 +1,5 @@
 package hllsparkjvm;
 
-import java.nio.ByteBuffer;
-import java.nio.ByteOrder;
-
 import org.apache.spark.sql.api.java.UDF2;
 
 /**
@@ -32,9 +29,8 @@ import org.apache.spark.sql.api.java.UDF2;
  *
  * Blob decoding is shared with the stored-blob merge aggregators
  * (CountMinBlobMergeAggregator / BloomBlobMergeAggregator /
- * MinHashBlobMergeAggregator .mergeBlob) so version/validation rules can
- * never drift; t-digest/KLL decode the canonical layout directly because
- * their merge buffers re-compress (not a faithful read).
+ * MinHashBlobMergeAggregator .mergeBlob, TDigestAggregator.fromBytes,
+ * KllAggregator.fromBytes) so version/validation rules can never drift.
  */
 public final class SketchReadUdfs {
 
@@ -127,57 +123,18 @@ public final class SketchReadUdfs {
 
   // -- t-digest ------------------------------------------------------------
 
-  /** Decoded canonical t-digest (TDigest.to_bytes: {@code <BBHqddd} header
-   *  version/pad/delta/n, total, vmin, vmax; then means f64[n], weights
-   *  f64[n]).  Validation mirrors TDigestBlobMergeAggregator.mergeBlob. */
-  static final class Td {
-    final double[] means;
-    final double[] weights;
-    final double total;
-    final double vmin;
-    final double vmax;
-
-    private Td(double[] means, double[] weights, double total, double vmin, double vmax) {
-      this.means = means;
-      this.weights = weights;
-      this.total = total;
-      this.vmin = vmin;
-      this.vmax = vmax;
+  /** centroid "centers" of a decoded digest: sequential cumsum(weights)
+   *  - 0.5*weights — np.cumsum is sequential, so a plain loop reproduces
+   *  it bit-for-bit (the weights are integer counts, exact in double, so
+   *  the sums are exact anyway). */
+  static double[] centers(TDigestAggregator.Buf td) {
+    double[] cum = new double[td.ncent];
+    double run = 0.0;
+    for (int i = 0; i < td.ncent; i++) {
+      run += td.weights[i];
+      cum[i] = run - 0.5 * td.weights[i];
     }
-
-    static Td decode(byte[] blob) {
-      ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
-      int version = bb.get() & 0xff;
-      bb.get(); // pad
-      int delta = bb.getShort() & 0xffff;
-      long n = bb.getLong();
-      double total = bb.getDouble();
-      double vmin = bb.getDouble();
-      double vmax = bb.getDouble();
-      if (version > 1) throw new IllegalArgumentException("unsupported tdigest version " + version);
-      if (delta < 10 || delta > 10000 || n < 0 || blob.length != 36 + 16 * n) {
-        throw new IllegalArgumentException("tdigest header inconsistent with payload");
-      }
-      double[] means = new double[(int) n];
-      double[] weights = new double[(int) n];
-      for (int i = 0; i < n; i++) means[i] = bb.getDouble(36 + 8 * i);
-      for (int i = 0; i < n; i++) weights[i] = bb.getDouble(36 + 8 * (int) n + 8 * i);
-      return new Td(means, weights, total, vmin, vmax);
-    }
-
-    /** centroid "centers": sequential cumsum(weights) - 0.5*weights —
-     *  np.cumsum is sequential (CLAUDE golden-parity note), so a plain
-     *  loop reproduces it bit-for-bit (the weights are integer counts,
-     *  exact in double, so the sums are exact anyway). */
-    double[] centers() {
-      double[] cum = new double[weights.length];
-      double run = 0.0;
-      for (int i = 0; i < weights.length; i++) {
-        run += weights[i];
-        cum[i] = run - 0.5 * weights[i];
-      }
-      return cum;
-    }
+    return cum;
   }
 
   /** first index with a[i] >= v — np.searchsorted side='left'. */
@@ -202,13 +159,13 @@ public final class SketchReadUdfs {
     public Double call(byte[] blob, Object qArg) {
       if (blob == null || qArg == null) return null;
       double q = ((Number) qArg).doubleValue(); // SQL literals arrive as BigDecimal
-      Td td = Td.decode(blob);
+      TDigestAggregator.Buf td = TDigestAggregator.fromBytes(blob);
       if (td.total == 0) return null;
       if (q <= 0) return td.vmin;
       if (q >= 1) return td.vmax;
       if (Double.isNaN(q)) return null;
       double target = q * td.total;
-      double[] cum = td.centers();
+      double[] cum = centers(td);
       int idx = searchLeft(cum, target);
       double loX;
       double loC;
@@ -219,8 +176,8 @@ public final class SketchReadUdfs {
         loC = 0.0;
         hiX = td.means[0];
         hiC = cum[0];
-      } else if (idx >= td.means.length) {
-        loX = td.means[td.means.length - 1];
+      } else if (idx >= td.ncent) {
+        loX = td.means[td.ncent - 1];
         loC = cum[cum.length - 1];
         hiX = td.vmax;
         hiC = td.total;
@@ -249,14 +206,14 @@ public final class SketchReadUdfs {
     public Double call(byte[] blob, Object xArg) {
       if (blob == null || xArg == null) return null;
       double x = ((Number) xArg).doubleValue(); // SQL literals arrive as BigDecimal
-      Td td = Td.decode(blob);
+      TDigestAggregator.Buf td = TDigestAggregator.fromBytes(blob);
       if (td.total == 0) return null;
       if (x <= td.vmin) return 0.0;
       if (x >= td.vmax) return 1.0;
       if (Double.isNaN(x)) return null;
       double[] xp = td.means;
-      double[] fp = td.centers();
-      int n = xp.length;
+      double[] fp = centers(td);
+      int n = td.ncent;
       double r;
       if (n == 0 || x < xp[0]) {
         r = 0.0;
@@ -289,9 +246,8 @@ public final class SketchReadUdfs {
 
   // -- KLL -----------------------------------------------------------------
 
-  /** KLL.quantile over the canonical blob (KLL.to_bytes: {@code <BBHHqqdd}
-   *  header version/pad/k/nlevels, total, compactions, vmin, vmax; then
-   *  i32 level sizes; then per-level f64 values).  Weighted items are
+  /** KLL.quantile over the canonical blob (KllAggregator.fromBytes).
+   *  Weighted items are
    *  concatenated level-by-level (weight 2^h) and STABLY sorted by value —
    *  numpy argsort semantics: -0.0 == 0.0 keep input order, NaN sorts
    *  last.  Weight sums are exact powers of two, so cumsum order is
@@ -305,45 +261,21 @@ public final class SketchReadUdfs {
     public Double call(byte[] blob, Object qArg) {
       if (blob == null || qArg == null) return null;
       double q = ((Number) qArg).doubleValue(); // SQL literals arrive as BigDecimal
-      ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
-      int version = bb.get() & 0xff;
-      bb.get(); // pad
-      int k = bb.getShort() & 0xffff;
-      int nlevels = bb.getShort() & 0xffff;
-      long total = bb.getLong();
-      bb.getLong(); // compactions
-      double vmin = bb.getDouble();
-      double vmax = bb.getDouble();
-      if (version > 1) throw new IllegalArgumentException("unsupported kll version " + version);
-      if (k < 8 || nlevels > 64) {
-        throw new IllegalArgumentException("kll header out of range: k=" + k + " nlevels=" + nlevels);
-      }
-      int off = 38;
-      int[] sizes = new int[nlevels];
-      int nitems = 0;
-      for (int h = 0; h < nlevels; h++) {
-        sizes[h] = bb.getInt(off + 4 * h);
-        if (sizes[h] < 0) throw new IllegalArgumentException("negative kll level size");
-        nitems += sizes[h];
-      }
-      off += 4 * nlevels;
-      if (blob.length != off + 8 * nitems) {
-        throw new IllegalArgumentException("kll payload size inconsistent with header");
-      }
-      if (total == 0) return null;
-      if (q <= 0) return vmin;
-      if (q >= 1) return vmax;
+      KllAggregator.Buf kll = KllAggregator.fromBytes(blob);
+      if (kll.total == 0) return null;
+      if (q <= 0) return kll.vmin;
+      if (q >= 1) return kll.vmax;
       if (Double.isNaN(q)) return null;
+      int nitems = 0;
+      for (int h = 0; h < kll.nlevels; h++) nitems += kll.levelLen[h];
       double[] vals = new double[nitems];
       double[] wts = new double[nitems];
       int p = 0;
-      for (int h = 0; h < nlevels; h++) {
+      for (int h = 0; h < kll.nlevels; h++) {
         double w = Math.scalb(1.0, h); // exact 2^h for any level, no long shift overflow
-        for (int i = 0; i < sizes[h]; i++) {
-          vals[p] = bb.getDouble(off);
-          wts[p] = w;
-          off += 8;
-          p++;
+        for (int i = 0; i < kll.levelLen[h]; i++) {
+          vals[p] = kll.levels[h][i];
+          wts[p++] = w;
         }
       }
       Integer[] order = new Integer[nitems];

@@ -17,31 +17,34 @@ import org.apache.spark.sql.expressions.Aggregator;
  *
  *  - EXACT mode: an open-addressing value→count map (DoubleCountMap) while
  *    the buffer has ≤ exactCap distinct values.  If every buffer of a group
- *    stays exact, the Python finalize replays the identical sorted weighted
- *    fold as sketches/jvm.py tdigest_jvm — byte-identical sketches to the
- *    groupBy builder (tested), and nothing larger than the true distinct
- *    set ever ships in the shuffle.
+ *    stays exact, finish() folds the distinct values in ascending order
+ *    exactly as hllspark.sketches.tdigest TDigest.update_weighted does —
+ *    byte-identical to that fold (tested), and nothing larger than the true
+ *    distinct set ever ships in the shuffle.
  *
  *  - DIGEST mode past exactCap: the map is folded into ≤ ~δ/2 k1-scale
- *    centroids (Dunning & Ertl 2019, the same scale function as
+ *    centroids (Dunning & Ertl 2019, the same kernel as
  *    hllspark.sketches.tdigest._compress) and the buffer stays BOUNDED —
- *    O(δ) centroids + an O(δ) pending batch — which is what the groupBy
- *    builder cannot do on continuous columns (its reduction ships one row
- *    per distinct value).  Accuracy keeps the k1-scale rank-error bound;
- *    like every practical t-digest the centroid layout then depends on
- *    partition/merge order (within the bound), so digest-mode results are
- *    NOT bit-reproducible run-to-run — documented in
- *    hllspark.jvm_udaf.tdigest_jvm_udaf.
+ *    O(δ) centroids + an O(δ) pending batch — where a value-count reduction
+ *    would ship one row per distinct value of a continuous column.
+ *    Accuracy keeps the k1-scale rank-error bound; like every practical
+ *    t-digest the centroid layout then depends on partition/merge order
+ *    (within the bound), so digest-mode results are NOT bit-reproducible
+ *    run-to-run — documented in hllspark.jvm_udaf.tdigest_jvm_udaf.
  *
- * NULL values are skipped (NaN is projected to NULL before the aggregator,
- * mirroring sketches/jvm.py _value_counts); a group with zero ingested
- * values finishes with total == 0 → SQL NULL sketch in the Python finalize
- * (strict-aggregate contract).
+ * finish() writes the canonical TDigest.to_bytes() bytes ({@link #toBytes}).
+ * NULL values are skipped (NaN is projected to NULL before the aggregator);
+ * ±inf are kept in the exact map but left out of the digest, as
+ * update_weighted drops non-finite values.  A group with no values finishes
+ * to a SQL NULL sketch (strict-aggregate contract); a group of only ±inf
+ * finishes to an empty digest.
  */
 public final class TDigestAggregator
     extends Aggregator<Double, TDigestAggregator.Buf, byte[]> {
 
   private static final long serialVersionUID = 1L;
+
+  static final int HEADER = 36; // <BBHqddd
 
   private final int delta;
   private final int exactCap;
@@ -94,6 +97,37 @@ public final class TDigestAggregator
     }
   }
 
+  /** numpy's pairwise_sum of a[lo, lo+n): sequential below 8 elements,
+   *  eight interleaved accumulators up to 128, halved (at a multiple of 8)
+   *  above that. */
+  static double pairwiseSum(double[] a, int lo, int n) {
+    if (n < 8) {
+      double res = 0.;
+      for (int i = 0; i < n; i++) res += a[lo + i];
+      return res;
+    }
+    if (n <= 128) {
+      double[] r = new double[8];
+      System.arraycopy(a, lo, r, 0, 8);
+      int i = 8;
+      for (; i < n - (n % 8); i += 8) {
+        for (int j = 0; j < 8; j++) r[j] += a[lo + i + j];
+      }
+      double res = ((r[0] + r[1]) + (r[2] + r[3])) + ((r[4] + r[5]) + (r[6] + r[7]));
+      for (; i < n; i++) res += a[lo + i];
+      return res;
+    }
+    int n2 = n / 2;
+    n2 -= n2 % 8;
+    return pairwiseSum(a, lo, n2) + pairwiseSum(a, lo + n2, n - n2);
+  }
+
+  /** One segment of np.add.reduceat: the first element plus the pairwise
+   *  sum of the rest. */
+  static double reduceatSum(double[] a, int lo, int end) {
+    return end - lo == 1 ? a[lo] : a[lo] + pairwiseSum(a, lo + 1, end - lo - 1);
+  }
+
   public static final class Buf implements KryoSerializable, java.io.Serializable {
     private static final long serialVersionUID = 1L;
 
@@ -125,67 +159,66 @@ public final class TDigestAggregator
     }
 
     /** k1-scale fold of sorted (v, w)[0..len) into this.means/weights —
-     *  the same scale function as hllspark.sketches.tdigest._compress. */
+     *  hllspark.sketches.tdigest._compress operation for operation, so an
+     *  exact-mode finish is byte-identical to TDigest.update_weighted. */
     private void compressInto(double[] v, double[] w, int len) {
+      // weights.sum(): numpy adds the pairwise sums of its 8192-element
+      // buffer chunks in turn
       double W = 0;
-      for (int i = 0; i < len; i++) W += w[i];
-      if (len == 0 || W == 0) {
+      for (int lo = 0; lo < len; lo += 8192) W += pairwiseSum(w, lo, Math.min(8192, len - lo));
+      if (W == 0) {
         ncent = 0;
         total = 0;
         return;
       }
-      double[] om = new double[len];
-      double[] ow = new double[len];
-      int out = -1;
-      double cum = 0;
-      long prevCluster = Long.MIN_VALUE;
+      int[] starts = new int[len];
+      int nseg = 0;
+      double cum = 0; // np.cumsum is sequential
+      long prevCluster = 0;
       double scale = delta / (2 * Math.PI);
       for (int i = 0; i < len; i++) {
-        double qmid = (cum + 0.5 * w[i]) / W;
         cum += w[i];
-        double x = 2.0 * qmid - 1.0;
+        double x = 2.0 * ((cum - 0.5 * w[i]) / W) - 1.0;
         if (x < -1.0) x = -1.0;
         if (x > 1.0) x = 1.0;
         long cluster = (long) Math.floor(scale * Math.asin(x) + delta / 4.0);
-        if (out < 0 || cluster != prevCluster) {
-          out++;
-          om[out] = w[i] * v[i];
-          ow[out] = w[i];
-          prevCluster = cluster;
-        } else {
-          om[out] += w[i] * v[i];
-          ow[out] += w[i];
-        }
+        if (i == 0 || cluster != prevCluster) starts[nseg++] = i;
+        prevCluster = cluster;
       }
-      ncent = out + 1;
-      if (means == null || means.length < ncent) {
-        means = new double[Math.max(ncent, delta + 8)];
+      double[] wm = new double[len];
+      for (int i = 0; i < len; i++) wm[i] = w[i] * v[i];
+      if (means == null || means.length < nseg) {
+        means = new double[Math.max(nseg, delta + 8)];
         weights = new double[means.length];
       }
-      for (int i = 0; i < ncent; i++) {
-        means[i] = om[i] / ow[i];
-        weights[i] = ow[i];
+      for (int s = 0; s < nseg; s++) {
+        int end = s + 1 < nseg ? starts[s + 1] : len;
+        double ws = reduceatSum(w, starts[s], end);
+        means[s] = reduceatSum(wm, starts[s], end) / ws;
+        weights[s] = ws;
       }
+      ncent = nseg;
       total = W;
     }
 
+    /** Exact map → digest mode: the ascending weighted fold of its finite
+     *  values (TDigest.update_weighted on a fresh digest). */
     void promote() {
       long[] bits = map.sortedValuesBits();
-      int len = bits.length;
-      double[] v = new double[len];
-      double[] w = new double[len];
-      for (int i = 0; i < len; i++) {
-        v[i] = Double.longBitsToDouble(bits[i]);
-        w[i] = map.countOf(v[i]);
+      double[] v = new double[bits.length];
+      double[] w = new double[bits.length];
+      int len = 0;
+      for (long b : bits) {
+        double x = Double.longBitsToDouble(b);
+        if (Double.isInfinite(x)) continue;
+        v[len] = x;
+        w[len++] = map.countOf(x);
       }
       if (len > 0) {
         vmin = v[0];
         vmax = v[len - 1];
       }
       map = null;
-      pvals = new double[pendCap()];
-      pwts = new double[pendCap()];
-      npend = 0;
       compressInto(v, w, len);
     }
 
@@ -219,6 +252,10 @@ public final class TDigestAggregator
     }
 
     void addWeighted(double v, double wt) { // digest mode only
+      if (pvals == null) {
+        pvals = new double[pendCap()];
+        pwts = new double[pendCap()];
+      }
       if (v < vmin) vmin = v;
       if (v > vmax) vmax = v;
       pvals[npend] = v;
@@ -232,7 +269,7 @@ public final class TDigestAggregator
       if (map != null) {
         map.add(v, c);
         if (map.n > exactCap) promote();
-      } else {
+      } else if (!Double.isInfinite(v)) {
         addWeighted(v, (double) c);
       }
     }
@@ -285,8 +322,6 @@ public final class TDigestAggregator
       weights = new double[means.length];
       for (int i = 0; i < ncent; i++) means[i] = in.readDouble();
       for (int i = 0; i < ncent; i++) weights[i] = in.readDouble();
-      pvals = new double[pendCap()];
-      pwts = new double[pendCap()];
       npend = 0;
     }
   }
@@ -347,45 +382,60 @@ public final class TDigestAggregator
     return a;
   }
 
-  /**
-   * Blob (little-endian), finalized by hllspark.jvm_udaf._td_blob_to_bytes:
-   *   u8 version=1 | u8 mode | u16 delta |
-   *   mode 0 (exact):  i32 n | n × f64 values | n × i64 counts  (unsorted)
-   *   mode 1 (digest): i32 ncent | f64 total | f64 vmin | f64 vmax |
-   *                    ncent × f64 means | ncent × f64 weights
-   * mode 0 with n == 0 ⇒ all-NULL group.
-   */
+  /** Canonical sketch bytes; null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
     if (buf.map != null) {
-      int n = buf.map.n;
-      ByteBuffer bb = ByteBuffer.allocate(1 + 1 + 2 + 4 + 16 * n);
-      bb.order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 1);
-      bb.put((byte) 0);
-      bb.putShort((short) buf.delta);
-      bb.putInt(n);
-      for (int i = 0; i < buf.map.keys.length; i++) {
-        if (buf.map.counts[i] != 0) bb.putDouble(Double.longBitsToDouble(buf.map.keys[i]));
-      }
-      for (int i = 0; i < buf.map.keys.length; i++) {
-        if (buf.map.counts[i] != 0) bb.putLong(buf.map.counts[i]);
-      }
-      return bb.array();
+      if (buf.map.n == 0) return null;
+      buf.promote();
     }
+    return toBytes(buf);
+  }
+
+  /**
+   * hllspark.sketches.tdigest TDigest.to_bytes() of a digest-mode buffer,
+   * the one writer of both t-digest aggregators: little-endian header
+   * {@code <BBHqddd} (version 1, pad, delta, n centroids, total, vmin,
+   * vmax), then the n means and the n weights as f64.
+   */
+  static byte[] toBytes(Buf buf) {
     buf.flushPending();
-    ByteBuffer bb = ByteBuffer.allocate(1 + 1 + 2 + 4 + 24 + 16 * buf.ncent);
-    bb.order(ByteOrder.LITTLE_ENDIAN);
-    bb.put((byte) 1);
-    bb.put((byte) 1);
-    bb.putShort((short) buf.delta);
-    bb.putInt(buf.ncent);
-    bb.putDouble(buf.total);
-    bb.putDouble(buf.vmin);
-    bb.putDouble(buf.vmax);
-    for (int i = 0; i < buf.ncent; i++) bb.putDouble(buf.means[i]);
-    for (int i = 0; i < buf.ncent; i++) bb.putDouble(buf.weights[i]);
+    int n = buf.ncent;
+    ByteBuffer bb = ByteBuffer.allocate(HEADER + 16 * n).order(ByteOrder.LITTLE_ENDIAN);
+    bb.put((byte) 1).put((byte) 0).putShort((short) buf.delta).putLong(n);
+    bb.putDouble(buf.total).putDouble(buf.vmin).putDouble(buf.vmax);
+    for (int i = 0; i < n; i++) bb.putDouble(buf.means[i]);
+    for (int i = 0; i < n; i++) bb.putDouble(buf.weights[i]);
     return bb.array();
+  }
+
+  /**
+   * TDigest.from_bytes, the one decoder of canonical t-digest bytes (stored
+   * merge and read UDFs): a digest-mode buffer whose centroid arrays are
+   * exactly ncent long.  Refuses a newer version and a header that the
+   * payload length disagrees with, with from_bytes's messages.
+   */
+  static Buf fromBytes(byte[] blob) {
+    ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
+    int version = bb.get() & 0xff;
+    bb.get(); // pad
+    Buf buf = new Buf();
+    buf.delta = bb.getShort() & 0xffff;
+    long n = bb.getLong();
+    buf.total = bb.getDouble();
+    buf.vmin = bb.getDouble();
+    buf.vmax = bb.getDouble();
+    if (version > 1) throw new IllegalArgumentException("unsupported tdigest version " + version);
+    if (buf.delta < 10 || buf.delta > 10000 || n < 0 || n > blob.length || blob.length != HEADER + 16 * n) {
+      throw new IllegalArgumentException("tdigest header inconsistent with payload");
+    }
+    buf.ncent = (int) n;
+    buf.means = new double[buf.ncent];
+    buf.weights = new double[buf.ncent];
+    java.nio.DoubleBuffer db = bb.asDoubleBuffer();
+    db.get(buf.means);
+    db.get(buf.weights);
+    return buf;
   }
 
   @Override

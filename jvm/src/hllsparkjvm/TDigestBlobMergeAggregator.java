@@ -1,8 +1,5 @@
 package hllsparkjvm;
 
-import java.nio.ByteBuffer;
-import java.nio.ByteOrder;
-
 import com.esotericsoftware.kryo.Kryo;
 import com.esotericsoftware.kryo.KryoSerializable;
 import com.esotericsoftware.kryo.io.Input;
@@ -13,18 +10,20 @@ import org.apache.spark.sql.expressions.Aggregator;
 
 /**
  * Merge of STORED canonical t-digest blobs
- * (hllspark.sketches.tdigest.TDigest.to_bytes, header {@code <BBHqddd}:
- * version, pad, delta, n_centroids, total, vmin, vmax; payload means then
- * weights as f64).  Centroids are folded through the SAME k1-scale
- * machinery as TDigestAggregator's digest mode (pending batch + compress),
- * which is python TDigest.merge's concat-sort-compress within pending-batch
- * boundaries — rank error stays inside the k1 bound, centroid layout is
+ * (hllspark.sketches.tdigest.TDigest.to_bytes, decoded by
+ * TDigestAggregator.fromBytes).  Centroids are folded through the SAME
+ * k1-scale machinery as TDigestAggregator's digest mode (pending batch +
+ * compress), which is python TDigest.merge's concat-sort-compress within
+ * pending-batch boundaries — rank error stays inside the k1 bound, centroid layout is
  * merge-order-dependent like every practical t-digest (no byte-parity
  * claim, matching the python engine).  True raw-data vmin/vmax are carried
  * from the blobs, not re-derived from centroid means.  Parameterless,
  * adopts delta from the first digest, refuses mismatches ("t-digest delta
  * differs", like TDigest.merge); empty stored digests (total == 0) are
- * skipped exactly as python merge does.
+ * skipped exactly as python merge does.  finish() writes the canonical
+ * bytes (TDigestAggregator.toBytes); a group of only NULL blobs finishes
+ * to a SQL NULL sketch, while one of only empty stored digests stays an
+ * empty digest.
  */
 public final class TDigestBlobMergeAggregator
     extends Aggregator<byte[], TDigestBlobMergeAggregator.Buf, byte[]> {
@@ -57,35 +56,19 @@ public final class TDigestBlobMergeAggregator
   }
 
   static void mergeBlob(Buf buf, byte[] blob) {
-    ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
-    int version = bb.get() & 0xff;
-    bb.get(); // pad
-    int delta = bb.getShort() & 0xffff;
-    long n = bb.getLong();
-    double total = bb.getDouble();
-    double vmin = bb.getDouble();
-    double vmax = bb.getDouble();
-    if (version > 1) throw new IllegalArgumentException("unsupported tdigest version " + version);
-    if (delta < 10 || delta > 10000 || n < 0 || blob.length != 36 + 16 * n) {
-      throw new IllegalArgumentException("tdigest header inconsistent with payload");
-    }
+    TDigestAggregator.Buf stored = TDigestAggregator.fromBytes(blob);
     if (buf.state == null) {
-      TDigestAggregator proto = new TDigestAggregator(delta, 16);
-      buf.state = proto.zero();
+      buf.state = new TDigestAggregator(stored.delta, 16).zero();
       buf.state.promote(); // empty map → digest mode
-    } else if (buf.state.delta != delta) {
+    } else if (buf.state.delta != stored.delta) {
       throw new IllegalArgumentException("t-digest delta differs");
     }
-    if (total == 0 || n == 0) return; // empty digest: python merge skips it
-    for (int i = 0; i < n; i++) {
-      double mean = bb.getDouble(36 + 8 * i);
-      double w = bb.getDouble(36 + 8 * (int) n + 8 * i);
-      buf.state.addWeighted(mean, w);
-    }
+    if (stored.total == 0 || stored.ncent == 0) return; // empty digest: python merge skips it
+    for (int i = 0; i < stored.ncent; i++) buf.state.addWeighted(stored.means[i], stored.weights[i]);
     // addWeighted tracked extremes of the MEANS; restore the true raw-data
     // extremes the blob carries (python merge keeps min/max of vmin/vmax)
-    if (vmin < buf.state.vmin) buf.state.vmin = vmin;
-    if (vmax > buf.state.vmax) buf.state.vmax = vmax;
+    if (stored.vmin < buf.state.vmin) buf.state.vmin = stored.vmin;
+    if (stored.vmax > buf.state.vmax) buf.state.vmax = stored.vmax;
   }
 
   @Override
@@ -114,17 +97,11 @@ public final class TDigestBlobMergeAggregator
     return a;
   }
 
-  /** Emits TDigestAggregator's intermediate blob (mode 1 digest — reused
-   *  Python finalize _td_blob_to_bytes); an uninitialized buffer emits the
-   *  mode-0 n=0 form → SQL NULL. */
+  /** Canonical sketch bytes (TDigestAggregator.toBytes); null (SQL NULL)
+   *  for a group of only NULL blobs. */
   @Override
   public byte[] finish(Buf buf) {
-    if (buf.state == null) {
-      ByteBuffer bb = ByteBuffer.allocate(8).order(ByteOrder.LITTLE_ENDIAN);
-      bb.put((byte) 1).put((byte) 0).putShort((short) 100).putInt(0);
-      return bb.array();
-    }
-    return new TDigestAggregator(buf.state.delta, buf.state.exactCap).finish(buf.state);
+    return buf.state == null ? null : TDigestAggregator.toBytes(buf.state);
   }
 
   @Override

@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from hllspark import agg
 from hllspark.core.hll import HASH_XXHASH_SPARK, HLL, sparse_capacity
+from hllspark.sketches.kll import KLL
+from hllspark.sketches.tdigest import TDigest
 
 ju = pytest.importorskip("hllspark.jvm_udaf")
 
@@ -238,17 +240,37 @@ def test_minhash_udaf_byte_parity(udaf_spark, pages_small_dir):
         ju.minhash_jvm_udaf(df, "v", k=0)
 
 
+def _assert_non_finite_groups(spark, builder, cls, kind, quantile_ref):
+    """±inf are dropped from the exact fold like update_weighted drops them:
+    group 1 mixes them with finite values, group 2 holds only ±inf and must
+    finish to an EMPTY sketch (not NULL), group 3 holds only NULLs and must
+    finish to NULL.  Past exact_capacity the digest / compactor mode drops
+    them too."""
+    inf = float("inf")
+    rows = [(1, 1.5), (1, inf), (1, -inf), (1, 2.5), (1, 1.5), (1, -3.0)]
+    rows += [(2, inf), (2, -inf), (2, inf), (3, None), (3, None)]
+    df = spark.createDataFrame(rows, "g int, v double").repartition(3)
+    ref = quantile_ref(df, "v", ["g"], kind)
+    assert _by_key(builder(df, "v", ["g"]), ["g"]) == ref
+    assert ref[(2,)] is not None and ref[(3,)] is None
+
+    big = spark.createDataFrame([(float(i),) for i in range(100)] + [(inf,), (-inf,)], "v double").coalesce(1)
+    st = cls.from_bytes(bytes(builder(big, "v", exact_capacity=16).first()["sketch"]))
+    assert (st.total, st.vmin, st.vmax) == (100, 0.0, 99.0)
+
+
 def test_tdigest_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir, quantile_ref):
     """While every buffer stays under exact_capacity distinct values the
     udaf engine must be byte-identical to the direct python fold (one
-    sorted weighted update over the distinct values, replayed verbatim at
-    finalize)."""
+    sorted weighted update over the distinct values, which the jar's
+    finish replays)."""
     li = udaf_spark.read.parquet(f"{sf001_dir}/lineitem.parquet")
     u = _by_key(ju.tdigest_jvm_udaf(li, "l_extendedprice", ["l_returnflag"]), ["l_returnflag"])
     assert u == quantile_ref(li, "l_extendedprice", ["l_returnflag"], "tdigest") and len(u) >= 2
 
     ug = bytes(ju.tdigest_jvm_udaf(li, "l_quantity").first()["sketch"])
     assert ug == quantile_ref(li, "l_quantity", [], "tdigest")[()]
+    _assert_non_finite_groups(udaf_spark, ju.tdigest_jvm_udaf, TDigest, "tdigest", quantile_ref)
 
 
 def test_kll_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir, quantile_ref):
@@ -258,6 +280,7 @@ def test_kll_udaf_exact_mode_byte_parity(udaf_spark, sf001_dir, quantile_ref):
 
     ug = bytes(ju.kll_jvm_udaf(li, "l_extendedprice").first()["sketch"])
     assert ug == quantile_ref(li, "l_extendedprice", [], "kll")[()]
+    _assert_non_finite_groups(udaf_spark, ju.kll_jvm_udaf, KLL, "kll", quantile_ref)
 
 
 def test_quantile_udaf_null_contract(udaf_spark):

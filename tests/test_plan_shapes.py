@@ -101,8 +101,8 @@ def test_quantile_udaf_plan_shape(spark, pages_small_dir):
     """Round-4 quantile aggregate buffers: ObjectHashAggregate with a
     map-side partial, the scan pruned to the value column, ONE exchange of
     buffer rows — the whole point is that a continuous column never
-    shuffles one row per distinct value (the groupBy builder's
-    groupBy(key, value).count() reduction does)."""
+    shuffles one row per distinct value (as a groupBy(key, value).count()
+    reduction would)."""
     ju = pytest.importorskip("hllspark.jvm_udaf")
     if not ju.available(spark):
         pytest.skip("udaf jar not loadable")
@@ -131,23 +131,33 @@ def test_minhash_udaf_plan_shape(spark, pages_small_dir):
     assert "EvalPython" not in plan, plan
 
 
+_PYTHON_NODES = ("EvalPython", "MapInArrow", "InPandas")  # InPandas: MapInPandas, FlatMapGroupsInPandas, ...
+
+
 def test_hash_sibling_udaf_plans_have_no_python_stage(spark, pages_small_dir, udaf):
-    """The count-min, Bloom and MinHash aggregators finish to canonical
-    sketch bytes, so neither their builders nor their stored-blob merges
-    add a Python stage."""
+    """Every sibling aggregator (count-min, Bloom, MinHash, t-digest, KLL)
+    finishes to canonical sketch bytes, so neither their builders, nor
+    their stored-blob merges, nor router.build's auto route for the
+    quantile kinds add a Python stage."""
+    from hllspark.sketches import router
+
     pages = spark.read.parquet(pages_small_dir)
+    ts = pages.select("lang", F.unix_timestamp("warc_ts").alias("ts"))
     built = {
         "countmin": udaf.countmin_jvm_udaf(pages, "url", by=["lang"], width=64, depth=3),
         "bloom": udaf.bloom_jvm_udaf(pages, "url", by=["lang"], m_bits=1 << 12, k=3),
         "minhash": udaf.minhash_jvm_udaf(pages, "url", by=["lang"], k=16),
+        "tdigest": udaf.tdigest_jvm_udaf(ts, "ts", by=["lang"]),
+        "kll": udaf.kll_jvm_udaf(ts, "ts", by=["lang"]),
     }
+    plans = {}
     for kind, out in built.items():
-        assert "EvalPython" not in _plan(out), kind
-        merged = udaf.sibling_merge_udaf(out, kind, "sketch")
-        assert "EvalPython" not in _plan(merged), kind
-
-
-_PYTHON_NODES = ("EvalPython", "MapInArrow", "InPandas")  # InPandas: MapInPandas, FlatMapGroupsInPandas, ...
+        plans[kind] = _plan(out)
+        plans[f"{kind} merge"] = _plan(udaf.sibling_merge_udaf(out, kind, "sketch"))
+    for kind in ("tdigest", "kll"):
+        plans[f"{kind} router"] = _plan(router.build(ts, "ts", kind, by=["lang"]))
+    for name, plan in plans.items():
+        assert not any(node in plan for node in _PYTHON_NODES), (name, plan)
 
 
 def test_sketch_stream_plans_have_no_python_stage(spark, tmp_path, monkeypatch, udaf):

@@ -152,3 +152,30 @@ def test_merge_stored_hll_kind_and_validation(udaf_spark):
     assert u == p == h.to_bytes()  # idempotent merge of identical counters
     with pytest.raises(ValueError):
         sketches.merge_stored(df, "nope")
+
+
+def test_quantile_blob_length_mismatch_fails_in_every_decoder(udaf_spark):
+    """A t-digest or KLL blob whose payload length disagrees with its header
+    (cut by 1 or 8 bytes, or 8 bytes appended) raises in every decoder with
+    the same message: from_bytes, the jar route of functions.tdigest_quantile
+    / kll_quantile, and the stored-blob merge."""
+    import hllspark.functions as hf
+
+    cases = [
+        ("tdigest", TDigest, _filled(TDigest.create(delta=100)), hf.tdigest_quantile,
+         "tdigest header inconsistent with payload"),
+        ("kll", KLL, _filled_kll(KLL.create(k=200)), hf.kll_quantile,
+         "kll payload size inconsistent with header"),
+    ]
+    for kind, cls, st, reader, msg in cases:
+        blob = st.to_bytes()
+        for bad in (blob[:-1], blob[:-8], blob + bytes(8)):
+            with pytest.raises(ValueError, match=msg):
+                cls.from_bytes(bad)
+            df = udaf_spark.createDataFrame([(bytearray(bad),)], "sketch binary")
+            read = df.select(reader("sketch", 0.5))
+            assert "EvalPython" not in read._jdf.queryExecution().executedPlan().toString()
+            with pytest.raises(Exception, match=msg):
+                read.collect()
+            with pytest.raises(Exception, match=msg):
+                ju.sibling_merge_udaf(df, kind).collect()
