@@ -457,19 +457,12 @@ def merge_partials_driver(partials: DataFrame) -> dict:
     For P ≤ ~4096 partials (P × ≤16 KiB = a few MiB) this removes an entire
     Exchange + single-task stage + Python-worker round trip per query — the
     same role the coordinator's finalfunc plays in Greenplum (SURVEY.md §3.2).
+    The collected blobs go through one vectorized ``merge_blobs`` union,
+    byte-identical to the ``HLL.from_bytes`` + ``merge`` fold with the same
+    refusal of mismatched b/binbits/hash_kind.
     """
-    acc: dict = {}
-    for r in partials.select("sketch").collect():
-        if r["sketch"] is None:
-            # all-NULL partial: keep the key (its merged result may stay NULL)
-            acc.setdefault((), None)
-            continue
-        s = HLL.from_bytes(bytes(r["sketch"]))
-        if acc.get(()) is not None:
-            acc[()].merge(s)
-        else:
-            acc[()] = s
-    return acc
+    blobs = [r[0] for r in partials.select("sketch").collect()]
+    return {(): merge_blobs(blobs)} if blobs else {}
 
 
 def sketch(

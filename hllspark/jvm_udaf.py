@@ -520,11 +520,14 @@ def sketch_cube_jvm_udaf(
 def _sibling_udaf_column(
     spark: SparkSession, in_col: Column, cls_name: str, args: list, encoder: str = "long"
 ) -> Column:
-    jagg = _new_jvm_obj(spark, cls_name, args)
-    jvm = spark._jvm
-    E = jvm.org.apache.spark.sql.Encoders
-    jenc = {"long": E.LONG, "double": E.DOUBLE, "binary": E.BINARY}[encoder]()
-    judf = jvm.org.apache.spark.sql.functions.udaf(jagg, jenc)
+    def make():
+        jagg = _new_jvm_obj(spark, cls_name, args)
+        jvm = spark._jvm
+        E = jvm.org.apache.spark.sql.Encoders
+        jenc = {"long": E.LONG, "double": E.DOUBLE, "binary": E.BINARY}[encoder]()
+        return jvm.org.apache.spark.sql.functions.udaf(jagg, jenc)
+
+    judf = _cached_udf(spark, (cls_name, *args, encoder), make)
     return _to_col(judf.apply(_col_seq(spark, [in_col])))
 
 

@@ -186,15 +186,20 @@ class KLL:
     @classmethod
     def from_bytes(cls, data: bytes) -> "KLL":
         """Decode to_bytes output; refuses a newer version, a k or level
-        count no sketch has, and a header the payload length disagrees with
-        (the jar's decoder refuses the same)."""
+        count no sketch has, and a header the payload length disagrees with,
+        including one cut inside the header or the level-size array (the
+        jar's decoder refuses the same)."""
         fmt = "<BBHHqqdd"
+        off = struct.calcsize(fmt)
+        if len(data) < off:
+            raise ValueError("kll payload size inconsistent with header")
         version, _, k, nlevels, total, compactions, vmin, vmax = struct.unpack_from(fmt, data, 0)
         if version > _VERSION:
             raise ValueError(f"unsupported kll version {version}")
         if k < 8 or nlevels > 64:
             raise ValueError(f"kll header out of range: k={k} nlevels={nlevels}")
-        off = struct.calcsize(fmt)
+        if len(data) < off + 4 * nlevels:
+            raise ValueError("kll payload size inconsistent with header")
         sizes = struct.unpack_from(f"<{nlevels}i", data, off)
         if min(sizes, default=0) < 0:
             raise ValueError("negative kll level size")

@@ -178,11 +178,14 @@ class TDigest:
     @classmethod
     def from_bytes(cls, data: bytes) -> "TDigest":
         """Decode to_bytes output; refuses a newer version and a header the
-        payload length disagrees with (the jar's decoder refuses the same)."""
+        payload length disagrees with, or one shorter than the header (the
+        jar's decoder refuses the same)."""
+        off = struct.calcsize("<BBHqddd")
+        if len(data) < off:
+            raise ValueError("tdigest header inconsistent with payload")
         version, _, delta, n, total, vmin, vmax = struct.unpack_from("<BBHqddd", data, 0)
         if version > _VERSION:
             raise ValueError(f"unsupported tdigest version {version}")
-        off = struct.calcsize("<BBHqddd")
         if not 10 <= delta <= 10000 or n < 0 or len(data) != off + 16 * n:
             raise ValueError("tdigest header inconsistent with payload")
         means = np.frombuffer(data, dtype="<f8", count=n, offset=off).astype(np.float64)

@@ -58,6 +58,7 @@ from pyspark.sql.types import (
 from . import agg, jvm_udaf
 from .core.hll import HLL
 from .functions import DEFAULT_B, DEFAULT_BINBITS, _hll_estimate, build_sketch
+from .io import _read_parquet
 
 
 class SketchStream:
@@ -137,7 +138,7 @@ class SketchStream:
         paths = ([self._compact_dir(cv)] if cv >= 0 else []) + [self._delta_dir(d) for d in deltas]
         if not paths:
             return cv, None, 0
-        return cv, spark.read.parquet(*paths).select(*self.by, "sketch"), len(paths)
+        return cv, _read_parquet(spark, *paths).select(*self.by, "sketch"), len(paths)
 
     def _view(self, spark: SparkSession) -> tuple[int, DataFrame | None]:
         """(latest compact id or -1, lazy merged state or None)."""

@@ -323,6 +323,7 @@ public final class KllAggregator
    * that the payload length disagrees with, with from_bytes's messages.
    */
   static Buf fromBytes(byte[] blob) {
+    if (blob.length < HEADER) throw new IllegalArgumentException("kll payload size inconsistent with header");
     ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
     int version = bb.get() & 0xff;
     bb.get(); // pad
@@ -336,6 +337,9 @@ public final class KllAggregator
     if (version > 1) throw new IllegalArgumentException("unsupported kll version " + version);
     if (buf.k < 8 || nlevels > 64) {
       throw new IllegalArgumentException("kll header out of range: k=" + buf.k + " nlevels=" + nlevels);
+    }
+    if (blob.length < HEADER + 4L * nlevels) {
+      throw new IllegalArgumentException("kll payload size inconsistent with header");
     }
     int[] sizes = new int[nlevels];
     long items = 0;

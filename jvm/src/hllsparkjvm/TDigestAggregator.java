@@ -416,6 +416,7 @@ public final class TDigestAggregator
    * payload length disagrees with, with from_bytes's messages.
    */
   static Buf fromBytes(byte[] blob) {
+    if (blob.length < HEADER) throw new IllegalArgumentException("tdigest header inconsistent with payload");
     ByteBuffer bb = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
     int version = bb.get() & 0xff;
     bb.get(); // pad

@@ -209,6 +209,33 @@ def test_sibling_param_validation_and_version_skew(udaf_spark):
         ju._sibling_udaf_column(udaf_spark, F.col("v"), "hllsparkjvm.NoSuchAggregator", [1])
 
 
+def test_sibling_registrations_are_cached(udaf_spark):
+    """A sibling builder or stored merge registers its Java aggregator once
+    per (class, params, encoder) and app; a class that fails to build
+    caches nothing, so every call raises."""
+    df = udaf_spark.createDataFrame([(1, 2), (1, 3), (2, None)], "g int, v bigint")
+    app, cache = ju._app_key(udaf_spark), ju._UDAF_COL_CACHE
+    cm = [(app, "hllsparkjvm.CountMinAggregator", w, 3, "long") for w in (64, 128)]
+    merge = (app, "hllsparkjvm.HllMergeAggregator", "binary")
+    for k in (*cm, merge):
+        cache.pop(k, None)
+
+    a = _by_key(ju.countmin_jvm_udaf(df, "v", ["g"], width=64, depth=3), ["g"])
+    judf = cache[cm[0]]
+    assert _by_key(ju.countmin_jvm_udaf(df, "v", ["g"], width=64, depth=3), ["g"]) == a
+    assert cache[cm[0]] is judf and cm[1] not in cache
+    ju.countmin_jvm_udaf(df, "v", ["g"], width=128, depth=3)
+    assert cache[cm[1]] is not judf
+    stored = ju.hll_merge_udaf(ju.sketch_jvm_udaf(df, "v", ["g"]), "sketch", ["g"])
+    merge_udf = cache[merge]
+    ju.hll_merge_udaf(stored, "sketch")
+    assert cache[merge] is merge_udf
+    for _ in range(2):
+        with pytest.raises(Exception):
+            ju._sibling_udaf_column(udaf_spark, F.col("v"), "hllsparkjvm.NoSuchAggregator", [1])
+    assert not [k for k in cache if k[1] == "hllsparkjvm.NoSuchAggregator"]
+
+
 # ---------------------------------------------------------------------------
 # round 4: MinHash + quantile (t-digest / KLL) aggregate buffers
 # ---------------------------------------------------------------------------

@@ -156,20 +156,22 @@ def test_merge_stored_hll_kind_and_validation(udaf_spark):
 
 def test_quantile_blob_length_mismatch_fails_in_every_decoder(udaf_spark):
     """A t-digest or KLL blob whose payload length disagrees with its header
-    (cut by 1 or 8 bytes, or 8 bytes appended) raises in every decoder with
-    the same message: from_bytes, the jar route of functions.tdigest_quantile
-    / kll_quantile, and the stored-blob merge."""
+    (cut by 1 or 8 bytes, 8 bytes appended, or cut inside the fixed 36 / 38
+    byte header or the KLL level-size array) raises in every decoder with
+    the same message — never a struct.error or BufferUnderflowException:
+    from_bytes, the jar route of functions.tdigest_quantile / kll_quantile,
+    and both stored-blob merges."""
     import hllspark.functions as hf
 
     cases = [
         ("tdigest", TDigest, _filled(TDigest.create(delta=100)), hf.tdigest_quantile,
-         "tdigest header inconsistent with payload"),
+         "tdigest header inconsistent with payload", [0, 1, 20, 35]),
         ("kll", KLL, _filled_kll(KLL.create(k=200)), hf.kll_quantile,
-         "kll payload size inconsistent with header"),
+         "kll payload size inconsistent with header", [0, 1, 20, 37, 38 + 2, 38 + 4 - 1]),
     ]
-    for kind, cls, st, reader, msg in cases:
+    for kind, cls, st, reader, msg, cuts in cases:
         blob = st.to_bytes()
-        for bad in (blob[:-1], blob[:-8], blob + bytes(8)):
+        for bad in (blob[:-1], blob[:-8], blob + bytes(8), *[blob[:n] for n in cuts]):
             with pytest.raises(ValueError, match=msg):
                 cls.from_bytes(bad)
             df = udaf_spark.createDataFrame([(bytearray(bad),)], "sketch binary")
@@ -179,3 +181,5 @@ def test_quantile_blob_length_mismatch_fails_in_every_decoder(udaf_spark):
                 read.collect()
             with pytest.raises(Exception, match=msg):
                 ju.sibling_merge_udaf(df, kind).collect()
+            with pytest.raises(Exception, match=msg):
+                sketches.merge_stored(df, kind, engine="python").collect()

@@ -153,3 +153,52 @@ def test_distinct_error_rate_form(spark, sf001_dir):
     assert abs(est_default - exact) / exact < 3 * 1.04 / math.sqrt(2**14)
     assert abs(est_coarse - exact) / exact < 3 * 0.05
     assert est_default != est_coarse  # genuinely different precision
+
+
+def test_merge_partials_driver_equals_sequential_fold(spark):
+    """One vectorized union over the collected blobs: the same bytes as the
+    HLL.from_bytes + merge fold over sparse, group-varint, dense, packed and
+    unpacked payloads with NULL partials, {} without partials, {(): None}
+    when every partial is NULL, and HLL.merge's refusal of mismatches."""
+    import numpy as np
+
+    from hllspark.core.hll import HLL
+
+    def mk(n, seed, b=14, binbits=6, hk=1):
+        s = HLL.create(b=b, binbits=binbits, hash_kind=hk)
+        s.add_hashes(np.random.default_rng(seed).integers(0, 2**63, size=n, dtype=np.uint64))
+        return s
+
+    def fold(blobs):
+        acc = None
+        for v in blobs:
+            if v is not None:
+                s = HLL.from_bytes(v)
+                acc = s if acc is None else acc.merge(s)
+        return acc
+
+    def driver(blobs):
+        rows = [(None if v is None else bytearray(v),) for v in blobs]
+        return agg.merge_partials_driver(spark.createDataFrame(rows, "sketch binary"))
+
+    cases = [
+        [mk(50, 1).to_bytes(), None, mk(80, 2).to_bytes(compress=True)],  # sparse, stays sparse
+        [mk(5000, 3).to_bytes(), mk(40, 4).to_bytes(), None],  # packed dense + sparse
+        [mk(5000, 5).to_bytes(packed=False), mk(3000, 6).to_bytes(compress=True), mk(7, 7).to_bytes()],
+        [mk(20, s, b=10, binbits=5, hk=0).to_bytes() for s in range(30)],  # non-default params
+    ]
+    for blobs in cases:
+        got = driver(blobs)
+        assert list(got) == [()] and got[()].to_bytes() == fold(blobs).to_bytes()
+    assert driver([]) == {}
+    assert driver([None, None]) == {(): None}
+    for other, msg in [
+        (mk(10, 8, b=12), "index size of estimators differs"),
+        (mk(10, 8, binbits=5), "bin size of estimators differs"),
+        (mk(10, 8, hk=0), "hash kind of estimators differs"),
+    ]:
+        blobs = [mk(10, 9).to_bytes(), other.to_bytes()]
+        with pytest.raises(ValueError, match=msg):
+            fold(blobs)
+        with pytest.raises(ValueError, match=msg):
+            driver(blobs)
