@@ -2,17 +2,27 @@
 
 This reproduces the reference's Greenplum distributed-aggregation contract
 (sfunc per segment → motion → prefunc register-max → finalfunc,
-sql/greenplum.sql:289-295, SURVEY.md §3.2) with explicit Spark stages,
-because Spark's pandas GROUPED_AGG UDAFs have no map-side partial
-aggregation (they shuffle raw rows):
+sql/greenplum.sql:289-295, SURVEY.md §3.2) with explicit Spark stages:
 
-  phase 1  mapInPandas      one partial sketch per (input partition, group);
-                            Arrow batches hashed with numpy, no per-row Python
+  phase 1  build_partials   one partial sketch per (input partition, group),
+                            a narrow stage with no shuffle: the jar's
+                            HllPartialBuilder (a JVM mapPartitions over the
+                            xxhash64 prehash) when the jar loads, else — and
+                            for murmur-pinned input and factory sketches —
+                            the mapInArrow builder (Arrow batches hashed
+                            with numpy, no per-row Python)
   shuffle  Exchange         partial sketches only — P×G rows of ≤16 KiB, not
                             raw rows; this is what tames skew: a hot group
                             costs P sketches, not N rows
-  phase 2  applyInPandas /  register-max merge (associative+commutative →
-           tree fan-in      any arrival order gives byte-identical registers)
+  phase 2  merge_partials   register-max merge (associative+commutative →
+                            any arrival order gives byte-identical registers):
+                            the jar's blob-merge aggregate, else applyInPandas
+                            or a tree fan-in
+
+``sketch`` with the jar skips the explicit phases: one JVM aggregate
+(jvm_udaf.sketch_jvm_udaf) partial-aggregates map-side before its shuffle.
+Spark's pandas GROUPED_AGG UDAFs (the SQL ``*_agg`` surface) have no
+map-side partial aggregation at all: they shuffle raw rows.
 
 Skew note: because phase 1 collapses each partition to one sketch per group,
 a hot key ('en' at 55% of a Common-Crawl table) shuffles the same number of
@@ -135,31 +145,7 @@ def _make_builder(
                 nn_pos[valid] = np.arange(len(nn))
             else:
                 nn_pos = None
-            # group the batch by key → (group key, row positions) pairs
-            if len(by) == 1:
-                # arrow-native single-key path: dictionary-encode
-                # (~10× cheaper than pandas groupby on strings per batch)
-                dict_arr = pc.dictionary_encode(batch.column(batch.schema.get_field_index(by[0])))
-                indices = dict_arr.indices
-                uniq = dict_arr.dictionary
-                null_code = len(uniq)
-                if indices.null_count:
-                    indices = indices.fill_null(null_code)
-                codes = indices.to_numpy(zero_copy_only=False).astype(np.int64)
-                order = np.argsort(codes, kind="stable")
-                bounds = np.searchsorted(codes[order], np.arange(null_code + 2))
-                group_iter = (
-                    ((uniq[ci].as_py(),) if ci < null_code else (None,), order[bounds[ci] : bounds[ci + 1]])
-                    for ci in range(null_code + 1)
-                    if bounds[ci + 1] > bounds[ci]
-                )
-            else:
-                keys_pdf = batch.select(list(by)).to_pandas()
-                group_iter = (
-                    (key if isinstance(key, tuple) else (key,), idx)
-                    for key, idx in keys_pdf.groupby(list(by), sort=False, dropna=False).indices.items()
-                )
-            for k, idx in group_iter:
+            for k, idx in _group_rows(batch, by):
                 st = states.get(k)
                 if st is None:
                     st = states[k] = make_state()
@@ -186,8 +172,7 @@ def _make_builder(
         names = []
         for i, c in enumerate(by):
             typ = key_arrays[i].type if key_arrays is not None else None
-            vals = [None if v is None or v != v else v for v in (k[i] for k in keys)]  # NaN/NaT → null
-            arrays.append(pa.array(vals, type=typ))
+            arrays.append(pa.array([k[i] for k in keys], type=typ))
             names.append(c)
         # NULL contract (hyperloglog_counter.c:218-220, 511-513): a group whose
         # every value was NULL yields SQL NULL, not an empty sketch — for
@@ -220,6 +205,48 @@ def _make_builder(
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return build
+
+
+# the one NaN object group keys carry: a tuple key compares and hashes its
+# floats by identity first, so every NaN must be this object to find its group
+_NAN = float("nan")
+
+
+def _key_value(dictionary, code: int):
+    if code == len(dictionary):
+        return None
+    v = dictionary[code].as_py()
+    return _NAN if isinstance(v, float) and v != v else v
+
+
+def _group_rows(batch, by: Sequence[str]):
+    """(key tuple, row positions) per group of ``by`` in one Arrow batch,
+    grouped by value the way Spark's GROUP BY groups: each key column is
+    dictionary-encoded (NULL gets its own code, so NULL and NaN stay apart;
+    -0.0 is folded into 0.0 first) and rows group by their code tuple."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    dicts, codes = [], []
+    for c in by:
+        arr = batch.column(batch.schema.get_field_index(c))
+        if pa.types.is_floating(arr.type):
+            arr = pc.add(arr, pa.scalar(0, arr.type))  # -0.0 + 0 == +0.0
+        enc = pc.dictionary_encode(arr)
+        idx = enc.indices.fill_null(len(enc.dictionary)) if enc.indices.null_count else enc.indices
+        dicts.append(enc.dictionary)
+        codes.append(idx.to_numpy(zero_copy_only=False).astype(np.int64))
+    if len(codes) == 1:
+        key_codes, gcodes = np.arange(len(dicts[0]) + 1)[:, None], codes[0]
+    else:
+        key_codes, gcodes = np.unique(np.stack(codes, axis=1), axis=0, return_inverse=True)
+        gcodes = gcodes.reshape(-1)
+    order = np.argsort(gcodes, kind="stable")
+    bounds = np.searchsorted(gcodes[order], np.arange(len(key_codes) + 1))
+    for g in range(len(key_codes)):
+        if bounds[g + 1] > bounds[g]:
+            key = tuple(_key_value(d, int(c)) for d, c in zip(dicts, key_codes[g]))
+            yield key, order[bounds[g] : bounds[g + 1]]
 
 
 def _merge_rows_obj(sketches: Iterable, cls=HLL):
@@ -318,13 +345,23 @@ def build_partials(
     factory=None,
     error_rate: float | None = None,
     ndistinct: float | None = None,
+    engine: str = "auto",
 ) -> DataFrame:
     """Phase 1 only: one partial sketch per (partition, group) with lineage.
 
     Exposed separately so callers can persist partials as a checkpoint
     (hllspark.io) — the stored-counter workflow of README.md:135-166.
     ``factory`` switches the state type to any Sketch-protocol object.
+
+    ``engine`` routes the way ``merge_partials`` does: "auto" runs the
+    jar's HllPartialBuilder (one narrow JVM stage, jvm_udaf.hll_partials)
+    when the jar loads and the value is hashed with the JVM xxhash64
+    prehash; murmur-pinned input, ``factory`` sketches and sessions without
+    the jar run the python mapInArrow builder.  Both give partials that
+    decode equal, so their merges are byte-identical.
     """
+    from . import jvm_udaf
+    from .core.hll import HASH_XXHASH_SPARK
     from .functions import resolve_params
 
     b, binbits = resolve_params(b, binbits, error_rate, ndistinct)
@@ -337,6 +374,16 @@ def build_partials(
             df.select(*by, value_col), value_col, by, True if factory is not None else jvm_prehash
         )
     cols = by + [value_col]
+    jar_domain = factory is None and hash_kind == HASH_XXHASH_SPARK
+    if engine == "auto" and not jar_domain:
+        engine = "python"  # murmur or a factory sketch: only the python builder serves it
+    if jvm_udaf.resolve_engine(df.sparkSession, engine) == "jvm_udaf":
+        if not jar_domain:
+            raise ValueError(
+                "engine='jvm_udaf' builds HLL partials of the xxhash64 prehash only; "
+                "murmur-pinned input and factory sketches need engine='python'"
+            )
+        return jvm_udaf.hll_partials(df.select(*cols), len(by), b, binbits, lineage)
     schema = _partial_schema(df.select(*cols), by, lineage)
     return df.select(*cols).mapInArrow(
         _make_builder(value_col, by, b, binbits, input_type, lineage, hash_kind, factory), schema=schema
@@ -497,7 +544,7 @@ def sketch(
         return sketch_jvm_udaf(df, value_col, by, b, binbits, error_rate, ndistinct)
     partials = build_partials(
         df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash,
-        error_rate=error_rate, ndistinct=ndistinct,
+        error_rate=error_rate, ndistinct=ndistinct, engine="python",
     )
     return merge_partials(partials, by, merge_rounds=merge_rounds)
 
@@ -716,7 +763,9 @@ def distinct(
             finalize="estimate_bigint" if bigint else "estimate", est_col=est_col,
         )
     if not by and spark.sparkContext.defaultParallelism <= _DRIVER_MERGE_MAX_PARALLELISM:
-        partials = build_partials(df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash)
+        partials = build_partials(
+            df, value_col, by, b, binbits, input_type, lineage=False, jvm_prehash=jvm_prehash, engine="python"
+        )
         s = merge_partials_driver(partials).get(())
         e = None if s is None else float(s.estimate())
         if bigint:
@@ -754,17 +803,3 @@ def sketch_generic(
         df, value_col, by, input_type=input_type, lineage=False, factory=factory, jvm_prehash=jvm_prehash
     )
     return merge_partials(partials, by, merge_rounds=merge_rounds, cls=cls)
-
-
-def salted_repartition(df: DataFrame, keys: Sequence[str], num_partitions: int, salt_buckets: int = 16) -> DataFrame:
-    """Repartition by (keys..., salt) so one hot key fans out across
-    ``salt_buckets`` partitions (SURVEY.md §4 skew control).
-
-    The sketch pipeline itself doesn't need this — phase 1 collapses rows to
-    per-partition sketches before any shuffle — but raw-row operations that
-    must shuffle by a skewed key (e.g. a groupBy feeding a non-mergeable
-    computation) can pre-salt with this helper; merge associativity (or any
-    reassociable aggregate) makes the two-level collapse correct.
-    """
-    salt = F.pmod(F.xxhash64(*[F.col(c) for c in keys], F.spark_partition_id()), F.lit(salt_buckets))
-    return df.repartition(num_partitions, *[F.col(c) for c in keys], salt)

@@ -311,7 +311,9 @@ class CheckpointedSketch:
             if self.epoch_done(i):
                 continue
             df = _read_parquet(self.spark, *files)
-            # the epoch column comes from the epoch=N directory (partials())
+            # the epoch column comes from the epoch=N directory (partials());
+            # string/binary values take build_partials' jar route, whose
+            # lineage (wall_ms included) the JVM builder reports
             partials = agg.build_partials(
                 df, self.value_col, self.by, b=self.b, binbits=self.binbits, input_type=self.input_type, lineage=True
             )

@@ -3,24 +3,26 @@
 The reference's counters are updatable state without any notion of event
 time (SURVEY.md §1.4), which maps to two Spark streaming patterns:
 
-- ``SketchStream`` (foreachBatch): each micro-batch is one ``agg.sketch``
-  over the batch, written as a per-batch DELTA holding only that batch's
-  TOUCHED keys — per-batch write cost is O(touched keys), not O(all keys
-  ever seen).  Every ``compact_every`` batches the deltas are folded with
-  the previous compact into a new full state and dropped.  Deltas are keyed
+- ``SketchStream`` (foreachBatch): each micro-batch is one
+  ``agg.build_partials`` over the batch, written as a per-batch DELTA of
+  one partial sketch per (batch partition, TOUCHED key) — per-batch write
+  cost is O(touched keys × batch partitions), not O(all keys ever seen).
+  Every ``compact_every`` batches the deltas are folded with the previous
+  compact into a new full state and dropped.  Deltas are keyed
   by batch_id, so retries are idempotent (skip if the delta — or a compact
   covering it — exists) and merge idempotence makes duplicate input
   harmless.  ``state``/``estimates`` serve the current merged view at any
   time (lazy merge of compact + live deltas) — the streaming twin of the
   checkpoint-resumable batch path (hllspark.io).
 
-  Routing: with the udaf jar loadable, a delta is one JVM aggregate (scan →
-  xxhash64 → partial ObjectHashAggregate → final canonical bytes), the view
-  is one ``hll_merge_udaf`` over the compact and the live deltas, and
-  ``estimates`` finishes that same aggregate to estimates in the JVM — no
-  Python stage anywhere.  Without the jar every step runs the python engine
-  with the same xxhash64 prehash, so the bytes do not depend on which
-  engine ran.
+  Routing: with the udaf jar loadable, a delta is one narrow JVM stage
+  (scan → xxhash64 → HllPartialBuilder per partition → parquet, no
+  shuffle), the view is one ``hll_merge_udaf`` over the compact and the
+  live deltas, and ``estimates`` finishes that same aggregate to estimates
+  in the JVM — no Python stage anywhere.  Without the jar every step runs
+  the python engine with the same xxhash64 prehash, so the bytes do not
+  depend on which engine ran.  A view with a delta in it is always merged,
+  so deltas of earlier releases (one merged row per key) read the same way.
 
   Hash domain: a stream hashes like a default ``agg.sketch`` — xxhash64
   (hash_kind=1) for every column type.  Pass ``input_type`` (e.g.
@@ -64,19 +66,22 @@ from .io import _read_parquet
 class SketchStream:
     """foreachBatch sink maintaining merged sketch state in parquet,
     incrementally: per-batch DELTAS (touched keys only) + periodic
-    compaction (see module doc — per-batch write cost is O(touched keys)).
+    compaction (see module doc — per-batch write cost is O(touched keys)
+    per batch partition).
 
     Layout: ``{state_dir}/delta/v={batch_id}`` per-batch sketches;
     ``{state_dir}/compact/v={batch_id}`` full states, rewritten every
     ``compact_every`` batches.
 
-    A delta is ``agg.sketch(batch, value_col, by, b, binbits,
-    input_type=input_type)``, so it runs the engine a batch sketch runs:
-    the jar's aggregate when it loads, else the python builder.  The
-    default hash is xxhash64 for every column type; ``input_type="int64"``
-    (or any explicit type) pins MurmurHash on the python builder, which a
-    non-string-column state written by an earlier release needs — mixing
-    the two domains in one state raises at its next merge.
+    A delta is ``agg.build_partials(batch, value_col, by, b, binbits,
+    input_type=input_type, lineage=False, jvm_prehash=True)``: the jar's
+    builder when it loads, else the python builder, one partial per (batch
+    partition, touched key) either way.  The default hash is xxhash64 for
+    every column type, the domain of a default ``agg.sketch``;
+    ``input_type="int64"`` (or any explicit type) pins MurmurHash on the
+    python builder, which a non-string-column state written by an earlier
+    release needs — mixing the two domains in one state raises at its next
+    merge.
 
     >>> ss = SketchStream("/state/url_by_lang", "url", by=["lang"])
     >>> q = (stream.writeStream.foreachBatch(ss)
@@ -133,17 +138,18 @@ class SketchStream:
     def _rows(self, spark: SparkSession) -> tuple[int, DataFrame | None, int]:
         """(latest compact id or -1, the rows of that compact and the live
         deltas read as one parquet relation, unmerged — None when there are
-        none — and the number of directories read)."""
+        none — and the number of live deltas read)."""
         cv, deltas = self._ids(spark)
         paths = ([self._compact_dir(cv)] if cv >= 0 else []) + [self._delta_dir(d) for d in deltas]
         if not paths:
             return cv, None, 0
-        return cv, _read_parquet(spark, *paths).select(*self.by, "sketch"), len(paths)
+        return cv, _read_parquet(spark, *paths).select(*self.by, "sketch"), len(deltas)
 
     def _view(self, spark: SparkSession) -> tuple[int, DataFrame | None]:
-        """(latest compact id or -1, lazy merged state or None)."""
-        cv, rows, n = self._rows(spark)
-        if n > 1:
+        """(latest compact id or -1, lazy merged state or None).  A lone
+        compact already is the merged state; a delta holds partials."""
+        cv, rows, ndeltas = self._rows(spark)
+        if ndeltas:
             rows = agg.merge_partials(rows, self.by)
         return cv, rows
 
@@ -152,10 +158,11 @@ class SketchStream:
         cv, deltas = self._ids(spark)
         if batch_id <= cv or batch_id in deltas:
             return  # replayed batch — state already includes it (idempotent)
-        # one row per key TOUCHED BY THIS BATCH — the whole prior state is
-        # neither read nor rewritten on the hot path
-        agg.sketch(
+        # one partial per (batch partition, key TOUCHED BY THIS BATCH) — the
+        # whole prior state is neither read nor rewritten on the hot path
+        agg.build_partials(
             batch_df, self.value_col, self.by, self.b, self.binbits, input_type=self.input_type,
+            lineage=False, jvm_prehash=True,
         ).write.mode("overwrite").parquet(self._delta_dir(batch_id))
         if len(deltas) + 1 >= self.compact_every:
             self._compact(spark, batch_id)

@@ -290,7 +290,7 @@ public final class HllMergeAggregator
   /** Canonical bytes of the merged counter; null (SQL NULL) when every input was NULL. */
   @Override
   public byte[] finish(Buf buf) {
-    return buf.state == null ? null : HllRegisterAggregator.toBytes(buf.state, buf.hashKind);
+    return buf.state == null ? null : HllRegisterAggregator.toBytes(buf.state, buf.hashKind, true);
   }
 
   @Override

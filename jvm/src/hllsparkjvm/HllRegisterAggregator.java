@@ -302,6 +302,13 @@ public final class HllRegisterAggregator
   /** Canonical sketch bytes, or null (SQL NULL) for a group with no values. */
   @Override
   public byte[] finish(Buf buf) {
+    return finish(buf, true);
+  }
+
+  /** finish(), with dense registers bit-packed at binbits only when
+   *  {@code packed}: a partial that is merged again must keep its true
+   *  registers (HllPartialBuilder). */
+  byte[] finish(Buf buf, boolean packed) {
     if (buf.empty()) return null;
     // replay the deferred chain rows the way HLL.add_hashes adds them to
     // the state they join: register max when dense, else through the
@@ -312,7 +319,7 @@ public final class HllRegisterAggregator
       if (dense) HllEstimator.denseAdd(buf.dense, h, buf.b, buf.binbits);
       else buf.addEnc(HllEstimator.encodeHash(h, buf.b, buf.binbits));
     }
-    return toBytes(buf, HllConstants.HASH_XXHASH_SPARK);
+    return toBytes(buf, HllConstants.HASH_XXHASH_SPARK, packed);
   }
 
   /**
@@ -321,9 +328,9 @@ public final class HllRegisterAggregator
    * (version, b, binbits, flags carrying hash_kind, idx), then either the
    * sorted-unique u32 sparse encodings (idx = their count) or the 2^b dense
    * registers (idx = -1), bit-packed MSB-first at binbits bits when
-   * binbits < 8, raw bytes otherwise.
+   * {@code packed} and binbits < 8, raw bytes otherwise.
    */
-  static byte[] toBytes(Buf st, int hashKind) {
+  static byte[] toBytes(Buf st, int hashKind, boolean packed) {
     int flags = (hashKind << HllConstants.HASH_KIND_SHIFT) & HllConstants.HASH_KIND_MASK;
     if (st.dense == null) {
       // encodings are uint32: flip the sign bit so the signed sort yields
@@ -339,7 +346,7 @@ public final class HllRegisterAggregator
       return bb.array();
     }
     int m = st.dense.length;
-    if (st.binbits >= 8) {
+    if (!packed || st.binbits >= 8) {
       return header(m, st, flags | HllConstants.FLAG_DENSE, -1).put(st.dense).array();
     }
     ByteBuffer bb = header((m * st.binbits + 7) / 8, st,

@@ -161,28 +161,31 @@ def test_hash_sibling_udaf_plans_have_no_python_stage(spark, pages_small_dir, ud
 
 
 def test_sketch_stream_plans_have_no_python_stage(spark, tmp_path, monkeypatch, udaf):
-    """With the jar loaded, a SketchStream micro-batch delta is one JVM
-    aggregate and estimates() one JVM merge-and-estimate aggregate.  A
-    murmur-pinned stream (input_type="int64") still runs the python
-    builder, which shows the check sees a Python stage when there is one."""
+    """With the jar loaded, a SketchStream micro-batch delta is one narrow
+    JVM stage (HllPartialBuilder: no Exchange, no Python node) and
+    estimates() one JVM merge-and-estimate aggregate.  A murmur-pinned
+    stream (input_type="int64") still runs the python builder, which shows
+    the check sees a Python stage when there is one."""
     from hllspark import agg
     from hllspark.streaming import SketchStream
 
     deltas = []
-    sketch = agg.sketch
+    build_partials = agg.build_partials
 
     def spy(*args, **kwargs):
-        deltas.append(sketch(*args, **kwargs))
+        deltas.append(build_partials(*args, **kwargs))
         return deltas[-1]
 
-    monkeypatch.setattr(agg, "sketch", spy)
+    monkeypatch.setattr(agg, "build_partials", spy)
     batch = spark.createDataFrame([(f"k{i % 3}", i) for i in range(100)], "k string, v long")
     ss = SketchStream(str(tmp_path / "st"), "v", by=["k"])
     ss(batch, 0)
     ss(batch.where("v > 50"), 1)
-    for plan in [_plan(deltas[0]), _plan(deltas[1]), _plan(ss.estimates(spark))]:
+    for plan in [_plan(deltas[0]), _plan(deltas[1])]:
+        assert "MapPartitions" in plan and "Exchange" not in plan, plan
         assert not any(node in plan for node in _PYTHON_NODES), plan
-    assert "hllregisteraggregator" in _plan(deltas[0]).lower()
+    plan = _plan(ss.estimates(spark))
+    assert not any(node in plan for node in _PYTHON_NODES), plan
 
     SketchStream(str(tmp_path / "murmur"), "v", by=["k"], input_type="int64")(batch, 0)
     assert "MapInArrow" in _plan(deltas[-1])

@@ -159,22 +159,33 @@ def test_running_distinct_ttl_evicts_idle_keys(spark, tmp_path, no_empty_batches
 
 
 def test_sketch_stream_incremental_deltas(spark, tmp_path):
-    """Round-4 verdict item #3: per-batch written rows must track the batch's
-    TOUCHED keys, not the full accumulated key set, and compaction must fold
-    deltas without changing the merged state."""
+    """Per-batch written rows must track the batch's TOUCHED keys, not the
+    full accumulated key set — a delta holds one partial per (batch
+    partition, touched key) — and compaction must fold deltas without
+    changing the merged state."""
     sd = str(tmp_path / "state_inc")
     ss = SketchStream(sd, "v", by=["k"], compact_every=3)
 
     def batch(rows):
         return spark.createDataFrame(rows, "k string, v long")
 
-    ss(batch([("a", 1), ("a", 2)]), 0)
-    ss(batch([("b", 3)]), 1)
+    def delta_keys(batch_id, df):
+        """The keys of a delta, checked to hold at most one row per
+        (batch partition, key)."""
+        rows = spark.read.parquet(f"{sd}/delta/v={batch_id}").collect()
+        keys = {r["k"] for r in rows}
+        assert len(rows) <= df.rdd.getNumPartitions() * len(keys)
+        return keys
+
+    b0, b1 = batch([("a", 1), ("a", 2)]), batch([("b", 3)])
+    ss(b0, 0)
+    # a lone delta holds partials: the view merges them to one row per key
+    assert [r["k"] for r in ss.state(spark).collect()] == ["a"]
+    assert _sketches(ss.state(spark), "k") == _sketches(agg.sketch(b0, "v", by=["k"]), "k")
+    ss(b1, 1)
     # two deltas, no compact yet; each delta holds only its touched keys
-    d0 = spark.read.parquet(f"{sd}/delta/v=0")
-    d1 = spark.read.parquet(f"{sd}/delta/v=1")
-    assert [r["k"] for r in d0.collect()] == ["a"]
-    assert [r["k"] for r in d1.collect()] == ["b"]
+    assert delta_keys(0, b0) == {"a"}
+    assert delta_keys(1, b1) == {"b"}
 
     before = {r["k"]: bytes(r["sketch"]) for r in ss.state(spark).collect()}
     ss(batch([("a", 9)]), 2)  # third delta triggers compaction
@@ -184,13 +195,14 @@ def test_sketch_stream_incremental_deltas(spark, tmp_path):
     assert ss._ids(spark) == (2, [])
     assert ss._versions(spark, "delta") == [0, 1, 2]
 
-    # 1000-key prior state, then a batch touching ONE key: the new delta is
-    # one row (the old design rewrote all 1001 keys every batch)
+    # 1000-key prior state, then a batch touching ONE key: the new delta
+    # holds that key only (the old design rewrote all 1001 keys every batch)
     many = batch([(f"k{i}", i) for i in range(1000)])
     ss(many, 3)
-    assert spark.read.parquet(f"{sd}/delta/v=3").count() == 1000
-    ss(batch([("a", 10)]), 4)
-    assert spark.read.parquet(f"{sd}/delta/v=4").count() == 1
+    assert delta_keys(3, many) == {f"k{i}" for i in range(1000)}
+    b4 = batch([("a", 10)])
+    ss(b4, 4)
+    assert delta_keys(4, b4) == {"a"}
     ss(batch([("b", 11)]), 5)  # second compaction: NOW the cycle-old deltas go
     assert ss._versions(spark, "compact") == [2, 5]
     assert all(d > 2 for d in ss._versions(spark, "delta"))
