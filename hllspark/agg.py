@@ -297,7 +297,18 @@ def canon_xxhash_col(df: DataFrame, value_col: str):
 def _sql_dtype(df: DataFrame, value_col: str) -> str:
     """Column dtype resolved the way Spark resolves names (case-insensitive
     by default) — a dict(df.dtypes) lookup misses case variants and would
-    silently skip canonicalization, diverging builder and probe hashes."""
+    silently skip canonicalization, diverging builder and probe hashes.
+
+    A name that is exactly one top-level field, with no other field equal to
+    it up to case, reads the DataFrame's cached ``schema``: no Dataset is
+    built.  Every other name — a case variant, a nested ``a.b`` or a
+    backticked path, a name two fields share — resolves through
+    ``df.select(value_col)`` (about 10 ms of JVM analysis), so Spark's
+    resolution and its errors stay the answer there."""
+    if "." not in value_col and "`" not in value_col:
+        same = [f for f in df.schema.fields if f.name.lower() == value_col.lower()]
+        if len(same) == 1 and same[0].name == value_col:
+            return same[0].dataType.simpleString()
     return df.select(value_col).schema[0].dataType.simpleString()
 
 
@@ -315,11 +326,12 @@ def jvm_hash_expr(df: DataFrame, value_col: str):
 
 
 def _apply_jvm_prehash(df: DataFrame, value_col: str, by: Sequence[str], jvm_prehash) -> tuple[DataFrame, str, str, int]:
-    """Optionally replace a string/binary value column with its JVM-side
-    xxhash64 (whole-stage-codegen).  Only 8 bytes/row then cross the
-    JVM→Python Arrow boundary instead of the raw payload — at web scale this
-    is the difference between shipping terabytes of text into Python workers
-    and shipping a fixed-width hash column.  Resulting sketches carry
+    """``df`` projected to ``by`` + the value column, the value optionally
+    replaced by its JVM-side xxhash64 (whole-stage-codegen).  Only 8
+    bytes/row then cross the JVM→Python Arrow boundary instead of the raw
+    payload — at web scale this is the difference between shipping
+    terabytes of text into Python workers and shipping a fixed-width hash
+    column.  Resulting sketches carry
     hash_kind=HASH_XXHASH_SPARK and refuse to merge with murmur-built ones.
     """
     from .core.hll import HASH_XXHASH_SPARK
@@ -327,7 +339,7 @@ def _apply_jvm_prehash(df: DataFrame, value_col: str, by: Sequence[str], jvm_pre
     if jvm_prehash == "auto":
         jvm_prehash = _sql_dtype(df, value_col) in _STRINGY
     if not jvm_prehash:
-        return df, value_col, "auto", 0
+        return df.select(*by, value_col), value_col, "auto", 0
     hcol = f"__hll_h_{value_col}"
     df = df.select(*by, jvm_hash_expr(df, value_col).alias(hcol))
     return df, hcol, "prehashed64", HASH_XXHASH_SPARK
@@ -367,13 +379,15 @@ def build_partials(
     b, binbits = resolve_params(b, binbits, error_rate, ndistinct)
     by = list(by or [])
     hash_kind = 0
+    # one projection, by + the (pre)hashed value: both builders run over it
     if input_type == "auto" and (factory is None or jvm_prehash is True):
         # for custom factories, prehash only on explicit request (the factory
         # must then construct its sketches with hash_kind=HASH_XXHASH_SPARK)
         df, value_col, input_type, hash_kind = _apply_jvm_prehash(
-            df.select(*by, value_col), value_col, by, True if factory is not None else jvm_prehash
+            df, value_col, by, True if factory is not None else jvm_prehash
         )
-    cols = by + [value_col]
+    else:
+        df = df.select(*by, value_col)
     jar_domain = factory is None and hash_kind == HASH_XXHASH_SPARK
     if engine == "auto" and not jar_domain:
         engine = "python"  # murmur or a factory sketch: only the python builder serves it
@@ -383,10 +397,10 @@ def build_partials(
                 "engine='jvm_udaf' builds HLL partials of the xxhash64 prehash only; "
                 "murmur-pinned input and factory sketches need engine='python'"
             )
-        return jvm_udaf.hll_partials(df.select(*cols), len(by), b, binbits, lineage)
-    schema = _partial_schema(df.select(*cols), by, lineage)
-    return df.select(*cols).mapInArrow(
-        _make_builder(value_col, by, b, binbits, input_type, lineage, hash_kind, factory), schema=schema
+        return jvm_udaf.hll_partials(df, len(by), b, binbits, lineage)
+    return df.mapInArrow(
+        _make_builder(value_col, by, b, binbits, input_type, lineage, hash_kind, factory),
+        schema=_partial_schema(df, by, lineage),
     )
 
 

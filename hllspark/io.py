@@ -37,6 +37,7 @@ from pyspark.sql.types import StructType
 
 from . import agg
 from .functions import DEFAULT_B, DEFAULT_BINBITS
+from .jvm_udaf import jvm_handle
 
 
 def write_sketches(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -86,25 +87,24 @@ def _footer_schema(spark: SparkSession, paths: Sequence[str], base_path: str | N
     data column repeats a partition directory's name: Spark then puts the
     column at its data position with the directory's inferred type, which a
     given schema cannot express."""
-    jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
     for p in paths:
-        hpath = jvm.org.apache.hadoop.fs.Path(p)
-        fs = hpath.getFileSystem(conf)
+        fs, hpath, Path = _hadoop_fs(spark, p)
         for root in fs.globStatus(hpath) or []:
             found = _first_data_file(fs, [root])
             if found is None:
                 continue
             try:
-                footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-                    conf, found, jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+                footer = jvm_handle(spark, "org.apache.parquet.hadoop.ParquetFileReader.readFooter")(
+                    conf, found,
+                    jvm_handle(spark, "org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS"),
                 )
                 raw = footer.getFileMetaData().getKeyValueMetaData().get(_SPARK_SCHEMA_KEY)
                 schema = None if raw is None else StructType.fromJson(json.loads(raw))
             except (Py4JJavaError, ValueError):
                 return None
             # partition directories between the scan's base and the file
-            base = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(base_path)) if base_path else root.getPath()
+            base = fs.makeQualified(Path(base_path)) if base_path else root.getPath()
             base, parent = str(base.toString()).rstrip("/") + "/", str(found.getParent().toString()) + "/"
             if schema is None or not parent.startswith(base):
                 return None
@@ -130,7 +130,7 @@ def _read_parquet(spark: SparkSession, *paths: str, base_path: str | None = None
 def iceberg_available(spark: SparkSession) -> bool:
     """True iff Iceberg classes are on the session's JVM classpath."""
     try:
-        spark._jvm.java.lang.Class.forName("org.apache.iceberg.catalog.Catalog")
+        jvm_handle(spark, "java.lang.Class.forName")("org.apache.iceberg.catalog.Catalog")
         return True
     except Exception:
         return False
@@ -192,10 +192,12 @@ class SketchTable:
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    """(Hadoop FileSystem of ``path``, its ``Path``, the held ``Path`` class
+    for further paths on it)."""
+    Path = jvm_handle(spark, "org.apache.hadoop.fs.Path")
+    hpath = Path(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath, jvm
+    return fs, hpath, Path
 
 
 def _exists(spark: SparkSession, path: str) -> bool:
@@ -204,12 +206,12 @@ def _exists(spark: SparkSession, path: str) -> bool:
 
 
 def _read_text(spark: SparkSession, path: str) -> str | None:
-    fs, hpath, jvm = _hadoop_fs(spark, path)
+    fs, hpath, _ = _hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return None
     stream = fs.open(hpath)
     try:
-        return str(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+        return str(jvm_handle(spark, "org.apache.commons.io.IOUtils.toString")(stream, "UTF-8"))
     finally:
         stream.close()
 

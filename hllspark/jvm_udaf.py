@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import functools
 import logging
+import weakref
 from typing import NamedTuple, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -114,9 +115,11 @@ def _to_col(jcol) -> Column:
 
 
 def _col_seq(spark: SparkSession, cols):
-    from pyspark.sql.classic.column import _to_java_column, _to_seq
+    """pyspark's ``_to_seq`` of ``cols``, through the held ``toSeq`` (its
+    ``_jvm.PythonUtils`` lookup searches the JVM view's imports, ~1 ms)."""
+    from pyspark.sql.classic.column import _to_java_column
 
-    return _to_seq(spark.sparkContext, cols, _to_java_column)
+    return jvm_handle(spark, "org.apache.spark.api.python.PythonUtils.toSeq")([_to_java_column(c) for c in cols])
 
 
 # app-key → ("direct", None) | ("loader", shared jar classloader).  Keyed per
@@ -127,11 +130,18 @@ def _col_seq(spark: SparkSession, cols):
 _SESSION_CACHE: dict[str, tuple[str, object]] = {}
 # app keys whose engine="auto" fallback to python has been logged
 _FALLBACK_LOGGED: set[str] = set()
+# SparkContext -> its app key: reading applicationId and startTime costs three
+# py4j round trips, and every cache lookup below needs the key.  Weak keys, so
+# a stopped context's entry goes with it and a successor never inherits it.
+_APP_KEYS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _app_key(spark: SparkSession) -> str:
     sc = spark.sparkContext
-    return f"{sc.applicationId}:{sc.startTime}"
+    key = _APP_KEYS.get(sc)
+    if key is None:
+        key = _APP_KEYS[sc] = f"{sc.applicationId}:{sc.startTime}"
+    return key
 
 
 def _resolve(spark: SparkSession):
@@ -304,7 +314,8 @@ def configure_builder(builder, extra_jars: Sequence[str] = ()):
     return builder.config("spark.jars", ",".join(seen))
 
 
-# (app_key, ...) -> registered UserDefinedFunction (or HllPartialBuilder).
+# (app_key, ...) -> registered UserDefinedFunction (or HllPartialBuilder), or
+# (app_key, "jvm", name) -> a held py4j handle (jvm_handle).
 # The aggregator and builder objects are stateless (final parameter fields;
 # buffers come from zero() per group) and the read UDFs hold no state at
 # all, so one registration serves every
@@ -337,6 +348,23 @@ def hll_udaf_column(spark: SparkSession, hash_col: Column, b: int, binbits: int)
 
     judf = _cached_udf(spark, ("hll", b, binbits), make)
     return _to_col(judf.apply(_col_seq(spark, [hash_col])))
+
+
+def jvm_handle(spark: SparkSession, name: str):
+    """The py4j handle of ``name`` — a JVM class, or a static method or field
+    of one, e.g. ``"org.apache.hadoop.fs.Path"`` — held once per app.
+
+    Each step of a ``spark._jvm.org.apache...`` walk is one reflection round
+    trip, so a fresh walk to a Hadoop class costs about 2.4 ms; a call on the
+    held handle costs one round trip (about 0.1 ms)."""
+
+    def walk():
+        h = spark._jvm
+        for part in name.split("."):
+            h = getattr(h, part)
+        return h
+
+    return _cached_udf(spark, ("jvm", name), walk)
 
 
 # reader name -> (HllUdfs factory method, the Java UDF it wraps)
@@ -422,23 +450,35 @@ def bloom_contains_col(spark: SparkSession, df, sketch_col: Column | str, value_
     return _read_udf_apply(spark, "bloom_contains", [sketch_col, _agg.jvm_hash_expr(df, value_col)])
 
 
-def _finish(
-    spark: SparkSession, agged: DataFrame, keep: list, finalize: str, est_col: str, sketch_col: str = "sketch"
-) -> DataFrame:
-    """Select ``keep`` + the ``__blob`` aggregate, which already is the
-    canonical sketch (``finalize="sketch"``), or its in-JVM estimate
-    (NULL for an all-NULL group; estimate_bigint rounds half-even and
-    coalesces NULL → 0, hyperloglog_get_estimate_bigint's contract)."""
+def _finalized(spark: SparkSession, blob: Column, finalize: str, est_col: str, sketch_col: str = "sketch") -> Column:
+    """``blob``, a column whose value is the canonical sketch, as the
+    ``sketch_col`` column (``finalize="sketch"``) or its in-JVM estimate
+    ``est_col`` (NULL for an all-NULL group; estimate_bigint rounds
+    half-even and coalesces NULL → 0, hyperloglog_get_estimate_bigint's
+    contract).  ``blob`` may be the aggregate itself: the estimate then
+    wraps it inside the one Aggregate node."""
     if finalize == "sketch":
-        return agged.select(*keep, F.col("__blob").alias(sketch_col))
+        return blob.alias(sketch_col)
     if finalize not in ("estimate", "estimate_bigint"):
         raise ValueError(f"unknown finalize {finalize!r}")
-    jcol = hll_estimate_col(spark, F.col("__blob"))
+    jcol = hll_estimate_col(spark, blob)
     if finalize == "estimate_bigint":
         from .functions import _round_bigint
 
         jcol = _round_bigint(jcol)
-    return agged.select(*keep, jcol.alias(est_col))
+    return jcol.alias(est_col)
+
+
+def _finish(
+    spark: SparkSession, agged: DataFrame, keep: list, finalize: str, est_col: str, sketch_col: str = "sketch"
+) -> DataFrame:
+    """Select ``keep`` + the ``__blob`` aggregate of ``agged``, finalized.
+
+    Only the grouping-sets build uses it, which selects its dims and
+    grouping id ahead of the sketch; a plain grouped build finalizes inside
+    its ``agg(...)`` (``_finalized``), because every extra select is one
+    more Dataset for the JVM to analyze, 3-9 ms of driver time per call."""
+    return agged.select(*keep, _finalized(spark, F.col("__blob"), finalize, est_col, sketch_col))
 
 
 def sketch_jvm_udaf(
@@ -468,7 +508,7 @@ def sketch_jvm_udaf(
     spark = df.sparkSession
     acol = hll_udaf_column(spark, jvm_hash_expr(df, value_col), b, binbits)
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col)
+    return gb.agg(_finalized(spark, acol, finalize, est_col))
 
 
 def hll_partials(df: DataFrame, n_keys: int, b: int, binbits: int, lineage: bool) -> DataFrame:
@@ -744,7 +784,7 @@ def hll_merge_udaf(
     spark = df.sparkSession
     acol = _sibling_udaf_column(spark, F.col(sketch_col), "hllsparkjvm.HllMergeAggregator", [], encoder="binary")
     gb = df.groupBy(*[F.col(c) for c in by]) if by else df.groupBy()
-    return _finish(spark, gb.agg(acol.alias("__blob")), by, finalize, est_col, sketch_col)
+    return gb.agg(_finalized(spark, acol, finalize, est_col, sketch_col))
 
 
 _MERGE_CLASSES = {

@@ -42,6 +42,7 @@ time (SURVEY.md §1.4), which maps to two Spark streaming patterns:
 
 from __future__ import annotations
 
+import re
 from typing import Iterator, Sequence
 
 import pandas as pd
@@ -61,6 +62,11 @@ from . import agg, jvm_udaf
 from .core.hll import HLL
 from .functions import DEFAULT_B, DEFAULT_BINBITS, _hll_estimate, build_sketch
 from .io import _read_parquet
+
+# the characters Hadoop's glob treats as pattern syntax
+_GLOB_CHARS = re.compile(r"[\\*?\[\]{}]")
+# one committed version in _versions' listing: its id ends each matched path
+_COMMITTED = re.compile(r"/v=(\d+)/_SUCCESS(?=,|\}$)")
 
 
 class SketchStream:
@@ -114,19 +120,27 @@ class SketchStream:
         return f"{self.state_dir}/compact/v={batch_id}"
 
     def _versions(self, spark: SparkSession, sub: str) -> list[int]:
-        """Committed (_SUCCESS-marked) version ids under state_dir/sub."""
+        """Committed version ids under state_dir/sub, sorted: the ``v=N``
+        directories holding a ``_SUCCESS`` marker.  A half-written version
+        (no marker yet), an entry that is no ``v=N`` and a missing ``sub``
+        are left out.
+
+        One ``globStatus(<root>/v=*/_SUCCESS)`` lists them, and the matched
+        paths cross py4j as one joined string, so the listing costs the same
+        few round trips for one version as for many; the sink lists twice
+        per micro-batch.  Glob characters in ``state_dir`` are escaped."""
         from .io import _hadoop_fs
 
-        root = f"{self.state_dir}/{sub}"
-        fs, hpath, jvm = _hadoop_fs(spark, root)
-        if not fs.exists(hpath):
+        root = _GLOB_CHARS.sub(r"\\\g<0>", f"{self.state_dir}/{sub}")
+        fs, hpath, _ = _hadoop_fs(spark, f"{root}/v=*/_SUCCESS")
+        found = fs.globStatus(hpath)  # null when no directory matches at all
+        if found is None:
             return []
-        out = []
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if name.startswith("v=") and fs.exists(jvm.org.apache.hadoop.fs.Path(f"{root}/{name}/_SUCCESS")):
-                out.append(int(name[2:]))
-        return sorted(out)
+        paths = jvm_udaf.jvm_handle(spark, "org.apache.hadoop.fs.FileUtil.stat2Paths")(found)
+        # "{<root>/v=0/_SUCCESS,<root>/v=1/_SUCCESS}"; py4j cannot pass a
+        # Path[] where Java takes an Object[], so no join(Object[], sep)
+        listed = jvm_udaf.jvm_handle(spark, "org.apache.commons.lang3.ArrayUtils.toString")(paths)
+        return sorted(int(v) for v in _COMMITTED.findall(listed))
 
     def _ids(self, spark: SparkSession) -> tuple[int, list[int]]:
         """(latest compact id or -1, live delta ids) — file listings only, no
@@ -183,12 +197,12 @@ class SketchStream:
         if merged is None:
             return
         merged.write.mode("overwrite").parquet(self._compact_dir(batch_id))
-        fs, _, jvm = _hadoop_fs(spark, self.state_dir)
+        fs, _, Path = _hadoop_fs(spark, self.state_dir)
         for d in self._versions(spark, "delta"):
             if d <= cv_prev:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(self._delta_dir(d)), True)
+                fs.delete(Path(self._delta_dir(d)), True)
         for c in self._versions(spark, "compact")[:-2]:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(self._compact_dir(c)), True)
+            fs.delete(Path(self._compact_dir(c)), True)
 
     def state(self, spark: SparkSession) -> DataFrame | None:
         """Current merged state (lazy merge of compact + live deltas)."""

@@ -191,6 +191,48 @@ def test_sketch_stream_plans_have_no_python_stage(spark, tmp_path, monkeypatch, 
     assert "MapInArrow" in _plan(deltas[-1])
 
 
+def _aggregates(df) -> tuple[str, int]:
+    """(root node of the analyzed plan, number of Aggregate nodes in it)."""
+    import re
+
+    analyzed = df._jdf.queryExecution().analyzed()
+    return analyzed.nodeName(), len(re.findall(r"^[\s:+|-]*Aggregate\b", analyzed.treeString(), re.M))
+
+
+def _norm(v):
+    """A float estimate to 1e-9 relative (the jar and numpy may differ in the last ulp)."""
+    return float(f"{v:.9e}") if isinstance(v, float) else v
+
+
+@pytest.mark.parametrize("finalize", ["sketch", "estimate", "estimate_bigint"])
+def test_one_aggregate_per_call(spark, udaf, finalize):
+    """sketch_jvm_udaf and hll_merge_udaf analyze to exactly one Aggregate
+    with no Project above it: the finalize — sketch or in-JVM estimate —
+    is the aggregate's own output expression.  The output columns, their
+    types and values are the python engine's and hllspark.core's."""
+    from hllspark import agg
+    from hllspark.core.hll import HLL
+
+    rows = [(f"k{i % 3}", None if i % 3 == 2 else i) for i in range(300)]
+    df = spark.createDataFrame(rows, "k string, v long")
+    ref = {r["k"]: r["sketch"] for r in agg.sketch(df, "v", ["k"], engine="python", jvm_prehash=True).collect()}
+    stored = spark.createDataFrame(sorted(ref.items()), "k string, sketch binary")
+
+    def want(blob):
+        if finalize == "sketch":
+            return blob
+        est = None if blob is None else HLL.from_bytes(bytes(blob)).estimate()
+        return (0 if est is None else round(est)) if finalize == "estimate_bigint" else est
+
+    col, typ = {"sketch": ("sketch", "binary"), "estimate": ("est", "double"),
+                "estimate_bigint": ("est", "bigint")}[finalize]
+    for out in (udaf.sketch_jvm_udaf(df, "v", ["k"], finalize=finalize),
+                udaf.hll_merge_udaf(stored, "sketch", ["k"], finalize=finalize)):
+        assert _aggregates(out) == ("Aggregate", 1), out._jdf.queryExecution().analyzed().treeString()
+        assert out.dtypes == [("k", "string"), (col, typ)]
+        assert {r["k"]: _norm(r[col]) for r in out.collect()} == {k: _norm(want(b)) for k, b in ref.items()}
+
+
 def test_cosine_pairs_lsh_exchange_reuse(spark, sf001_dir):
     """Round-5: cosine_pairs_lsh's candidate branches (small / oversized /
     sub-bucket / chain) all derive from ONE scan→GEMM→groupBy subtree; AQE
